@@ -73,6 +73,121 @@ class TestMinHash:
         assert all(r.n == 16 for r in rows)
 
 
+class TestMinHashKernel:
+    """The array-valued signature kernel against a pure-Python
+    reference: the same seeded (a, b) permutations, with Spark's
+    xxhash64 of each shingle as input."""
+
+    P = (1 << 31) - 1
+    NUM_PERM, SEED = 64, 42
+
+    @pytest.fixture(scope="class")
+    def corpus(self, spark, docs):
+        base = docs.select("doc_id", "text")
+        top = base.agg(F.max("doc_id")).first()[0]
+        # one doc of exactly n=3 words (a single shingle), one too short
+        extra = spark.createDataFrame(
+            [(top + 1, "exactly three words"), (top + 2, "two words")], base.schema
+        )
+        return base.unionByName(extra), top + 1, top + 2
+
+    @pytest.fixture(scope="class")
+    def ref_sigs(self, corpus):
+        import random
+
+        df = corpus[0]
+        rng = random.Random(self.SEED)
+        perms = [
+            (rng.randrange(1, self.P), rng.randrange(0, self.P))
+            for _ in range(self.NUM_PERM)
+        ]
+        hashes = {
+            r.doc_id: [h % self.P for h in r.hs]
+            for r in dedup.shingle_arrays(df, "text", "doc_id", 3).selectExpr(
+                "doc_id", "transform(__sh, s -> xxhash64(s)) AS hs"
+            ).collect()
+        }
+        return {
+            d: [min((a * h + b) % self.P for h in hs) for a, b in perms]
+            for d, hs in hashes.items()
+        }
+
+    def test_signatures_equal_reference(self, corpus, ref_sigs):
+        df, exact_n, too_short = corpus
+        got: dict = {}
+        for r in dedup.minhash_signatures(
+            df, "text", "doc_id", num_perm=self.NUM_PERM, seed=self.SEED
+        ).collect():
+            got.setdefault(r.doc_id, {})[r.perm_id] = r.minhash
+        assert {d: [v[i] for i in range(self.NUM_PERM)] for d, v in got.items()} == ref_sigs
+        assert exact_n in got and too_short not in got
+
+    def test_empty_frame(self, docs):
+        assert dedup.minhash_signatures(docs.limit(0), "text", "doc_id").count() == 0
+
+    @pytest.mark.parametrize("bands", [16, 20])
+    def test_candidates_equal_reference_banding(self, corpus, ref_sigs, bands):
+        import itertools
+        from collections import Counter
+
+        # 20 bands of r=3 rows leave a shorter 22nd band (perm 63 alone)
+        r = self.NUM_PERM // bands
+        buckets: dict = {}
+        for d, sig in ref_sigs.items():
+            for k in range(-(-self.NUM_PERM // r)):
+                buckets.setdefault((k, tuple(sig[k * r:(k + 1) * r])), []).append(d)
+        want: Counter = Counter()
+        for ids in buckets.values():
+            for pair in itertools.combinations(sorted(ids), 2):
+                want[pair] += 1
+        got = {
+            (row.id_a, row.id_b): row
+            for row in dedup.minhash_lsh_candidates(
+                corpus[0], "text", "doc_id", num_perm=self.NUM_PERM,
+                bands=bands, seed=self.SEED,
+            ).collect()
+        }
+        assert {p: row.n_shared_bands for p, row in got.items()} == dict(want)
+        for (a, b), row in got.items():
+            same = sum(x == y for x, y in zip(ref_sigs[a], ref_sigs[b]))
+            assert row.est_jaccard == same / self.NUM_PERM
+
+
+class TestDedupJobCounts:
+    """Per-call Spark job counts on the sf0.001 docs, pinned at their
+    measured values: a return to the exploded signature plan or to the
+    loop's checkpoint jobs below the edge bound fails here. Jobs are
+    counted as the benchmark does, from the DAG scheduler's total. The
+    session cache is cleared first: a cached shingle frame from another
+    test changes the plan and its AQE stage count."""
+
+    @staticmethod
+    def _jobs(spark, fn):
+        sched = spark.sparkContext._jsc.sc().dagScheduler()
+        j0 = sched.numTotalJobs()
+        out = fn()
+        return sched.numTotalJobs() - j0, out
+
+    def test_minhash_lsh_candidates_jobs(self, spark, docs):
+        spark.catalog.clearCache()
+        n, rows = self._jobs(
+            spark, lambda: dedup.minhash_lsh_candidates(docs, "text", "doc_id").collect()
+        )
+        assert rows and n == 4
+
+    def test_connected_components_driver_path_jobs(self, spark, docs):
+        spark.catalog.clearCache()
+        pairs = dedup.minhash_lsh_candidates(docs, "text", "doc_id").select("id_a", "id_b")
+        # the call runs the edge plan once, in its one capped collect
+        n, comp = self._jobs(
+            spark, lambda: dedup.connected_components(pairs, canonical_edges=True)
+        )
+        assert n == 4 and dedup.connected_components.last_rounds == 0
+        # the labels are a driver-side LocalRelation: no job to read them
+        n, rows = self._jobs(spark, comp.collect)
+        assert rows and n == 0
+
+
 class TestSimHash:
     def test_near_dups_have_small_hamming(self, spark, docs, exact_pairs):
         sim = dedup.simhash64(docs, "text", "doc_id")
@@ -607,13 +722,15 @@ class TestClustersContaminationText:
         assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
     def test_connected_components_long_path_converges(self, spark):
-        # path of 12 nodes: needs ~diameter iterations, well under max_iter
+        # path of 12 nodes: the Spark loop needs ~diameter iterations,
+        # well under max_iter
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(12)], "id_a INT, id_b INT"
         )
-        comp = {r.node: r.component
-                for r in dedup.connected_components(edges).collect()}
+        labels, rounds = dedup._cc_spark_loop(edges, "id_a", "id_b")
+        comp = {r.node: r.component for r in labels.collect()}
         assert set(comp.values()) == {0} and len(comp) == 13
+        assert rounds < 25
 
     def test_duplicate_clusters_cover_all_docs(self, spark, docs):
         out = dedup.duplicate_clusters(docs, "text", "doc_id")
@@ -1351,6 +1468,9 @@ class TestCrossContamination:
 
 
 class TestPointerJumpingCC:
+    """The distributed loop behind connected_components, called directly:
+    small graphs take the driver path in the public function."""
+
     def test_long_chain_converges_in_log_rounds(self, spark):
         """A 400-node path graph has diameter 399: plain min-label
         propagation cannot finish inside 25 rounds, pointer jumping
@@ -1358,10 +1478,11 @@ class TestPointerJumpingCC:
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(399)], "id_a LONG, id_b LONG"
         )
-        out = dedup.connected_components(edges).collect()
+        labels, rounds = dedup._cc_spark_loop(edges, "id_a", "id_b")
+        out = labels.collect()
         assert {r.component for r in out} == {0}
         assert len(out) == 400
-        assert dedup.connected_components.last_rounds <= 12
+        assert rounds <= 12
 
     def test_same_result_as_pure_propagation_on_random_graph(self, spark):
         import random as rnd
@@ -1374,13 +1495,46 @@ class TestPointerJumpingCC:
         df = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
         fast = {
             r.node: r.component
-            for r in dedup.connected_components(df, shortcut=True).collect()
+            for r in dedup._cc_spark_loop(df, "id_a", "id_b", shortcut=True)[0].collect()
         }
         slow = {
             r.node: r.component
-            for r in dedup.connected_components(df, shortcut=False).collect()
+            for r in dedup._cc_spark_loop(df, "id_a", "id_b", shortcut=False)[0].collect()
         }
-        assert fast == slow
+        driver = {
+            r.node: r.component for r in dedup.connected_components(df).collect()
+        }
+        assert fast == slow == driver
+
+    def test_canonical_edges_same_labels_and_rounds(self, spark):
+        # distinct pairs with id_a < id_b: the canonical claim holds, so
+        # skipping the dedup shuffle must not change labels or rounds
+        edges = sorted({(min(a, b), max(a, b)) for a, b in
+                        [(1, 2), (2, 3), (5, 4), (7, 9), (9, 8), (3, 6), (11, 10)]})
+        df = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
+        plain, plain_rounds = dedup._cc_spark_loop(df, "id_a", "id_b")
+        canon, canon_rounds = dedup._cc_spark_loop(
+            df, "id_a", "id_b", canonical_edges=True
+        )
+        assert sorted(plain.collect()) == sorted(canon.collect())
+        assert plain_rounds == canon_rounds
+
+    def test_empty_graph_breaks_on_null_sum(self, spark):
+        # no labels: sum(comp) is NULL, a fixpoint after one round
+        df = spark.createDataFrame([], "id_a LONG, id_b LONG")
+        labels, rounds = dedup._cc_spark_loop(df, "id_a", "id_b")
+        assert labels.collect() == [] and rounds == 1
+
+    def test_above_bound_runs_the_loop(self, spark, monkeypatch):
+        edges = [(1, 2), (2, 3), (10, 11)]
+        df = spark.createDataFrame(edges, "id_a INT, id_b INT")
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 2)
+        comp = {r.node: r.component for r in dedup.connected_components(df).collect()}
+        assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+        assert dedup.connected_components.last_rounds > 0
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 3)
+        again = {r.node: r.component for r in dedup.connected_components(df).collect()}
+        assert again == comp and dedup.connected_components.last_rounds == 0
 
 
 class TestWeightedSample:

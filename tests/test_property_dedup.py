@@ -106,9 +106,14 @@ def _union_find(edges):
 )
 @given(edges=_edges)
 def test_connected_components_equals_union_find(spark, edges):
+    # both paths: the driver union-find the public call takes at this
+    # size, and the distributed loop it takes above the edge bound
     df = spark.createDataFrame(edges, "id_a INT, id_b INT")
+    want = _union_find(edges)
     got = {r.node: r.component for r in dedup.connected_components(df).collect()}
-    assert got == _union_find(edges)
+    assert got == want and dedup.connected_components.last_rounds == 0
+    labels, _ = dedup._cc_spark_loop(df, "id_a", "id_b")
+    assert {r.node: r.component for r in labels.collect()} == want
 
 
 # ---- portable simhash: Spark == pure-Python reference on arbitrary text ----

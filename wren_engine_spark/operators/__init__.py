@@ -9,7 +9,8 @@ fingerprinting) and multimodal binary-column plumbing.
 Everything is DataFrame-native and shuffle-conscious: inverted-index
 joins instead of cross joins, map-side-combinable aggregations, and
 broadcast for small query sets. Python only enters via Arrow-batched
-pandas UDFs (multimodal decode), never per-row UDFs.
+kernels (multimodal decode, the MinHash signature kernel), never per-row
+UDFs.
 """
 
 from wren_engine_spark.operators import dedup, similarity, text, multimodal

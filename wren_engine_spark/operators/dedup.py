@@ -9,10 +9,10 @@ Scale design (100 TB of documents):
     join key distribution is bounded by dropping ultra-frequent shingles
     when requested (``max_doc_freq``), the standard stop-shingle guard
     against skew.
-  - MinHash-LSH: signature matrix via a broadcast permutation table; the
-    only wide shuffle is groupBy(doc, perm) on fixed-width ints;
-    band-bucket join produces candidates, so cost scales with collisions,
-    not pairs.
+  - MinHash-LSH: one signature array per doc from a vectorized Arrow
+    kernel (a narrow map, no explode); bands are array slices and the
+    band-bucket join produces candidates, so cost scales with
+    collisions, not pairs.
   - SimHash: 64 bit-counters per doc computed in one aggregation pass.
 """
 
@@ -95,20 +95,6 @@ def shingle_arrays(
         .filter(min_len)
         .select(id_col, arr.alias("__sh"))
         .withColumn("__n", F.size("__sh"))
-    )
-
-
-def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle)."""
-    return shingle_arrays(df, text_col, id_col, n, "word").select(
-        id_col, F.explode("__sh").alias("shingle")
-    )
-
-
-def char_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 5) -> DataFrame:
-    """Distinct character n-gram shingles per doc: (id, shingle)."""
-    return shingle_arrays(df, text_col, id_col, n, "char").select(
-        id_col, F.explode("__sh").alias("shingle")
     )
 
 
@@ -276,6 +262,66 @@ def jaccard_pairs(
     )
 
 
+def _minhash_kernel(a: list[int], b: list[int]):
+    """``mapInArrow`` kernel over (id, __h array<bigint>) batches: one
+    ``array<bigint>`` MinHash signature per row, slot i holding
+    min over the row's shingle hashes h of (a[i] * h + b[i]) mod p.
+    Inputs are Spark's own ``pmod(xxhash64(shingle), p)`` values, so
+    the slots are bit-identical to the same formula evaluated in SQL
+    (h < 2^31 and a, b < 2^31: every product fits in int64)."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        av = np.asarray(a, dtype=np.int64)
+        bv = np.asarray(b, dtype=np.int64)
+        k = len(a)
+        for batch in batches:
+            hs = batch.column(1)
+            if len(hs) == 0:
+                continue
+            off = hs.offsets.to_numpy()
+            h = hs.flatten().to_numpy()
+            # every row has >= 1 shingle (shingle_arrays filters short
+            # docs), so no reduceat segment is empty
+            starts = off[:-1] - off[0]
+            sig = np.empty((len(hs), k), dtype=np.int64)
+            for i in range(k):
+                sig[:, i] = np.minimum.reduceat((av[i] * h + bv[i]) % _MERSENNE31, starts)
+            offsets = pa.array(np.arange(0, sig.size + 1, k, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.ListArray.from_arrays(offsets, pa.array(sig.ravel()))],
+                names=[batch.schema.names[0], "__sig"],
+            )
+
+    return run
+
+
+def _signature_arrays(
+    docs: DataFrame, id_col: str, num_perm: int, seed: int
+) -> DataFrame:
+    """(id, __sig array<bigint>) from a :func:`shingle_arrays` frame: the
+    doc's shingle hashes are computed in-row, then the numpy kernel
+    reduces them against all ``num_perm`` permutations at once — a
+    narrow map, no explode and no shuffle, so the work tracks docs x
+    shingles rather than docs x shingles x permutations rows."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    rng = random.Random(seed)
+    a, b = [], []
+    for _ in range(num_perm):
+        a.append(rng.randrange(1, _MERSENNE31))
+        b.append(rng.randrange(0, _MERSENNE31))
+    hashed = docs.selectExpr(
+        id_col, f"transform(__sh, s -> pmod(xxhash64(s), {_MERSENNE31})) AS __h"
+    )
+    schema = StructType(
+        [hashed.schema[id_col], StructField("__sig", ArrayType(LongType(), False), False)]
+    )
+    return hashed.mapInArrow(_minhash_kernel(a, b), schema)
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str, num_perm: int = 64, n: int = 3,
     seed: int = 42, unit: str = "word",
@@ -283,24 +329,31 @@ def minhash_signatures(
     """MinHash signature matrix: (id, perm_id, minhash).
 
     Universal hashing h_i(x) = (a_i * x + b_i) mod p over xxhash64
-    shingle hashes; the permutation table is tiny and broadcast."""
-    rng = random.Random(seed)
-    perms = [(i, rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31)) for i in range(num_perm)]
-    spark = df.sparkSession
-    pdf = spark.createDataFrame(perms, "perm_id INT, a LONG, b LONG")
-    shingler = word_shingles if unit == "word" else char_shingles
-    sh = shingler(df, text_col, id_col, n).select(
-        id_col, F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE31)).alias("__h")
-    )
+    shingle hashes, with (a_i, b_i) drawn from ``random.Random(seed)``.
+    The signatures are computed as one array per doc
+    (:func:`_signature_arrays`); this long form is their
+    ``posexplode``."""
+    sig = _signature_arrays(shingle_arrays(df, text_col, id_col, n, unit), id_col, num_perm, seed)
+    return sig.selectExpr(id_col, "posexplode(__sig) AS (perm_id, minhash)")
+
+
+def _lsh_band_pairs(
+    sig: DataFrame, id_col: str, num_perm: int, bands: int
+) -> DataFrame:
+    """(id_a, id_b, n_shared_bands), id_a < id_b: pairs of signature
+    arrays equal on at least one band. Band k is the array slice of
+    rows k*r .. k*r+r-1 (r = num_perm // bands; a remainder forms one
+    shorter last band), and the band join keys on (band, slice)."""
+    r = num_perm // bands
+    keys = ", ".join(f"slice(__sig, {k * r + 1}, {r})" for k in range(-(-num_perm // r)))
+    banded = sig.selectExpr(id_col, f"posexplode(array({keys})) AS (band, bsig)")
+    a = banded.selectExpr(f"{id_col} AS id_a", "band", "bsig")
+    b = banded.selectExpr(f"{id_col} AS id_b", "band", "bsig")
     return (
-        sh.join(F.broadcast(pdf))
-        .select(
-            id_col,
-            "perm_id",
-            F.pmod(F.col("a") * F.col("__h") + F.col("b"), F.lit(_MERSENNE31)).alias("__ph"),
-        )
-        .groupBy(id_col, "perm_id")
-        .agg(F.min("__ph").alias("minhash"))
+        a.join(b, ["band", "bsig"])
+        .filter("id_a < id_b")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
 
 
@@ -314,42 +367,26 @@ def minhash_lsh_candidates(
     seed: int = 42,
     unit: str = "word",
 ) -> DataFrame:
-    """LSH banding over MinHash signatures.
+    """LSH banding over MinHash signature arrays.
 
     Docs sharing >=1 band bucket become candidates; the estimated Jaccard
-    (matching-minhash fraction) is attached so callers can threshold.
+    (the fraction of equal signature slots) is computed from the pair's
+    two arrays so callers can threshold.
     Returns (id_a, id_b, n_shared_bands, est_jaccard).
     """
-    rows_per_band = num_perm // bands
-    sig = minhash_signatures(df, text_col, id_col, num_perm, n, seed, unit)
-    banded = sig.withColumn("band", (F.col("perm_id") / rows_per_band).cast("int"))
-    band_sig = banded.groupBy(id_col, "band").agg(
-        F.md5(
-            F.to_json(F.sort_array(F.collect_list(F.struct("perm_id", "minhash"))))
-        ).alias("bsig")
-    )
-    a = band_sig.select(F.col(id_col).alias("id_a"), "band", "bsig")
-    b = band_sig.select(F.col(id_col).alias("id_b"), "band", "bsig")
-    cand = (
-        a.join(b, ["band", "bsig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    siga = sig.select(F.col(id_col).alias("id_a"), "perm_id", F.col("minhash").alias("mh_a"))
-    sigb = sig.select(F.col(id_col).alias("id_b"), "perm_id", F.col("minhash").alias("mh_b"))
-    est = (
-        cand.join(siga, "id_a")
-        .join(sigb, ["id_b", "perm_id"])
-        .groupBy("id_a", "id_b", "n_shared_bands")
-        .agg(
-            (
-                F.sum(F.when(F.col("mh_a") == F.col("mh_b"), 1).otherwise(0))
-                / F.lit(num_perm)
-            ).cast("double").alias("est_jaccard")
+    sig = _signature_arrays(shingle_arrays(df, text_col, id_col, n, unit), id_col, num_perm, seed)
+    sa = sig.selectExpr(f"{id_col} AS id_a", "__sig AS __sa")
+    sb = sig.selectExpr(f"{id_col} AS id_b", "__sig AS __sb")
+    return (
+        _lsh_band_pairs(sig, id_col, num_perm, bands)
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .selectExpr(
+            "id_a", "id_b", "n_shared_bands",
+            "CAST(size(filter(zip_with(__sa, __sb, (x, y) -> x = y), e -> e)) AS DOUBLE)"
+            f" / {float(num_perm)!r}D AS est_jaccard",
         )
     )
-    return est
 
 
 def simhash_near_dup(
@@ -451,6 +488,36 @@ def winnow_fingerprints(
     )
 
 
+# Edge lists with at most this many rows are labelled on the driver by
+# union-find: one capped collect instead of one Spark job per round.
+_CC_DRIVER_MAX_EDGES = 100_000
+
+
+def _union_find_labels(pairs) -> list[tuple]:
+    """(node, min node of its component) for every endpoint of
+    ``pairs``. Union always attaches the larger root under the smaller,
+    so a root IS the min member of its component."""
+    parent: dict = {}
+
+    def _find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = _find(a), _find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return [(x, _find(x)) for x in parent]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -459,16 +526,59 @@ def connected_components(
     shortcut: bool = True,
     canonical_edges: bool = False,
 ) -> DataFrame:
-    """Connected components over an undirected edge list by iterative
-    min-label propagation: every node starts labeled with its own id and
-    repeatedly takes the minimum label among itself and its neighbors
-    until a fixpoint. Returns (node, component) where ``component`` is
-    the minimum node id in the component.
+    """Connected components over an undirected edge list. Returns
+    (node, component) where ``component`` is the minimum node id in the
+    component; node ids must be non-null.
 
     This is the step that turns pairwise near-duplicate EDGES into
     duplicate CLUSTERS (pick one representative per component) — pair
     output alone under-deletes because near-duplication is transitive
     in practice (A~B, B~C but A!~C).
+
+    Driver first: the edge list is fetched in ONE capped action
+    (``limit(_CC_DRIVER_MAX_EDGES + 1).collect()``, never an unbounded
+    collect). When it holds at most ``_CC_DRIVER_MAX_EDGES`` rows, a
+    union-find labels it on the driver and the labels come back as a
+    LocalRelation. The bound caps what the driver holds (a few tens of
+    MB of Python objects); below it, the distributed loop would pay its
+    checkpoint jobs plus one job per round. Larger edge lists run
+    :func:`_cc_spark_loop` (``max_iter``, ``shortcut`` and
+    ``canonical_edges`` apply only there), which computes the edge plan
+    a second time — edge plans must be deterministic.
+
+    ``connected_components.last_rounds`` records the Spark rounds the
+    last call used (0 on the driver path).
+    """
+    from pyspark.sql.types import StructField, StructType
+
+    from wren_engine_spark.operators.similarity import _literal_df
+
+    head = edges.select(src, dst).limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+    if len(head) > _CC_DRIVER_MAX_EDGES:
+        labels, rounds = _cc_spark_loop(edges, src, dst, max_iter, shortcut, canonical_edges)
+        connected_components.last_rounds = rounds
+        return labels
+    connected_components.last_rounds = 0
+    # least() widens src/dst to their common type, as the loop's union does
+    node_type = edges.select(F.least(src, dst)).schema[0].dataType
+    schema = StructType(
+        [StructField("node", node_type), StructField("component", node_type)]
+    )
+    return _literal_df(edges.sparkSession, _union_find_labels(head), schema)
+
+
+def _cc_spark_loop(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    max_iter: int = 25,
+    shortcut: bool = True,
+    canonical_edges: bool = False,
+) -> tuple[DataFrame, int]:
+    """The distributed path of :func:`connected_components`: iterative
+    min-label propagation. Every node starts labeled with its own id and
+    repeatedly takes the minimum label among itself and its neighbors
+    until a fixpoint. Returns ((node, component), rounds used).
 
     Scale: each iteration is one hash join (neighbor labels) + one
     groupBy-min, both shuffling on node id; iterations needed = graph
@@ -499,16 +609,13 @@ def connected_components(
     leave duplicate edge ROWS, which the per-round ``min`` absorbs —
     the fixpoint labels (and the per-node convergence sum) are
     identical either way, only wasted work differs.
-
-    ``connected_components.last_rounds`` records the rounds the last
-    call used (test instrumentation).
     """
-    # ALL checkpoints lazy (r11; r10 kept edges eager): the edge plan,
-    # sym, and the initial labels persist with truncated lineage as the
-    # ROUND-1 convergence collect computes them — each is a single RDD
-    # node in that job's DAG, so the (possibly expensive) edge plan
-    # still runs exactly once even though sym references it twice.
-    # 2 pre-loop driver actions (r10) -> 0.
+    # The checkpoints are lazy only in name: under AQE,
+    # localCheckpoint(eager=False) still runs every shuffle stage of
+    # the plan at call time (only the final stage waits for an action),
+    # which is ~21 jobs before round 1 on a 5000-doc LSH pair plan. The
+    # two union branches of sym can each compute one_way, so the edge
+    # plan must be deterministic (every pair generator here is).
     one_way = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=False
     )
@@ -553,8 +660,7 @@ def connected_components(
         if cur_sum == prev_sum or cur_sum is None:
             break
         prev_sum = cur_sum
-    connected_components.last_rounds = rounds
-    return labels.select(F.col("node"), F.col("comp").alias("component"))
+    return labels.select(F.col("node"), F.col("comp").alias("component")), rounds
 
 
 def duplicate_clusters(
@@ -602,11 +708,16 @@ def scalable_duplicate_clusters(
     when the corpus' shingle-frequency profile defeats prefix filtering.
     Verification keeps precision exact (no false merges); recall is the
     standard LSH S-curve, 1-(1-t^r)^b (~0.9998 at t=0.8 with 16x4).
+
+    One shingle-array frame feeds both the signature kernel and the
+    verification, and the band pairs go straight to verification: the
+    ``est_jaccard`` join of :func:`minhash_lsh_candidates` is never
+    planned here.
     """
-    cand = minhash_lsh_candidates(
-        df, text_col, id_col, num_perm=num_perm, bands=bands, n=n, seed=seed
-    ).select("id_a", "id_b")
     docs = shingle_arrays(df, text_col, id_col, n)
+    cand = _lsh_band_pairs(
+        _signature_arrays(docs, id_col, num_perm, seed), id_col, num_perm, bands
+    )
     da = docs.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sha"))
     db = docs.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__shb"))
     inter = F.size(F.array_intersect("__sha", "__shb"))
@@ -1790,43 +1901,11 @@ def ingest_decisions(
     pairs = portable_simhash_near_dup(
         delta, text_col, id_col, max_hamming, bands
     )
-    # The batch pair graph is INGESTION-BATCH-bounded (the probe
-    # already broadcasts the batch's banded signatures, and comp is
-    # broadcast below — both land on the driver either way), so the
-    # component labels come from ONE collect + driver union-find
-    # instead of the iterative Spark CC loop: the loop's per-round
-    # lazy-checkpoint + convergence collect cost ~36 scheduler
-    # round-trips per call (4 rounds x ~7 AQE stage jobs + setup) for
-    # a graph whose edge list already fits in the comp broadcast.
-    # Union always attaches the larger root under the smaller, so a
-    # root IS the min member — identical labels to
-    # connected_components (min id per component).
-    parent: dict = {}
-
-    def _find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for e in pairs.select("id_a", "id_b").collect():
-        a, b = e[0], e[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = _find(a), _find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    id_type = dict(delta.dtypes)[id_col]
-    comp = spark.createDataFrame(
-        [(n, _find(n)) for n in parent],
-        schema=f"node {id_type}, component {id_type}",
-    )
+    # The batch pair graph is INGESTION-BATCH-bounded, so
+    # connected_components labels it on the driver (one capped collect
+    # + union-find) instead of running its iterative Spark loop; the
+    # pairs are distinct with id_a < id_b.
+    comp = connected_components(pairs, canonical_edges=True)
     # comp and doc_dups are both bounded by the INGESTION BATCH (the
     # probe already broadcasts the batch's banded signatures by the
     # same argument), so attach them as broadcast joins: the batch ids
