@@ -16,6 +16,17 @@ def spark():
     yield s
 
 
+def spark_jobs(spark, fn):
+    """Run ``fn``; return (Spark jobs it submitted, its result). Jobs are
+    counted from the DAG scheduler's total, as perfbench counts them: the
+    status tracker's job-group lists are filled asynchronously by the
+    listener bus."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.numTotalJobs()
+    out = fn()
+    return sched.numTotalJobs() - j0, out
+
+
 # ---------------------------------------------------------------------------
 # Test tiers (round-11 verdict item 1).
 #

@@ -7,7 +7,7 @@ planted near-duplicate pairs at jaccard ~0.99)."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 from wren_engine_spark.operators import dedup, similarity
 
 
@@ -161,16 +161,9 @@ class TestDedupJobCounts:
     session cache is cleared first: a cached shingle frame from another
     test changes the plan and its AQE stage count."""
 
-    @staticmethod
-    def _jobs(spark, fn):
-        sched = spark.sparkContext._jsc.sc().dagScheduler()
-        j0 = sched.numTotalJobs()
-        out = fn()
-        return sched.numTotalJobs() - j0, out
-
     def test_minhash_lsh_candidates_jobs(self, spark, docs):
         spark.catalog.clearCache()
-        n, rows = self._jobs(
+        n, rows = spark_jobs(
             spark, lambda: dedup.minhash_lsh_candidates(docs, "text", "doc_id").collect()
         )
         assert rows and n == 4
@@ -179,12 +172,12 @@ class TestDedupJobCounts:
         spark.catalog.clearCache()
         pairs = dedup.minhash_lsh_candidates(docs, "text", "doc_id").select("id_a", "id_b")
         # the call runs the edge plan once, in its one capped collect
-        n, comp = self._jobs(
+        n, comp = spark_jobs(
             spark, lambda: dedup.connected_components(pairs, canonical_edges=True)
         )
         assert n == 4 and dedup.connected_components.last_rounds == 0
         # the labels are a driver-side LocalRelation: no job to read them
-        n, rows = self._jobs(spark, comp.collect)
+        n, rows = spark_jobs(spark, comp.collect)
         assert rows and n == 0
 
 

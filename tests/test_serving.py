@@ -1,12 +1,19 @@
 """Serving-layer tests: query envelope, limit pushdown, validate,
 metadata, model substitution, dry-plan twin, function catalog."""
 
+import datetime
+import json
+import os
+import sys
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
+from wren_engine_spark import serving
 from wren_engine_spark.queries.semantic import MANIFEST, deploy
-from wren_engine_spark.serving import SemanticService, pushdown_limit, to_json
+from wren_engine_spark.serving import QueryCache, SemanticService, pushdown_limit, to_json
 
 
 @pytest.fixture(scope="module")
@@ -227,6 +234,21 @@ class TestDryPlanTwin:
             assert "customer_m" in text
 
 
+# a column for each formatter branch: decimal, date, instant and local
+# timestamps, struct, map with non-string keys, binary
+_TYPED_SQL = (
+    "SELECT custkey, CAST(acctbal AS DECIMAL(12, 2)) AS bal,"
+    " date_add(DATE '2024-02-27', CAST(custkey AS INT)) AS d,"
+    " TIMESTAMP '2024-03-01 23:30:00.123456'"
+    " + make_interval(0, 0, 0, 0, CAST(custkey AS INT)) AS ts,"
+    " TIMESTAMP_NTZ '2024-03-01 23:30:00' AS ts_ntz,"
+    " named_struct('k', custkey, 'n', name) AS st,"
+    " map(custkey, name, custkey + 1, NULL) AS m,"
+    " CAST(name AS BINARY) AS b"
+    " FROM customer_m ORDER BY custkey"
+)
+
+
 class TestCache:
     def test_query_cache_roundtrip(self, spark, tmp_path):
         svc = SemanticService(deploy(spark, SF_DIR), cache_dir=str(tmp_path))
@@ -237,11 +259,108 @@ class TestCache:
         assert second["cached"] is True
         assert sorted(map(tuple, second["data"])) == sorted(map(tuple, first["data"]))
 
+    @pytest.fixture
+    def cached(self, service, tmp_path):
+        return SemanticService(service.engine, cache_dir=str(tmp_path))
+
+    @pytest.mark.parametrize("kwargs", [{}, {"timezone": "Asia/Tokyo"}, {"limit": 3}])
+    def test_hit_envelope_equals_miss(self, cached, kwargs):
+        first = cached.query(_TYPED_SQL, use_cache=True, **kwargs)
+        assert "cached" not in first and first["data"]
+        second = cached.query(_TYPED_SQL, use_cache=True, **kwargs)
+        assert second.pop("cached") is True
+        assert json.dumps(second) == json.dumps(first)
+        assert json.dumps(cached.query(_TYPED_SQL, **kwargs)) == json.dumps(first)
+
+    def test_miss_runs_the_query_once_and_hit_runs_none(self, spark, cached):
+        q = "SELECT nation_name, COUNT(*) AS n FROM customer_m GROUP BY 1 ORDER BY 1"
+        cached.query(q)  # warm: a first run can add one-off jobs
+        plain, want = spark_jobs(spark, lambda: cached.query(q))
+        miss, first = spark_jobs(spark, lambda: cached.query(q, use_cache=True))
+        hit, second = spark_jobs(spark, lambda: cached.query(q, use_cache=True))
+        assert plain > 0 and miss == plain and hit == 0
+        assert first == want and second["cached"] is True
+
+    def test_interval_result_returned_not_cached(self, cached):
+        q = ("SELECT custkey, INTERVAL '1' DAY * custkey AS iv"
+             " FROM customer_m ORDER BY custkey LIMIT 2")
+        out = cached.query(q, use_cache=True)
+        assert out["data"][1][1] == datetime.timedelta(days=out["data"][1][0])
+        assert "cached" not in cached.query(q, use_cache=True)
+        assert not os.listdir(cached.cache.root)
+
+    def test_concurrent_set_get_never_sees_partial_entry(self, tmp_path):
+        cache = QueryCache(str(tmp_path))
+        envelopes = [
+            {"columns": ["v"], "data": [[w] * 40] * 2000, "dtypes": {"v": "int"}}
+            for w in range(4)
+        ]
+        seen, errors = [], []
+
+        def worker(env):
+            try:
+                for _ in range(25):
+                    cache.set(env, "k")
+                    seen.append(cache.get("k"))
+            except Exception as e:  # noqa: BLE001 - asserted below
+                errors.append(e)
+
+        threads = [threading.Thread(target=worker, args=(e,)) for e in envelopes]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        assert len(seen) == 100 and all(e in envelopes for e in seen)
+        # no temp file left behind
+        assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(cache._path("k"))]
+
+    def test_lru_eviction_at_cap(self, tmp_path, monkeypatch):
+        monkeypatch.setattr(serving, "_QUERY_CACHE_MAX_ENTRIES", 2)
+        cache = QueryCache(str(tmp_path))
+        # an entry of the old parquet layout (a dir at the bare digest) is
+        # never read, counted or evicted
+        old = tmp_path / os.path.basename(cache._path("a")).removesuffix(".json")
+        old.mkdir()
+        env = {"columns": [], "data": [], "dtypes": {}}
+        cache.set(env, "a")
+        cache.set(env, "b")
+        assert cache.get("a") == env  # now "b" is the least recently used
+        cache.set(env, "c")
+        assert cache.get("b") is None
+        assert cache.get("a") == env and cache.get("c") == env
+        assert old.is_dir()
+
 
 class TestQueryTimeout:
     def test_fast_query_unaffected(self, service):
         out = service.query("SELECT COUNT(*) AS n FROM customer_m", timeout_s=120)
         assert out["data"][0][0] > 0
+
+    def test_jobs_keep_callers_group_and_tags(self, spark):
+        from wren_engine_spark.serving import collect_with_timeout
+
+        sc = spark.sparkContext
+        df = spark.range(0, 1000, numPartitions=4).selectExpr("SUM(id) AS s")
+        sc.setJobGroup("caller-group", "timed query under a caller's group")
+        sc.addJobTag("caller-tag")
+        try:
+            rows = collect_with_timeout(df, timeout_s=120)
+            tags_after = set(sc.getJobTags())
+        finally:
+            sc.removeJobTag("caller-tag")
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rows[0].s == 499500
+        assert tags_after == {"caller-tag"}
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("caller-group")
 
     def test_slow_query_cancelled(self, spark, service):
         import time

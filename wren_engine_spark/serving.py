@@ -15,14 +15,24 @@ Result JSON matches the reference formatter
 (ibis-server/app/util.py:122-147, 284-305): {columns, data, dtypes} with
 decimal→float (0-case kept), dates ``%Y-%m-%d``, timestamps
 ``%Y-%m-%d %H:%M:%S.%f``, binary→hex.
+
+The opt-in query cache stores that envelope, as JSON, once the request
+has built it — as the reference caches the result it has already
+fetched (app/query_cache/__init__.py:11-48). Writing an entry runs no
+Spark job and a hit runs none, so a request executes its query at most
+once.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import hashlib
+import json
 import os
 import re
+import tempfile
+import time
 from decimal import Decimal
 from typing import Any
 
@@ -118,59 +128,124 @@ def to_json(df: DataFrame, rows: list | None = None) -> dict:
     }
 
 
+# Entries kept in a cache dir; past it the least recently used go first.
+_QUERY_CACHE_MAX_ENTRIES = 256
+
+
 class QueryCache:
-    """Opt-in parquet query cache keyed by (sql, properties) — reference
-    app/query_cache/__init__.py:11-48."""
+    """Opt-in query cache keyed by (sql, limit, timezone, properties) —
+    reference app/query_cache/__init__.py:11-48.
+
+    An entry is the ``{columns, data, dtypes}`` envelope ``to_json``
+    built for the response, as one JSON file: storing it needs no second
+    execution of the query, and a hit answers with no Spark job. Entries
+    are written to a temp file and renamed into place, so a reader sees
+    a whole entry or none. At most ``_QUERY_CACHE_MAX_ENTRIES`` are kept;
+    a hit refreshes an entry's mtime and the oldest are evicted. Other
+    files in the dir (temp files, entries of older layouts) are never
+    read or counted."""
 
     def __init__(self, root: str):
         self.root = root
+        os.makedirs(root, exist_ok=True)
 
     def _path(self, key: str) -> str:
-        return os.path.join(self.root, hashlib.sha256(key.encode()).hexdigest())
+        return os.path.join(self.root, hashlib.sha256(key.encode()).hexdigest() + ".json")
 
-    def get(self, spark, key: str) -> DataFrame | None:
+    def get(self, key: str) -> dict | None:
         p = self._path(key)
-        if os.path.exists(p):
-            return spark.read.parquet(p)
-        return None
+        try:
+            with open(p, encoding="utf-8") as f:
+                entry = json.load(f)
+        except FileNotFoundError:  # never written, or evicted
+            return None
+        # explicit ns: the kernel's file clock is too coarse to order
+        # back-to-back uses
+        now = time.time_ns()
+        with contextlib.suppress(FileNotFoundError):
+            os.utime(p, ns=(now, now))
+        return entry
 
-    def set(self, df: DataFrame, key: str) -> None:
-        df.write.mode("overwrite").parquet(self._path(key))
+    def set(self, out: dict, key: str) -> None:
+        """Store ``out``, unless JSON cannot hold one of its values (an
+        INTERVAL column collects as ``timedelta``, for example): such a
+        result is served but not cached."""
+        try:
+            text = json.dumps(out)
+        except TypeError:
+            return
+        fd, tmp = tempfile.mkstemp(dir=self.root, prefix=".tmp-")
+        try:
+            with os.fdopen(fd, "w", encoding="utf-8") as f:
+                f.write(text)
+            now = time.time_ns()
+            os.utime(tmp, ns=(now, now))
+            os.replace(tmp, self._path(key))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
+            raise
+        self._evict()
+
+    def _evict(self) -> None:
+        entries = [e for e in os.scandir(self.root) if e.name.endswith(".json")]
+        excess = len(entries) - _QUERY_CACHE_MAX_ENTRIES
+        if excess <= 0:
+            return
+
+        def mtime(e: os.DirEntry) -> int:
+            try:
+                return e.stat().st_mtime_ns
+            except FileNotFoundError:  # evicted by a concurrent writer
+                return -1
+
+        for e in sorted(entries, key=mtime)[:excess]:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(e.path)
 
 
 class QueryTimeoutError(TimeoutError):
-    """Raised when a query exceeds its timeout; the Spark job group is
-    cancelled so executors stop burning (reference timeout envelope:
-    ibis-server/app/util.py:319-475 — asyncio timeout + connector
-    close; here the Spark-native equivalent is job-group cancellation)."""
+    """Raised when a query exceeds its timeout; the Spark jobs tagged
+    for the call are cancelled so executors stop burning (reference
+    timeout envelope: ibis-server/app/util.py:319-475 — asyncio timeout
+    + connector close; here the Spark-native equivalent is job-tag
+    cancellation)."""
 
 
 def collect_with_timeout(df: DataFrame, timeout_s: float | None) -> list:
     """Collect ``df``, cancelling the underlying Spark jobs if they run
-    past ``timeout_s`` seconds."""
+    past ``timeout_s`` seconds. The collect runs in an
+    ``InheritableThread``, so its jobs keep the caller's job group,
+    description and tags; one extra job tag, unique to the call, is what
+    the timeout cancels."""
     if not timeout_s:
         return df.collect()
-    import threading
     import uuid
 
-    sc = df.sparkSession.sparkContext
-    group = f"weng-timeout-{uuid.uuid4().hex[:8]}"
+    from pyspark import InheritableThread
+
+    session = df.sparkSession
+    sc = session.sparkContext
+    tag = f"weng-timeout-{uuid.uuid4().hex[:8]}"
     result: list = []
     err: list = []
 
     def run() -> None:
-        # job-group tags are thread-local; set inside the worker thread
-        sc.setJobGroup(group, "query-with-timeout", interruptOnCancel=True)
+        # job tags are thread-local: this marks the worker's jobs only
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(True)
         try:
             result.append(df.collect())
         except Exception as e:  # noqa: BLE001 - surfaced to caller
             err.append(e)
+        finally:
+            sc.removeJobTag(tag)
 
-    t = threading.Thread(target=run, daemon=True)
+    t = InheritableThread(run, session=session, daemon=True)
     t.start()
     t.join(timeout_s)
     if t.is_alive():
-        sc.cancelJobGroup(group)
+        sc.cancelJobsWithTag(tag)
         raise QueryTimeoutError(f"query exceeded {timeout_s}s and was cancelled")
     if err:
         raise err[0]
@@ -205,9 +280,9 @@ class SemanticService:
             return None
         key = f"{sql}|{limit}|{timezone}|{sorted(self.engine.properties.items())}"
         if use_cache and self.cache:
-            hit = self.cache.get(self.engine.spark, key)
+            hit = self.cache.get(key)
             if hit is not None:
-                return {**to_json(hit), "cached": True}
+                return {**hit, "cached": True}
         def _finalize(df: DataFrame) -> DataFrame:
             if timezone is not None:
                 df = _render_timestamps_in_zone(df, timezone)
@@ -232,7 +307,7 @@ class SemanticService:
                 df = df.limit(limit)
         out = to_json(df, rows=collect_with_timeout(df, timeout_s))
         if use_cache and self.cache:
-            self.cache.set(df, key)
+            self.cache.set(out, key)
         return out
 
     def dry_plan(self, sql: str, dialect: str | None = None) -> str:
