@@ -1,30 +1,7 @@
 -- scalar_funcs
 WITH `customer_m` AS (
-  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`, __rel0_0_h0.`name` AS `nation_name`, __rel1_0_h1.`name` AS `region_name`, __agg2.__v AS `total_spent`, __agg3.__v AS `order_count`
+  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`
   FROM (SELECT c_custkey AS `custkey`, c_name AS `name`, c_nationkey AS `nation_key`, c_acctbal AS `acctbal`, c_mktsegment AS `mktsegment` FROM `<SF>/customer.parquet` AS __source) AS __base
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel0_0_h0 ON __base.`nation_key` = __rel0_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel1_0_h0 ON __base.`nation_key` = __rel1_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT r_regionkey AS `regionkey`, r_name AS `name` FROM `<SF>/region.parquet` AS __source
-  ) AS __rel1_0_h1 ON __rel1_0_h0.`regionkey` = __rel1_0_h1.`regionkey`
-  LEFT JOIN (
-    SELECT __agg2_h0.`custkey` AS __k, CAST(SUM(CAST(__agg2_h0.`totalprice` AS DECIMAL(38,6))) AS DOUBLE) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg2_h0
-    GROUP BY __agg2_h0.`custkey`
-  ) AS __agg2 ON __base.`custkey` = __agg2.__k
-  LEFT JOIN (
-    SELECT __agg3_h0.`custkey` AS __k, COUNT(__agg3_h0.`orderkey`) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg3_h0
-    GROUP BY __agg3_h0.`custkey`
-  ) AS __agg3 ON __base.`custkey` = __agg3.__k
 )
 SELECT custkey, strpos(name, 'a') AS pos, ifnull(acctbal, 0) AS bal FROM customer_m WHERE mktsegment = 'BUILDING' ORDER BY custkey LIMIT 10
 
@@ -34,60 +11,14 @@ WITH `nation_m` AS (
   FROM (SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source) AS __base
 ),
 `customer_m` AS (
-  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`, __rel0_0_h0.`name` AS `nation_name`, __rel1_0_h1.`name` AS `region_name`, __agg2.__v AS `total_spent`, __agg3.__v AS `order_count`
+  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`
   FROM (SELECT c_custkey AS `custkey`, c_name AS `name`, c_nationkey AS `nation_key`, c_acctbal AS `acctbal`, c_mktsegment AS `mktsegment` FROM `<SF>/customer.parquet` AS __source) AS __base
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel0_0_h0 ON __base.`nation_key` = __rel0_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel1_0_h0 ON __base.`nation_key` = __rel1_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT r_regionkey AS `regionkey`, r_name AS `name` FROM `<SF>/region.parquet` AS __source
-  ) AS __rel1_0_h1 ON __rel1_0_h0.`regionkey` = __rel1_0_h1.`regionkey`
-  LEFT JOIN (
-    SELECT __agg2_h0.`custkey` AS __k, CAST(SUM(CAST(__agg2_h0.`totalprice` AS DECIMAL(38,6))) AS DOUBLE) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg2_h0
-    GROUP BY __agg2_h0.`custkey`
-  ) AS __agg2 ON __base.`custkey` = __agg2.__k
-  LEFT JOIN (
-    SELECT __agg3_h0.`custkey` AS __k, COUNT(__agg3_h0.`orderkey`) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg3_h0
-    GROUP BY __agg3_h0.`custkey`
-  ) AS __agg3 ON __base.`custkey` = __agg3.__k
 )
 SELECT n.name AS nation, COUNT(*) AS n_cust FROM customer_m c JOIN nation_m n ON c.nationkey = n.nationkey GROUP BY n.name
 
 -- cte
 WITH `customer_m` AS (
-  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`, __rel0_0_h0.`name` AS `nation_name`, __rel1_0_h1.`name` AS `region_name`, __agg2.__v AS `total_spent`, __agg3.__v AS `order_count`
+  SELECT __base.`custkey`, __base.`name`, __base.`nation_key`, __base.`acctbal`, __base.`mktsegment`
   FROM (SELECT c_custkey AS `custkey`, c_name AS `name`, c_nationkey AS `nation_key`, c_acctbal AS `acctbal`, c_mktsegment AS `mktsegment` FROM `<SF>/customer.parquet` AS __source) AS __base
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel0_0_h0 ON __base.`nation_key` = __rel0_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT n_nationkey AS `nationkey`, n_name AS `name`, n_regionkey AS `regionkey` FROM `<SF>/nation.parquet` AS __source
-  ) AS __rel1_0_h0 ON __base.`nation_key` = __rel1_0_h0.`nationkey`
-  LEFT JOIN (
-    SELECT r_regionkey AS `regionkey`, r_name AS `name` FROM `<SF>/region.parquet` AS __source
-  ) AS __rel1_0_h1 ON __rel1_0_h0.`regionkey` = __rel1_0_h1.`regionkey`
-  LEFT JOIN (
-    SELECT __agg2_h0.`custkey` AS __k, CAST(SUM(CAST(__agg2_h0.`totalprice` AS DECIMAL(38,6))) AS DOUBLE) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg2_h0
-    GROUP BY __agg2_h0.`custkey`
-  ) AS __agg2 ON __base.`custkey` = __agg2.__k
-  LEFT JOIN (
-    SELECT __agg3_h0.`custkey` AS __k, COUNT(__agg3_h0.`orderkey`) AS __v
-    FROM (
-    SELECT o_orderkey AS `orderkey`, o_custkey AS `custkey`, o_orderstatus AS `status`, o_totalprice AS `totalprice`, o_orderdate AS `orderdate`, o_orderpriority AS `priority` FROM `<SF>/orders.parquet` AS __source
-  ) AS __agg3_h0
-    GROUP BY __agg3_h0.`custkey`
-  ) AS __agg3 ON __base.`custkey` = __agg3.__k
-)
-WITH big AS (SELECT custkey, acctbal FROM customer_m WHERE acctbal > 1000) SELECT COUNT(*) AS n FROM big
+),
+big AS (SELECT custkey, acctbal FROM customer_m WHERE acctbal > 1000) SELECT COUNT(*) AS n FROM big

@@ -663,3 +663,81 @@ class TestNonIdentifierNames:
         rows = eng.sql('SELECT `clé`, `namé` FROM `客户 table` ORDER BY `clé`').collect()
         assert [r[0] for r in rows] == [1, 2, 3]
         assert eng.sql('SELECT COUNT(*) AS n FROM `vue française`').collect()[0].n == 2
+
+
+class TestPlanErrors:
+    """Calculated fields the planner cannot express raise PlanError at
+    deploy (plan.rs:241-249), not a wrong answer at query time."""
+
+    def _with_calc(self, model, expression):
+        import copy
+
+        man = copy.deepcopy(BASE)
+        cols = man["models"][model]["columns"]
+        cols.append({"name": "Bad", "type": "double", "isCalculated": True,
+                     "expression": expression})
+        return man
+
+    def test_multi_path_aggregate_rejected(self, spark):
+        from wren_engine_spark.engine import PlanError
+
+        man = self._with_calc(0, 'sum("orders"."Price") / count("orders"."Oid")')
+        with pytest.raises(PlanError, match="multiple relationship paths"):
+            _deploy(spark, man)
+
+    def test_non_aggregate_across_to_many_rejected(self, spark):
+        from wren_engine_spark.engine import PlanError
+
+        man = self._with_calc(0, '"orders"."Price"')
+        with pytest.raises(PlanError, match="crosses to-many relationship CO"):
+            _deploy(spark, man)
+
+
+class TestCalcOrder:
+    def test_calc_declared_before_the_calc_it_references(self, spark):
+        import copy
+
+        man = copy.deepcopy(BASE)
+        cols = man["models"][0]["columns"]
+        cols.insert(3, {"name": "TotalX2", "type": "double", "isCalculated": True,
+                        "expression": '"Total" * 2'})
+        eng = _deploy(spark, man)
+        rows = eng.sql("SELECT Id, TotalX2 FROM Customers ORDER BY Id").collect()
+        assert [(r.Id, r.TotalX2) for r in rows] == [(1, 300.0), (2, 140.0), (3, None)]
+        # manifest order, not dependency order, in the model's schema
+        assert eng.sql("SELECT * FROM Customers").columns == [
+            "Id", "Name", "State", "TotalX2", "Total", "NOrders"]
+
+
+class TestNoSessionMutation:
+    def test_sql_registers_no_temp_view(self, spark):
+        eng = _deploy(spark)
+        names = ("Customers", "Orders", "StateView")
+
+        def snapshot():
+            tables = sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+            return tables, {n: spark.table(n).columns for n in names}
+
+        before = snapshot()
+        for q in ("SELECT Id, Total FROM Customers", "SELECT Id, NOrders FROM Customers",
+                  "SELECT Oid, CustState FROM Orders", "SELECT * FROM StateView"):
+            eng.sql(q).collect()
+            assert snapshot() == before, q
+
+    def test_sql_over_cached_model_reads_the_cache(self, spark):
+        from tests.conftest import SF_DIR
+        from wren_engine_spark.queries.semantic import MANIFEST, deploy
+
+        manifest = {**MANIFEST}
+        manifest["models"] = [
+            {**m, "cached": True} if m["name"] == "region_m" else m
+            for m in MANIFEST["models"]
+        ]
+        eng = deploy(spark, SF_DIR, manifest)
+        try:
+            df = eng.sql("SELECT regionkey, name FROM region_m WHERE regionkey > 1")
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan
+            assert df.count() == 3
+        finally:
+            spark.table("region_m").unpersist()

@@ -134,12 +134,171 @@ class TestModelSubstitute:
         assert "`customer_m`" not in out
 
 
+def _agent_queries() -> dict[str, str]:
+    """The agent benchmark's query shapes (perfbench.gen), every
+    calculated-field variant of each template, at sf0.001."""
+    import numpy as np
+
+    from perfbench import gen
+
+    n_orders = gen.table_sizes(0.001)["orders"]
+    out = {"customer_calcs": "SELECT custkey, total_spent, nation_name FROM customer_m"}
+    for template in (*gen.AGENT_QUERY_TEMPLATES, "preview"):
+        for variant in range(4 if template != "preview" else 1):
+            rng = np.random.default_rng([7, variant])
+            out[f"{template}-{variant}"] = gen._agent_query(rng, template, n_orders, variant)
+    return out
+
+
+_AGENT_QUERIES = _agent_queries()
+
+# the guarded models of the drift tests: a CLAC-gated column, a hidden
+# calculated column, RLS on both sides of a relationship, and a to-one and
+# a to-many calculated field across it. The RLS columns keep their source
+# names, so a text that filtered the raw source or skipped a hop target's
+# RLS would still run and answer wrong, not fail to analyze
+_GUARDED = {
+    "catalog": "wren",
+    "schema": "public",
+    "models": [
+        {
+            "name": "g_customer",
+            "tableReference": "customer",
+            "primaryKey": "custkey",
+            "columns": [
+                {"name": "custkey", "type": "bigint", "expression": "c_custkey"},
+                {"name": "c_mktsegment", "type": "varchar"},
+                {"name": "bal", "type": "double", "expression": "c_acctbal",
+                 "columnLevelAccessControl": {
+                     "name": "bal_gate", "operator": "GREATER_THAN",
+                     "threshold": {"value": "5", "type": "NUMERIC"},
+                     "requiredProperties": [{"name": "level", "required": True}]}},
+                {"name": "orders", "relationship": "GCustOrders"},
+                {"name": "hid", "type": "bigint", "isCalculated": True,
+                 "isHidden": True, "expression": '"custkey" + 1'},
+                {"name": "total", "type": "double", "isCalculated": True,
+                 "expression":
+                     'CAST(SUM(CAST("orders"."price" AS DECIMAL(38,6))) AS DOUBLE)'},
+            ],
+            "rowLevelAccessControls": [{
+                "name": "segment_rule",
+                "requiredProperties": [{"name": "segment", "required": True}],
+                "condition": '"c_mktsegment" <> @segment'}],
+        },
+        {
+            "name": "g_orders",
+            "tableReference": "orders",
+            "primaryKey": "o_orderkey",
+            "columns": [
+                {"name": "o_orderkey", "type": "bigint"},
+                {"name": "custkey", "type": "bigint", "expression": "o_custkey"},
+                {"name": "price", "type": "double", "expression": "o_totalprice"},
+                {"name": "customer", "relationship": "GCustOrders"},
+                {"name": "cust_segment", "type": "varchar", "isCalculated": True,
+                 "expression": '"customer"."c_mktsegment"'},
+            ],
+            "rowLevelAccessControls": [{
+                "name": "even_rule", "requiredProperties": [],
+                "condition": '"o_orderkey" % 2 = 0'}],
+        },
+    ],
+    "relationships": [{
+        "name": "GCustOrders", "models": ["g_customer", "g_orders"],
+        "joinType": "ONE_TO_MANY",
+        "condition": '"g_customer"."custkey" = "g_orders"."custkey"'}],
+}
+
+
 class TestDryPlanTwin:
-    def test_dry_plan_executes_identically(self, service, spark):
-        q = "SELECT custkey, total_spent, nation_name FROM customer_m"
-        a = sorted(map(tuple, service.engine.sql(q).collect()))
-        b = sorted(map(tuple, spark.sql(service.dry_plan(q)).collect()))
-        assert a == b
+    """The dry-plan text is a standalone twin of what ``sql`` executes:
+    run in a session with no deployed views, it answers the same."""
+
+    @pytest.fixture(scope="class")
+    def fresh(self, spark):
+        return spark.newSession()
+
+    @pytest.fixture(scope="class")
+    def guarded(self, spark):
+        from wren_engine_spark.engine import SemanticEngine
+        from wren_engine_spark.mdl.manifest import Manifest
+        from wren_engine_spark.sources.registry import SourceRegistry
+
+        eng = SemanticEngine(
+            spark, Manifest.from_dict(_GUARDED), SourceRegistry(spark).add_directory(SF_DIR)
+        )
+        return eng.deploy({"level": "3", "segment": "BUILDING"})
+
+    @staticmethod
+    def _twin(eng, fresh, q):
+        want = eng.sql(q)
+        got = fresh.sql(eng.dry_plan(q))
+        assert got.columns == want.columns
+        rows = sorted(map(tuple, got.collect()), key=repr)
+        assert rows == sorted(map(tuple, want.collect()), key=repr)
+        return got.columns, rows
+
+    @pytest.mark.parametrize("name", list(_AGENT_QUERIES))
+    def test_dry_plan_executes_identically(self, service, fresh, name):
+        self._twin(service.engine, fresh, _AGENT_QUERIES[name])
+
+    @pytest.mark.parametrize("sem", [f"sem{i}" for i in range(1, 8)])
+    def test_sem_query_dry_plan_twin(self, spark, fresh, monkeypatch, sem):
+        from wren_engine_spark.engine import SemanticEngine
+        from wren_engine_spark.queries import semantic
+
+        calls = []
+        real = SemanticEngine.sql
+
+        def spy(eng, sql, *args, **kwargs):
+            calls.append((eng, sql))
+            return real(eng, sql, *args, **kwargs)
+
+        monkeypatch.setattr(SemanticEngine, "sql", spy)
+        getattr(semantic, sem)(spark, SF_DIR)
+        monkeypatch.undo()
+        assert calls
+        for eng, q in calls:
+            self._twin(eng, fresh, q)
+
+    def test_view_dry_plan_runs(self, service, fresh):
+        q = "SELECT mktsegment, n_customers, total_balance FROM segment_value"
+        _, rows = self._twin(service.engine, fresh, q)
+        assert len(rows) == 5
+
+    def test_denied_and_hidden_columns_absent(self, guarded, fresh):
+        cols, _ = self._twin(guarded, fresh, "SELECT * FROM g_customer")
+        assert cols == ["custkey", "c_mktsegment", "total"]
+
+    def test_related_rls_hides_to_one_row(self, guarded, fresh):
+        q = "SELECT o_orderkey, custkey, cust_segment FROM g_orders"
+        _, rows = self._twin(guarded, fresh, q)
+        hidden = {
+            r[0] for r in fresh.sql(
+                f"SELECT c_custkey FROM parquet.`{SF_DIR}/customer.parquet` "
+                "WHERE c_mktsegment = 'BUILDING'").collect()
+        }
+        assert hidden and rows
+        assert all((seg is None) == (cust in hidden) for _, cust, seg in rows)
+
+    def test_related_rls_hides_to_many_rows(self, guarded, fresh):
+        _, rows = self._twin(guarded, fresh, "SELECT custkey, total FROM g_customer")
+        want = fresh.sql(
+            f"SELECT c_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE)"
+            f" FROM parquet.`{SF_DIR}/customer.parquet`"
+            f" LEFT JOIN parquet.`{SF_DIR}/orders.parquet`"
+            " ON o_custkey = c_custkey AND o_orderkey % 2 = 0"
+            " WHERE c_mktsegment <> 'BUILDING' GROUP BY c_custkey"
+        ).collect()
+        assert rows == sorted(map(tuple, want), key=repr)
+
+    def test_with_query_runs_in_spark_and_duckdb(self, service, fresh):
+        import duckdb
+
+        q = ("WITH big AS (SELECT custkey, acctbal FROM customer_m "
+             "WHERE acctbal > 1000) SELECT COUNT(*) AS n FROM big")
+        _, rows = self._twin(service.engine, fresh, q)
+        text = service.dry_plan(q, dialect="duckdb")
+        assert duckdb.sql(text).fetchall() == rows
 
     def test_duckdb_dialect_executes_in_duckdb(self, service):
         # the duckdb-rendered dry-plan is directly runnable there

@@ -1,31 +1,25 @@
-"""SemanticEngine: MDL manifest -> governed Spark temp views -> SQL.
+"""SemanticEngine: MDL manifest -> one planned SQL text -> Spark.
 
 This is the Spark-first rebuild of the reference's planning pipeline
-(SURVEY.md §0, §2.A). Where the reference expands models inside a
-DataFusion LogicalPlan and unparses back to backend SQL
-(wren-core/core/src/mdl/mod.rs:477-541), we build each model as a
-DataFrame and register it as a temp view; the user's SQL then runs
-directly through Catalyst — predicate pushdown, column pruning, join
-planning, AQE all apply to the *expanded* plan for free (the reference
-had to disable most optimizer rules for unparse fidelity,
-context.rs:229-275; we keep them all).
+(SURVEY.md §0, §2.A). As in the reference's CTE rewriter (PAPER.md §0
+steps 3-6; wren/src/wren/mdl/cte_rewriter.py), a query is planned once,
+into SQL text: ``plans/cte_rewriter.py`` makes each model and view the
+query references a CTE, with expression columns, RLS, CLAC, hidden
+columns and only the referenced calculated fields applied. That text
+then runs through Catalyst — predicate pushdown, column pruning, join
+planning, AQE all apply to the *expanded* plan (the reference had to
+disable most optimizer rules for unparse fidelity, context.rs:229-275;
+we keep them all).
 
-Per-model expansion semantics (parity targets):
-  - expression columns     -> ``F.expr(expression).alias(name)``
-    (ModelSourceNode, analyze/plan.rs:891-1035)
-  - ref_sql models         -> ``spark.sql(ref_sql)`` as the source
-    (SqlReferencePlanNode, plan.rs:1208-1272)
-  - to-one calculated      -> left join along the relationship chain,
-    inline expression (plan.rs:189-291, relation_chain.rs:35-299)
-  - to-many calculated     -> pre-aggregate the related side by its join
-    key, then 1:1 left join back on the primary key so base cardinality
-    never changes (plan.rs:1038-1143; invariant model.slt:37-44)
-  - RLS                    -> validated/substituted filter inside the view
-    (access_control.rs:121-288, model_generation.rs:88-129)
-  - CLAC / hidden columns  -> excluded from the view projection
-    (access_control.rs:290-399, context.rs:336-367)
-  - views                  -> ``spark.sql(statement)`` registered after
-    models (expand_view.rs:35-69)
+``deploy`` registers, once per deploy:
+  - each model's physical source as an engine-private temp view, the
+    FROM leaf of the executed text. ``dry_plan`` returns the same text
+    with standalone scans (``parquet.`path```) as leaves instead;
+  - each model (every field), view and cube as a temp view, so
+    ``spark.table(model)``, cubes and the ``cached`` hint work. A model
+    CTE whose body equals a cached model's body reads the cache.
+
+A request registers nothing: ``sql`` rewrites, then analyzes.
 
 Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
@@ -39,47 +33,23 @@ from __future__ import annotations
 
 import re
 import threading
-from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wren_engine_spark.mdl.lineage import (
-    LineageError,
-    RelPath,
-    check_cycles,
-    extract_paths,
-    is_aggregate_expression,
+from wren_engine_spark.mdl.lineage import check_cycles
+from wren_engine_spark.mdl.manifest import Manifest, Model, quote_ident
+from wren_engine_spark.plans.cte_rewriter import (
+    AccessControlError,
+    CteRewriter,
+    PlanError,
+    _clac_allows,
+    _sq,
 )
-from wren_engine_spark.mdl.manifest import (
-    Column,
-    ColumnLevelAccessControl,
-    Manifest,
-    Model,
-    Relationship,
-    RowLevelAccessControl,
-    quote_ident,
-)
-from wren_engine_spark.plans.sqltext import identifiers, rewrite_outside_literals
+from wren_engine_spark.plans.sqltext import identifiers
 from wren_engine_spark.sources.registry import SourceRegistry
-
-
-class AccessControlError(PermissionError):
-    pass
-
-
-class PlanError(ValueError):
-    pass
-
-
-_IDENT = r'(?:"[^"]+"|[A-Za-z_][A-Za-z0-9_]*|`[^`]+`)'
-_EQ_COND = re.compile(rf"^\s*({_IDENT})\s*\.\s*({_IDENT})\s*=\s*({_IDENT})\s*\.\s*({_IDENT})\s*$")
-_VAR = re.compile(r"@([A-Za-z_][A-Za-z0-9_]*)")
-_NUMERIC = re.compile(r"^-?\d+(\.\d+)?$")
-_FORBIDDEN_RLS = re.compile(r"\b(select|insert|update|delete|union)\b|;", re.IGNORECASE)
-
 
 def _register_temp_view(spark: SparkSession, df: DataFrame, name: str) -> None:
     """Register a temp view accepting ANY model/view name the reference
@@ -99,25 +69,6 @@ def _register_temp_view(spark: SparkSession, df: DataFrame, name: str) -> None:
             f"CREATE OR REPLACE TEMPORARY VIEW {quote_ident(name)} "
             f"AS SELECT * FROM {safe}"
         )
-
-
-_COUNT_STAR = re.compile(r"\bcount\s*\(\s*\*\s*\)", re.IGNORECASE)
-
-
-def _has_star_projection(spans: list[tuple[str, str]]) -> bool:
-    """True when the query may project a model's full schema (``*`` or
-    ``tbl.*``) — calculated-field pruning must then keep every field.
-    ``COUNT(*)`` is NOT a star projection (it reads no columns), so it
-    is excluded before the check; remaining ``*`` tokens (including
-    multiplication, which is indistinguishable without a parse) keep
-    the conservative answer. Takes pre-lexed spans (one lex serves this
-    and the identifier scan); literal/comment content is ignored."""
-    from wren_engine_spark.plans.sqltext import CODE
-
-    for seg, kind in spans:
-        if kind == CODE and "*" in _COUNT_STAR.sub("", seg):
-            return True
-    return False
 
 
 def _convert_java_exception(e: Exception) -> Exception:
@@ -169,122 +120,6 @@ def _validate_timezone(tz: str) -> None:
         raise PlanError(f"invalid timezone {tz!r}") from e
 
 
-def _unq(s: str) -> str:
-    if s and s[0] in '"`':
-        return s[1:-1]
-    return s
-
-
-def _parse_equi_condition(rel: Relationship) -> tuple[str, str, str, str]:
-    """Parse ``"A"."x" = "B"."y"`` -> (model_a, col_a, model_b, col_b).
-
-    The reference requires equality conditions on relationships
-    (manifest-macro join condition; ExtractEquijoinPredicate kept at
-    context.rs:243)."""
-    m = _EQ_COND.match(rel.condition)
-    if not m:
-        raise PlanError(
-            f"relationship {rel.name}: only equi-conditions of the form "
-            f"model.col = model.col are supported, got {rel.condition!r}"
-        )
-    return _unq(m.group(1)), _unq(m.group(2)), _unq(m.group(3)), _unq(m.group(4))
-
-
-def _rel_keys(rel: Relationship, near_model: str) -> tuple[str, str]:
-    """(near_key, far_key) for a relationship traversed from near_model."""
-    ma, ca, mb, cb = _parse_equi_condition(rel)
-    if ma.lower() == near_model.lower():
-        return ca, cb
-    if mb.lower() == near_model.lower():
-        return cb, ca
-    raise PlanError(f"relationship {rel.name}: {near_model} is not an endpoint")
-
-
-def _substitute_vars(condition: str, props: dict[str, str],
-                     rule: RowLevelAccessControl) -> str:
-    """Replace ``@var`` with session-property literals after validating
-    required properties (access_control.rs:121-288 semantics)."""
-    declared = {p.name: p for p in rule.required_properties}
-    for p in rule.required_properties:
-        if p.required and p.name not in props and p.default_expr is None:
-            raise AccessControlError(
-                f"RLS rule {rule.name!r}: required session property {p.name!r} missing"
-            )
-
-    def repl(m: re.Match) -> str:
-        var = m.group(1).lower()
-        if var in props:
-            val = str(props[var])
-        elif var in declared and declared[var].default_expr is not None:
-            return f"({declared[var].default_expr})"
-        else:
-            raise AccessControlError(
-                f"RLS rule {rule.name!r}: session property {var!r} not provided"
-            )
-        if _NUMERIC.match(val):
-            return val
-        return "'" + val.replace("'", "''") + "'"
-
-    return _VAR.sub(repl, condition)
-
-
-def _sanitize_rls(condition: str, rule_name: str) -> None:
-    """Reject subqueries/statements inside RLS conditions
-    (access_control.rs:216-248 parity)."""
-    if _FORBIDDEN_RLS.search(condition):
-        raise AccessControlError(
-            f"RLS rule {rule_name!r}: condition must be a simple boolean "
-            f"expression (no subqueries/statements)"
-        )
-
-
-def _clac_allows(clac: ColumnLevelAccessControl | None, props: dict[str, str]) -> bool:
-    """Evaluate a column-level access rule against session properties
-    (access_control.rs:290-399). Missing/failed -> column hidden."""
-    if clac is None:
-        return True
-    for p in clac.required_properties:
-        val = props.get(p.name, None)
-        if val is None:
-            if p.default_expr is not None:
-                val = str(p.default_expr).strip("'\"")
-            elif p.required:
-                return False
-            else:
-                continue
-        if clac.threshold is None:
-            continue
-        tv = clac.threshold.value
-        if clac.threshold.type == "NUMERIC":
-            try:
-                a, b = float(val), float(tv)
-            except ValueError:
-                return False
-        else:
-            a, b = str(val), str(tv)
-        op = clac.operator
-        ok = (
-            (op == "EQUALS" and a == b)
-            or (op == "NOT_EQUALS" and a != b)
-            or (op in ("GREATER_THAN", "GT") and a > b)
-            or (op in ("LESS_THAN", "LT") and a < b)
-            or (op in ("GREATER_THAN_OR_EQUALS", "GTE") and a >= b)
-            or (op in ("LESS_THAN_OR_EQUALS", "LTE") and a <= b)
-        )
-        if not ok:
-            return False
-    return True
-
-
-@dataclass
-class _ModelPlan:
-    """Resolved pieces of one model's expansion."""
-
-    model: Model
-    base: DataFrame                      # expression-projected + RLS-filtered
-    visible: list[str] = field(default_factory=list)
-
-
 class SemanticEngine:
     """Deploys an MDL manifest onto a SparkSession and answers SQL.
 
@@ -300,16 +135,14 @@ class SemanticEngine:
         self.manifest = manifest
         self.sources = sources
         self.properties: dict[str, str] = {}
-        self._plans: dict[str, _ModelPlan] = {}
-        # serializes variant-view swaps + analysis: the service layer may
-        # call sql() from multiple threads on one shared session, and a
-        # concurrent re-registration between A's view swap and A's
-        # spark.sql() would fail A with UNRESOLVED_COLUMN
+        # serializes the per-request session timezone (set around
+        # analysis on the shared session) and the plan cache: the service
+        # layer may call sql() from multiple threads
         self._sql_lock = threading.RLock()
         # analyzed-plan LRU: spark.sql analysis is eager, so a DataFrame
         # is an immutable bound plan — repeated query texts (dashboards,
-        # polling agents) skip the parse+analyze round trip entirely.
-        # Invalidated wholesale on (re)deploy.
+        # polling agents) skip the rewrite+parse+analyze round trip
+        # entirely. Invalidated wholesale on (re)deploy.
         from collections import OrderedDict
 
         self._plan_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
@@ -319,18 +152,30 @@ class SemanticEngine:
     # ------------------------------------------------------------------ deploy
 
     def deploy(self, properties: dict[str, str] | None = None) -> "SemanticEngine":
-        """Register every model (and then every view) as a temp view."""
+        """Register each model's source, then every model, view and cube,
+        as temp views, and build the planners for ``sql`` and
+        ``dry_plan``. Access-control and planning errors (a missing RLS
+        property, an unsupported calculated field, a view cycle) raise
+        here."""
         from wren_engine_spark.functions.compat import register_compat_functions
 
         register_compat_functions(self.spark)
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
-        self._plans = {}
-        self._variants: dict[tuple[str, frozenset], DataFrame] = {}
-        self._active_variant: dict[str, frozenset] = {}
-        self._deployed_models: dict[str, DataFrame] = {}
         self._plan_cache.clear()
-        for model in self.manifest.models:
-            df = self._expand_model(model)
+        models = self.manifest.models
+        # id(self) keeps the names apart from every other live engine's
+        leaves = {m.name: f"__wren_model_src_{id(self):x}_{i}" for i, m in enumerate(models)}
+        self._planner = CteRewriter(self.manifest, self.properties, leaves)
+        self._dry_planner = CteRewriter(
+            self.manifest,
+            self.properties,
+            {m.name: self.sources.resolve_sql(m.table_reference)
+             for m in models if m.table_reference},
+        )
+        for model in models:
+            _register_temp_view(self.spark, self._source_df(model), leaves[model.name])
+        for model in models:
+            df = self.spark.sql(self._planner.model_sql(model))
             if model.cached:
                 # materialization hint (manifest-macro/src/lib.rs:141-168
                 # `cached`+`refresh_time`); Spark equivalent: keep the
@@ -338,63 +183,10 @@ class SemanticEngine:
                 # would write a refresh_time-scheduled Delta table.
                 df = df.cache()
             _register_temp_view(self.spark, df, model.name)
-            self._deployed_models[model.name] = df
-        for view in self._views_in_dependency_order():
-            _register_temp_view(
-                self.spark, self.spark.sql(self._strip_ns(view.statement)), view.name
-            )
+        for v in self._planner.views:
+            _register_temp_view(self.spark, self.spark.sql(v.text), v.view.name)
         for cube in self.manifest.cubes:
             self._register_cube(cube)
-        return self
-
-    def _views_in_dependency_order(self):
-        """Register views so that a view referencing another view comes
-        after it, regardless of manifest order (the reference expands
-        views lazily — expand_view.rs:35-69 — so order never matters
-        there; eager temp-view registration needs the topological sort).
-        Cycles raise PlanError."""
-        views = list(self.manifest.views)
-        names = {v.name.lower(): v for v in views}
-        deps: dict[str, set[str]] = {}
-        for v in views:
-            # identifier tokens outside string literals only — a view name
-            # appearing in a literal is not a dependency
-            refs = {
-                n
-                for n in identifiers(v.statement)
-                if n in names and n != v.name.lower()
-            }
-            deps[v.name.lower()] = refs
-        ordered, done = [], set()
-        visiting: set[str] = set()
-
-        def visit(name: str) -> None:
-            if name in done:
-                return
-            if name in visiting:
-                raise PlanError(f"view dependency cycle involving {name!r}")
-            visiting.add(name)
-            for d in sorted(deps[name]):
-                visit(d)
-            visiting.discard(name)
-            done.add(name)
-            ordered.append(names[name])
-
-        for v in views:
-            visit(v.name.lower())
-        return ordered
-
-    def reattach(self) -> "SemanticEngine":
-        """Re-register this engine's views from the already-expanded
-        frames (no re-expansion). Needed when another engine deployed
-        same-named views on the shared session since this one did."""
-        for name, df in self._deployed_models.items():
-            _register_temp_view(self.spark, df, name)
-        self._active_variant = {}
-        for view in self._views_in_dependency_order():
-            _register_temp_view(
-                self.spark, self.spark.sql(self._strip_ns(view.statement)), view.name
-            )
         return self
 
     def sql(
@@ -404,26 +196,19 @@ class SemanticEngine:
         use_plan_cache: bool = True,
         finalize: Any | None = None,
     ) -> DataFrame:
-        """Run user SQL against the deployed semantic layer.
-
-        Before planning, each model view is re-registered with only the
-        calculated fields the query references (semantic-layer column
-        pruning — parity with ModelPlanNode's required-column collection,
-        analyze/plan.rs:63-426). Catalyst prunes unused *columns* for
-        free but keeps unused left joins/pre-aggregations in the plan;
-        dropping unreferenced calculated fields removes those joins
-        entirely. A ``*`` in the query keeps every field (schema must
-        stay complete). Extra inclusions from name collisions are
-        harmless (correctness unaffected, only cost).
+        """Run user SQL against the deployed semantic layer: plan it into
+        one text with the CTE rewriter (models and views as CTEs, only
+        the referenced calculated fields attached, so unused joins and
+        pre-aggregations never enter the plan) and analyze that text.
+        Nothing is registered on the session.
 
         ``timezone`` evaluates THIS query under the given session zone
         (reference: per-request ``x-wren-timezone`` header,
         ibis-server/app/mdl/rewriter.py:176-186 /
         wren-core/core/src/mdl/context.rs:50-75). Spark's ResolveTimeZone
         rule stamps the session zone into every tz-aware expression at
-        analysis time, so setting the conf around ``spark.sql`` (inside
-        the planning lock) scopes it to this query; the default stays
-        UTC.
+        analysis time, so setting the conf around the analysis (inside
+        the lock) scopes it to this query; the default stays UTC.
         """
         # timezone'd / finalize-wrapped plans skip the cache (wrappers
         # vary per request and the queries are typically personalized)
@@ -439,53 +224,11 @@ class SemanticEngine:
                 if hit is not None:
                     self._plan_cache.move_to_end(cache_key)
                     return hit
-        stripped = self._strip_ns(sql)
-        from wren_engine_spark.plans.sqltext import identifiers_from_spans, lex
-
-        spans = lex(stripped)
-        star = _has_star_projection(spans)
-        all_idents = identifiers_from_spans(spans)
-        idents = None if star else all_idents
         # time-/randomness-dependent queries must re-plan every call
-        if not _UNCACHEABLE_FNS.isdisjoint(all_idents):
+        if not _UNCACHEABLE_FNS.isdisjoint(identifiers(sql)):
             use_plan_cache = False
-        # spark.sql() analyzes eagerly (Dataset.ofRows asserts analysis),
-        # so once it returns, the plan is bound to the views as they were
-        # inside the lock; later swaps cannot affect it
+        text = self._planner.rewrite(sql)
         with self._sql_lock:
-            for model in self.manifest.models:
-                calcs = model.calculated_columns
-                if not any(
-                    extract_paths(model, self.manifest, c.expression or "") for c in calcs
-                ):
-                    continue  # no join-backed fields -> full view is already cheap
-                if idents is None:
-                    used = {c.name for c in calcs}
-                else:
-                    # identifier-token match (string literals excluded)
-                    used = {c.name for c in calcs if c.name.lower() in idents}
-                    # close over calc-to-calc references: a kept calc
-                    # whose expression names another calc needs that calc
-                    # attached too, or withColumn on the pruned view fails
-                    by_lower = {c.name.lower(): c for c in calcs}
-                    frontier = list(used)
-                    while frontier:
-                        c = by_lower[frontier.pop().lower()]
-                        for dep in identifiers(c.expression or ""):
-                            dc = by_lower.get(dep)
-                            if dc is not None and dc.name not in used:
-                                used.add(dc.name)
-                                frontier.append(dc.name)
-                key = (model.name.lower(), frozenset(used))
-                df = self._variants.get(key)
-                if df is None:
-                    df = self._expand_model(model, calc_subset=used)
-                    self._variants[key] = df
-                # re-register only when the active variant actually changes
-                # (one py4j round-trip per model otherwise)
-                if self._active_variant.get(model.name.lower()) != key[1]:
-                    _register_temp_view(self.spark, df, model.name)
-                    self._active_variant[model.name.lower()] = key[1]
             tz_old: str | None = None
             if timezone is not None:
                 _validate_timezone(timezone)
@@ -497,7 +240,7 @@ class SemanticEngine:
                 # the DataFrame constructor below is pure-Python. Java
                 # exceptions are converted to the standard PySpark types
                 # in the except path so callers see identical errors.
-                jdf = self.spark._jsparkSession.sql(stripped)
+                jdf = self.spark._jsparkSession.sql(text)
                 df = DataFrame(jdf, self.spark)
                 if finalize is not None:
                     # caller-supplied wrapping (output-zone rendering,
@@ -531,7 +274,7 @@ class SemanticEngine:
                     # (`M`.`state`), so collect every backticked token —
                     # any of them may be the denied column
                     toks = re.findall(r"`([^`]+)`", msg)
-                    self.analyze_permissions(stripped, unresolved=toks or None)
+                    self.analyze_permissions(sql, unresolved=toks or None)
                 if conv is e:
                     raise
                 raise conv from None
@@ -586,266 +329,24 @@ class SemanticEngine:
 
     def dry_plan(self, sql: str, dialect: str | None = None) -> str:
         """Expanded standalone SQL text for the query (reference
-        /dry-plan endpoint, v3/connector.py:250-341), built by the CTE
-        rewriter over the same lineage the DataFrame path uses.
+        /dry-plan endpoint, v3/connector.py:250-341): the text ``sql``
+        executes, with each model's FROM leaf a standalone scan
+        (``SourceRegistry.resolve_sql``) instead of its source view.
 
         ``dialect`` renders the text for another engine (reference
         transpile: ibis-server/app/mdl/rewriter.py:90-104) — 'duckdb',
         'postgres', 'ansi', or None/'spark' for Spark SQL."""
-        from wren_engine_spark.plans.cte_rewriter import CteRewriter
         from wren_engine_spark.plans.dialect import render
 
-        source_sql = {
-            m.name: self.sources.resolve_sql(m.table_reference)
-            if m.table_reference
-            else f"({self._strip_ns(m.ref_sql)})"
-            for m in self.manifest.models
-        }
-        text = CteRewriter(self.manifest, self.properties, source_sql).rewrite(
-            self._strip_ns(sql)
-        )
-        return render(text, dialect)
-
-    # ------------------------------------------------------- model expansion
-
-    def _strip_ns(self, sql: str) -> str:
-        """Strip ``catalog.schema.`` prefixes from model references — temp
-        views live in a flat namespace (model_anlayze.rs:56-64 step 3 does
-        the same before unparse). Rewrites are quote-aware: content of
-        single-quoted string literals is never touched."""
-        cat, sch = self.manifest.catalog, self.manifest.schema
-
-        def seg(s: str) -> str:
-            for pat in (
-                rf'"{cat}"\s*\.\s*"{sch}"\s*\.',
-                rf"\b{re.escape(cat)}\s*\.\s*{re.escape(sch)}\s*\.",
-                rf'\b{re.escape(sch)}\s*\.\s*(?=")',
-            ):
-                s = re.sub(pat, "", s)
-            # double-quoted identifiers -> backticks (Spark default parser)
-            return re.sub(r'"([^"]+)"', r"`\1`", s)
-
-        return rewrite_outside_literals(sql, seg)
+        return render(self._dry_planner.rewrite(sql), dialect)
 
     def _source_df(self, model: Model) -> DataFrame:
         if model.ref_sql:
-            return self.spark.sql(self._strip_ns(model.ref_sql))
+            return self.spark.sql(self._planner.strip_ns(model.ref_sql))
         return self.sources.resolve(model.table_reference)
 
     def _expr(self, sql_expr: str) -> SparkColumn:
-        return F.expr(
-            rewrite_outside_literals(
-                sql_expr, lambda s: re.sub(r'"([^"]+)"', r"`\1`", s)
-            )
-        )
-
-    def _base_plan(self, model: Model) -> _ModelPlan:
-        """Expression-projected + RLS-filtered frame with *all* physical
-        columns (pre-CLAC). Cached per deploy."""
-        key = model.name.lower()
-        if key in self._plans:
-            return self._plans[key]
-        src = self._source_df(model)
-        cols = [self._expr(c.sql_expression).alias(c.name) for c in model.physical_columns]
-        base = src.select(*cols)
-        for rule in model.row_level_access_controls:
-            _sanitize_rls(rule.condition, rule.name)
-            cond = _substitute_vars(rule.condition, self.properties, rule)
-            base = base.filter(self._expr(cond))
-        plan = _ModelPlan(model=model, base=base)
-        self._plans[key] = plan
-        return plan
-
-    def _expand_model(self, model: Model, calc_subset: set[str] | None = None) -> DataFrame:
-        """Build the model view. ``calc_subset`` limits which calculated
-        fields are attached (None = all; see sql() pruning)."""
-        plan = self._base_plan(model)
-        df = plan.base
-        attached: set[str] = set()
-        # attach in dependency order (a plain calc may reference another
-        # calc of the same model — manifest order must not matter);
-        # leftovers with unsatisfiable deps attach last so the analysis
-        # error names the actual missing column
-        calc_names = {c.name.lower() for c in model.calculated_columns}
-        avail = {c.lower() for c in df.columns}
-        pending = [
-            c for c in model.calculated_columns
-            if calc_subset is None or c.name in calc_subset
-        ]
-        progress = True
-        while pending and progress:
-            progress, rest = False, []
-            for col in pending:
-                deps = identifiers(col.expression or "") & calc_names
-                if deps - {col.name.lower()} <= avail:
-                    df = self._attach_calculated(df, model, col)
-                    attached.add(col.name)
-                    avail.add(col.name.lower())
-                    progress = True
-                else:
-                    rest.append(col)
-            pending = rest
-        for col in pending:
-            df = self._attach_calculated(df, model, col)
-            attached.add(col.name)
-        visible = [
-            c.name
-            for c in model.columns
-            if not c.is_relationship
-            and not c.is_hidden
-            and (not c.is_calculated or calc_subset is None or c.name in attached)
-            and _clac_allows(c.column_level_access_control, self.properties)
-        ]
-        plan.visible = visible
-        return df.select(*[quote_ident(c) for c in visible])
-
-    # ------------------------------------------------ calculated-field joins
-
-    def _attach_calculated(self, df: DataFrame, model: Model, col: Column) -> DataFrame:
-        expr = col.expression or ""
-        paths = extract_paths(model, self.manifest, expr)
-        if not paths:
-            # plain expression over the model's own columns
-            return df.withColumn(col.name, self._expr(expr))
-        if is_aggregate_expression(expr):
-            return self._attach_to_many(df, model, col, expr, paths)
-        return self._attach_to_one(df, model, col, expr, paths)
-
-    def _path_frame(
-        self, model: Model, path: RelPath, prefix: str
-    ) -> tuple[DataFrame, str, str, dict[str, str]]:
-        """Build the joined far-side frame for a relationship path.
-
-        Returns (frame, base_key, far_key_col, rename_map) where ``frame``
-        contains the hop-1 join key named ``far_key_col`` and every column
-        of the terminal model prefixed, ``base_key`` is the column on the
-        base model to join against, and rename_map maps terminal-model
-        column names -> prefixed names (for expression rewriting).
-        """
-        cur_model = model
-        frame: DataFrame | None = None
-        far_key_col = ""
-        base_key = ""
-        rename: dict[str, str] = {}
-        for hop_idx, hop in enumerate(path.hops):
-            relcol = cur_model.column(hop)
-            rel = self.manifest.relationship(relcol.relationship)
-            near_key, far_key = _rel_keys(rel, cur_model.name)
-            target = self.manifest.model(rel.other_model(cur_model.name))
-            tplan = self._base_plan(target)
-            tdf = tplan.base
-            # inline the target's own non-relationship calculated columns so
-            # calc-on-calc works one level at a time (PartialModelPlanNode,
-            # plan.rs:1149-1201) — iterative, not recursive: deeper paths
-            # were already rejected by check_cycles. Only calcs whose
-            # calc-references are already resolvable are inlined (a plain
-            # calc built ON a join-backed calc cannot ride along a
-            # relationship hop); fixpoint iteration makes manifest order
-            # irrelevant for plain-calc -> plain-calc chains.
-            tcalc_names = {c.name.lower() for c in target.calculated_columns}
-            avail = {c.lower() for c in tdf.columns}
-            pending = [
-                c for c in target.calculated_columns
-                if not extract_paths(target, self.manifest, c.expression or "")
-            ]
-            progress = True
-            while pending and progress:
-                progress, rest = False, []
-                for tcol in pending:
-                    deps = identifiers(tcol.expression or "") & tcalc_names
-                    if deps <= avail:
-                        tdf = tdf.withColumn(tcol.name, self._expr(tcol.expression))
-                        avail.add(tcol.name.lower())
-                        progress = True
-                    else:
-                        rest.append(tcol)
-                pending = rest
-            pfx = f"{prefix}_h{hop_idx}"
-            this_rename = {c: f"{pfx}__{c}" for c in tdf.columns}
-            tdf = tdf.select(*[F.col(quote_ident(c)).alias(n) for c, n in this_rename.items()])
-            if frame is None:
-                frame = tdf
-                base_key = near_key
-                far_key_col = this_rename[self._resolve_name(target, far_key)]
-            else:
-                # join previous chain to this hop's target
-                prev_key = rename[self._resolve_name(cur_model, near_key)]
-                frame = frame.join(
-                    tdf,
-                    on=F.col(quote_ident(prev_key))
-                    == F.col(quote_ident(this_rename[self._resolve_name(target, far_key)])),
-                    how="left",
-                )
-            rename = this_rename
-            cur_model = target
-        return frame, base_key, far_key_col, rename
-
-    @staticmethod
-    def _resolve_name(model: Model, name: str) -> str:
-        c = model.column(name)
-        return c.name if c is not None else name
-
-    def _attach_to_one(
-        self, df: DataFrame, model: Model, col: Column, expr: str, paths: list[RelPath]
-    ) -> DataFrame:
-        """Inline a to-one calculated field: left-join the relationship
-        chain (each hop declared to-one, so base cardinality is stable —
-        invariant tested by model.slt:37-44) and evaluate the rewritten
-        expression."""
-        out = df
-        for i, path in enumerate(paths):
-            for hop_idx, hop in enumerate(path.hops):
-                relcol = (model if hop_idx == 0 else self.manifest.model(path.models[hop_idx - 1])).column(hop)
-                rel = self.manifest.relationship(relcol.relationship)
-                near = model.name if hop_idx == 0 else path.models[hop_idx - 1]
-                if not rel.is_to_one(near):
-                    raise PlanError(
-                        f"calculated field {model.name}.{col.name}: non-aggregate "
-                        f"expression crosses to-many relationship {rel.name}"
-                    )
-            prefix = f"__calc{abs(hash((col.name, i))) % 10_000}"
-            frame, base_key, far_key_col, rename = self._path_frame(model, path, prefix)
-            out = out.join(
-                frame,
-                on=F.col(quote_ident(base_key)) == F.col(quote_ident(far_key_col)),
-                how="left",
-            )
-            expr = expr.replace(path.raw, quote_ident(rename[self._resolve_name(
-                self.manifest.model(path.models[-1]), path.terminal)]))
-        out = out.withColumn(col.name, self._expr(expr))
-        return out.select(*[quote_ident(c) for c in df.columns], quote_ident(col.name))
-
-    def _attach_to_many(
-        self, df: DataFrame, model: Model, col: Column, expr: str, paths: list[RelPath]
-    ) -> DataFrame:
-        """Aggregate calculated field: pre-aggregate the far side grouped
-        by the hop-1 join key, then left-join 1:1 on the base key
-        (plan.rs:1038-1143 + model_generation.rs:212-260 semantics; the
-        pre-aggregation keeps base-model cardinality unchanged).
-
-        Requires a primary key when the expression mixes paths, matching
-        plan.rs:241-249."""
-        if len(paths) != 1:
-            raise PlanError(
-                f"calculated field {model.name}.{col.name}: multiple relationship "
-                f"paths in one aggregate expression are not yet supported"
-            )
-        path = paths[0]
-        prefix = f"__agg{abs(hash(col.name)) % 10_000}"
-        frame, base_key, far_key_col, rename = self._path_frame(model, path, prefix)
-        terminal_model = self.manifest.model(path.models[-1])
-        agg_expr = expr.replace(
-            path.raw, quote_ident(rename[self._resolve_name(terminal_model, path.terminal)])
-        )
-        grouped = frame.groupBy(F.col(quote_ident(far_key_col))).agg(
-            self._expr(agg_expr).alias(col.name)
-        )
-        out = df.join(
-            grouped,
-            on=F.col(quote_ident(base_key)) == F.col(quote_ident(far_key_col)),
-            how="left",
-        )
-        return out.select(*[quote_ident(c) for c in df.columns], quote_ident(col.name))
+        return F.expr(_sq(sql_expr))
 
     # ----------------------------------------------------------------- cubes
 
@@ -1033,10 +534,3 @@ class SemanticEngine:
         if old is not None:
             old.unpersist()
         self._register_cube(cube)
-
-    # ------------------------------------------------------------- metadata
-
-    def model_schema(self, name: str) -> list[tuple[str, str]]:
-        """Visible (name, type) pairs for a deployed model view."""
-        df = self.spark.table(name)
-        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]

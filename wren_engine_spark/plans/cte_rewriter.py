@@ -1,28 +1,64 @@
-"""CTE rewriter: expand an MDL manifest + user SQL into standalone
-Spark SQL text.
+"""CTE rewriter: the semantic planner. Expands an MDL manifest + user SQL
+into one Spark SQL text.
 
-Parity with the reference's dry-plan surface and its CTE-based rewrite
-approach (wren/src/wren/mdl/cte_rewriter.py:41-288; dry-plan endpoint
-v3/connector.py:250-341): each model referenced by the query becomes a
-CTE whose SELECT carries the expression columns, RLS filters, and
-calculated fields (to-one relationship chains as inline LEFT JOINs;
-to-many aggregates as pre-aggregated LEFT-JOINed subqueries). The
-produced text runs on any SparkSession with the physical sources
-registered — no engine instance needed — and backs
-``SemanticEngine.dry_plan``.
+Parity with the reference's CTE-based rewrite (wren/src/wren/mdl/
+cte_rewriter.py:41-288; PAPER.md §0 steps 3-6): each model the query
+references becomes a CTE that projects its expression columns, filters
+by its RLS rules, drops hidden and CLAC-denied columns and attaches only
+the calculated fields the query names. Every relationship path of a
+calculated field is one LEFT-JOINed ``(__k, __v)`` subquery keyed on the
+path's first hop: ``__v`` is the terminal column (to-one) or the
+aggregate grouped by ``__k`` (to-many), so base cardinality never
+changes (model.slt:37-44). Hop targets carry their own RLS filter.
+Referenced manifest views follow as CTEs in dependency order
+(expand_view.rs:35-69), and a user query's own WITH list is merged in.
 
-The SQL built here is the *text twin* of the DataFrame plan built by
-engine.py; both derive joins from the same lineage paths so they cannot
-drift structurally.
+``SemanticEngine.sql`` executes this text and ``SemanticEngine.dry_plan``
+returns it. The two differ only in the FROM leaf of each model
+(``source_sql``): the engine's private source view for execution, a
+standalone scan (``parquet.`path```, a catalog table) for the dry plan.
 """
 
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
-from wren_engine_spark.mdl.lineage import extract_paths, is_aggregate_expression
-from wren_engine_spark.mdl.manifest import Manifest, Model
-from wren_engine_spark.plans.sqltext import identifiers, rewrite_outside_literals
+from wren_engine_spark.mdl.lineage import RelPath, extract_paths, is_aggregate_expression
+from wren_engine_spark.mdl.manifest import (
+    Column,
+    ColumnLevelAccessControl,
+    Manifest,
+    Model,
+    Relationship,
+    RowLevelAccessControl,
+    View,
+)
+from wren_engine_spark.plans.sqltext import (
+    CODE,
+    COMMENT,
+    identifiers,
+    identifiers_from_spans,
+    lex,
+    rewrite_outside_literals,
+)
+
+
+class AccessControlError(PermissionError):
+    pass
+
+
+class PlanError(ValueError):
+    pass
+
+
+_IDENT = r'(?:"[^"]+"|[A-Za-z_][A-Za-z0-9_]*|`[^`]+`)'
+_EQ_COND = re.compile(rf"^\s*({_IDENT})\s*\.\s*({_IDENT})\s*=\s*({_IDENT})\s*\.\s*({_IDENT})\s*$")
+_VAR = re.compile(r"@([A-Za-z_][A-Za-z0-9_]*)")
+_NUMERIC = re.compile(r"^-?\d+(\.\d+)?$")
+_FORBIDDEN_RLS = re.compile(r"\b(select|insert|update|delete|union)\b|;", re.IGNORECASE)
+_COUNT_STAR = re.compile(r"\bcount\s*\(\s*\*\s*\)", re.IGNORECASE)
+_LEADING_WITH = re.compile(r"\s*with\b", re.IGNORECASE)
 
 
 def bq(name: str) -> str:
@@ -37,167 +73,398 @@ def _sq(expr: str) -> str:
     )
 
 
+def _unq(s: str) -> str:
+    if s and s[0] in '"`':
+        return s[1:-1]
+    return s
+
+
+def _parse_equi_condition(rel: Relationship) -> tuple[str, str, str, str]:
+    """Parse ``"A"."x" = "B"."y"`` -> (model_a, col_a, model_b, col_b).
+
+    The reference requires equality conditions on relationships
+    (manifest-macro join condition; ExtractEquijoinPredicate kept at
+    context.rs:243)."""
+    m = _EQ_COND.match(rel.condition)
+    if not m:
+        raise PlanError(
+            f"relationship {rel.name}: only equi-conditions of the form "
+            f"model.col = model.col are supported, got {rel.condition!r}"
+        )
+    return _unq(m.group(1)), _unq(m.group(2)), _unq(m.group(3)), _unq(m.group(4))
+
+
+def _rel_keys(rel: Relationship, near_model: str) -> tuple[str, str]:
+    """(near_key, far_key) for a relationship traversed from near_model."""
+    ma, ca, mb, cb = _parse_equi_condition(rel)
+    if ma.lower() == near_model.lower():
+        return ca, cb
+    if mb.lower() == near_model.lower():
+        return cb, ca
+    raise PlanError(f"relationship {rel.name}: {near_model} is not an endpoint")
+
+
+def _substitute_vars(condition: str, props: dict[str, str],
+                     rule: RowLevelAccessControl) -> str:
+    """Replace ``@var`` with session-property literals after validating
+    required properties (access_control.rs:121-288 semantics)."""
+    declared = {p.name: p for p in rule.required_properties}
+    for p in rule.required_properties:
+        if p.required and p.name not in props and p.default_expr is None:
+            raise AccessControlError(
+                f"RLS rule {rule.name!r}: required session property {p.name!r} missing"
+            )
+
+    def repl(m: re.Match) -> str:
+        var = m.group(1).lower()
+        if var in props:
+            val = str(props[var])
+        elif var in declared and declared[var].default_expr is not None:
+            return f"({declared[var].default_expr})"
+        else:
+            raise AccessControlError(
+                f"RLS rule {rule.name!r}: session property {var!r} not provided"
+            )
+        if _NUMERIC.match(val):
+            return val
+        return "'" + val.replace("'", "''") + "'"
+
+    return _VAR.sub(repl, condition)
+
+
+def _sanitize_rls(condition: str, rule_name: str) -> None:
+    """Reject subqueries/statements inside RLS conditions
+    (access_control.rs:216-248 parity)."""
+    if _FORBIDDEN_RLS.search(condition):
+        raise AccessControlError(
+            f"RLS rule {rule_name!r}: condition must be a simple boolean "
+            f"expression (no subqueries/statements)"
+        )
+
+
+def _clac_allows(clac: ColumnLevelAccessControl | None, props: dict[str, str]) -> bool:
+    """Evaluate a column-level access rule against session properties
+    (access_control.rs:290-399). Missing/failed -> column hidden."""
+    if clac is None:
+        return True
+    for p in clac.required_properties:
+        val = props.get(p.name, None)
+        if val is None:
+            if p.default_expr is not None:
+                val = str(p.default_expr).strip("'\"")
+            elif p.required:
+                return False
+            else:
+                continue
+        if clac.threshold is None:
+            continue
+        tv = clac.threshold.value
+        if clac.threshold.type == "NUMERIC":
+            try:
+                a, b = float(val), float(tv)
+            except ValueError:
+                return False
+        else:
+            a, b = str(val), str(tv)
+        op = clac.operator
+        ok = (
+            (op == "EQUALS" and a == b)
+            or (op == "NOT_EQUALS" and a != b)
+            or (op in ("GREATER_THAN", "GT") and a > b)
+            or (op in ("LESS_THAN", "LT") and a < b)
+            or (op in ("GREATER_THAN_OR_EQUALS", "GTE") and a >= b)
+            or (op in ("LESS_THAN_OR_EQUALS", "LTE") and a <= b)
+        )
+        if not ok:
+            return False
+    return True
+
+
+def _has_star_projection(spans: list[tuple[str, str]]) -> bool:
+    """True when the query may project a model's full schema (``*`` or
+    ``tbl.*``) — calculated-field pruning must then keep every field.
+    ``COUNT(*)`` is NOT a star projection (it reads no columns), so it
+    is excluded before the check; remaining ``*`` tokens (including
+    multiplication, which is indistinguishable without a parse) keep
+    the conservative answer. Literal/comment content is ignored."""
+    for seg, kind in spans:
+        if kind == CODE and "*" in _COUNT_STAR.sub("", seg):
+            return True
+    return False
+
+
+class _Calc(NamedTuple):
+    col: Column
+    paths: list[RelPath]
+    deps: set[str]      # lower-cased names of the model's calcs it references
+    aggregate: bool
+
+
+class _ViewText(NamedTuple):
+    view: View
+    text: str           # namespace-stripped statement
+    idents: set[str]
+    star: bool
+
+
 class CteRewriter:
     def __init__(self, manifest: Manifest, properties: dict[str, str] | None = None,
                  source_sql: dict[str, str] | None = None):
-        """``source_sql`` maps model name -> FROM-clause SQL for its
-        physical source (default: the raw table_reference)."""
+        """``source_sql`` maps model name -> FROM leaf for its physical
+        source (default: the raw table_reference, or the parenthesized
+        ref_sql). Raises PlanError on a view dependency cycle."""
         self.manifest = manifest
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
         self.source_sql = {k.lower(): v for k, v in (source_sql or {}).items()}
+        self._calcs = {m.name.lower(): self._calc_meta(m) for m in manifest.models}
+        self.views = self._views_in_dependency_order()
 
     # ----------------------------------------------------------- public
 
     def rewrite(self, sql: str) -> str:
-        """Return ``WITH <model CTEs> <sql>`` for every model the query
-        references (manifest-extractor trimming, wren-core-py/src/
-        extractor.rs:19-46: only reachable models are expanded)."""
-        used = self._used_models(sql)
-        if not used:
-            return _sq(sql)
-        ctes = [f"{bq(m.name)} AS (\n{self.model_sql(m)}\n)" for m in used]
-        return "WITH " + ",\n".join(ctes) + "\n" + _sq(sql)
+        """Return ``WITH <model CTEs>, <view CTEs> <sql>`` for every model
+        and view the query references, directly or through views
+        (manifest-extractor trimming, wren-core-py/src/extractor.rs:19-46).
+        Each model CTE attaches only the calculated fields named in the
+        query or its views (semantic-layer column pruning, parity with
+        ModelPlanNode's required-column collection, analyze/plan.rs:
+        63-426), closed over calc-to-calc references; a ``*`` keeps every
+        field. A name collision only adds a field (cost, not results)."""
+        spans = self._strip_spans(sql)
+        idents = identifiers_from_spans(spans)
+        star = _has_star_projection(spans)
+        views: list[_ViewText] = []
+        # reverse dependency order: a view is reached before the views
+        # it reads, so one pass collects the transitive closure
+        for v in reversed(self.views):
+            if v.view.name.lower() in idents:
+                views.insert(0, v)
+                idents |= v.idents
+                star = star or v.star
+        ctes = []
+        for model in self.manifest.models:
+            if model.name.lower() not in idents:
+                continue
+            meta = self._calcs[model.name.lower()]
+            calcs = None if star else self._closure(meta, idents)
+            ctes.append(f"{bq(model.name)} AS (\n{self.model_sql(model, calcs)}\n)")
+        ctes += [f"{bq(v.view.name)} AS (\n  {v.text}\n)" for v in views]
+        text = "".join(t for t, _ in spans)
+        if not ctes:
+            return text
+        # a user query with its own WITH list joins the same list: Spark
+        # and DuckDB both reject a second WITH after the first
+        for i, (t, kind) in enumerate(spans):
+            if kind == COMMENT or not t.strip():
+                continue
+            m = _LEADING_WITH.match(t) if kind == CODE else None
+            if m is not None:
+                rest = t[m.end():].lstrip() + "".join(s for s, _ in spans[i + 1:])
+                ctes.append("".join(s for s, _ in spans[:i]) + rest)
+                return "WITH " + ",\n".join(ctes)
+            break
+        return "WITH " + ",\n".join(ctes) + "\n" + text
 
-    def model_sql(self, model: Model) -> str:
-        """The expanded SELECT for one model (ModelSourceNode +
-        calculated-field generation, model_generation.rs:133-285)."""
-        base = self._base_sql(model)
-        calcs = model.calculated_columns
-        visible_phys = [
+    def model_sql(self, model: Model, calcs: set[str] | None = None) -> str:
+        """The CTE body of one model (ModelSourceNode + calculated-field
+        generation, model_generation.rs:133-285): its visible columns,
+        in manifest order, with the calculated fields named in ``calcs``
+        (lower-cased; None = every field) attached."""
+        meta = self._calcs[model.name.lower()]
+        names = set(meta) if calcs is None else calcs
+        visible = [
             f"__base.{bq(c.name)}"
             for c in model.columns
-            if not c.is_relationship and not c.is_calculated and not c.is_hidden
+            if not c.is_relationship
+            and not c.is_hidden
+            and (not c.is_calculated or c.name.lower() in names)
+            and _clac_allows(c.column_level_access_control, self.properties)
         ]
-        if not calcs:
-            return f"  SELECT {', '.join(visible_phys)}\n  FROM ({base}) AS __base"
+        return (
+            f"  SELECT {', '.join(visible)}\n"
+            f"  FROM ({self._relation(model, names)}) AS __base"
+        )
 
-        joins: list[str] = []
-        select_calcs: list[str] = []
-        for ci, col in enumerate(calcs):
-            expr = col.expression or ""
-            paths = extract_paths(model, self.manifest, expr)
-            if not paths:
-                select_calcs.append(f"{_sq(expr)} AS {bq(col.name)}")
-            elif is_aggregate_expression(expr):
-                path = paths[0]
-                alias = f"__agg{ci}"
-                chain, base_key, first_far, term_ref = self._chain(model, path, alias)
-                agg_expr = _sq(expr.replace(path.raw, term_ref))
-                inner = "\n    ".join(chain)
-                joins.append(
-                    f"LEFT JOIN (\n    SELECT {first_far} AS __k, {agg_expr} AS __v\n"
-                    f"    FROM {inner}\n    GROUP BY {first_far}\n  ) AS {alias}"
-                    f" ON __base.{bq(base_key)} = {alias}.__k"
-                )
-                select_calcs.append(f"{alias}.__v AS {bq(col.name)}")
-            else:
-                for pi, path in enumerate(paths):
-                    alias = f"__rel{ci}_{pi}"
-                    chain, base_key, first_far, term_ref = self._chain(model, path, alias)
-                    # hop-1 join keyed on the base model; later hops carry
-                    # their ON clauses inside the chain
-                    first, *rest = chain
-                    joins.append(
-                        f"LEFT JOIN {first} ON __base.{bq(base_key)} = {first_far}"
-                    )
-                    joins.extend(rest)
-                    expr = expr.replace(path.raw, term_ref)
-                select_calcs.append(f"{_sq(expr)} AS {bq(col.name)}")
-
-        sel = ", ".join(visible_phys + select_calcs)
-        join_sql = "\n  ".join(joins)
-        return f"  SELECT {sel}\n  FROM ({base}) AS __base\n  {join_sql}"
-
-    def dry_plan(self, sql: str) -> str:
-        """Alias for rewrite() matching the reference endpoint name."""
-        return self.rewrite(sql)
+    def strip_ns(self, sql: str) -> str:
+        """Strip ``catalog.schema.`` prefixes from model references and
+        turn double-quoted identifiers into backticks (model_anlayze.rs:
+        56-64 step 3 does the same before unparse). String literals are
+        never touched."""
+        return "".join(t for t, _ in self._strip_spans(sql))
 
     # ---------------------------------------------------------- helpers
 
-    def _source(self, model: Model) -> str:
+    def _strip_spans(self, sql: str) -> list[tuple[str, str]]:
+        cat, sch = self.manifest.catalog, self.manifest.schema
+
+        def seg(s: str) -> str:
+            for pat in (
+                rf'"{cat}"\s*\.\s*"{sch}"\s*\.',
+                rf"\b{re.escape(cat)}\s*\.\s*{re.escape(sch)}\s*\.",
+                rf'\b{re.escape(sch)}\s*\.\s*(?=")',
+            ):
+                s = re.sub(pat, "", s)
+            return re.sub(r'"([^"]+)"', r"`\1`", s)
+
+        return [(seg(t) if kind == CODE else t, kind) for t, kind in lex(sql)]
+
+    def _calc_meta(self, model: Model) -> dict[str, _Calc]:
+        names = {c.name.lower() for c in model.calculated_columns}
+        out = {}
+        for c in model.calculated_columns:
+            expr = c.expression or ""
+            out[c.name.lower()] = _Calc(
+                c,
+                extract_paths(model, self.manifest, expr),
+                (identifiers(expr) & names) - {c.name.lower()},
+                is_aggregate_expression(expr),
+            )
+        return out
+
+    @staticmethod
+    def _closure(meta: dict[str, _Calc], names: set[str]) -> set[str]:
+        """The calcs named in ``names`` plus every calc they reference."""
+        todo = [n for n in names if n in meta]
+        out = set(todo)
+        while todo:
+            for d in meta[todo.pop()].deps - out:
+                out.add(d)
+                todo.append(d)
+        return out
+
+    def _leaf(self, model: Model) -> str:
         return self.source_sql.get(
             model.name.lower(),
-            f"(SELECT * FROM {model.table_reference})"
-            if model.table_reference
-            else f"({model.ref_sql})",
+            model.table_reference or f"({self.strip_ns(model.ref_sql)})",
         )
 
-    def _base_sql(self, model: Model) -> str:
-        """Expression projection + RLS filter over the physical source."""
-        from wren_engine_spark.engine import _sanitize_rls, _substitute_vars
-
-        base_exprs = ", ".join(
+    def _relation(self, model: Model, calcs: set[str]) -> str:
+        """Every physical column of ``model`` filtered by its RLS rules
+        (access_control.rs:121-288), plus the calculated fields in
+        ``calcs``. Fields come in dependency order, so a field reads an
+        earlier one through Spark's lateral column alias whatever the
+        manifest order; unresolvable ones go last, so the analysis error
+        names the missing column."""
+        phys = ", ".join(
             f"{_sq(c.sql_expression)} AS {bq(c.name)}" for c in model.physical_columns
         )
+        sql = f"SELECT {phys} FROM {self._leaf(model)} AS __source"
         conds = []
         for rule in model.row_level_access_controls:
             _sanitize_rls(rule.condition, rule.name)
             conds.append(
                 "(" + _sq(_substitute_vars(rule.condition, self.properties, rule)) + ")"
             )
-        where = f" WHERE {' AND '.join(conds)}" if conds else ""
-        return f"SELECT {base_exprs} FROM {self._source(model)} AS __source{where}"
+        if conds:
+            sql = f"SELECT * FROM ({sql}) AS __source WHERE {' AND '.join(conds)}"
+        meta = self._calcs[model.name.lower()]
+        pending = [n for n in meta if n in calcs]
+        if not pending:
+            return sql
+        items: list[str] = []
+        joins: list[str] = []
+        done: set[str] = set()
+        while pending:
+            ready = [n for n in pending if meta[n].deps <= done] or pending
+            for n in ready:
+                calc = meta[n]
+                expr = calc.col.expression or ""
+                if calc.aggregate and len(calc.paths) > 1:
+                    raise PlanError(
+                        f"calculated field {model.name}.{calc.col.name}: multiple "
+                        f"relationship paths in one aggregate expression are not "
+                        f"yet supported"
+                    )
+                for path in calc.paths:
+                    alias = f"__j{len(joins)}"
+                    joins.append(self._path_join(model, calc, path, alias))
+                    # an aggregate is computed whole inside its join
+                    ref = f"{alias}.__v"
+                    expr = ref if calc.aggregate else expr.replace(path.raw, ref)
+                items.append(f"{_sq(expr)} AS {bq(calc.col.name)}")
+            done.update(ready)
+            pending = [n for n in pending if n not in done]
+        return f"SELECT __base.*, {', '.join(items)}\n  " + "\n  ".join(
+            [f"FROM ({sql}) AS __base", *joins]
+        )
 
-    def _target_base_sql(self, model: Model) -> str:
-        """Base projection of a hop target incl. its inline (non-path)
-        calculated columns — PartialModelPlanNode parity
-        (plan.rs:1149-1201)."""
-        exprs = [
-            f"{_sq(c.sql_expression)} AS {bq(c.name)}" for c in model.physical_columns
-        ]
-        for c in model.calculated_columns:
-            if not extract_paths(model, self.manifest, c.expression or ""):
-                exprs.append(f"{_sq(c.expression)} AS {bq(c.name)}")
-        return f"SELECT {', '.join(exprs)} FROM {self._source(model)} AS __source"
-
-    def _chain(self, model: Model, path, alias: str):
-        """Join chain for a relationship path.
-
-        Returns (chain, base_key, first_far_ref, terminal_ref) where
-        ``chain[0]`` is ``(subquery) AS alias_h0`` (its ON clause is the
-        caller's responsibility) and chain[1:] are full LEFT JOIN
-        clauses; every hop gets its own alias so same-named columns in
-        different hop models can never collide.
-        """
-        from wren_engine_spark.engine import _rel_keys
-
+    def _path_join(self, model: Model, calc: _Calc, path: RelPath, alias: str) -> str:
+        """LEFT JOIN of one relationship path as a ``(__k, __v)`` subquery
+        keyed on the first hop's far key (plan.rs:189-291, 1038-1143).
+        Each hop target is its RLS-filtered relation plus the plain
+        calculated fields the terminal needs (PartialModelPlanNode,
+        plan.rs:1149-1201); every hop gets its own alias, so same-named
+        columns of different models never collide."""
         cur = model
-        chain: list[str] = []
-        base_key = ""
-        first_far = ""
-        for hop_idx, hop in enumerate(path.hops):
-            relcol = cur.column(hop)
-            rel = self.manifest.relationship(relcol.relationship)
-            near_key, far = _rel_keys(rel, cur.name)
+        hops: list[str] = []
+        base_key = first_far = ""
+        for i, hop in enumerate(path.hops):
+            rel = self.manifest.relationship(cur.column(hop).relationship)
+            near, far = _rel_keys(rel, cur.name)
+            if not calc.aggregate and not rel.is_to_one(cur.name):
+                raise PlanError(
+                    f"calculated field {model.name}.{calc.col.name}: non-aggregate "
+                    f"expression crosses to-many relationship {rel.name}"
+                )
             target = self.manifest.model(rel.other_model(cur.name))
-            halias = f"{alias}_h{hop_idx}"
-            tsql = self._target_base_sql(target)
-            if hop_idx == 0:
-                base_key = near_key
-                first_far = f"{halias}.{bq(far)}"
-                chain.append(f"(\n    {tsql}\n  ) AS {halias}")
+            tmeta = self._calcs[target.name.lower()]
+            needed = (
+                self._closure(tmeta, {path.terminal.lower()})
+                if i == len(path.hops) - 1 else set()
+            )
+            # relationship-backed fields never ride along a hop
+            needed = {n for n in needed if not tmeta[n].paths}
+            rel_sql = f"(\n      {self._relation(target, needed)}\n    ) AS __h{i}"
+            if i == 0:
+                base_key, first_far = near, f"__h0.{bq(far)}"
+                hops.append(rel_sql)
             else:
-                prev = f"{alias}_h{hop_idx - 1}"
-                chain.append(
-                    f"LEFT JOIN (\n    {tsql}\n  ) AS {halias} "
-                    f"ON {prev}.{bq(near_key)} = {halias}.{bq(far)}"
+                hops.append(
+                    f"LEFT JOIN {rel_sql} ON __h{i - 1}.{bq(near)} = __h{i}.{bq(far)}"
                 )
             cur = target
-        last = f"{alias}_h{len(path.hops) - 1}"
-        return chain, base_key, first_far, f"{last}.{bq(path.terminal)}"
+        value = f"__h{len(path.hops) - 1}.{bq(path.terminal)}"
+        group = ""
+        if calc.aggregate:
+            value = _sq((calc.col.expression or "").replace(path.raw, value))
+            group = f"\n    GROUP BY {first_far}"
+        chain = "\n    ".join(hops)
+        return (
+            f"LEFT JOIN (\n    SELECT {first_far} AS __k, {value} AS __v\n"
+            f"    FROM {chain}{group}\n"
+            f"  ) AS {alias} ON __base.{bq(base_key)} = {alias}.__k"
+        )
 
-    def _used_models(self, sql: str) -> list[Model]:
-        """Models transitively referenced by the SQL (through views);
-        identifier-token matching, so names inside string literals don't
-        count as references."""
-        idents = set(identifiers(sql))
-        changed = True
-        while changed:  # fixpoint: views may reference views in any order
-            changed = False
-            for v in self.manifest.views:
-                if v.name.lower() in idents:
-                    new = identifiers(v.statement) - idents
-                    if new:
-                        idents |= new
-                        changed = True
-        return [m for m in self.manifest.models if m.name.lower() in idents]
+    def _views_in_dependency_order(self) -> list[_ViewText]:
+        """Views ordered so that a view reading another comes after it,
+        whatever the manifest order (the reference expands views lazily,
+        expand_view.rs:35-69; a CTE list and eager temp-view registration
+        both need the order). Cycles raise PlanError."""
+        texts: dict[str, _ViewText] = {}
+        for v in self.manifest.views:
+            spans = self._strip_spans(v.statement)
+            texts[v.name.lower()] = _ViewText(
+                v, "".join(t for t, _ in spans),
+                identifiers_from_spans(spans), _has_star_projection(spans),
+            )
+        ordered: list[_ViewText] = []
+        done: set[str] = set()
+        visiting: set[str] = set()
+
+        def visit(name: str) -> None:
+            if name in done:
+                return
+            if name in visiting:
+                raise PlanError(f"view dependency cycle involving {name!r}")
+            visiting.add(name)
+            # identifier tokens outside string literals only — a view name
+            # appearing in a literal is not a dependency
+            for d in sorted(n for n in texts[name].idents if n in texts and n != name):
+                visit(d)
+            visiting.discard(name)
+            done.add(name)
+            ordered.append(texts[name])
+
+        for name in texts:
+            visit(name)
+        return ordered

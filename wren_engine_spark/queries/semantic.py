@@ -150,13 +150,14 @@ _DEPLOY_MEMO: dict[tuple, SemanticEngine] = {}
 def deploy(spark: SparkSession, sf: str, manifest: dict | None = None,
            properties: dict | None = None) -> SemanticEngine:
     # the default-manifest/no-properties deployment is reused across the
-    # query corpus (a deploy re-expands every model and re-registers its
-    # views); custom manifests/properties always deploy fresh
+    # query corpus (a deploy re-plans every model and re-registers its
+    # views); custom manifests/properties always deploy fresh. A reused
+    # engine needs no re-registration: its queries read only its own
+    # source views, never the same-named model views another deploy
+    # may have replaced
     memo_key = (id(spark), sf) if manifest is None and not properties else None
     if memo_key and memo_key in _DEPLOY_MEMO:
-        # another deploy may have clobbered same-named session views:
-        # cheap re-registration from the already-expanded frames
-        return _DEPLOY_MEMO[memo_key].reattach()
+        return _DEPLOY_MEMO[memo_key]
     sources = SourceRegistry(spark).add_directory(sf)
     eng = SemanticEngine(spark, Manifest.from_dict(manifest or MANIFEST), sources)
     eng.deploy(properties or {})
