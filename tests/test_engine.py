@@ -450,6 +450,102 @@ class TestPerRequestTimezone:
         assert out["data"][0][0] == "Asia/Tokyo"
         assert out["data"][0][1] == "1970-01-01 09:00:00.000000"  # UTC+9
 
+    def test_unzoned_frame_keeps_utc_during_zoned_request(self, spark, monkeypatch):
+        # a frame planned without a zone, run while a zoned request is
+        # being served, must not see that request's zone
+        from wren_engine_spark import serving
+
+        eng = _deploy(spark)
+        svc = serving.SemanticService(eng)
+        b = eng.sql("SELECT current_timezone() AS tz FROM Customers LIMIT 1")
+        seen = []
+        render = serving._render_timestamps_in_zone
+
+        def spy(df, tz):
+            seen.append(b.collect()[0].tz)
+            return render(df, tz)
+
+        monkeypatch.setattr(serving, "_render_timestamps_in_zone", spy)
+        out = svc.query("SELECT current_timezone() AS tz FROM Customers LIMIT 1",
+                        timezone="Asia/Tokyo")
+        assert out["data"][0][0] == "Asia/Tokyo"
+        assert seen == ["UTC"]
+
+    def test_concurrent_requests_see_their_own_zone(self, spark):
+        import sys
+        import threading
+
+        from wren_engine_spark.serving import SemanticService
+
+        eng = _deploy(spark)
+        svc = SemanticService(eng)
+        q = "SELECT current_timezone() AS tz FROM Customers LIMIT 1"
+        wrong: list = []
+
+        def worker(zone):
+            try:
+                for _ in range(4):
+                    got = svc.query(q, timezone=zone)["data"][0][0]
+                    if got != (zone or "UTC"):
+                        wrong.append((zone, got))
+            except Exception as e:  # noqa: BLE001
+                wrong.append((zone, e))
+
+        # two threads per zone: more workers than the usual 4 cores
+        zones = (None, "Asia/Tokyo", "America/New_York", "+05:30") * 2
+        threads = [threading.Thread(target=worker, args=(z,)) for z in zones]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-4)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert not wrong, wrong[:3]
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+    def test_refresh_cube_drops_zone_sessions(self, spark):
+        # a zone session made before refresh_cube would read the old,
+        # unpersisted cube frame
+        from pyspark.sql import functions as F
+
+        man = {**BASE, "cubes": [{
+            "name": "StateCube", "baseObject": "Customers", "cached": True,
+            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+            "dimensions": [{"name": "st", "expression": "State", "type": "varchar"}],
+        }]}
+        eng = _deploy(spark, man)
+        q = "SELECT SUM(n) AS n FROM StateCube"
+        assert eng.sql(q, timezone="Asia/Tokyo").collect()[0].n == 3
+        spark.table("Customers").filter(F.col("Id") > 1).createOrReplaceTempView("Customers")
+        eng.refresh_cube("StateCube")
+        df = eng.sql(q, timezone="Asia/Tokyo")
+        assert "InMemoryRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+        assert df.collect()[0].n == 2
+        eng._cube_frames["StateCube"].unpersist()
+
+    def test_redeploy_drops_zone_sessions(self, spark):
+        eng = _deploy(spark)
+        q = "SELECT Id FROM Customers ORDER BY Id"
+        assert [r.Id for r in eng.sql(q, timezone="Asia/Tokyo").collect()] == [1, 2, 3]
+        eng.sources.add_dataframe(
+            "customers", spark.createDataFrame([(7, "gus", "WA")], "id INT, name STRING, state STRING"))
+        eng.deploy({})
+        assert [r.Id for r in eng.sql(q, timezone="Asia/Tokyo").collect()] == [7]
+
+    def test_zone_sessions_bounded(self, spark, monkeypatch):
+        from wren_engine_spark import engine
+
+        monkeypatch.setattr(engine, "_ZONE_SESSIONS_MAX", 2)
+        eng = _deploy(spark)
+        q = "SELECT current_timezone() AS tz FROM Customers LIMIT 1"
+        for zone in ("Asia/Tokyo", "America/New_York", "+05:30", "Asia/Tokyo"):
+            assert eng.sql(q, timezone=zone).collect()[0].tz == zone
+        assert list(eng._zone_sessions) == ["+05:30", "Asia/Tokyo"]
+
     def test_timestamp_shift_via_service(self, spark):
         from wren_engine_spark.serving import SemanticService
 
@@ -519,7 +615,6 @@ class TestPlanCache:
         a = eng.sql(q)
         b = eng.sql(q)
         assert a is b  # same bound plan object — no re-analysis
-        assert eng.sql(q, use_plan_cache=False) is not b
 
     def test_cache_key_includes_timezone(self, spark):
         eng = _deploy(spark)
@@ -527,6 +622,12 @@ class TestPlanCache:
         a = eng.sql(q, timezone="UTC").collect()[0].ts
         b = eng.sql(q, timezone="+08:00").collect()[0].ts
         assert a - b == 8 * 3600  # distinct cache entries per zone
+        # a zoned query is cached under its zone like any other
+        q2 = ("SELECT CAST(CAST('2024-01-01 00:00:00' AS TIMESTAMP) AS BIGINT) AS ts "
+              "FROM Customers LIMIT 1")
+        plus8 = eng.sql(q2, timezone="+08:00")
+        assert eng.sql(q2, timezone="+08:00") is plus8
+        assert eng.sql(q2).collect()[0].ts - plus8.collect()[0].ts == 8 * 3600
 
     def test_redeploy_invalidates(self, spark):
         eng = _deploy(spark)

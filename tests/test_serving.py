@@ -541,6 +541,21 @@ class TestQueryTimeout:
             collect_with_timeout(slow, timeout_s=2)
         assert time.time() - t0 < 30, "cancellation should be prompt"
 
+    def test_slow_zoned_query_cancelled(self, spark, service):
+        import time
+
+        from wren_engine_spark.serving import QueryTimeoutError
+
+        # the same 5-way cross join, planned in a zone session
+        sql = ("SELECT SUM(a.custkey * b.custkey * c.custkey * d.custkey * e.custkey) AS s "
+               "FROM customer_m a CROSS JOIN customer_m b CROSS JOIN customer_m c "
+               "CROSS JOIN customer_m d CROSS JOIN customer_m e")
+        t0 = time.time()
+        with pytest.raises(QueryTimeoutError):
+            service.query(sql, timezone="Asia/Tokyo", timeout_s=2)
+        assert time.time() - t0 < 30, "cancellation should be prompt"
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
 
 class TestCube:
     def test_cube_view_and_cached(self, spark):

@@ -19,7 +19,9 @@ we keep them all).
     ``spark.table(model)``, cubes and the ``cached`` hint work. A model
     CTE whose body equals a cached model's body reads the cache.
 
-A request registers nothing: ``sql`` rewrites, then analyzes.
+A request registers nothing and writes no session conf: ``sql``
+rewrites, then analyzes, in the deployed session or, for a request
+timezone, in a per-zone clone of it.
 
 Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
@@ -33,7 +35,6 @@ from __future__ import annotations
 
 import re
 import threading
-from typing import Any
 
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
@@ -105,11 +106,14 @@ _UNCACHEABLE_FNS = frozenset(
 
 _TZ_OFFSET = re.compile(r"^[+-]\d{2}:\d{2}$")
 
+# Zone sessions kept per engine; past it the least recently used go first.
+_ZONE_SESSIONS_MAX = 32
+
 
 def _validate_timezone(tz: str) -> None:
     """Accept IANA zone names (zoneinfo) and fixed ``+HH:MM`` offsets —
     the forms the reference's ``x-wren-timezone`` header takes. Rejecting
-    junk here keeps a bad header from poisoning the shared session conf."""
+    junk here keeps a bad header from cloning a session."""
     if _TZ_OFFSET.match(tz) or tz.upper() == "UTC":
         return
     import zoneinfo
@@ -135,10 +139,9 @@ class SemanticEngine:
         self.manifest = manifest
         self.sources = sources
         self.properties: dict[str, str] = {}
-        # serializes the per-request session timezone (set around
-        # analysis on the shared session) and the plan cache: the service
-        # layer may call sql() from multiple threads
-        self._sql_lock = threading.RLock()
+        # guards the plan cache and the zone sessions: the service layer
+        # may call sql() from multiple threads; analysis runs outside it
+        self._sql_lock = threading.Lock()
         # analyzed-plan LRU: spark.sql analysis is eager, so a DataFrame
         # is an immutable bound plan — repeated query texts (dashboards,
         # polling agents) skip the rewrite+parse+analyze round trip
@@ -147,6 +150,7 @@ class SemanticEngine:
 
         self._plan_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
         self._plan_cache_max = 256
+        self._zone_sessions: OrderedDict[str, SparkSession] = OrderedDict()
         check_cycles(manifest)
 
     # ------------------------------------------------------------------ deploy
@@ -161,7 +165,10 @@ class SemanticEngine:
 
         register_compat_functions(self.spark)
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
-        self._plan_cache.clear()
+        # a zone session is a snapshot of the deployed views
+        with self._sql_lock:
+            self._plan_cache.clear()
+            self._zone_sessions.clear()
         models = self.manifest.models
         # id(self) keeps the names apart from every other live engine's
         leaves = {m.name: f"__wren_model_src_{id(self):x}_{i}" for i, m in enumerate(models)}
@@ -189,13 +196,7 @@ class SemanticEngine:
             self._register_cube(cube)
         return self
 
-    def sql(
-        self,
-        sql: str,
-        timezone: str | None = None,
-        use_plan_cache: bool = True,
-        finalize: Any | None = None,
-    ) -> DataFrame:
+    def sql(self, sql: str, timezone: str | None = None) -> DataFrame:
         """Run user SQL against the deployed semantic layer: plan it into
         one text with the CTE rewriter (models and views as CTEs, only
         the referenced calculated fields attached, so unused joins and
@@ -205,82 +206,76 @@ class SemanticEngine:
         ``timezone`` evaluates THIS query under the given session zone
         (reference: per-request ``x-wren-timezone`` header,
         ibis-server/app/mdl/rewriter.py:176-186 /
-        wren-core/core/src/mdl/context.rs:50-75). Spark's ResolveTimeZone
-        rule stamps the session zone into every tz-aware expression at
-        analysis time, so setting the conf around the analysis (inside
-        the lock) scopes it to this query; the default stays UTC.
+        wren-core/core/src/mdl/context.rs:50-75). The text is analyzed in
+        a session of that zone (``_session``), so the returned frame and
+        every frame derived from it analyze, optimize and run under the
+        zone; the deployed session's conf is never written.
         """
-        # timezone'd / finalize-wrapped plans skip the cache (wrappers
-        # vary per request and the queries are typically personalized)
-        if timezone is not None or finalize is not None:
-            use_plan_cache = False
         cache_key = (sql, timezone)
         # probe the cache BEFORE any text analysis: a hit needs zero lex
         # passes (an entry's presence proves it was cacheable), keeping
         # the cached path at ~0.05 ms even for long dashboard SQL
-        if use_plan_cache:
-            with self._sql_lock:
-                hit = self._plan_cache.get(cache_key)
-                if hit is not None:
-                    self._plan_cache.move_to_end(cache_key)
-                    return hit
-        # time-/randomness-dependent queries must re-plan every call
-        if not _UNCACHEABLE_FNS.isdisjoint(identifiers(sql)):
-            use_plan_cache = False
-        text = self._planner.rewrite(sql)
         with self._sql_lock:
-            tz_old: str | None = None
-            if timezone is not None:
-                _validate_timezone(timezone)
-                tz_old = self.spark.conf.get("spark.sql.session.timeZone")
-                self.spark.conf.set("spark.sql.session.timeZone", timezone)
-            try:
-                # direct JVM-session call: the PySpark sql() wrapper costs
-                # several extra py4j round trips (~2x planning latency);
-                # the DataFrame constructor below is pure-Python. Java
-                # exceptions are converted to the standard PySpark types
-                # in the except path so callers see identical errors.
-                jdf = self.spark._jsparkSession.sql(text)
-                df = DataFrame(jdf, self.spark)
-                if finalize is not None:
-                    # caller-supplied wrapping (output-zone rendering,
-                    # limit) applied INSIDE the tz window so the derived
-                    # plan's optimizer pass also sees the request zone
-                    df = finalize(df)
-                if timezone is not None:
-                    # ResolveTimeZone stamps the zone at analysis, but
-                    # current_date()/current_timezone() are substituted by
-                    # the OPTIMIZER (ReplaceCurrentLike/ComputeCurrentTime)
-                    # which normally runs lazily at first action — after
-                    # the conf restore below. QueryExecution memoizes
-                    # optimizedPlan, so forcing it here bakes those
-                    # literals under the request zone too.
-                    df._jdf.queryExecution().optimizedPlan()
-                if use_plan_cache:
-                    self._plan_cache[cache_key] = df
-                    if len(self._plan_cache) > self._plan_cache_max:
-                        self._plan_cache.popitem(last=False)
-                return df
-            except Exception as e:
-                conv = _convert_java_exception(e)
-                # PermissionAnalyze: turn UNRESOLVED_COLUMN on a
-                # CLAC-hidden column into a clean permission error — but
-                # ONLY for unresolved-column analysis failures, so
-                # unrelated errors (syntax, runtime) are never masked as
-                # permission denials
-                msg = str(conv)
-                if "UNRESOLVED_COLUMN" in msg or "cannot be resolved" in msg:
-                    # Spark quotes multi-part names per part
-                    # (`M`.`state`), so collect every backticked token —
-                    # any of them may be the denied column
-                    toks = re.findall(r"`([^`]+)`", msg)
-                    self.analyze_permissions(sql, unresolved=toks or None)
-                if conv is e:
-                    raise
-                raise conv from None
-            finally:
-                if tz_old is not None:
-                    self.spark.conf.set("spark.sql.session.timeZone", tz_old)
+            hit = self._plan_cache.get(cache_key)
+            if hit is not None:
+                self._plan_cache.move_to_end(cache_key)
+                return hit
+        session = self._session(timezone)
+        text = self._planner.rewrite(sql)
+        try:
+            # direct JVM-session call: the PySpark sql() wrapper costs
+            # several extra py4j round trips (~2x planning latency); the
+            # DataFrame constructor below is pure-Python. Java exceptions
+            # are converted to the standard PySpark types in the except
+            # path so callers see identical errors.
+            df = DataFrame(session._jsparkSession.sql(text), session)
+        except Exception as e:
+            conv = _convert_java_exception(e)
+            # PermissionAnalyze: turn UNRESOLVED_COLUMN on a CLAC-hidden
+            # column into a clean permission error — but ONLY for
+            # unresolved-column analysis failures, so unrelated errors
+            # (syntax, runtime) are never masked as permission denials
+            msg = str(conv)
+            if "UNRESOLVED_COLUMN" in msg or "cannot be resolved" in msg:
+                # Spark quotes multi-part names per part (`M`.`state`),
+                # so collect every backticked token — any of them may be
+                # the denied column
+                toks = re.findall(r"`([^`]+)`", msg)
+                self.analyze_permissions(sql, unresolved=toks or None)
+            if conv is e:
+                raise
+            raise conv from None
+        # time-/randomness-dependent queries must re-plan every call
+        if _UNCACHEABLE_FNS.isdisjoint(identifiers(sql)):
+            with self._sql_lock:
+                self._plan_cache[cache_key] = df
+                if len(self._plan_cache) > self._plan_cache_max:
+                    self._plan_cache.popitem(last=False)
+        return df
+
+    def _session(self, timezone: str | None) -> SparkSession:
+        """The session that plans a request in ``timezone``: the deployed
+        session for None, else its clone with that session zone, made
+        once per zone (the reference plans in a session configured with
+        the zone, context.rs:50-75). A clone carries the deployed temp
+        views and SQL functions and shares the cache manager, so cached
+        models and cubes still hit."""
+        if timezone is None:
+            return self.spark
+        _validate_timezone(timezone)
+        with self._sql_lock:
+            session = self._zone_sessions.get(timezone)
+            if session is None:
+                # cloneSession is private[sql] in Scala but public to py4j
+                session = SparkSession(
+                    self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
+                )
+                session.conf.set("spark.sql.session.timeZone", timezone)
+                self._zone_sessions[timezone] = session
+                if len(self._zone_sessions) > _ZONE_SESSIONS_MAX:
+                    self._zone_sessions.popitem(last=False)
+            self._zone_sessions.move_to_end(timezone)
+            return session
 
     def analyze_permissions(
         self, sql: str, unresolved: str | list[str] | None = None
@@ -526,7 +521,8 @@ class SemanticEngine:
         """Recompute a cube's materialization (the ``refresh_time`` hook
         — manifest-macro/src/lib.rs:141-168; production would schedule
         this). Drops the cached frame and re-registers from the current
-        base model state."""
+        base model state; plans and zone sessions made before are
+        dropped."""
         cube = next((c for c in self.manifest.cubes if c.name == name), None)
         if cube is None:
             raise PlanError(f"unknown cube {name!r}")
@@ -534,3 +530,7 @@ class SemanticEngine:
         if old is not None:
             old.unpersist()
         self._register_cube(cube)
+        # cached plans and zone sessions hold the old cube view
+        with self._sql_lock:
+            self._plan_cache.clear()
+            self._zone_sessions.clear()

@@ -86,8 +86,8 @@ def _render_timestamps_in_zone(df: DataFrame, tz: str) -> DataFrame:
     """Convert TIMESTAMP (instant / LTZ) columns to the requested zone's
     wall clock as TIMESTAMP_NTZ — the reference formatter's display
     semantics (tz_convert then offset-free strftime). The construction
-    is session-zone INDEPENDENT (it must be: these expressions may be
-    analyzed inside the per-request timezone window): shift the instant
+    is session-zone INDEPENDENT (it must be: these expressions are
+    analyzed in the request zone's session): shift the instant
     by the zone offset (``from_utc_timestamp`` is pure micros
     arithmetic) and rebuild an NTZ from epoch micros. NTZ columns pass
     through — they carry no zone to convert."""
@@ -271,9 +271,9 @@ class SemanticService:
     ) -> dict | None:
         """``timezone`` is the per-request zone (reference
         ``x-wren-timezone`` header): tz-aware expressions evaluate under
-        it (engine.sql stamps it at analysis) and TIMESTAMP (instant)
-        result columns are rendered as that zone's wall clock — the
-        formatter parity of ibis-server/app/util.py:149-190, whose
+        it (engine.sql plans in a session of that zone) and TIMESTAMP
+        (instant) result columns are rendered as that zone's wall clock
+        — the formatter parity of ibis-server/app/util.py:149-190, whose
         ``tz_convert`` + offset-free strftime does the same."""
         if dry_run:
             self.engine.dry_run(sql)
@@ -283,28 +283,15 @@ class SemanticService:
             hit = self.cache.get(key)
             if hit is not None:
                 return {**hit, "cached": True}
-        def _finalize(df: DataFrame) -> DataFrame:
-            if timezone is not None:
-                df = _render_timestamps_in_zone(df, timezone)
-            if limit is not None:
-                # post-parse limit merge: composing df.limit with any
-                # LIMIT already in the SQL yields the min, and text edge
-                # cases (trailing comments, OFFSET) cannot break it
-                df = df.limit(limit)
-            return df
-
+        df = self.engine.sql(sql, timezone=timezone)
         if timezone is not None:
-            # finalize runs inside the engine's timezone window so the
-            # derived plan's optimizer pass sees the request zone too
-            df = self.engine.sql(sql, timezone=timezone, finalize=_finalize)
-        else:
-            # limit applied OUTSIDE engine.sql so the base plan stays
-            # eligible for the analyzed-plan cache (dashboards/polling
-            # agents send {sql, limit} repeatedly); df.limit on an
-            # already-analyzed frame is a cheap derived plan
-            df = self.engine.sql(sql)
-            if limit is not None:
-                df = df.limit(limit)
+            df = _render_timestamps_in_zone(df, timezone)
+        if limit is not None:
+            # applied to the frame, not the text, so the base plan stays
+            # one plan-cache entry for every limit; composing df.limit
+            # with a LIMIT in the SQL yields the min, and text edge cases
+            # (trailing comments, OFFSET) cannot break it
+            df = df.limit(limit)
         out = to_json(df, rows=collect_with_timeout(df, timeout_s))
         if use_cache and self.cache:
             self.cache.set(out, key)
