@@ -608,57 +608,81 @@ class TestCalcPruning:
         assert [(r.Id, r.TotalX2) for r in rows] == [(1, 300.0), (2, 140.0)]
 
 
-class TestPlanCache:
-    def test_repeat_query_returns_cached_plan(self, spark):
-        eng = _deploy(spark)
-        q = "SELECT Id, Total FROM Customers"
-        a = eng.sql(q)
-        b = eng.sql(q)
-        assert a is b  # same bound plan object — no re-analysis
+class TestSqlFrames:
+    """``eng.sql`` plans every call afresh and keeps no frame it returns:
+    repeated results are the query cache's job (serving.QueryCache)."""
 
-    def test_cache_key_includes_timezone(self, spark):
+    def test_returned_frames_are_not_retained(self, spark):
+        # an engine that kept executed frames pinned their plans,
+        # broadcasts and shuffle files until the driver heap ran out
+        import gc
+        import weakref
+
+        eng = _deploy(spark)
+        refs = []
+        plan = eng.sql
+
+        def traced(q, timezone=None):
+            df = plan(q, timezone=timezone)
+            refs.append(weakref.ref(df))
+            return df
+
+        eng.sql = traced  # dry_run goes through self.sql too
+        eng.sql("SELECT Id, Total FROM Customers").collect()
+        eng.sql("SELECT Id, Name FROM Customers", timezone="+08:00").collect()
+        eng.sql("SELECT Oid, CustState FROM Orders").collect()
+        eng.dry_run("SELECT Id, NOrders FROM Customers")
+        gc.collect()
+        assert len(refs) == 4
+        assert [r() for r in refs] == [None] * 4
+
+    def test_zoned_frames_plan_in_their_zone(self, spark):
         eng = _deploy(spark)
         q = "SELECT unix_timestamp('2024-01-01 00:00:00') AS ts FROM Customers LIMIT 1"
         a = eng.sql(q, timezone="UTC").collect()[0].ts
         b = eng.sql(q, timezone="+08:00").collect()[0].ts
-        assert a - b == 8 * 3600  # distinct cache entries per zone
-        # a zoned query is cached under its zone like any other
+        assert a - b == 8 * 3600
         q2 = ("SELECT CAST(CAST('2024-01-01 00:00:00' AS TIMESTAMP) AS BIGINT) AS ts "
               "FROM Customers LIMIT 1")
-        plus8 = eng.sql(q2, timezone="+08:00")
-        assert eng.sql(q2, timezone="+08:00") is plus8
-        assert eng.sql(q2).collect()[0].ts - plus8.collect()[0].ts == 8 * 3600
+        plus8 = eng.sql(q2, timezone="+08:00").collect()[0].ts
+        assert eng.sql(q2, timezone="+08:00").collect()[0].ts == plus8
+        assert eng.sql(q2).collect()[0].ts - plus8 == 8 * 3600
 
-    def test_redeploy_invalidates(self, spark):
+    def test_redeploy_with_replaced_source_returns_new_rows(self, spark):
         eng = _deploy(spark)
-        q = "SELECT Id FROM Customers"
-        a = eng.sql(q)
+        q = "SELECT Id FROM Customers ORDER BY Id"
+        assert [r.Id for r in eng.sql(q).collect()] == [1, 2, 3]
+        eng.sources.add_dataframe(
+            "customers", spark.createDataFrame([(7, "gus", "WA")], "id INT, name STRING, state STRING"))
         eng.deploy({})
-        assert eng.sql(q) is not a
+        assert [r.Id for r in eng.sql(q).collect()] == [7]
 
-    def test_time_dependent_queries_not_cached(self, spark):
-        # a cached plan would freeze ComputeCurrentTime's baked literals
+    def test_time_dependent_queries_evaluated_per_call(self, spark):
+        # Catalyst bakes current_* and the rand() seed into a frame's
+        # plan, so a frame reused across calls would freeze them
+        import datetime
+        import time
+
         eng = _deploy(spark)
         q = "SELECT current_date() AS d FROM Customers LIMIT 1"
-        assert eng.sql(q) is not eng.sql(q)
-        q2 = "SELECT rand() AS r FROM Customers LIMIT 1"
-        assert eng.sql(q2) is not eng.sql(q2)
-        # aliases must be covered too (curdate == current_date)
-        q3 = "SELECT curdate() AS d FROM Customers LIMIT 1"
-        assert eng.sql(q3) is not eng.sql(q3)
+        before = datetime.datetime.now(datetime.timezone.utc).date()
+        d = eng.sql(q).collect()[0].d
+        after = datetime.datetime.now(datetime.timezone.utc).date()
+        assert d in (before, after)
+        q2 = "SELECT current_timestamp() AS t FROM Customers LIMIT 1"
+        t1 = eng.sql(q2).collect()[0].t
+        time.sleep(0.01)
+        assert eng.sql(q2).collect()[0].t > t1
+        q3 = "SELECT rand() AS r FROM Customers LIMIT 1"
+        assert eng.sql(q3).collect()[0].r != eng.sql(q3).collect()[0].r
 
-    def test_limited_service_query_uses_plan_cache(self, spark):
-        # {sql, limit} requests (the dashboard shape) must still benefit
-        # from the analyzed-plan cache: the limit is applied OUTSIDE the
-        # engine so the base plan is cached and reused
+    def test_limited_service_query(self, spark):
         from wren_engine_spark.serving import SemanticService
 
         eng = _deploy(spark)
         svc = SemanticService(eng)
         q = "SELECT Id, Total FROM Customers ORDER BY Id"
-        svc.query(q, limit=2)
-        base = eng.sql(q)
-        assert eng.sql(q) is base  # cache was populated despite the limit
+        assert len(svc.query(q, limit=2)["data"]) == 2
         out = svc.query(q, limit=1)
         assert len(out["data"]) == 1
 

@@ -1,4 +1,4 @@
-"""Serving-layer tests: query envelope, limit pushdown, validate,
+"""Serving-layer tests: query envelope, served limit, validate,
 metadata, model substitution, dry-plan twin, function catalog."""
 
 import datetime
@@ -13,41 +13,12 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR, spark_jobs
 from wren_engine_spark import serving
 from wren_engine_spark.queries.semantic import MANIFEST, deploy
-from wren_engine_spark.serving import QueryCache, SemanticService, pushdown_limit, to_json
+from wren_engine_spark.serving import QueryCache, SemanticService, to_json
 
 
 @pytest.fixture(scope="module")
 def service(spark):
     return SemanticService(deploy(spark, SF_DIR))
-
-
-class TestLimitPushdown:
-    # wren-core-py/src/context.rs:271 semantics: min(existing, requested)
-    def test_append(self):
-        assert pushdown_limit("SELECT 1", 10) == "SELECT 1 LIMIT 10"
-
-    def test_merge_min(self):
-        assert pushdown_limit("SELECT 1 LIMIT 5", 10) == "SELECT 1 LIMIT 5"
-        assert pushdown_limit("SELECT 1 LIMIT 50", 10) == "SELECT 1 LIMIT 10"
-
-    def test_none(self):
-        assert pushdown_limit("SELECT 1", None) == "SELECT 1"
-
-    def test_trailing_comment_not_swallowing_limit(self):
-        # ADVICE: '-- note LIMIT 10' used to swallow the appended limit
-        assert pushdown_limit("SELECT 1 -- note", 10) == "SELECT 1 LIMIT 10"
-
-    def test_existing_limit_after_comment_line(self):
-        out = pushdown_limit("SELECT 1\n-- note\nLIMIT 50", 10)
-        assert out == "SELECT 1\n-- note\nLIMIT 10"
-
-    def test_dashes_inside_literal_not_treated_as_comment(self):
-        out = pushdown_limit("SELECT '--x' AS v", 7)
-        assert out == "SELECT '--x' AS v LIMIT 7"
-
-    def test_semicolon_after_comment_line(self):
-        # the ';' after a comment line must not re-expose the comment
-        assert pushdown_limit("SELECT 1 -- note\n;", 10) == "SELECT 1 LIMIT 10"
 
 
 class TestQuery:
@@ -61,6 +32,23 @@ class TestQuery:
         out = service.query("SELECT orderdate FROM orders_m ORDER BY orderkey LIMIT 1")
         # util.py:284-305: '%Y-%m-%d %H:%M:%S.%f'
         assert len(out["data"][0][0]) == 26
+
+    @pytest.mark.parametrize(
+        "sql, limit, rows",
+        [
+            ("SELECT custkey FROM customer_m LIMIT 5", 10, 5),
+            ("SELECT custkey FROM customer_m LIMIT 50", 10, 10),
+            ("SELECT custkey FROM customer_m -- note", 3, 3),
+            ("SELECT custkey FROM customer_m\n-- note\nLIMIT 50", 10, 10),
+            ("SELECT '--x' AS v FROM customer_m", 2, 2),
+        ],
+        ids=["sql_limit_smaller", "request_smaller", "trailing_comment",
+             "limit_after_comment_line", "dashes_in_literal"],
+    )
+    def test_limit_is_min_of_sql_and_request(self, service, sql, limit, rows):
+        # wren-core-py/src/context.rs:271 semantics: min(existing,
+        # requested); a trailing comment cannot swallow the limit
+        assert len(service.query(sql, limit=limit)["data"]) == rows
 
     def test_dry_run_returns_none(self, service):
         assert service.query("SELECT custkey FROM customer_m", dry_run=True) is None

@@ -4,7 +4,6 @@ from wren_engine_spark.plans.sqltext import (
     identifiers,
     rewrite_outside_literals,
     split_literals,
-    strip_trailing_comments,
 )
 
 
@@ -55,32 +54,6 @@ class TestIdentifiers:
 
     def test_case_folded(self):
         assert "total" in identifiers("SELECT Total FROM m")
-
-
-class TestStripTrailingComments:
-    def test_plain_untouched(self):
-        assert strip_trailing_comments("SELECT 1") == "SELECT 1"
-
-    def test_trailing_line_comment(self):
-        assert strip_trailing_comments("SELECT 1 -- note") == "SELECT 1"
-
-    def test_stacked_comments(self):
-        assert strip_trailing_comments("SELECT 1 -- a\n-- b") == "SELECT 1"
-
-    def test_mid_query_comment_kept(self):
-        sql = "SELECT 1 -- a\nFROM t"
-        assert strip_trailing_comments(sql) == sql
-
-    def test_dashes_in_literal_kept(self):
-        sql = "SELECT '--not a comment'"
-        assert strip_trailing_comments(sql) == sql
-
-    def test_semicolon_after_comment(self):
-        # the ';' after the comment previously re-exposed the comment
-        assert strip_trailing_comments("SELECT 1 -- note\n;") == "SELECT 1"
-
-    def test_block_comment_tail(self):
-        assert strip_trailing_comments("SELECT 1 /* note */ ") == "SELECT 1"
 
 
 class TestCommentsAndEscapes:

@@ -19,9 +19,9 @@ we keep them all).
     ``spark.table(model)``, cubes and the ``cached`` hint work. A model
     CTE whose body equals a cached model's body reads the cache.
 
-A request registers nothing and writes no session conf: ``sql``
-rewrites, then analyzes, in the deployed session or, for a request
-timezone, in a per-zone clone of it.
+A request registers nothing, writes no session conf and leaves no frame
+behind in the engine: ``sql`` rewrites, then analyzes, in the deployed
+session or, for a request timezone, in a per-zone clone of it.
 
 Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import re
 import threading
+from collections import OrderedDict
 
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
@@ -89,21 +90,6 @@ def _convert_java_exception(e: Exception) -> Exception:
     return e
 
 
-# expressions whose value depends on wall-clock time or randomness: a
-# cached analyzed plan would freeze them (ComputeCurrentTime /
-# ReplaceCurrentLike bake literals into the memoized optimizedPlan), so
-# queries referencing any of these bypass the plan cache
-_UNCACHEABLE_FNS = frozenset(
-    {
-        "current_date", "current_timestamp", "current_time", "now",
-        "localtimestamp", "current_timezone", "unix_timestamp", "today",
-        "curdate",  # alias of current_date
-        "rand", "randn", "random", "uuid", "shuffle",
-        "randstr", "uniform",  # Spark 4.x random generators
-        "monotonically_increasing_id", "unix_millis", "unix_seconds",
-    }
-)
-
 _TZ_OFFSET = re.compile(r"^[+-]\d{2}:\d{2}$")
 
 # Zone sessions kept per engine; past it the least recently used go first.
@@ -139,18 +125,12 @@ class SemanticEngine:
         self.manifest = manifest
         self.sources = sources
         self.properties: dict[str, str] = {}
-        # guards the plan cache and the zone sessions: the service layer
-        # may call sql() from multiple threads; analysis runs outside it
+        # guards the zone-session map only: the service layer may call
+        # sql() from multiple threads; analysis runs outside it
         self._sql_lock = threading.Lock()
-        # analyzed-plan LRU: spark.sql analysis is eager, so a DataFrame
-        # is an immutable bound plan — repeated query texts (dashboards,
-        # polling agents) skip the rewrite+parse+analyze round trip
-        # entirely. Invalidated wholesale on (re)deploy.
-        from collections import OrderedDict
-
-        self._plan_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
-        self._plan_cache_max = 256
         self._zone_sessions: OrderedDict[str, SparkSession] = OrderedDict()
+        # cube name -> its (cached) pre-agg frame, for cube_drill
+        self._cube_frames: dict[str, DataFrame] = {}
         check_cycles(manifest)
 
     # ------------------------------------------------------------------ deploy
@@ -167,7 +147,6 @@ class SemanticEngine:
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
         # a zone session is a snapshot of the deployed views
         with self._sql_lock:
-            self._plan_cache.clear()
             self._zone_sessions.clear()
         models = self.manifest.models
         # id(self) keeps the names apart from every other live engine's
@@ -201,7 +180,9 @@ class SemanticEngine:
         one text with the CTE rewriter (models and views as CTEs, only
         the referenced calculated fields attached, so unused joins and
         pre-aggregations never enter the plan) and analyze that text.
-        Nothing is registered on the session.
+        Nothing is registered on the session, and the engine keeps no
+        reference to the returned frame: repeated results are the query
+        cache's job (``serving.QueryCache``).
 
         ``timezone`` evaluates THIS query under the given session zone
         (reference: per-request ``x-wren-timezone`` header,
@@ -211,15 +192,6 @@ class SemanticEngine:
         every frame derived from it analyze, optimize and run under the
         zone; the deployed session's conf is never written.
         """
-        cache_key = (sql, timezone)
-        # probe the cache BEFORE any text analysis: a hit needs zero lex
-        # passes (an entry's presence proves it was cacheable), keeping
-        # the cached path at ~0.05 ms even for long dashboard SQL
-        with self._sql_lock:
-            hit = self._plan_cache.get(cache_key)
-            if hit is not None:
-                self._plan_cache.move_to_end(cache_key)
-                return hit
         session = self._session(timezone)
         text = self._planner.rewrite(sql)
         try:
@@ -228,7 +200,7 @@ class SemanticEngine:
             # DataFrame constructor below is pure-Python. Java exceptions
             # are converted to the standard PySpark types in the except
             # path so callers see identical errors.
-            df = DataFrame(session._jsparkSession.sql(text), session)
+            return DataFrame(session._jsparkSession.sql(text), session)
         except Exception as e:
             conv = _convert_java_exception(e)
             # PermissionAnalyze: turn UNRESOLVED_COLUMN on a CLAC-hidden
@@ -245,13 +217,6 @@ class SemanticEngine:
             if conv is e:
                 raise
             raise conv from None
-        # time-/randomness-dependent queries must re-plan every call
-        if _UNCACHEABLE_FNS.isdisjoint(identifiers(sql)):
-            with self._sql_lock:
-                self._plan_cache[cache_key] = df
-                if len(self._plan_cache) > self._plan_cache_max:
-                    self._plan_cache.popitem(last=False)
-        return df
 
     def _session(self, timezone: str | None) -> SparkSession:
         """The session that plans a request in ``timezone``: the deployed
@@ -355,9 +320,7 @@ class SemanticEngine:
         would silently answer wrong (the round-5 advisor's case).
         Single-quoted SQL strings are skipped so a paren inside a
         literal cannot unbalance the scan."""
-        import re as _re
-
-        m = _re.match(r"\s*([A-Za-z_][A-Za-z_0-9]*)\s*\(", expr)
+        m = re.match(r"\s*([A-Za-z_][A-Za-z_0-9]*)\s*\(", expr)
         if not m:
             return None
         head = m.group(1).upper()
@@ -418,8 +381,6 @@ class SemanticEngine:
         # the view exposes the declared columns only; it projects the
         # SAME (cached) frame, so no second materialization happens
         _register_temp_view(self.spark, out.select(*visible), cube.name)
-        if not hasattr(self, "_cube_frames"):
-            self._cube_frames: dict[str, DataFrame] = {}
         self._cube_frames[cube.name] = out
 
     def cube_drill(
@@ -448,7 +409,7 @@ class SemanticEngine:
         cube = next((c for c in self.manifest.cubes if c.name == name), None)
         if cube is None:
             raise PlanError(f"unknown cube {name!r}")
-        frame = getattr(self, "_cube_frames", {}).get(name)
+        frame = self._cube_frames.get(name)
         if frame is None:
             raise PlanError(f"cube {name!r} is not deployed")
         dims = [d.name for d in cube.dimensions]
@@ -521,16 +482,14 @@ class SemanticEngine:
         """Recompute a cube's materialization (the ``refresh_time`` hook
         — manifest-macro/src/lib.rs:141-168; production would schedule
         this). Drops the cached frame and re-registers from the current
-        base model state; plans and zone sessions made before are
-        dropped."""
+        base model state; zone sessions made before are dropped."""
         cube = next((c for c in self.manifest.cubes if c.name == name), None)
         if cube is None:
             raise PlanError(f"unknown cube {name!r}")
-        old = getattr(self, "_cube_frames", {}).get(name)
+        old = self._cube_frames.get(name)
         if old is not None:
             old.unpersist()
         self._register_cube(cube)
-        # cached plans and zone sessions hold the old cube view
+        # zone sessions hold the old cube view
         with self._sql_lock:
-            self._plan_cache.clear()
             self._zone_sessions.clear()

@@ -142,29 +142,6 @@ def references_identifier(sql: str, name: str) -> bool:
     return name.lower() in identifiers(sql)
 
 
-def strip_trailing_comments(sql: str) -> str:
-    """Drop trailing whitespace, semicolons, and trailing comments (so a
-    textual suffix append cannot be swallowed by a comment). Iterates to
-    a fixpoint, so ``SELECT 1 -- note\\n;`` reduces to ``SELECT 1``."""
-    while True:
-        spans = lex(sql)
-        # drop pure-whitespace/empty tail spans and trailing comments
-        while spans:
-            text, kind = spans[-1]
-            if kind == COMMENT or not text.strip():
-                spans.pop()
-            elif kind == CODE and text.rstrip() != text:
-                spans[-1] = (text.rstrip(), CODE)
-            else:
-                break
-        new = "".join(t for t, _ in spans)
-        if new and new[-1] == ";" and spans[-1][1] == CODE:
-            new = new[:-1]
-        if new == sql:
-            return sql
-        sql = new
-
-
 def iter_nonliteral(sql: str) -> Iterable[str]:
     for text, kind in lex(sql):
         if kind == CODE:

@@ -431,8 +431,7 @@ def x63(spark: SparkSession, sf: str) -> DataFrame:
     # every call re-paid Catalyst analysis of the whole probe tree
     # (~0.5 s driver-side on the bench box — MORE than the probe's own
     # executed jobs). A probe-many service prepares the plan once and
-    # re-executes it per request — serving.py's analyzed-plan LRU does
-    # exactly this for SQL text — so the entry memoizes the ANALYZED
+    # re-executes it per request, so the entry memoizes the ANALYZED
     # DataFrame per (session, corpus, index). Re-execution re-runs
     # every Spark job against the live table (this is NOT result
     # caching; appends/compactions surface on the next run after the

@@ -41,28 +41,6 @@ from pyspark.sql import DataFrame
 from wren_engine_spark.engine import SemanticEngine
 from wren_engine_spark.functions.catalog import FunctionCatalog
 
-_LIMIT_TAIL = re.compile(r"\bLIMIT\s+(\d+)\s*;?\s*$", re.IGNORECASE)
-
-
-def pushdown_limit(sql: str, limit: int | None) -> str:
-    """Merge a server-side limit into the SQL text (reference
-    wren-core-py/src/context.rs:271 + util.py:234-236: min of existing
-    and requested). Trailing ``--`` comments are stripped first so the
-    appended LIMIT can never be swallowed by one. The executing path
-    (``SemanticService.query``) additionally applies ``df.limit`` on the
-    DataFrame, which is comment/offset-proof by construction."""
-    if limit is None:
-        return sql
-    from wren_engine_spark.plans.sqltext import strip_trailing_comments
-
-    sql = strip_trailing_comments(sql).rstrip(";").rstrip()
-    m = _LIMIT_TAIL.search(sql)
-    if m:
-        existing = int(m.group(1))
-        return _LIMIT_TAIL.sub(f"LIMIT {min(existing, limit)}", sql)
-    return f"{sql} LIMIT {limit}"
-
-
 def _format_cell(v: Any) -> Any:
     # util.py:284-305 _formater parity
     if v is None:
@@ -287,10 +265,11 @@ class SemanticService:
         if timezone is not None:
             df = _render_timestamps_in_zone(df, timezone)
         if limit is not None:
-            # applied to the frame, not the text, so the base plan stays
-            # one plan-cache entry for every limit; composing df.limit
-            # with a LIMIT in the SQL yields the min, and text edge cases
-            # (trailing comments, OFFSET) cannot break it
+            # applied to the frame, not the text (reference: min of the
+            # existing and requested limit, context.rs:271 +
+            # util.py:234-236): composing df.limit with a LIMIT in the
+            # SQL yields the min, and text edge cases (trailing
+            # comments, OFFSET) cannot break it
             df = df.limit(limit)
         out = to_json(df, rows=collect_with_timeout(df, timeout_s))
         if use_cache and self.cache:

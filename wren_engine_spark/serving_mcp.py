@@ -141,16 +141,3 @@ class McpToolServer:
                  obj(alias="string", schema_pattern="string"), self.remote_metadata),
             Tool("health", "Engine health check", s, self.health),
         ]
-
-
-def mount_on_mcp(server: McpToolServer):  # pragma: no cover - optional dep
-    """Mount the tool registry on an ``mcp`` Server if the library is
-    installed; returns None otherwise (logic stays usable without it)."""
-    try:
-        from mcp.server import Server
-    except ImportError:
-        return None
-    app = Server("wren-engine-spark")
-    for t in server.tools():
-        app.call_tool()(t.fn)
-    return app
