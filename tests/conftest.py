@@ -95,7 +95,7 @@ _SOAK_NODEIDS = {
     "test_ivfpq.py::TestIvfPqRefinedProbe::test_refine_recall_at_least_adc_and_exact_order",
     "test_property_dedup.py::test_jaccard_pairs_equals_brute_force[0.5]",
     "test_llmops9.py::TestPQIndexAppend::test_rebuild_clears_epoch_markers",
-    "test_scale.py::TestDocFrequencySkew::test_x3_both_modes_identical_on_skewed_corpus",
+    "test_scale.py::TestDocFrequencySkew::test_x3_hot_caps_identical_on_skewed_corpus",
     "test_ivfpq.py::TestIvfPqLoudValidation::test_probe_wrong_query_dim_fails_loudly",
     "test_ivfpq.py::TestIvfPqLoudValidation::test_null_query_vector_fails_loudly",
     "test_operators.py::TestLshRecallBudget::test_x32_banding_matches_exact_clusters_across_seeds",

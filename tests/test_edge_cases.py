@@ -30,7 +30,7 @@ class TestEmptyCorpora:
         assert dedup.minhash_lsh_candidates(empty_docs, "text", "doc_id").count() == 0
 
     def test_simhash_near_dup_empty(self, empty_docs):
-        assert dedup.simhash_near_dup(empty_docs, "text", "doc_id").count() == 0
+        assert dedup.portable_simhash_near_dup(empty_docs, "text", "doc_id").count() == 0
 
     def test_winnow_empty(self, empty_docs):
         assert dedup.winnow_fingerprints(empty_docs, "text", "doc_id").count() == 0

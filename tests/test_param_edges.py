@@ -8,8 +8,7 @@ tests pin every parameterized kernel at values the registered
 queries do NOT use, against brute force or a pure-Python reference:
 
 - hyperplane signatures at a seed whose plane constants include
-  exponent-notation doubles (``_sig_sql`` inlines them as SQL
-  literals — ``1e-05D`` must parse and fold bit-identically);
+  exponent-notation doubles, against the pure-Python left fold;
 - pigeonhole banding at band counts that do NOT divide the
   signature width (remainder bits are uncovered by every band;
   recall must still be exact because uncovered bits can only HIDE
@@ -65,7 +64,7 @@ def _vectors(n, dim, seed=99):
 
 
 class TestExponentLiteralPlanes:
-    def test_sig_sql_parses_and_matches_python_fold(self, spark):
+    def test_signatures_match_python_fold_offdefault_seed(self, spark):
         planes = _py_planes(XSEED, XTABLES, XNBITS, XDIM)
         # the seed was picked BECAUSE its planes repr() in exponent
         # notation — assert that stays true so the test can't rot into
@@ -74,36 +73,15 @@ class TestExponentLiteralPlanes:
         assert any("e" in repr(x) for x in flat)
         rows = _vectors(40, XDIM)
         df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        for tab in planes:
-            sql = similarity._sig_sql("embedding", tab)
-            got = {
-                r.vec_id: r.b
-                for r in df.select("vec_id", F.expr(sql).alias("b")).collect()
-            }
-            exp = {i: _py_signature(v, tab) for i, v in rows}
-            assert got == exp
-
-    def test_hof_and_vectorized_signatures_identical_offdefault_seed(self, spark):
-        rows = _vectors(40, XDIM)
-        df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        kw = dict(dim=XDIM, nbits=XNBITS, tables=XTABLES, seed=XSEED)
-        hof = similarity._all_table_signatures(
-            df, "vec_id", "embedding", impl="hof", **kw
+        got = similarity._all_table_signatures(
+            df, "vec_id", "embedding", dim=XDIM, nbits=XNBITS, tables=XTABLES, seed=XSEED
         )
-        vec = similarity._all_table_signatures(
-            df, "vec_id", "embedding", impl="vectorized", **kw
-        )
-        a = sorted((r.vec_id, r.table_id, r.bucket) for r in hof.collect())
-        b = sorted((r.vec_id, r.table_id, r.bucket) for r in vec.collect())
-        assert a == b
-        # and both equal the pure-Python reference
-        planes = _py_planes(XSEED, XTABLES, XNBITS, XDIM)
         exp = sorted(
             (i, t, _py_signature(v, planes[t]))
             for i, v in rows
             for t in range(XTABLES)
         )
-        assert a == exp
+        assert sorted((r.vec_id, r.table_id, r.bucket) for r in got.collect()) == exp
 
 
 def _brute_hamming_pairs(sig_by_id, max_hamming):
@@ -127,8 +105,7 @@ def docs(spark):
 
 
 class TestNondivisibleBandCounts:
-    """bands that leave remainder bits uncovered (32 % 5, 64 % 5,
-    32 % 6): every banded join must still find EXACTLY the brute-force
+    """bands that leave remainder bits uncovered (32 % 5, 32 % 6): every banded join must still find EXACTLY the brute-force
     pair set — uncovered bits can only hide differences from band
     keys, which creates extra candidates, never lost ones."""
 
@@ -146,20 +123,6 @@ class TestNondivisibleBandCounts:
         }
         assert got == exp
         assert exp  # the corpus must actually contain near-dup pairs
-
-    def test_simhash64_near_dup_bands5(self, spark, docs):
-        sigs = {
-            r.doc_id: r.simhash
-            for r in dedup.simhash64(docs, "text", "doc_id").collect()
-        }
-        exp = _brute_hamming_pairs(sigs, 4)
-        got = {
-            (r.id_a, r.id_b, r.hamming)
-            for r in dedup.simhash_near_dup(
-                docs, "text", "doc_id", max_hamming=4, bands=5
-            ).collect()
-        }
-        assert got == exp
 
     def test_simhash_cross_contamination_bands5(self, spark, docs):
         test_df = docs.filter(F.col("doc_id") % 7 == 0)

@@ -82,13 +82,14 @@ class TestDocFrequencySkew:
 
         - count() OVER (PARTITION BY shingle): the hot shingle's whole
           occurrence list is structurally pinned to ONE task;
-        - groupBy+join (freq_mode='exact'): better (combinable agg),
-          but the join-back still concentrates the hot key — and AQE's
-          skew split cannot rescue it, because the rule only matches
-          plain two-shuffle SMJ children, not Sort(HashAgg(Shuffle));
-        - freq_mode='broadcast_head': no shuffle on the shingle key at
-          all, so the hot key's rows stay spread across the scan's
-          partitions — per-task balance independent of skew.
+        - groupBy+join of the full frequency table: better (combinable
+          agg), but the join-back still concentrates the hot key — and
+          AQE's skew split cannot rescue it, because the rule only
+          matches plain two-shuffle SMJ children, not
+          Sort(HashAgg(Shuffle));
+        - broadcast hot head (jaccard_pairs' order): no shuffle on the
+          shingle key at all, so the hot key's rows stay spread across
+          the scan's partitions — per-task balance independent of skew.
         """
         from pyspark.sql import Window as W
 
@@ -120,9 +121,8 @@ class TestDocFrequencySkew:
         remaining in the plan must be fed by a partial (map-side
         combinable) aggregate — where the hot shingle is at most one
         row per map partition — and the frequency attach itself must be
-        a broadcast hash join. Since round 5 broadcast_head IS the
-        operator default, so this covers the registered x3 entry
-        point's actual plan — no explicit freq_mode."""
+        a broadcast hash join. This is the operator's only frequency
+        attach, so it covers the registered x3 entry point's plan."""
         df = dedup.jaccard_pairs(skewed, "text", "doc_id", n=3, threshold=0.8)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin [shingle" in plan  # the freq attach
@@ -135,25 +135,21 @@ class TestDocFrequencySkew:
                 assert "partial_count" in tail, l.strip()[:120]
         assert found >= 1  # the frequency aggregation's own shuffle
 
-    def test_x3_both_modes_identical_on_skewed_corpus(self, spark, skewed):
-        exact = {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in dedup.jaccard_pairs(
-                skewed, "text", "doc_id", n=3, threshold=0.8,
-                freq_mode="exact",
-            ).collect()
-        }
-        skewproof = {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in dedup.jaccard_pairs(
-                skewed, "text", "doc_id", n=3, threshold=0.8,
-                freq_mode="broadcast_head",
-            ).collect()
-        }
-        # prefix ordering differs but the theorem guarantees the same
-        # verified output
-        assert exact == skewproof
-        assert (0, 1) in exact and (2, 3) in exact
+    def test_x3_hot_caps_identical_on_skewed_corpus(self, spark, skewed):
+        def pairs(cap):
+            return {
+                (r.id_a, r.id_b): round(r.jaccard, 9)
+                for r in dedup.jaccard_pairs(
+                    skewed, "text", "doc_id", n=3, threshold=0.8, hot_df_cap=cap,
+                ).collect()
+            }
+
+        # the two caps put different shingles in the hot head, so the
+        # global prefix orders differ; the prefix filter needs only a
+        # consistent order, so the verified output must not change
+        wide = pairs(64)
+        assert wide == pairs(8)
+        assert (0, 1) in wide and (2, 3) in wide
 
 
 class TestPassageSkew:

@@ -21,9 +21,11 @@ Usage: python tools/check_driver_compat.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# import the tree this tool lives in, wherever it is checked out
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()

@@ -106,7 +106,6 @@ def jaccard_pairs(
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
     unit: str = "word",
-    freq_mode: str = "broadcast_head",
     hot_df_cap: int = 64,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity for all pairs above ``threshold``.
@@ -134,39 +133,31 @@ def jaccard_pairs(
     the exact verify step restores precision.
 
     At 100 TB: doc frequency is a map-side-combinable
-    ``groupBy(shingle).count()`` joined back onto the exploded shingles
-    (never a count-over-window — a window pins a hot shingle's whole
-    occurrence list to one task), one doc-partitioned window for the
-    prefix rank (bounded by doc length), one prefix self-join, and a
-    candidate-verify join against the doc arrays; candidate volume
-    follows true near-duplicate density rather than corpus size
-    squared. Skewed prefix shingles are bounded by construction (a
+    ``groupBy(shingle).count()`` whose hot head is broadcast-joined
+    back onto the exploded shingles (never a count-over-window — a
+    window pins a hot shingle's whole occurrence list to one task), one
+    doc-partitioned window for the prefix rank (bounded by doc length),
+    one prefix self-join, and a candidate-verify join against the doc
+    arrays; candidate volume follows true near-duplicate density rather
+    than corpus size squared. Skewed prefix shingles are bounded by construction (a
     shingle lands in a prefix only while globally rare).
 
-    ``freq_mode`` picks how the frequency ORDER reaches each shingle:
-
-    - ``'exact'``: shuffle-join the full frequency table back
-      on the shingle key. Optimal prefix ordering (fewest candidates),
-      but the join-back concentrates a hot shingle's occurrence rows in
-      one task, and AQE's skew split cannot rescue it — the rule only
-      matches plain two-shuffle SMJ children, not the
-      ``Sort(HashAggregate(Shuffle))`` the frequency side planates to.
-      Opt-in (A/B comparison; near-uniform shingle frequencies).
-    - ``'broadcast_head'`` (DEFAULT — a web-corpus trigram can sit in
-      half the documents, and one such key makes ``'exact'`` a
-      straggler at scale): broadcast only the HOT head of the
-      frequency table (df > ``hot_df_cap`` — by Zipf a tiny set,
-      corpus_occurrences/cap entries max) and give every tail shingle
-      frequency bucket 0, ordered lexicographically. The prefix-filter
-      theorem needs only a GLOBALLY CONSISTENT total order, not the
-      true frequency order, so the output is IDENTICAL (the exact
-      verify step is unchanged); prefixes still exclude exactly the
-      hot shingles that cause quadratic blowup. The shingle join
-      becomes a broadcast hash join: NO shuffle on the shingle key
-      anywhere, so no hot-key task exists at any corpus size — the
-      100 TB mode. Tradeoff: tail prefixes are lexicographic rather
-      than rarest-first, admitting up to ~``hot_df_cap`` extra
-      candidates per prefix shingle.
+    The frequency ORDER reaches each shingle skew-proof: only the HOT
+    head of the frequency table (df > ``hot_df_cap`` — by Zipf a tiny
+    set, corpus_occurrences/cap entries max) is broadcast, and every
+    tail shingle gets frequency bucket 0, ordered lexicographically.
+    The prefix-filter theorem needs only a GLOBALLY CONSISTENT total
+    order, not the true frequency order, so the output equals the
+    full-frequency order's (the exact verify step is unchanged);
+    prefixes still exclude exactly the hot shingles that cause
+    quadratic blowup. The shingle join is a broadcast hash join: NO
+    shuffle on the shingle key anywhere, so no hot-key task exists at
+    any corpus size (a full-frequency join-back would pin a hot
+    shingle's occurrence rows to one task, and AQE's skew split cannot
+    rescue the ``Sort(HashAggregate(Shuffle))`` child it plans to).
+    Tradeoff: tail prefixes are lexicographic rather than rarest-first,
+    admitting up to ~``hot_df_cap`` extra candidates per prefix
+    shingle.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
@@ -185,14 +176,11 @@ def jaccard_pairs(
     # two window passes run once, not 4x
     docs = shingle_arrays(df, text_col, id_col, n, unit).cache()
     sh = docs.select(id_col, "__n", F.explode("__sh").alias("shingle"))
-    # Doc frequency via groupBy + join, NEVER count() OVER (PARTITION BY
-    # shingle): a window puts a hot shingle's entire occurrence list into
-    # one task with no map-side combine — a straggler at web-corpus
-    # scale. The groupBy's partial aggregation shrinks the second shuffle
-    # to distinct shingles, and AQE turns the join broadcast / splits
-    # skewed partitions at runtime.
-    if freq_mode not in ("exact", "broadcast_head"):
-        raise ValueError("freq_mode must be 'exact' or 'broadcast_head'")
+    # Doc frequency via groupBy + broadcast join, NEVER count() OVER
+    # (PARTITION BY shingle): a window puts a hot shingle's entire
+    # occurrence list into one task with no map-side combine — a
+    # straggler at web-corpus scale. The groupBy's partial aggregation
+    # shrinks its shuffle to distinct shingles.
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     if max_doc_freq is not None:
         keep = freq.filter(F.col("__df") <= max_doc_freq)
@@ -201,16 +189,13 @@ def jaccard_pairs(
         docs = docs.withColumn("__n", F.size("__sh"))
         sh = docs.select(id_col, "__n", F.explode("__sh").alias("shingle"))
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    if freq_mode == "broadcast_head":
-        head = freq.filter(F.col("__df") > hot_df_cap).withColumnRenamed(
-            "__df", "__hdf"
-        )
-        with_df = sh.join(F.broadcast(head), "shingle", "left").selectExpr(
-            id_col, "__n", "shingle",
-            "CAST(coalesce(__hdf, 0) AS BIGINT) AS __df",
-        )
-    else:
-        with_df = sh.join(freq, "shingle")
+    head = freq.filter(F.col("__df") > hot_df_cap).withColumnRenamed(
+        "__df", "__hdf"
+    )
+    with_df = sh.join(F.broadcast(head), "shingle", "left").selectExpr(
+        id_col, "__n", "shingle",
+        "CAST(coalesce(__hdf, 0) AS BIGINT) AS __df",
+    )
     # prefix length |d| - ceil(t*|d|) + 1, via epsilon-padded floor
     prefix = with_df.selectExpr(
         id_col, "shingle", "__n",
@@ -386,62 +371,6 @@ def minhash_lsh_candidates(
             "CAST(size(filter(zip_with(__sa, __sb, (x, y) -> x = y), e -> e)) AS DOUBLE)"
             f" / {float(num_perm)!r}D AS est_jaccard",
         )
-    )
-
-
-def simhash_near_dup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance <= max_hamming.
-
-    Banded LSH join with a pigeonhole guarantee: split the 64-bit
-    signature into ``bands`` equal slices; two signatures within
-    Hamming distance ``bands - 1`` MUST agree on at least one slice, so
-    with ``bands > max_hamming`` the candidate join is lossless and the
-    result is exactly the brute-force pair set. One band-key shuffle +
-    bit_count verify — never a cross product.
-
-    Returns (id_a, id_b, hamming).
-    """
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for exact recall")
-    width = 64 // bands
-    sig = simhash64(df, text_col, id_col)
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("val"),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = sig.select(id_col, "simhash", F.explode(band_arr).alias("b")).select(
-        id_col, "simhash", F.col("b.band").alias("band"), F.col("b.val").alias("val")
-    )
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("__sa"), "band", "val"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("__sb"), "band", "val"
-    )
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.expr("__sa ^ __sb")).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -930,30 +859,6 @@ def contamination(
     )
 
 
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: per bit, sum +1/-1 weighted
-    by token-hash bits, sign -> bit. One explode + one aggregation.
-    Returns (id, simhash)."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), WS_RE)).alias("tok"),
-    ).filter(F.length("tok") > 0)
-    hashed = toks.select(id_col, F.xxhash64("tok").alias("__h"))
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    counted = hashed.groupBy(id_col).agg(*bit_aggs)
-    sim = F.lit(0).cast("long")
-    for i in range(64):
-        sim = sim.bitwiseOR(
-            F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        )
-    return counted.select(F.col(id_col), sim.alias("simhash"))
-
-
 # Engine-portable polynomial token hash: base-31 code-point fold mod the
 # Mersenne prime 2^31-1. Every term stays far inside int64 (acc < 2^31,
 # *31 + codepoint < 2^36), so ANSI-mode Spark and DuckDB both evaluate
@@ -971,13 +876,12 @@ _PORTABLE_TOKEN_HASH = (
 
 def simhash_portable(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """31-bit SimHash over whitespace tokens using the PORTABLE
-    polynomial token hash — same sign-of-bit-sums construction as
-    :func:`simhash64`, but every step (code-point fold, bit tests,
-    sign aggregation) is exact integer arithmetic any SQL engine
-    reproduces bit-for-bit, so the full signature is oracle-checkable
-    (x42) rather than rows-only. Same single explode + one map-side-
-    combinable aggregation shape as simhash64; 31 columns instead of
-    64. Returns (id, simhash)."""
+    polynomial token hash: per bit, sum +1/-1 weighted by token-hash
+    bits, sign -> bit. Every step (code-point fold, bit tests, sign
+    aggregation) is exact integer arithmetic any SQL engine reproduces
+    bit-for-bit, so the full signature is oracle-checkable (x42). One
+    explode + one map-side-combinable aggregation. Returns
+    (id, simhash)."""
     toks = df.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.col(text_col)), WS_RE)).alias("tok"),
@@ -1007,37 +911,28 @@ def portable_simhash_near_dup(
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
-    """Near-duplicate pairs by Hamming distance over the PORTABLE
-    31-bit simhash — the same pigeonhole-banded join as
-    :func:`simhash_near_dup` (bands > max_hamming => lossless, never a
-    cross product), treating the signature as 32 bits (bit 31 is always
-    0). Because the signature itself is engine-portable, the whole pair
-    set has an exact brute-force SQL oracle (x43). Returns
+    """Near-duplicate pairs by Hamming distance <= max_hamming over the
+    PORTABLE 31-bit simhash.
+
+    Banded LSH join with a pigeonhole guarantee: split the signature
+    (as 32 bits; bit 31 is always 0) into ``bands`` slices; two
+    signatures within Hamming distance ``bands - 1`` MUST agree on at
+    least one slice, so with ``bands > max_hamming`` the candidate join
+    is lossless and the result is exactly the brute-force pair set. One
+    band-key shuffle + bit_count verify — never a cross product.
+    Because the signature itself is engine-portable, the whole pair set
+    has an exact brute-force SQL oracle (x43). Returns
     (id_a, id_b, hamming)."""
     if bands <= max_hamming:
         raise ValueError("bands must exceed max_hamming for exact recall")
-    width = 32 // bands
-    sig = simhash_portable(df, text_col, id_col)
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("val"),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = sig.select(id_col, "simhash", F.explode(band_arr).alias("b")).select(
-        id_col, "simhash", F.col("b.band").alias("band"), F.col("b.val").alias("val")
-    )
+    banded = _banded_signatures(df, text_col, id_col, bands)
     a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("__sa"), "band", "val"
+        F.col("corpus_id").alias("id_a"), F.col("corpus_simhash").alias("__sa"),
+        "band", "val",
     )
     b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("__sb"), "band", "val"
+        F.col("corpus_id").alias("id_b"), F.col("corpus_simhash").alias("__sb"),
+        "band", "val",
     )
     return (
         a.join(b, ["band", "val"])
@@ -1197,29 +1092,12 @@ def simhash_cross_contamination(
     """
     if bands <= max_hamming:
         raise ValueError("bands must exceed max_hamming for exact recall")
-    width = 32 // bands
-    mask = (1 << width) - 1
 
     def banded(df, side):
-        sig = simhash_portable(df, text_col, id_col)
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col("simhash"), i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("val"),
-                )
-                for i in range(bands)
-            ]
-        )
-        return sig.select(
-            F.col(id_col).alias(f"id_{side}"),
-            F.col("simhash").alias(f"__s{side}"),
-            F.explode(arr).alias("b"),
-        ).select(
-            f"id_{side}", f"__s{side}",
-            F.col("b.band").alias("band"), F.col("b.val").alias("val"),
+        return _banded_signatures(df, text_col, id_col, bands).select(
+            F.col("corpus_id").alias(f"id_{side}"),
+            F.col("corpus_simhash").alias(f"__s{side}"),
+            "band", "val",
         )
 
     t = banded(test_df, "t")
@@ -1583,8 +1461,9 @@ def _banded_signatures(
     df: DataFrame, text_col: str, id_col: str, bands: int
 ) -> DataFrame:
     """(corpus_id, corpus_simhash, band, val) rows — the ONE banding
-    implementation behind the index build and the ingestion append, so
-    the two can never band differently."""
+    implementation behind the pair join, the cross-corpus check, the
+    index build and the ingestion append, so none of them can band
+    differently."""
     width = 32 // bands
     sig = simhash_portable(df, text_col, id_col)
     mask = (1 << width) - 1

@@ -12,6 +12,12 @@ Scale path: random-hyperplane LSH bucketing — each vector maps to a
 ``nbits``-bit signature; neighbor search only compares vectors sharing a
 bucket. At 100 TB this turns a full cross product into a bucket-local
 join; recall is tuned by nbits / multiple tables.
+
+The ANN kernels — hyperplane signatures (``_all_table_signatures``), IVF
+list assignment (``_assign_lists``) and the candidate dots of
+``ivf_topk`` / ``lsh_ann_topk`` (``_dot_fast``) — are Arrow-batched numpy
+UDFs that accumulate dimension by dimension, the same left fold, so
+their output equals the DuckDB oracles (x11, x55, x63) bit for bit.
 """
 
 from __future__ import annotations
@@ -142,46 +148,13 @@ def with_norm(df: DataFrame, vec_col: str, out_col: str = "norm2") -> DataFrame:
     return df.withColumn(out_col, _norm2_dec(vec_col))
 
 
-# ---------------------------------------------------------------- impl picker
-
-# auto = Arrow-vectorized whenever numpy/pandas/pyarrow import; HOF
-# (dependency-free interpreted expressions) otherwise. Both produce
-# BIT-IDENTICAL results (same left-fold IEEE sequence), so the choice
-# is pure throughput. History: round 5 gated on an optimizer-stats
-# size probe — which had a py4j bug (sizeInBytes() is already a
-# Python int; .toString() raised) that routed EVERY call through the
-# exception fallback, so "vectorized above 1 MiB" never actually ran
-# the size check. Measured with the probe fixed (r6, local[32]):
-# vectorized wins at EVERY corpus size down to 500 vectors (1.4 s vs
-# 3.7 s at sf0.01, 1.4 s vs 5.1 s at sf0.1) — the kernel cost
-# dominates the Python-worker spin-up long before any realistic input
-# size, so a size threshold adds a failure mode without a win. The
-# only principled gate is dependency availability (r5 advisor: a
-# stripped environment must get the HOF path, not a crash).
-
-
-def _pick_impl(impl: str, df: DataFrame) -> str:
-    if impl != "auto":
-        if impl not in ("hof", "vectorized"):
-            raise ValueError("impl must be 'auto', 'hof' or 'vectorized'")
-        return impl
-    try:
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-    except Exception:
-        return "hof"
-    return "vectorized"
-
-
 def _make_multi_sig_udf(planes: list[list[list[float]]]):
     """Arrow-batched hyperplane signatures for ALL tables in one pass:
     vec -> array<long> of per-table bucket ids. Per (table, bit) the dot
     accumulates dimension-by-dimension, so each row's sum is the same
-    sequential left fold as the HOF expression — identical IEEE rounding
-    sequence, identical sign, identical bucket — while numpy vectorizes
-    across the Arrow batch. 48 interpreted folds/row become ~48*dim
-    fused vector ops/batch."""
+    sequential left fold as DuckDB's ``list_reduce`` in the oracles —
+    identical IEEE rounding sequence, identical sign, identical bucket —
+    while numpy vectorizes across the Arrow batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -209,10 +182,9 @@ def _make_multi_sig_udf(planes: list[list[list[float]]]):
 
 def _make_argmin_udf(centroids: list[list[float]]):
     """Arrow-batched nearest-centroid assignment: vec -> argmin_c
-    L2^2(vec, c). Distance accumulates dimension-by-dimension (the HOF
-    fold's exact IEEE sequence) and ties keep the FIRST minimum (strict
-    less-than), matching the HOF's CASE WHEN dist < acc.d semantics
-    bit-for-bit."""
+    L2^2(vec, c). Distance accumulates dimension-by-dimension (the
+    left fold's exact IEEE sequence) and ties keep the FIRST minimum
+    (strict less-than), i.e. the lowest centroid index."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -325,17 +297,14 @@ def cosine_near_dup_pairs(
         if dim is None:
             raise ValueError("dim is required for method='lsh'")
         normed = normed.cache()
-        cand = None
-        for t in range(tables):
-            sig = hyperplane_signatures(normed, id_col, vec_col, dim, nbits, 7000 + 1000 * t)
-            s1 = sig.select(F.col(id_col).alias("id_a"), "bucket")
-            s2 = sig.select(F.col(id_col).alias("id_b"), "bucket")
-            p = (
-                s1.join(s2, "bucket")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-            )
-            cand = p if cand is None else cand.unionAll(p)
+        sigs = _all_table_signatures(normed, id_col, vec_col, dim, nbits, tables, seed=7000)
+        s1 = sigs.select(F.col(id_col).alias("id_a"), "table_id", "bucket")
+        s2 = sigs.select(F.col(id_col).alias("id_b"), "table_id", "bucket")
+        cand = (
+            s1.join(s2, ["table_id", "bucket"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
         va = normed.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
                            F.col("__n").alias("__na"))
         vb = normed.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
@@ -510,16 +479,15 @@ def _exact_blocked_pairs(
 
 
 def kmeans_centroids(
-    df: DataFrame, vec_col: str, dim: int, nlist: int = 16, iters: int = 5,
-    impl: str = "auto",
+    df: DataFrame, vec_col: str, dim: int, nlist: int = 16, iters: int = 5
 ) -> list[list[float]]:
     """Lloyd's k-means over an embedding column, pure DataFrame ops.
 
     Initialization is deterministic (first ``nlist`` vectors in id-less
     row order after a stable sort on the vector bytes). Each iteration
-    is one broadcast-join assign + one groupBy mean — at 100 TB that is
-    ``iters`` passes over the corpus with only centroid-sized state on
-    the driver (nlist x dim floats).
+    is one narrow assign map (``_assign_lists``) + one groupBy mean — at
+    100 TB that is ``iters`` passes over the corpus with only
+    centroid-sized state on the driver (nlist x dim floats).
     """
     first = [
         r[0]
@@ -529,10 +497,8 @@ def kmeans_centroids(
         .collect()
     ]
     centroids = [[float(x) for x in v] for v in first]
-    # resolve the kernel mode ONCE and reuse it every Lloyd round
-    mode = _pick_impl(impl, df)
     for _ in range(iters):
-        assigned = _assign_lists(df, vec_col, centroids, impl=mode).select(
+        assigned = _assign_lists(df, vec_col, centroids).select(
             "__list", F.col(vec_col).alias("__v")
         )
         # mean per cluster: aggregate each dimension via posexplode
@@ -550,44 +516,13 @@ def kmeans_centroids(
     return centroids
 
 
-def _assign_lists(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    impl: str = "auto",
-):
-    """Attach __list = argmin_c L2(vec, centroid_c) via a broadcast
-    literal centroid array — one narrow map, no shuffle. ``impl``
-    'vectorized' uses the Arrow argmin kernel (bit-identical fold order
-    and first-min tie-break); 'hof' the interpreted expression; 'auto'
-    picks by input-size estimate."""
-    if _pick_impl(impl, df) == "vectorized":
-        argmin = _make_argmin_udf(centroids)
-        return df.withColumn("__list", argmin(F.col(vec_col)))
-    carr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("i"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("c"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    dist2 = (
-        "aggregate(zip_with(s.c, __vv, (p, q) -> (p - CAST(q AS DOUBLE)) * "
-        "(p - CAST(q AS DOUBLE))), 0.0D, (acc, x) -> acc + x)"
-    )
-    best = F.expr(
-        "aggregate(__cands, named_struct('i', -1, 'd', CAST('Infinity' AS DOUBLE)), "
-        f"(acc, s) -> CASE WHEN {dist2} < acc.d THEN named_struct('i', s.i, 'd', {dist2}) "
-        "ELSE acc END).i"
-    )
-    return (
-        df.withColumn("__vv", F.col(vec_col))
-        .withColumn("__cands", carr)
-        .withColumn("__list", best)
-        .drop("__cands", "__vv")
-    )
+def _assign_lists(df: DataFrame, vec_col: str, centroids: list[list[float]]):
+    """Attach __list = argmin_c L2(vec, centroid_c) through the Arrow
+    argmin kernel — one narrow map, no shuffle. The distance folds in
+    the oracle's left-to-right order and ties keep the lowest centroid
+    index, so assignments match x55's DuckDB oracle bit for bit."""
+    argmin = _make_argmin_udf(centroids)
+    return df.withColumn("__list", argmin(F.col(vec_col)))
 
 
 def ivf_topk(
@@ -602,7 +537,6 @@ def ivf_topk(
     iters: int = 4,
     round_digits: int = 6,
     centroids: list[list[float]] | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbors.
 
@@ -619,17 +553,15 @@ def ivf_topk(
     """
     from pyspark.sql import Window as W
 
-    mode = _pick_impl(impl, df)  # resolve once for assign + dot kernels
     if centroids is None:
-        centroids = kmeans_centroids(df, vec_col, dim, nlist, iters, impl=mode)
+        centroids = kmeans_centroids(df, vec_col, dim, nlist, iters)
     # explicit `centroids` skips training: the seeded-centroid portable
     # mode (x55) probes with externally-fixed centroids so the whole
     # assignment->probe->score path is SQL-oracle-checkable. The corpus
-    # assignment (every row) honors `impl`; the query-side probe
-    # ranking stays HOF — the query set is tiny by design.
-    corpus = _assign_lists(
-        with_norm(df, vec_col, "__vn"), vec_col, centroids, impl=mode
-    ).select(
+    # assignment (every row) runs the Arrow argmin kernel; the
+    # query-side probe ranking stays one SQL expression — the query set
+    # is tiny by design.
+    corpus = _assign_lists(with_norm(df, vec_col, "__vn"), vec_col, centroids).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v"), "__vn", "__list"
     )
     # nprobe nearest centroids per query, via the same literal centroid
@@ -658,8 +590,7 @@ def ivf_topk(
         .select("query_id", F.col("qvec").alias("__q"), "__qn",
                 F.explode("__probe").alias("__list"))
     )
-    dot = _dot_fast if mode == "vectorized" else _dot_dec
-    sim = dot("__q", "__v") / (
+    sim = _dot_fast("__q", "__v") / (
         F.sqrt(F.col("__qn")) * F.sqrt(F.col("__vn"))
     )
     scored = (
@@ -680,29 +611,6 @@ def ivf_topk(
     )
 
 
-def hyperplane_signatures(
-    df: DataFrame, id_col: str, vec_col: str, dim: int, nbits: int = 16, seed: int = 42
-) -> DataFrame:
-    """Random-hyperplane LSH: sign(v . h_j) bits packed into a bigint
-    bucket id. The plane matrix is tiny (nbits x dim) and broadcast as a
-    literal array — no shuffle at all; one narrow map over the corpus."""
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]
-    sig = F.lit(0).cast("long")
-    v = F.col(vec_col)
-    for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(F.lit(0).cast("long"))
-        )
-    return df.select(F.col(id_col), v.alias(vec_col), sig.alias("bucket"))
-
-
 def lsh_ann_topk(
     df: DataFrame,
     id_col: str,
@@ -712,7 +620,6 @@ def lsh_ann_topk(
     nbits: int = 12,
     tables: int = 4,
     seed: int = 42,
-    impl: str = "auto",
 ) -> DataFrame:
     """Approximate nearest neighbors: ``tables`` independent hyperplane
     hash tables (OR-amplification — recall for sim s is
@@ -724,63 +631,21 @@ def lsh_ann_topk(
     cross product never materializes — cost follows bucket occupancy,
     tuned by nbits.
 
-    ``impl``: 'hof' evaluates signatures and candidate dots as
-    interpreted higher-order functions (zero Python, the auditable
-    oracle form); 'vectorized' routes them through Arrow-batched numpy
-    kernels with the SAME left-fold accumulation order, so the output
-    is bit-identical (same DuckDB oracle verifies both) at ~an order of
-    magnitude higher per-row throughput; 'auto' (default) picks
-    'vectorized' when the optimizer's input-size estimate exceeds
-    ~1 MiB and 'hof' below (Python-worker spin-up dominates tiny
-    inputs).
+    Signatures and candidate dots run through the Arrow kernels
+    (``_all_table_signatures``, ``_dot_fast``), which fold in the same
+    left-to-right order as the x11 DuckDB oracle, so buckets,
+    candidates, similarities and ranks reproduce it bit for bit.
     """
     from pyspark.sql import Window as W
 
-    mode = _pick_impl(impl, df)
     normed = with_norm(df, vec_col, "__n")
-    # ONE corpus pass computes every table's signature (a per-table
-    # loop of hyperplane_signatures scans the corpus `tables` times);
-    # the (table, bucket) pair key then drives a single self-join. The
-    # per-table arithmetic is identical to hyperplane_signatures — the
-    # x11 oracle reproduces the same buckets.
-    v = F.col(vec_col)
-    all_planes = []
-    for t in range(tables):
-        rng = random.Random(seed + 1000 * t)
-        all_planes.append(
-            [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]
-        )
-    if mode == "vectorized":
-        multi_sig = _make_multi_sig_udf(all_planes)
-        sigs = normed.select(
-            F.col(id_col), F.posexplode(multi_sig(v)).alias("__t", "bucket")
-        )
-    else:
-        sig_cols = []
-        for t, planes in enumerate(all_planes):
-            sig = F.lit(0).cast("long")
-            for j, plane in enumerate(planes):
-                arr = F.array(*[F.lit(x) for x in plane])
-                dot = F.aggregate(
-                    F.zip_with(v, arr, lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                sig = sig.bitwiseOR(
-                    F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                )
-            sig_cols.append(F.struct(F.lit(t).alias("t"), sig.alias("b")))
-        sigs = normed.select(
-            F.col(id_col), F.explode(F.array(*sig_cols)).alias("__tb")
-        ).select(
-            F.col(id_col), F.col("__tb.t").alias("__t"), F.col("__tb.b").alias("bucket")
-        )
-    a = sigs.select(F.col(id_col).alias("query_id"), "__t", "bucket")
-    b = sigs.select(F.col(id_col).alias("neighbor_id"), "__t", "bucket")
+    # ONE corpus pass computes every table's signature; the
+    # (table, bucket) pair key then drives a single self-join
+    sigs = _all_table_signatures(normed, id_col, vec_col, dim, nbits, tables, seed)
+    a = sigs.select(F.col(id_col).alias("query_id"), "table_id", "bucket")
+    b = sigs.select(F.col(id_col).alias("neighbor_id"), "table_id", "bucket")
     cand = (
-        a.join(b, ["__t", "bucket"])
+        a.join(b, ["table_id", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
@@ -791,7 +656,6 @@ def lsh_ann_topk(
     vside = normed.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v"), F.col("__n").alias("__vn")
     )
-    dot = _dot_fast if mode == "vectorized" else _dot_dec
     scored = (
         cand.join(qside, "query_id")
         .join(vside, "neighbor_id")
@@ -799,7 +663,7 @@ def lsh_ann_topk(
             "query_id",
             "neighbor_id",
             (
-                dot("__q", "__v")
+                _dot_fast("__q", "__v")
                 / (F.sqrt(F.col("__qn")) * F.sqrt(F.col("__vn")))
             ).alias("__sim"),
         )
@@ -1015,27 +879,6 @@ def semantic_dedup(
     )
 
 
-def _sig_sql(vec_col: str, planes: list[list[float]]) -> str:
-    """One hash table's nbits-bit hyperplane signature as a single SQL
-    expression string with the plane constants inlined as double
-    literals. Building the same tree through Column operators costs
-    ~nbits x dim py4j round-trips (~190 ms of every x63 probe at
-    nbits=10, tables=4, dim=64); building a string is microseconds.
-    ``repr()`` round-trips IEEE doubles exactly and Spark parses
-    ``...D`` literals with Double.parseDouble, so the arithmetic is
-    bit-identical to the Column form it replaced (same
-    zip_with/aggregate left fold, same > 0 bit rule, long OR fold)."""
-    bits = []
-    for j, plane in enumerate(planes):
-        arr = ", ".join(f"{x!r}D" for x in plane)
-        dot = (
-            f"aggregate(zip_with(`{vec_col}`, array({arr}), "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
-        )
-        bits.append(f"(CASE WHEN ({dot}) > 0D THEN {1 << j}L ELSE 0L END)")
-    return " | ".join(bits)
-
-
 def _all_table_signatures(
     df: DataFrame,
     id_col: str,
@@ -1044,50 +887,32 @@ def _all_table_signatures(
     nbits: int,
     tables: int,
     seed: int,
-    impl: str = "auto",
     carry_cols: tuple = (),
 ) -> DataFrame:
     """(id, vec, table_id, bucket[, carry...]) for ALL hash tables in
-    ONE pass — one plan, one scan. A per-table loop of
-    hyperplane_signatures builds ``tables`` separate plans whose nbits
-    x dim literal plane matrices dominate ANALYSIS+CODEGEN time
-    (measured: 3.3 s of x63's 4 s probe was four 10-row signature
-    plans), and scans the input ``tables`` times. Same arithmetic and
-    left-fold order as hyperplane_signatures — bit-identical buckets
-    (the x63 oracle reproduces them). ``carry_cols`` pass through
-    untouched (attribute columns an index stores for filtered
-    probes)."""
+    ONE pass through the Arrow signature kernel — one plan, one scan.
+    Table ``t`` draws its nbits x dim planes from
+    ``random.Random(seed + 1000 * t)``, and bit j is set when the
+    left-fold dot with plane j is > 0, so buckets equal the DuckDB
+    oracles' (x11, x63). A per-table loop of plans would scan the input
+    ``tables`` times and put ``tables`` literal plane matrices through
+    analysis and codegen (measured: 3.3 s of x63's 4 s probe was four
+    10-row signature plans). ``carry_cols`` pass through untouched
+    (attribute columns an index stores for filtered probes)."""
     v = F.col(vec_col)
-    carry = [F.col(c) for c in carry_cols]
     all_planes = []
     for t in range(tables):
         rng = random.Random(seed + 1000 * t)
         all_planes.append(
             [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]
         )
-    if _pick_impl(impl, df) == "vectorized":
-        multi_sig = _make_multi_sig_udf(all_planes)
-        return df.select(
-            F.col(id_col),
-            v.alias(vec_col),
-            *carry,
-            F.posexplode(multi_sig(v)).alias("table_id", "bucket"),
-        ).select(id_col, vec_col, "table_id", "bucket", *carry_cols)
-    sig_cols = [
-        F.struct(
-            F.lit(t).alias("t"), F.expr(_sig_sql(vec_col, planes)).alias("b")
-        )
-        for t, planes in enumerate(all_planes)
-    ]
-    return (
-        df.select(F.col(id_col), v.alias(vec_col), *carry,
-                  F.explode(F.array(*sig_cols)).alias("__tb"))
-        .select(
-            id_col, vec_col,
-            F.col("__tb.t").alias("table_id"), F.col("__tb.b").alias("bucket"),
-            *carry_cols,
-        )
-    )
+    multi_sig = _make_multi_sig_udf(all_planes)
+    return df.select(
+        F.col(id_col),
+        v.alias(vec_col),
+        *[F.col(c) for c in carry_cols],
+        F.posexplode(multi_sig(v)).alias("table_id", "bucket"),
+    ).select(id_col, vec_col, "table_id", "bucket", *carry_cols)
 
 
 def write_ann_index(

@@ -81,12 +81,12 @@ _PAIRS_CTES = r"""
 def x3(spark: SparkSession, sf: str) -> DataFrame:
     """Word-trigram Jaccard near-dup pairs (prefix-filtered exact
     similarity join; identical output to the naive quadratic oracle).
-    Runs the operator's DEFAULT mode — which as of round 5 is the
-    skew-proof ``broadcast_head`` frequency attach (no shuffle on the
-    raw shingle key anywhere; a hot shingle can never pin one task):
-    tests/test_plans.py asserts the registered plan, and the opt-in
-    ``freq_mode='exact'`` A/B twin is covered by
-    tests/test_scale.py's identical-output comparison."""
+    The operator's frequency attach is skew-proof (a broadcast hot
+    head; no shuffle on the raw shingle key anywhere, so a hot shingle
+    can never pin one task): tests/test_plans.py asserts the registered
+    plan, and tests/test_scale.py checks that two different hot-head
+    caps (two different global shingle orders) give identical
+    output."""
     d = load_tables(spark, sf, "documents")["documents"]
     return dedup.jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
 
@@ -96,22 +96,18 @@ def x3(spark: SparkSession, sf: str) -> DataFrame:
     f"WITH {_PAIRS_CTES} SELECT id_a, id_b, jaccard FROM pairs",
 )
 def x47(spark: SparkSession, sf: str) -> DataFrame:
-    """The skew-proof frequency mode, pinned EXPLICITLY (since round 5
-    it is also the operator default, so this registers the same plan
-    as x3 under an independent driver row): frequency ordering via a
-    BROADCAST hot head (df > cap) with lexicographic tail — the
-    prefix-filter theorem only needs a globally consistent shingle
-    order, so the output is IDENTICAL to freq_mode='exact' (same
-    DuckDB oracle verifies both), but the shingle join is a broadcast
-    hash join: no shuffle on the shingle key anywhere, so a hot
-    shingle can never pin one task at any corpus size.
-    tests/test_scale.py measures the per-task balance on a Zipfian
-    corpus."""
+    """The skew-proof frequency order with its hot-head cap pinned
+    EXPLICITLY (the same plan as x3 under an independent driver row):
+    frequency ordering via a BROADCAST hot head (df > cap) with
+    lexicographic tail — the prefix-filter theorem only needs a
+    globally consistent shingle order, so the output is IDENTICAL to
+    the true-frequency order's (the same DuckDB oracle as x3), but the
+    shingle join is a broadcast hash join: no shuffle on the shingle
+    key anywhere, so a hot shingle can never pin one task at any corpus
+    size. tests/test_scale.py measures the per-task balance on a
+    Zipfian corpus."""
     d = load_tables(spark, sf, "documents")["documents"]
-    return dedup.jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        freq_mode="broadcast_head", hot_df_cap=64,
-    )
+    return dedup.jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8, hot_df_cap=64)
 
 
 _X4_CACHE: list = []
@@ -182,10 +178,8 @@ def x4(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # x5_simhash / x17_simhash_near_dup are registered in llmops3.py using
-# the PORTABLE polynomial hash (bit-exact DuckDB oracles). The xxhash64
-# variants (dedup.simhash64 / simhash_near_dup) stay in the library as
-# the production-throughput siblings, equivalence-tested in
-# tests/test_operators.py + test_property_dedup.py.
+# the PORTABLE polynomial hash (bit-exact DuckDB oracles), the library's
+# only simhash.
 
 
 @register(
@@ -322,10 +316,11 @@ def _lsh_oracle(
     query_pred: str = "TRUE",
 ) -> str:
     """Exact DuckDB oracle for the hyperplane-LSH ANN: the planes are
-    Python-RNG constants shared with similarity.hyperplane_signatures
+    Python-RNG constants shared with similarity._all_table_signatures
     (same seeds), embedded here as double literals; signature dots use
-    the same left fold as the Spark HOF, so buckets — and therefore the
-    candidate sets and the final top-k — reproduce bit-for-bit.
+    the same left fold as the Spark Arrow kernel, so buckets — and
+    therefore the candidate sets and the final top-k — reproduce
+    bit-for-bit.
     ``query_pred`` restricts the query side (the probe form, x63); TRUE
     is the all-pairs self-search (x11)."""
     import random as _random

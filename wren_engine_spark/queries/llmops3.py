@@ -592,10 +592,9 @@ def x5(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash signatures (default: the engine-PORTABLE polynomial
     hash), driver-verified bit-for-bit: token hash and sign aggregation
     are exact integer arithmetic, so the DuckDB oracle recomputes the
-    IDENTICAL 31-bit signature per document. The xxhash64 64-bit
-    variant (dedup.simhash64) remains the library's throughput sibling,
-    equivalence-tested in pytest; registering the portable form makes
-    the whole simhash surface oracle-green instead of rows-only."""
+    IDENTICAL 31-bit signature per document. The portable form is the
+    library's only simhash, so the whole simhash surface is
+    oracle-green instead of rows-only."""
     d = load_tables(spark, sf, "documents")["documents"]
     return dedup.simhash_portable(d, "text", "doc_id")
 

@@ -16,6 +16,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram() -> str:
+    """Default driver heap: half this machine's physical memory, in
+    whole GiB, at least 1g — a fixed size larger than the machine lets
+    the JVM grow until the OS kills it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2 // (1 << 30))}g"
+
+
 def get_spark(
     app_name: str = "wren_engine_spark",
     master: str | None = None,
@@ -45,7 +53,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.caseSensitive", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _half_ram())
         # parquet scans: 128MB splits is the cluster sweet spot; keep the
         # default. Vectorized reader + filter pushdown are on by default.
         .config("spark.sql.parquet.filterPushdown", "true")
