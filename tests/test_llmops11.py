@@ -23,8 +23,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
-from wren_engine_spark.operators import retrieval, similarity
+from tests.conftest import SF_DIR, cross_session_deletes
+from wren_engine_spark.operators import layout, retrieval, similarity
 
 
 def _plan(df):
@@ -350,8 +350,8 @@ class TestBucketedLifecycle:
         # 3 deleted ids x 2 hash tables of rows folded away
         assert stats["n_rows"] == n_merge_on_read - 3 * 2
         assert spark.table("lcann_t2").count() == stats["n_rows"]
-        assert not spark.catalog.tableExists("lcann_t2__tombstones")
-        assert layout.bucketed_tombstones(spark, "lcann_t2") is None
+        assert not os.path.isdir(layout.tombstone_dir(spark, "lcann_t2"))
+        assert layout.read_tombstones(spark, "lcann_t2") is None
         # probes bit-identical across the swap, and bucket spec intact
         # (the append below validates it)
         assert self._probe(spark, "lcann_t2", queries) == before
@@ -405,7 +405,7 @@ class TestBucketedLifecycle:
         assert got == expected
         stats = dedup.simhash_index_compact(spark, "lcsh_t1")
         assert stats["files_after"] <= 4
-        assert not spark.catalog.tableExists("lcsh_t1__tombstones")
+        assert not os.path.isdir(layout.tombstone_dir(spark, "lcsh_t1"))
         after = {
             (r.delta_id, r.corpus_id, r.hamming)
             for r in dedup.simhash_index_probe(
@@ -444,7 +444,7 @@ class TestDeleteGuards:
             dim=64, nbits=4, tables=2, seed=3,
         )
         similarity.ann_index_delete(spark, "guard_t1", ["doc-7", "doc-11"])
-        tomb = spark.table("guard_t1__tombstones").collect()
+        tomb = layout.read_tombstones(spark, "guard_t1").collect()
         assert {r.sid for r in tomb} == {"doc-7", "doc-11"}
         queries = sdf.filter(F.col("sid").isin("doc-0", "doc-1"))
         got = similarity.ann_index_topk(
@@ -460,7 +460,7 @@ class TestDeleteGuards:
         with pytest.raises(ValueError):
             dedup.simhash_index_delete(spark, "no_such_index_xyz", [1])
         with pytest.raises(ValueError):
-            layout.bucketed_index_delete(spark, "no_such_index_xyz", [1], "id")
+            layout.append_tombstones(spark, [1], "id", "no_such_index_xyz")
 
     def test_empty_ids_delete_is_clean_noop(self, spark, emb, tmp_path):
         # an empty ids iterable used to die in createDataFrame schema
@@ -475,16 +475,16 @@ class TestDeleteGuards:
         assert similarity.pq_index_delete(spark, path, []) == {
             "n_tombstones": 0
         }
-        assert similarity._tombstones(spark, path) is None
+        assert layout.read_tombstones(spark, path=path) is None
         sdf = emb.filter(F.col("vec_id") < 40)
         similarity.write_ann_index(
             sdf, "vec_id", "embedding", "emptydel_t1",
             dim=64, nbits=4, tables=2, seed=3,
         )
-        assert layout.bucketed_index_delete(
-            spark, "emptydel_t1", [], "vec_id"
+        assert layout.append_tombstones(
+            spark, [], "vec_id", "emptydel_t1"
         ) == {"n_tombstones": 0}
-        assert layout.bucketed_tombstones(spark, "emptydel_t1") is None
+        assert layout.read_tombstones(spark, "emptydel_t1") is None
 
     def test_tombstone_read_failure_is_loud(self, spark, emb, tmp_path):
         # a corrupt tombstone sidecar must surface, not silently serve
@@ -510,6 +510,69 @@ class TestDeleteGuards:
                 ),
                 topk=3,
             ).collect()
+
+
+class TestCrossSessionDelete:
+    def test_ann_delete_reaches_other_sessions(self, spark):
+        t = "xsess_ann"
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter(
+            F.col("vec_id") < 300
+        )
+        similarity.write_ann_index(
+            emb, "vec_id", "embedding", t, dim=64, nbits=4, tables=2, seed=3
+        )
+
+        def hits(sess):
+            q = sess.read.parquet(f"{SF_DIR}/embeddings.parquet").filter(
+                F.col("vec_id") < 3
+            )
+            return {
+                r.neighbor_id
+                for r in similarity.ann_index_topk(
+                    sess, t, q, "vec_id", "embedding", dim=64, k=10_000
+                ).collect()
+            } - {0, 1, 2}
+
+        try:
+            cross_session_deletes(
+                spark, hits,
+                lambda sess, ids: similarity.ann_index_delete(sess, t, ids),
+            )
+        finally:
+            for tbl in (t, f"{t}__meta"):
+                layout.drop_managed_table(spark, tbl)
+            layout.clear_tombstones(spark, t)
+
+    def test_simhash_delete_reaches_other_sessions(self, spark):
+        from wren_engine_spark.operators import dedup
+
+        t = "xsess_sh"
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        dedup.write_simhash_index(
+            docs.filter(F.col("doc_id") % 10 != 0), "text", "doc_id", t,
+            buckets=4,
+        )
+
+        def hits(sess):
+            delta = sess.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+                F.col("doc_id") % 10 == 0
+            )
+            return {
+                r.corpus_id
+                for r in dedup.simhash_index_probe(
+                    sess, t, delta, "text", "doc_id", max_hamming=3
+                ).collect()
+            }
+
+        try:
+            cross_session_deletes(
+                spark, hits,
+                lambda sess, ids: dedup.simhash_index_delete(sess, t, ids),
+            )
+        finally:
+            for tbl in (t, f"{t}__meta"):
+                layout.drop_managed_table(spark, tbl)
+            layout.clear_tombstones(spark, t)
 
 
 class TestHybridRRF:

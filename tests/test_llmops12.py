@@ -9,7 +9,7 @@ Pins, per the round-5 discipline:
 - a delete changes the MODEL, not just the candidate list: N / avgdl
   / df shrink, certified by probe-after-delete ≡ fresh build on the
   filtered corpus (bit-for-bit);
-- compaction folds tombstones, drops both tombstone tables, bounds
+- compaction folds tombstones, clears both tombstone directories, bounds
   file counts, and leaves probes bit-identical;
 - plan: with autoBroadcastJoinThreshold=-1 the probe never exchanges
   on the token key (no ``Exchange hashpartitioning(tok``/``__tok``) —
@@ -22,7 +22,7 @@ Pins, per the round-5 discipline:
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cross_session_deletes
 from wren_engine_spark.operators import layout, retrieval
 
 
@@ -213,6 +213,38 @@ class TestBm25IndexDelete:
         assert _rows(got) == _rows(want)
 
 
+    def test_delete_reaches_other_sessions(self, spark):
+        t = "bm25_t_xsess"
+        retrieval.write_bm25_index(
+            spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+                F.col("doc_id") < 400
+            ),
+            "text", "doc_id", t,
+        )
+
+        def hits(sess):
+            q = sess.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+                F.col("doc_id") < 4
+            )
+            return {
+                r.doc_id
+                for r in retrieval.bm25_index_probe(
+                    sess, t, q, "text", "doc_id", k=1000
+                ).collect()
+            }
+
+        try:
+            cross_session_deletes(
+                spark, hits,
+                lambda sess, ids: retrieval.bm25_index_delete(sess, t, ids),
+            )
+        finally:
+            for tbl in (t, f"{t}__docs", f"{t}__meta"):
+                layout.drop_managed_table(spark, tbl)
+            layout.clear_tombstones(spark, t)
+            layout.clear_tombstones(spark, f"{t}__docs")
+
+
 class TestBm25IndexCompact:
     def test_compact_preserves_probe_and_bounds_files(
         self, spark, docs, queries
@@ -245,8 +277,8 @@ class TestBm25IndexCompact:
         assert rec["docs"]["files_after"] <= 4
         assert rec["postings"]["files_after"] < rec["postings"]["files_before"]
         # folded tombstones are gone from BOTH physical tables
-        assert layout.bucketed_tombstones(spark, "bm25_t_life") is None
-        assert layout.bucketed_tombstones(spark, "bm25_t_life__docs") is None
+        assert layout.read_tombstones(spark, "bm25_t_life") is None
+        assert layout.read_tombstones(spark, "bm25_t_life__docs") is None
         # and the compacted state equals a fresh filtered build
         retrieval.write_bm25_index(
             docs.filter(F.col("doc_id") % 5 != 0), "text", "doc_id",

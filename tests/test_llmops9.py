@@ -655,6 +655,30 @@ class TestPQIndexCompact:
         again = similarity.pq_index_compact(spark, path)
         assert again["files_before"] == again["files_after"] == 1
 
+    def test_compact_recovery_guard(self, spark, tmp_path):
+        # a crash between the swap's two renames leaves the data parked
+        # at codes.old with no codes directory: the next compact must
+        # restore it before rewriting, and probes stay bit-identical
+        import os
+
+        emb, path = self._appended(spark, tmp_path)
+        queries = emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+        )
+
+        def probe():
+            return sorted(
+                (r.query_id, r.rnk, r.neighbor_id, r.adist)
+                for r in similarity.pq_index_topk(spark, path, queries).collect()
+            )
+
+        before = probe()
+        os.rename(f"{path}/codes", f"{path}/codes.old")
+        stats = similarity.pq_index_compact(spark, path)
+        assert stats["n_rows"] == emb.count()
+        assert not os.path.isdir(f"{path}/codes.old")
+        assert probe() == before
+
     def test_t16_stream_append_matches_batch_append(self, spark):
         # per-row encoding is batching-invariant: however the stream
         # slices the delta into microbatches, the probe must equal the

@@ -314,6 +314,17 @@ class TestNearDupAndIVF:
         }
         assert dist == drv
 
+    def test_lsh_near_dup_leaves_no_cached_frame(self, spark):
+        # the operator must not pin its input in the shared cache: a
+        # caller who wants it cached can cache df
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(50)
+        spark.catalog.clearCache()
+        similarity.cosine_near_dup_pairs(
+            emb, "vec_id", "embedding", threshold=0.35,
+            method="lsh", dim=64, nbits=4, tables=2,
+        ).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
     def test_bloom_incremental_dedup_guarantees(self, spark):
         # (a) NO false negatives: every batch doc whose text exists in
         # the corpus is dropped; (b) over-drop of genuinely-new docs is

@@ -101,7 +101,7 @@ def lsh_idx(spark):
 @given(dels=st.sets(st.integers(min_value=0, max_value=_N - 1), max_size=_N))
 def test_bucketed_delete_equals_filtered_rerank(spark, lsh_idx, dels):
     queries, baseline = lsh_idx
-    layout.drop_managed_table(spark, "prop_lsh__tombstones")  # reset
+    layout.clear_tombstones(spark, "prop_lsh")  # reset
     if dels:
         similarity.ann_index_delete(spark, "prop_lsh", sorted(dels))
     expected, by_q = [], {}

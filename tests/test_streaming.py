@@ -559,16 +559,22 @@ class TestMidStreamDeleteVisibility:
         is honored by the next batch with NO query restart. Protocol:
         batch 1 probes a near-dup of corpus doc 1 (hit recorded), the
         test deletes doc 1 mid-stream, batch 2 probes near-dups of
-        docs 1 and 2 — and must hit only doc 2."""
+        docs 1 and 2 — and must hit only doc 2. A second delete (doc 2)
+        lands after the stream's session has already read the
+        tombstones; batch 3 probes near-dups of docs 2 and 3 and must
+        hit only doc 3."""
         import os
         import time
 
         from wren_engine_spark.operators import dedup
 
+        from wren_engine_spark.operators import layout
+
         t_a = "alpha beta gamma delta epsilon zeta"
         t_b = "one two three four five six"
+        t_c = "red orange yellow green blue indigo"
         corpus = spark.createDataFrame(
-            [(1, t_a), (2, t_b)], "doc_id LONG, text STRING"
+            [(1, t_a), (2, t_b), (3, t_c)], "doc_id LONG, text STRING"
         )
         idx, sink = "shp_stream_idx", "shp_stream_sink"
         dedup.write_simhash_index(corpus, "text", "doc_id", idx)
@@ -612,7 +618,18 @@ class TestMidStreamDeleteVisibility:
             got = pairs()
             assert (101, 1) not in got, got  # deleted doc invisible
             assert (100, 1) in got  # pre-delete emission stands
+            # second delete: the stream's session has read the
+            # tombstones by now, and must still see the new one
+            dedup.simhash_index_delete(spark, idx, [2])
+            spark.createDataFrame(
+                [(103, t_b), (104, t_c)], "doc_id LONG, text STRING"
+            ).coalesce(1).write.mode("append").parquet(src)
+            wait_for(lambda: (104, 3) in pairs(), "batch-3 hit on doc 3")
+            got = pairs()
+            assert (103, 2) not in got, got
+            assert (102, 2) in got
         finally:
             q.stop()
-            for t in (sink, idx, f"{idx}__meta", f"{idx}__tombstones"):
+            for t in (sink, idx, f"{idx}__meta"):
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
+            layout.clear_tombstones(spark, idx)

@@ -1441,9 +1441,7 @@ def write_simhash_index(
     out = layout.write_bucketed(
         banded.repartition(buckets, F.col("val")), table, "val", buckets
     )
-    # a rebuild resets the index wholesale: stale tombstones from the
-    # previous incarnation must not delete freshly re-indexed docs
-    layout.drop_managed_table(spark, f"{table}__tombstones")
+    layout.clear_tombstones(spark, table)
     # meta sidecar: appends must band and bucket EXACTLY like the
     # build (the PQ-index lesson — parameters live with the index,
     # never with the caller)
@@ -1537,12 +1535,9 @@ def simhash_index_append(
 
 
 def simhash_index_delete(spark, table: str, ids) -> dict:
-    """Tombstone-delete docs from the persisted simhash index — the
-    dedup-family twin of ``similarity.ann_index_delete``: ids append
-    to ``{table}__tombstones`` (column ``corpus_id``, the index's id
-    column) and every probe anti-joins them out until
-    ``simhash_index_compact`` folds them. Same merge-on-read contract
-    and shadowing rule as the other index families."""
+    """Tombstone-delete docs from the persisted simhash index
+    (``layout.append_tombstones``, column ``corpus_id``); every probe
+    anti-joins them out until ``simhash_index_compact`` folds them."""
     from wren_engine_spark.operators import index_meta, layout
 
     if index_meta.table_meta_row(spark, table) is None:
@@ -1550,7 +1545,7 @@ def simhash_index_delete(spark, table: str, ids) -> dict:
             f"simhash_index_delete: index '{table}' has no __meta "
             "sidecar; rebuild it with write_simhash_index"
         )
-    return layout.bucketed_index_delete(spark, table, ids, "corpus_id")
+    return layout.append_tombstones(spark, ids, "corpus_id", table)
 
 
 def simhash_index_compact(spark, table: str) -> dict:
@@ -1566,9 +1561,7 @@ def simhash_index_compact(spark, table: str) -> dict:
             f"simhash_index_compact: index '{table}' has no __meta "
             "sidecar; rebuild it with write_simhash_index"
         )
-    return layout.compact_bucketed(
-        spark, table, "val", int(m.buckets), tombstone_key="corpus_id"
-    )
+    return layout.compact_bucketed(spark, table, "val", int(m.buckets), "corpus_id")
 
 
 def simhash_index_probe(
@@ -1622,11 +1615,7 @@ def simhash_index_probe(
     # no extra shuffle; an index with no tombstones pays nothing
     from wren_engine_spark.operators import layout
 
-    tomb = layout.bucketed_tombstones(spark, table)
-    if tomb is not None:
-        idx = idx.join(
-            F.broadcast(tomb.select("corpus_id")), "corpus_id", "left_anti"
-        )
+    idx = layout.without_tombstones(idx, "corpus_id", table)
     q = _banded_signatures(delta, text_col, id_col, bands).select(
         F.col("corpus_id").alias("delta_id"),
         F.col("corpus_simhash").alias("__ds"),

@@ -23,6 +23,10 @@ Non-local storage (no listable directory) falls back to an uncached
 read every call — correct, just not memoized; the production home for
 a persisted index on an object store is a table format whose snapshot
 id plays the token's role (see SCALING.md, index-lifecycle section).
+
+Tombstones are NOT memoized here: they change on every delete, so
+``layout.read_tombstones`` lists its parquet id directory afresh on
+every probe (a driver listdir when the index has none).
 """
 
 from __future__ import annotations
@@ -40,11 +44,10 @@ _CACHE: dict[tuple, tuple] = {}
 _DB_LOC: dict[tuple, str] = {}
 
 
-def local_dir(path: str) -> str | None:
-    """``path`` as a listable local directory, or None when it carries
-    a non-local scheme. ``file:`` URIs are unwrapped (``file:/x``,
-    ``file:///x`` -> ``/x``); a missing directory returns None too —
-    the caller treats that as "cannot token, read uncached"."""
+def local_path(path: str) -> str | None:
+    """``path`` as a local filesystem path, or None when it carries a
+    non-local scheme. ``file:`` URIs are unwrapped (``file:/x``,
+    ``file:///x`` -> ``/x``)."""
     p = str(path)
     if p.startswith("file:"):
         p = p[len("file:"):]
@@ -52,7 +55,15 @@ def local_dir(path: str) -> str | None:
             p = "/" + p.lstrip("/")
     elif _SCHEME_RE.match(p) and "://" in p:
         return None
-    return p if os.path.isdir(p) else None
+    return p
+
+
+def local_dir(path: str) -> str | None:
+    """``path`` as a listable local directory (``local_path``), or None
+    when it is non-local or missing — the caller treats that as
+    "cannot token, read uncached"."""
+    p = local_path(path)
+    return p if p is not None and os.path.isdir(p) else None
 
 
 def fs_token(dirs: list[str]) -> tuple | None:
@@ -105,11 +116,12 @@ def cached_read(
     return val
 
 
-def managed_table_dir(spark, table: str) -> str | None:
-    """Local warehouse directory of a managed table, resolved through
+def managed_table_location(spark, table: str) -> str | None:
+    """Warehouse location of a managed table, existing or not: a plain
+    path on a local warehouse, else the warehouse URI. Resolved through
     the owning DATABASE's location (db-qualified tables live under
-    ``<warehouse>/<db>.db/`` — layout.drop_managed_table's rule), or
-    None when the warehouse is not local. The db location is itself
+    ``<warehouse>/<db>.db/`` — layout.drop_managed_table's rule); None
+    when that database does not exist. The db location is itself
     memoized per session: after the first call the resolution is
     dictionary lookups, no catalog round-trip."""
     parts = [p.lower() for p in table.split(".")]
@@ -123,8 +135,16 @@ def managed_table_dir(spark, table: str) -> str | None:
         _DB_LOC[dkey] = loc
     base = local_dir(loc)
     if base is None:
-        return None
+        return f"{loc.rstrip('/')}/{parts[-1]}"
     return os.path.join(base, parts[-1])
+
+
+def managed_table_dir(spark, table: str) -> str | None:
+    """Local warehouse directory of a managed table
+    (``managed_table_location``), or None when the warehouse is not
+    local."""
+    loc = managed_table_location(spark, table)
+    return None if loc is None or _SCHEME_RE.match(loc) else loc
 
 
 def table_meta_row(spark, table: str):

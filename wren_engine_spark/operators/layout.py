@@ -18,6 +18,8 @@ key every query. For recurring join keys the classic fixes are:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,24 +54,27 @@ def drop_managed_table(spark, table: str) -> None:
     """Drop a managed table AND its warehouse directory. The catalog
     is per-session but the managed location is not: a previous process
     can leave the directory behind, which saveAsTable refuses
-    (LOCATION_ALREADY_EXISTS). Clean through the Hadoop FS API so any
-    warehouse scheme (file://, s3a://) works. The managed path must be
-    resolved via the owning DATABASE's location (db-qualified tables
-    live under <warehouse>/<db>.db/), not naively as
-    <warehouse>/<table> — that guess is only right in the default
-    database and could delete another database's data."""
+    (LOCATION_ALREADY_EXISTS). The managed path must be resolved via
+    the owning DATABASE's location (db-qualified tables live under
+    <warehouse>/<db>.db/), not naively as <warehouse>/<table> — that
+    guess is only right in the default database and could delete
+    another database's data."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     parts = [p.lower() for p in table.split(".")]
     db = parts[-2] if len(parts) >= 2 else spark.catalog.currentDatabase().lower()
-    jvm = spark.sparkContext._jvm
     if spark.catalog.databaseExists(db):
         db_loc = spark.catalog.getDatabase(db).locationUri
-        loc = jvm.org.apache.hadoop.fs.Path(
-            jvm.org.apache.hadoop.fs.Path(db_loc), parts[-1]
-        )
-        fs = loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(loc):
-            fs.delete(loc, True)
+        _hadoop_delete(spark, f"{db_loc.rstrip('/')}/{parts[-1]}")
+
+
+def _hadoop_delete(spark, uri: str) -> None:
+    """Recursively delete ``uri`` if it exists, through the Hadoop FS
+    API so any warehouse scheme (file://, s3a://) works."""
+    jvm = spark.sparkContext._jvm
+    loc = jvm.org.apache.hadoop.fs.Path(uri)
+    fs = loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(loc):
+        fs.delete(loc, True)
 
 
 def write_small_table(spark, df: DataFrame, table: str) -> str:
@@ -82,77 +87,199 @@ def write_small_table(spark, df: DataFrame, table: str) -> str:
     return table
 
 
-def bucketed_tombstones(spark, table: str):
-    """The ``{table}__tombstones`` DataFrame of a bucketed index, or
-    None when the index has no tombstones. Existence is a driver-side
-    check (a local-warehouse listdir, falling back to the in-memory
-    catalog) — a probe of an index with no tombstones pays nothing."""
-    import os as _os
+# ---------------------------------------------------------------------------
+# Tombstones: the one merge-on-read delete of every persisted index
+# family (ANN, simhash, BM25 postings and __docs, PQ, IVF-PQ). A delete
+# appends ids to a parquet directory and never touches the index; every
+# probe anti-joins them out until a compaction (or rebuild) folds them.
+# The directory is read with spark.read.parquet, which lists it afresh
+# on every call — a catalog table would not: a session's relation cache
+# keeps the file list it first read, so ids deleted from another
+# session (a foreachBatch clone, a second client) would stay visible.
+#
+# Shadowing rule: a tombstone hides EVERY row with its id, appended
+# before or after the delete, until a compaction folds it. Re-inserting
+# a deleted id therefore needs a compact first; append-only ingestion
+# never re-uses ids.
+#
+# An index is named by its catalog ``table`` or, for the codes layout,
+# by ``path=``.
+# ---------------------------------------------------------------------------
+
+
+def tombstone_dir(spark, table: str | None = None, *, path: str | None = None) -> str:
+    """Where an index's tombstones live: ``{path}/tombstones`` for a
+    codes-layout index (PQ, IVF-PQ), ``<database location>/<table>__tombstones``
+    for a catalog index (a plain path on a local warehouse). The
+    directory holds one id column named like the index's own id
+    column (``__id``, ``doc_id``, ``corpus_id``, the ANN ``id_col``)."""
+    from wren_engine_spark.operators import index_meta
+
+    if path is not None:
+        return f"{path}/tombstones"
+    tdir = index_meta.managed_table_location(spark, f"{table}__tombstones")
+    if tdir is None:
+        raise ValueError(f"index table {table!r}: its database does not exist")
+    return tdir
+
+
+def read_tombstones(
+    spark, table: str | None = None, *, path: str | None = None
+) -> DataFrame | None:
+    """The index's tombstoned ids, listed afresh, or None when it has
+    none. A local directory is checked with a driver listdir first, so
+    a probe of an index with no tombstones pays nothing (no read, no
+    job, no plan change); a missing non-local directory reads as None.
+    Any other read error raises: swallowing it would serve deleted
+    rows. No distinct(): duplicate ids are harmless under left_anti,
+    and a distinct would put an exchange on the broadcast side."""
+    import os
 
     from wren_engine_spark.operators import index_meta
 
-    tomb_tbl = f"{table}__tombstones"
-    d = index_meta.managed_table_dir(spark, tomb_tbl)
-    if d is not None and not _os.path.isdir(d):
-        return None  # local warehouse, no tombstone table
-    if not spark.catalog.tableExists(tomb_tbl):
+    tdir = tombstone_dir(spark, table, path=path)
+    local = index_meta.local_path(tdir)
+    if local is not None and not (
+        os.path.isdir(local)
+        and any(f.endswith(".parquet") for f in os.listdir(local))
+    ):
         return None
-    return spark.table(tomb_tbl)
+    try:
+        return spark.read.parquet(tdir)
+    except Exception as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return None
+        raise
 
 
-def bucketed_index_delete(spark, table: str, ids, id_col: str) -> dict:
-    """Tombstone-delete rows from a bucketed index table: append the
-    ids (column named ``id_col`` — the index's own id column, so
-    probes can anti-join by name) to ``{table}__tombstones``; probes
-    anti-join them out (tombstones broadcast, no extra shuffle) until
-    a ``compact_bucketed`` folds them into its rewrite and drops the
-    tombstone table. The bucketed index itself is never read or
-    rewritten by a delete — the same merge-on-read contract as the
-    codes-layout families' ``pq_index_delete``, including the
-    shadowing rule: a tombstone hides EVERY row with its id, appended
-    before or after, until compaction folds it.
+def without_tombstones(
+    df: DataFrame,
+    id_col: str,
+    table: str | None = None,
+    *,
+    path: str | None = None,
+    on: str | None = None,
+) -> DataFrame:
+    """``df`` minus the rows whose ``on`` column (default ``id_col``)
+    the index has tombstoned. The tombstone side is ids only and
+    broadcast, so the anti-join adds no shuffle to a probe plan; with
+    no tombstones ``df`` is returned untouched."""
+    tomb = read_tombstones(df.sparkSession, table, path=path)
+    if tomb is None:
+        return df
+    on = on or id_col
+    return df.join(
+        F.broadcast(tomb.select(F.col(id_col).alias(on))), on, "left_anti"
+    )
 
-    ``ids``: a DataFrame (first/only column) or an iterable of plain
-    values. Ids are cast to the INDEX's own id-column type — a blind
-    BIGINT cast would turn string ids into NULLs that never match the
-    anti-join, silently un-deleting them — and a cast that produces
-    any NULL raises instead of reporting a successful delete.
+
+def append_tombstones(
+    spark, ids, id_col: str, table: str | None = None, *, path: str | None = None
+) -> dict:
+    """Tombstone-delete ``ids`` from an index: append them to its
+    tombstone directory as ONE new parquet file (probes list the
+    directory, so it must not creep into the small-file problem).
+
+    ``ids``: a DataFrame (its first column) or an iterable of plain
+    values; an empty iterable is a no-op. Ids are cast to the index's
+    own id-column type — a blind BIGINT cast would turn string ids
+    into NULLs that never match the anti-join, silently un-deleting
+    them — and a cast that yields any NULL raises instead of reporting
+    a successful delete.
     Returns {"n_tombstones": distinct ids appended by this call}.
     """
-    if not spark.catalog.tableExists(table):
-        raise ValueError(
-            f"bucketed_index_delete: index table {table!r} does not exist"
-        )
-    id_type = spark.table(table).schema[id_col].dataType
+    if path is not None:
+        index = spark.read.parquet(f"{path}/codes")
+    elif spark.catalog.tableExists(table):
+        index = spark.table(table)
+    else:
+        raise ValueError(f"index table {table!r} does not exist")
+    id_type = index.schema[id_col].dataType
     if isinstance(ids, DataFrame):
         out = ids.select(F.col(ids.columns[0]).cast(id_type).alias(id_col))
     else:
         rows = [(v,) for v in ids]
         if not rows:
-            # clean no-op: createDataFrame cannot infer a schema from
-            # an empty dataset, and an empty delete has nothing to do
+            # createDataFrame cannot infer a schema from an empty
+            # dataset, and an empty delete has nothing to do
             return {"n_tombstones": 0}
-        out = spark.createDataFrame(
-            rows, [id_col]  # types inferred, then cast
-        ).select(F.col(id_col).cast(id_type).alias(id_col))
+        out = spark.createDataFrame(rows, [id_col]).select(
+            F.col(id_col).cast(id_type).alias(id_col)
+        )
     out = out.distinct().persist()
     try:
-        # count + null-cast validation in ONE job (was two)
+        # count + null-cast validation in ONE job
         stats = out.agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col(id_col).isNull(), 1)).alias("n_null"),
         ).collect()[0]
-        n = stats["n"]
         if stats["n_null"] > 0:
             raise ValueError(
-                f"bucketed_index_delete: some ids did not cast to the "
-                f"index id type {id_type.simpleString()} — refusing a "
-                "delete that could not match"
+                f"tombstone delete: some ids did not cast to the index id "
+                f"type {id_type.simpleString()} — refusing a delete that "
+                "could not match"
             )
-        out.coalesce(1).write.mode("append").saveAsTable(f"{table}__tombstones")
+        out.coalesce(1).write.mode("append").parquet(
+            tombstone_dir(spark, table, path=path)
+        )
     finally:
         out.unpersist()
-    return {"n_tombstones": n}
+    return {"n_tombstones": stats["n"]}
+
+
+@contextmanager
+def folded_tombstones(
+    df: DataFrame, id_col: str, table: str | None = None, *, path: str | None = None
+):
+    """Fold an index's pending tombstones into a compaction rewrite:
+    yields ``df`` minus the tombstoned rows and, once the body returns
+    (the rewrite is swapped in), removes exactly the tombstone FILES
+    the fold read. A delete issued while the rewrite runs lands in a
+    newer file, survives, and stays pending for probes and the next
+    compact — clearing the whole directory would resurrect that id. A
+    crash before the clear is harmless: re-applying a tombstone to rows
+    already gone removes nothing."""
+    tomb = read_tombstones(df.sparkSession, table, path=path)
+    if tomb is None:
+        yield df
+        return
+    files = tomb.inputFiles()
+    yield df.join(F.broadcast(tomb.select(id_col)), id_col, "left_anti")
+    clear_tombstones(df.sparkSession, table, path=path, files=files)
+
+
+def clear_tombstones(
+    spark,
+    table: str | None = None,
+    *,
+    path: str | None = None,
+    files: list[str] | None = None,
+) -> None:
+    """Remove an index's tombstones: only ``files`` (``inputFiles()``
+    URIs, the fold's snapshot) or, with None, all of them (a rebuild,
+    whose stale tombstones must not delete freshly indexed rows). The
+    directory goes once no parquet file is left in it. Folding is
+    local-only (both compactors refuse other storage); a non-local
+    directory is only ever cleared whole."""
+    import os
+    import shutil
+
+    from wren_engine_spark.operators import index_meta
+
+    tdir = tombstone_dir(spark, table, path=path)
+    local = index_meta.local_path(tdir)
+    if local is None:
+        _hadoop_delete(spark, tdir)
+        return
+    for f in files or []:
+        p = _uri_to_local_path(f)
+        if os.path.isfile(p):
+            os.remove(p)
+    if os.path.isdir(local) and (
+        files is None
+        or not any(f.endswith(".parquet") for f in os.listdir(local))
+    ):
+        shutil.rmtree(local)
 
 
 def _uri_to_local_path(uri: str) -> str:
@@ -172,7 +299,7 @@ def compact_bucketed(
     table: str,
     bucket_col: str,
     buckets: int,
-    tombstone_key: str | None = None,
+    id_col: str,
 ) -> dict:
     """Compact a bucketed index table after many appends. Every
     bucketed append adds >= 1 file per occupied bucket; under
@@ -185,18 +312,12 @@ def compact_bucketed(
     Object-store warehouses are refused loudly (rename is copy+delete
     there — same rule as the codes-layout compactor).
 
-    With ``tombstone_key``, pending ``bucketed_index_delete``
-    tombstones are folded into the rewrite (anti-join on that column)
-    and exactly the tombstone FILES the fold read are removed once the
-    swap lands — a delete issued while the rewrite runs lands in a
-    newer file, survives, and stays pending for probes and the next
-    compact. Probes, which already excluded tombstoned rows, are
-    bit-identical before and after.
+    Pending tombstones (column ``id_col``) are folded into the rewrite
+    (``folded_tombstones``). Probes, which already excluded tombstoned
+    rows, are bit-identical before and after.
 
     Returns {"files_before", "files_after", "n_rows"}.
     """
-    import os as _os
-
     from wren_engine_spark.operators import index_meta
 
     # the two-rename swap moves managed directories: local/HDFS only
@@ -214,19 +335,6 @@ def compact_bucketed(
         spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
     df = spark.table(table)
     files_before = len(df.inputFiles())
-    # snapshot the tombstone FILES being folded: a delete issued while
-    # the rewrite runs lands in a newer file, survives the fold, and
-    # stays pending for probes and the next compact — clearing the
-    # whole table here would silently resurrect that id
-    tomb_files: list[str] = []
-    if tombstone_key is not None:
-        tomb = bucketed_tombstones(spark, table)
-        if tomb is not None:
-            tomb_files = list(tomb.inputFiles())
-            df = df.join(
-                F.broadcast(tomb.select(tombstone_key)), tombstone_key,
-                "left_anti",
-            )
     tmp = f"{table}__compacting"
     drop_managed_table(spark, tmp)
     # force the BUCKETED scan for the rewrite: the planner elides the
@@ -239,39 +347,29 @@ def compact_bucketed(
     # (the bucketed twin of the codes-layout coalesce), one output
     # file per bucket.
     auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
     # the compacted row count is observed DURING the rewrite itself —
     # no post-hoc scan of the rewritten files, no second anti-join
     from pyspark.sql import Observation
 
     obs = Observation()
-    try:
-        write_bucketed(
-            df.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
-                int(buckets), F.col(bucket_col)
-            ),
-            tmp,
-            bucket_col, int(buckets),
-        )
-    finally:
-        spark.conf.set(auto_key, prev)
-    n_rows = int(obs.get["n"])
-    drop_managed_table(spark, old)  # stale leftovers from a crash
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-    drop_managed_table(spark, old)
-    # remove exactly the tombstone files the rewrite folded; a delete
-    # that raced in after the snapshot stays pending. Drop the table
-    # only when nothing newer arrived.
-    for f in tomb_files:
-        p = _uri_to_local_path(f)
-        if _os.path.isfile(p):
-            _os.remove(p)
-    if tomb_files:
-        spark.catalog.refreshTable(f"{table}__tombstones")
-        if not spark.table(f"{table}__tombstones").inputFiles():
-            drop_managed_table(spark, f"{table}__tombstones")
+    with folded_tombstones(df, id_col, table) as live:
+        prev = spark.conf.get(auto_key, "true")
+        spark.conf.set(auto_key, "false")
+        try:
+            write_bucketed(
+                live.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
+                    int(buckets), F.col(bucket_col)
+                ),
+                tmp,
+                bucket_col, int(buckets),
+            )
+        finally:
+            spark.conf.set(auto_key, prev)
+        n_rows = int(obs.get["n"])
+        drop_managed_table(spark, old)  # stale leftovers from a crash
+        spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
+        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+        drop_managed_table(spark, old)
     # catalog caches the OLD table's file listing under this name —
     # the swap happened behind the catalog's back, so refresh
     spark.catalog.refreshTable(table)

@@ -608,10 +608,8 @@ def write_bm25_index(
     # read the build-time snapshot. Drop the entry — exactly the cache
     # state the pre-read-back build left behind.
     spark.catalog.refreshTable(table)
-    # a rebuild resets the index wholesale: stale tombstones from the
-    # previous incarnation must not delete freshly re-indexed docs
-    layout.drop_managed_table(spark, f"{table}__tombstones")
-    layout.drop_managed_table(spark, f"{table}__docs__tombstones")
+    layout.clear_tombstones(spark, table)
+    layout.clear_tombstones(spark, f"{table}__docs")
     layout.write_small_table(
         spark,
         spark.createDataFrame(
@@ -679,10 +677,10 @@ def bm25_index_append(
 
 def bm25_index_delete(spark, table: str, ids) -> dict:
     """Tombstone-delete docs from the persisted BM25 index: ids append
-    to ``{table}__tombstones`` AND ``{table}__docs__tombstones`` (the
-    postings and the docs sidecar are separate physical tables, and
+    (``layout.append_tombstones``) to the tombstones of the postings
+    AND of the ``__docs`` sidecar (separate physical tables, and
     compaction folds each table's tombstones independently — one
-    shared tombstone table would be deleted by whichever compact ran
+    shared tombstone set would be cleared by whichever compact ran
     first, silently resurrecting the ids for the other). Probes
     anti-join both out, so a deleted doc vanishes from the ranking AND
     from N / avgdl / df in the same call — merge-on-read, same
@@ -697,8 +695,8 @@ def bm25_index_delete(spark, table: str, ids) -> dict:
             f"bm25_index_delete: index '{table}' has no __meta sidecar; "
             "rebuild it with write_bm25_index"
         )
-    layout.bucketed_index_delete(spark, f"{table}__docs", ids, "doc_id")
-    return layout.bucketed_index_delete(spark, table, ids, "doc_id")
+    layout.append_tombstones(spark, ids, "doc_id", f"{table}__docs")
+    return layout.append_tombstones(spark, ids, "doc_id", table)
 
 
 def bm25_index_compact(spark, table: str) -> dict:
@@ -716,12 +714,9 @@ def bm25_index_compact(spark, table: str) -> dict:
             f"bm25_index_compact: index '{table}' has no __meta sidecar; "
             "rebuild it with write_bm25_index"
         )
-    postings = layout.compact_bucketed(
-        spark, table, "tok", int(m.buckets), tombstone_key="doc_id"
-    )
+    postings = layout.compact_bucketed(spark, table, "tok", int(m.buckets), "doc_id")
     docs = layout.compact_bucketed(
-        spark, f"{table}__docs", "doc_id", int(m.doc_buckets),
-        tombstone_key="doc_id",
+        spark, f"{table}__docs", "doc_id", int(m.doc_buckets), "doc_id"
     )
     return {"postings": postings, "docs": docs}
 
@@ -823,18 +818,10 @@ def _bm25_index_state(spark, table: str):
             f"bm25 index '{table}' has no __meta sidecar; "
             "rebuild it with write_bm25_index"
         )
-    postings = spark.table(table)
-    docs = spark.table(f"{table}__docs")
-    tomb = layout.bucketed_tombstones(spark, table)
-    if tomb is not None:
-        postings = postings.join(
-            F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-        )
-    dtomb = layout.bucketed_tombstones(spark, f"{table}__docs")
-    if dtomb is not None:
-        docs = docs.join(
-            F.broadcast(dtomb.select("doc_id")), "doc_id", "left_anti"
-        )
+    postings = layout.without_tombstones(spark.table(table), "doc_id", table)
+    docs = layout.without_tombstones(
+        spark.table(f"{table}__docs"), "doc_id", f"{table}__docs"
+    )
     totals = docs.agg(
         F.count(F.lit(1)).cast("double").alias("__n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("double").alias("__sumdl"),

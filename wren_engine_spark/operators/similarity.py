@@ -286,7 +286,6 @@ def cosine_near_dup_pairs(
     (1-arccos(t)/pi)^nbits, so near-dup pairs survive with recall
     1-(1-p^nbits)^tables while the cross product never materializes.
     """
-    normed = with_norm(df, vec_col, "__n")
     if method == "exact":
         return _exact_pairs_distributed(
             df, id_col, vec_col, threshold, round_digits, n_blocks=n_blocks
@@ -296,7 +295,7 @@ def cosine_near_dup_pairs(
     elif method == "lsh":
         if dim is None:
             raise ValueError("dim is required for method='lsh'")
-        normed = normed.cache()
+        normed = with_norm(df, vec_col, "__n")
         sigs = _all_table_signatures(normed, id_col, vec_col, dim, nbits, tables, seed=7000)
         s1 = sigs.select(F.col(id_col).alias("id_a"), "table_id", "bucket")
         s2 = sigs.select(F.col(id_col).alias("id_b"), "table_id", "bucket")
@@ -964,9 +963,7 @@ def write_ann_index(
     result = layout.write_bucketed(
         out.repartition(buckets, F.col("bucket")), table, "bucket", buckets
     )
-    # a rebuild resets the index wholesale: stale tombstones from the
-    # previous incarnation must not delete freshly re-indexed rows
-    layout.drop_managed_table(spark, f"{table}__tombstones")
+    layout.clear_tombstones(spark, table)
     # meta sidecar: an append must hash with the SAME planes (dim,
     # nbits, tables, seed) and bucket layout as the build — parameters
     # live with the index, never with the caller (the PQ-index lesson)
@@ -1047,13 +1044,10 @@ def ann_index_append(
 
 
 def ann_index_delete(spark, table: str, ids) -> dict:
-    """Tombstone-delete vectors from the persisted LSH index: ids
-    append to the ``{table}__tombstones`` small table (named by the
-    index's own id column, read from its ``__meta``) and every probe
-    anti-joins them out until ``ann_index_compact`` folds them — the
-    bucketed-family twin of ``pq_index_delete``, same merge-on-read
-    contract and shadowing rule (a tombstone hides every row with its
-    id, appended before OR after, until a compaction folds it)."""
+    """Tombstone-delete vectors from the persisted LSH index
+    (``layout.append_tombstones``, under the index's own id column
+    from its ``__meta``); every probe anti-joins them out until
+    ``ann_index_compact`` folds them."""
     from wren_engine_spark.operators import index_meta, layout
 
     m = index_meta.table_meta_row(spark, table)
@@ -1062,7 +1056,7 @@ def ann_index_delete(spark, table: str, ids) -> dict:
             f"ann_index_delete: index '{table}' has no __meta sidecar; "
             "rebuild it with write_ann_index"
         )
-    return layout.bucketed_index_delete(spark, table, ids, m.id_col)
+    return layout.append_tombstones(spark, ids, m.id_col, table)
 
 
 def ann_index_compact(spark, table: str) -> dict:
@@ -1080,9 +1074,7 @@ def ann_index_compact(spark, table: str) -> dict:
             f"ann_index_compact: index '{table}' has no __meta sidecar; "
             "rebuild it with write_ann_index"
         )
-    return layout.compact_bucketed(
-        spark, table, "bucket", int(m.buckets), tombstone_key=m.id_col
-    )
+    return layout.compact_bucketed(spark, table, "bucket", int(m.buckets), m.id_col)
 
 
 def ann_index_topk(
@@ -1149,9 +1141,7 @@ def ann_index_topk(
     # extra shuffle; an index with no tombstones pays nothing
     from wren_engine_spark.operators import layout
 
-    tomb = layout.bucketed_tombstones(spark, table)
-    if tomb is not None:
-        idx = idx.join(F.broadcast(tomb.select(id_col)), id_col, "left_anti")
+    idx = layout.without_tombstones(idx, id_col, table)
     # materialize the BOUNDED query side's signatures driver-side (the
     # codes-layout families' _ivfpq_quantized_queries convention): the
     # in-plan plane kernel is tables x nbits dot products of dim terms
@@ -1778,10 +1768,9 @@ def write_pq_index(
     # tombstones must not delete freshly re-encoded rows
     for m in _glob.glob(f"{path}/_epoch_*"):
         _os.remove(m)
-    if _os.path.isdir(f"{path}/tombstones"):
-        import shutil as _shutil
+    from wren_engine_spark.operators import layout
 
-        _shutil.rmtree(f"{path}/tombstones")
+    layout.clear_tombstones(spark, path=path)
     book_rows = [
         (s, c, d, int(codebooks[s][c][d]))
         for s in range(n_subspaces)
@@ -1838,117 +1827,26 @@ def _load_pq_index(spark, path: str):
     )
 
 
-def _tombstones(spark, path: str) -> DataFrame | None:
-    """Distinct tombstoned ``__id`` rows of a codes-layout index
-    (``{path}/tombstones``), or None when the index has none. For a
-    local index the existence check is a driver-side listdir — a probe
-    of an index with no tombstones pays NOTHING (no read, no job, no
-    plan change). A non-local path attempts the read and treats a
-    missing directory as empty."""
-    import os as _os
-
-    from wren_engine_spark.operators import index_meta
-
-    tdir = f"{path}/tombstones"
-    d = index_meta.local_dir(tdir)
-    if d is None and index_meta.local_dir(path) is not None:
-        return None  # local index, no tombstones directory
-    if d is not None and not any(
-        f.endswith(".parquet")
-        for _dp, _dn, fs in _os.walk(d)
-        for f in fs
-    ):
-        return None
-    # no distinct(): duplicate ids are harmless under left_anti and a
-    # distinct would put an exchange on the (broadcast) tombstone side
-    try:
-        return spark.read.parquet(tdir).select("__id")
-    except Exception as e:
-        # ONLY path-not-found means "no tombstones" — any other read
-        # failure (credentials, corrupt footer, transient IO) must
-        # surface loudly: swallowing it would silently serve deleted
-        # vectors
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None  # non-local index without a tombstones dir
-        raise
-
-
-def _apply_tombstones(spark, path: str, codes: DataFrame) -> DataFrame:
-    """Anti-join a codes scan against the index's tombstones. The
-    tombstone side is ids only and broadcast, so the anti-join adds no
-    shuffle to the probe plan; with no tombstones the scan is returned
-    untouched (zero overhead on the common path)."""
-    tomb = _tombstones(spark, path)
-    if tomb is None:
-        return codes
-    return codes.join(F.broadcast(tomb), "__id", "left_anti")
-
-
-def pq_index_delete(spark, path: str, ids, id_col: str | None = None) -> dict:
+def pq_index_delete(spark, path: str, ids) -> dict:
     """Tombstone-delete vectors from a persisted codes-layout index
-    (PQ — and the IVF-PQ composite, which shares the layout and the
-    compactor): append the ids to ``{path}/tombstones`` and let every
-    probe (``pq_index_topk`` / ``pq_stream_search`` /
-    ``ivfpq_index_topk``) anti-join them out — tombstones broadcast,
-    no extra shuffle — until ``pq_index_compact`` folds them into its
-    codes rewrite and clears the directory. A delete never touches a
-    codes file: no read-modify-write of immutable parquet, no rewrite
-    amplification at 100 TB — the merge-on-read half of a
+    (PQ, and the IVF-PQ composite, which shares the layout and the
+    compactor): ``layout.append_tombstones`` to ``{path}/tombstones``;
+    every probe (``pq_index_topk`` / ``pq_stream_search`` /
+    ``ivfpq_index_topk``) anti-joins them out until
+    ``pq_index_compact`` folds them into its codes rewrite. A delete
+    never touches a codes file — the merge-on-read half of a
     delete-vector design, with compaction as the merge-on-write half.
-    Geometry is untouched by design (the codebooks were trained on the
-    full corpus and keep serving — the same frozen-geometry contract
-    as append; re-train when the recall gate says the distribution
-    moved).
+    Geometry is untouched by design (the codebooks keep serving — the
+    same frozen-geometry contract as append; re-train when the recall
+    gate says the distribution moved).
 
-    Semantics: a tombstone shadows its id — EVERY row with that id,
-    including rows appended later — until a compaction folds it.
-    Re-inserting a deleted id therefore requires a compact first;
-    append-only ingestion (the intended caller) never re-uses ids.
-
-    ``ids``: a DataFrame (``id_col`` defaults to its single column)
-    or an iterable of plain values. Ids are cast to the codes table's
-    OWN ``__id`` type — a blind BIGINT cast would turn string ids
-    into NULLs that never match the anti-join, silently un-deleting
-    them — and a cast that produces any NULL raises instead of
-    reporting a successful delete.
+    ``ids``: a DataFrame (its first column) or an iterable of plain
+    values, cast to the codes table's own ``__id`` type.
     Returns {"n_tombstones": distinct ids appended by this call}.
     """
-    id_type = spark.read.parquet(f"{path}/codes").schema["__id"].dataType
-    if isinstance(ids, DataFrame):
-        col = id_col or ids.columns[0]
-        out = ids.select(F.col(col).cast(id_type).alias("__id")).distinct()
-    else:
-        rows = [(v,) for v in ids]
-        if not rows:
-            # clean no-op: createDataFrame cannot infer a schema from
-            # an empty dataset, and an empty delete has nothing to do
-            return {"n_tombstones": 0}
-        out = (
-            spark.createDataFrame(rows, ["__id"])
-            .select(F.col("__id").cast(id_type).alias("__id"))
-            .distinct()
-        )
-    out = out.persist()
-    try:
-        # count + null-cast validation in ONE job (was two)
-        stats = out.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("__id").isNull(), 1)).alias("n_null"),
-        ).collect()[0]
-        n = stats["n"]
-        if stats["n_null"] > 0:
-            raise ValueError(
-                f"pq_index_delete: some ids did not cast to the codes "
-                f"__id type {id_type.simpleString()} — refusing a "
-                "delete that could not match"
-            )
-        # one file per delete call: tombstone batches are tiny id
-        # lists, and probes list this directory — don't let it creep
-        # into the small-file problem compaction exists to fix
-        out.coalesce(1).write.mode("append").parquet(f"{path}/tombstones")
-    finally:
-        out.unpersist()
-    return {"n_tombstones": n}
+    from wren_engine_spark.operators import layout
+
+    return layout.append_tombstones(spark, ids, "__id", path=path)
 
 
 def pq_index_topk(
@@ -1972,8 +1870,10 @@ def pq_index_topk(
     books, meta = _load_pq_index(spark, path)
     sub = meta.dim // meta.n_subspaces
     tab_rows = _adc_tables(query_df, books, sub, meta.quantum)
-    codes = _apply_tombstones(
-        spark, path, spark.read.parquet(f"{path}/codes")
+    from wren_engine_spark.operators import layout
+
+    codes = layout.without_tombstones(
+        spark.read.parquet(f"{path}/codes"), "__id", path=path
     ).select(
         "__id",
         *[F.col(f"code_{s}").alias(f"__code_{s}") for s in range(meta.n_subspaces)],
@@ -2152,13 +2052,10 @@ def pq_index_compact(
     ``target_files`` (default: total bytes / 128 MiB, min 1) WITHOUT a
     shuffle — ``coalesce`` merges input splits narrowly; codebooks and
     meta are untouched. Tombstones (``pq_index_delete``) are folded
-    here: the rewrite anti-joins them out and clears the tombstone
-    directory once the swap lands, so probes — which already excluded
-    tombstoned rows — are bit-identical before and after
-    (pytest-pinned, and x101 re-certifies through the same driver
-    oracle as x100). A crash between the swap and the tombstone clear
-    is harmless: re-applying a tombstone to rows already gone removes
-    nothing, and the next compact clears it.
+    into the rewrite (``layout.folded_tombstones``), so probes — which
+    already excluded tombstoned rows — are bit-identical before and
+    after (pytest-pinned, and x101 re-certifies through the same
+    driver oracle as x100).
 
     The rewrite goes to ``{path}/codes.compacting`` and is swapped in
     with two directory renames. Each rename is atomic (POSIX/HDFS),
@@ -2205,15 +2102,6 @@ def pq_index_compact(
             os.remove(os.path.join(codes_dir, f))
     df = spark.read.parquet(codes_dir)
     files_before = len(df.inputFiles())
-    # snapshot the tombstone FILES being folded: a delete issued while
-    # the rewrite runs lands in a newer file, survives the fold, and
-    # stays pending — removing the whole directory here would silently
-    # resurrect that id
-    tomb = _tombstones(spark, path)
-    tomb_files: list[str] = []
-    if tomb is not None:
-        tomb_files = list(tomb.inputFiles())
-        df = df.join(F.broadcast(tomb), "__id", "left_anti")
     if target_files is None:
         total = 0
         for dirpath, _dirs, files in os.walk(codes_dir):
@@ -2226,34 +2114,19 @@ def pq_index_compact(
     # no post-hoc scan of the rewritten files, no second anti-join
     from pyspark.sql import Observation
 
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(
-        target_files
-    ).write.mode("overwrite").parquet(tmp)
-    n_rows = int(obs.get["n"])
-    for stale in (old,):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-    os.rename(codes_dir, old)
-    os.rename(tmp, codes_dir)
-    shutil.rmtree(old)
-    # remove exactly the tombstone files the rewrite folded (so a
-    # later re-insert of a deleted id is servable again); a delete
-    # that raced in after the snapshot stays pending for probes and
-    # the next compact
-    tdir = f"{path}/tombstones"
-    from wren_engine_spark.operators.layout import _uri_to_local_path
+    from wren_engine_spark.operators import layout
 
-    for f in tomb_files:
-        p = _uri_to_local_path(f)
-        if os.path.isfile(p):
-            os.remove(p)
-    if os.path.isdir(tdir) and not any(
-        fn.endswith(".parquet")
-        for _dp, _dn, fns in os.walk(tdir)
-        for fn in fns
-    ):
-        shutil.rmtree(tdir)
+    obs = Observation()
+    with layout.folded_tombstones(df, "__id", path=path) as live:
+        live.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(
+            target_files
+        ).write.mode("overwrite").parquet(tmp)
+        n_rows = int(obs.get["n"])
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        os.rename(codes_dir, old)
+        os.rename(tmp, codes_dir)
+        shutil.rmtree(old)
     files_after = len(spark.read.parquet(codes_dir).inputFiles())
     return {
         "files_before": files_before,
@@ -2311,7 +2184,11 @@ def pq_stream_search(
     q2 = qdf.select(
         "query_id", *[F.expr(t).alias(f"__adt_{s}") for s, t in enumerate(tabs)]
     )
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
+    from wren_engine_spark.operators import layout
+
+    codes = layout.without_tombstones(
+        spark.read.parquet(f"{path}/codes"), "__id", path=path
+    )
     adist = None
     for s in range(n_sub):
         term = F.element_at(F.col(f"__adt_{s}"), F.col(f"__code_{s}") + 1)
@@ -2628,12 +2505,11 @@ def write_ivfpq_index(
     import glob as _glob
     import os as _os
 
+    from wren_engine_spark.operators import layout
+
     for m in _glob.glob(f"{path}/_epoch_*"):
         _os.remove(m)
-    if _os.path.isdir(f"{path}/tombstones"):
-        import shutil as _shutil
-
-        _shutil.rmtree(f"{path}/tombstones")
+    layout.clear_tombstones(spark, path=path)
     spark.createDataFrame(
         [(c, d, coarse[c][d]) for c in range(nlist) for d in range(dim)],
         "cluster INT, dim INT, val BIGINT",
@@ -2724,7 +2600,11 @@ def ivfpq_index_topk(
     sub = meta.dim // meta.n_subspaces
     qrows = _ivfpq_quantized_queries(query_df, int(meta.quantum), meta.dim)
     tab_rows = _ivfpq_adc_rows(qrows, coarse, books, sub, nprobe)
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
+    from wren_engine_spark.operators import layout
+
+    codes = layout.without_tombstones(
+        spark.read.parquet(f"{path}/codes"), "__id", path=path
+    )
     return _ivfpq_rank(spark, codes, tab_rows, meta.n_subspaces, topk)
 
 
@@ -2875,7 +2755,11 @@ def ivfpq_tune_nprobe(
         f"__adt_{s} ARRAY<BIGINT>" for s in range(meta.n_subspaces)
     )
     qtab = _literal_df(spark, tab_rows, schema)
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
+    from wren_engine_spark.operators import layout
+
+    codes = layout.without_tombstones(
+        spark.read.parquet(f"{path}/codes"), "__id", path=path
+    )
     adist = None
     for s in range(meta.n_subspaces):
         term = F.element_at(F.col(f"__adt_{s}"), F.col(f"code_{s}") + 1)
@@ -2916,13 +2800,7 @@ def ivfpq_tune_nprobe(
     # ground truth must see the same live id set as the approx side:
     # without this, pending deletes cap measured recall below 1.0 even
     # at nprobe=nlist and the stale-geometry alarm false-fires
-    tomb = _tombstones(spark, path)
-    if tomb is not None:
-        corpus = corpus.join(
-            F.broadcast(tomb.select(F.col("__id").alias("neighbor_id"))),
-            "neighbor_id",
-            "left_anti",
-        )
+    corpus = layout.without_tombstones(corpus, "__id", path=path, on="neighbor_id")
     qs = query_df.select(
         "query_id", F.expr(qz_expr.format(c="qvec")).alias("__qq")
     )
@@ -3060,7 +2938,9 @@ def ivfpq_index_retrain(
     # nor re-encoded — the retrain IS the compaction of its tombstone
     live = corpus_df
     n_tomb = 0
-    tomb = _tombstones(spark, path)
+    from wren_engine_spark.operators import layout
+
+    tomb = layout.read_tombstones(spark, path=path)
     if tomb is not None:
         n_tomb = tomb.select("__id").distinct().count()
         live = live.join(

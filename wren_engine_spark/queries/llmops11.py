@@ -214,7 +214,8 @@ _ANN_DEL_MEMO: dict = {}
 def _ensure_deleted_ann_index(spark: SparkSession, sf: str) -> str:
     """x115's index: full-corpus LSH build, then tombstone every
     ``vec_id % 6 == 0`` (similarity.ann_index_delete — id-only
-    sidecar table, the bucketed index itself is never rewritten)."""
+    tombstone directory, the bucketed index itself is never
+    rewritten)."""
     import hashlib
     import os
 
@@ -250,7 +251,7 @@ def _ensure_deleted_ann_index(spark: SparkSession, sf: str) -> str:
 def x115(spark: SparkSession, sf: str) -> DataFrame:
     """LSH index lifecycle — tombstone delete without rewrite
     (x112's contract, for the BUCKETED family): every ``vec_id % 6 ==
-    0`` is deleted via an id-only tombstone table and the probe
+    0`` is deleted via an id-only tombstone directory and the probe
     anti-joins it out (broadcast, still the one-shuffle serving
     shape) before ranking, so deleted vectors vanish and survivors
     re-rank upward. The oracle is x63's exact plane replay with the

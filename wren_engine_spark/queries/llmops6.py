@@ -336,11 +336,7 @@ def t13(spark: SparkSession, sf: str) -> DataFrame:
     # static index side before the stream-static join
     from wren_engine_spark.operators import layout
 
-    tomb = layout.bucketed_tombstones(spark, table)
-    if tomb is not None:
-        idx = idx.join(
-            F.broadcast(tomb.select("corpus_id")), "corpus_id", "left_anti"
-        )
+    idx = layout.without_tombstones(idx, "corpus_id", table)
     hits = (
         q.join(idx, ["band", "val"])
         .filter(F.col("corpus_id") != F.col("delta_id"))

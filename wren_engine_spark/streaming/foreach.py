@@ -26,10 +26,14 @@ def run_foreach_batch(
     state (tombstones, epoch markers): a plain stream-static join
     resolves the static plan once at query definition, but a
     ``foreachBatch`` body executes fresh BATCH logic per microbatch, so
-    anything ``batch_fn`` re-reads (``layout.bucketed_tombstones``, a
+    anything ``batch_fn`` re-reads (``layout.read_tombstones``, a
     ``__meta`` sidecar after rebuild) is re-resolved every batch — a
     delete issued between microbatches is honored by the NEXT batch,
-    no restart (pytest-pinned in tests/test_streaming.py).
+    no restart (pytest-pinned in tests/test_streaming.py). Each batch
+    runs in the stream's cloned session, so whatever it re-reads must
+    not come through a catalog relation cache, which keeps the file
+    list that session first saw: tombstones are a parquet directory
+    listed afresh on every read for exactly this reason.
 
     The sink table is dropped at start (same re-run-in-one-session
     semantics as ``run_available_now``'s memory sink). Delivery is
