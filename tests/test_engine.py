@@ -866,3 +866,163 @@ class TestNoSessionMutation:
             assert df.count() == 3
         finally:
             spark.table("region_m").unpersist()
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names of the request's optimized plan. A cached relation is
+    one leaf: the plan it caches is not walked."""
+    out, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        out.append(node.nodeName())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+# 20:00 UTC is 05:00 the next day in Tokyo
+_ZONED_CALCS = {
+    "ZHour": ('hour("Ts")', 20, 5),
+    "ZText": ('CAST("Ts" AS STRING)', "2024-06-01 20:00:00", "2024-06-02 05:00:00"),
+    "ZDate": ('CAST("Ts" AS DATE)', "2024-06-01", "2024-06-02"),
+    "ZFormat": ("date_format(\"Ts\", 'HH')", "20", "05"),
+}
+
+
+def _mat_manifest() -> dict:
+    import copy
+
+    man = copy.deepcopy(BASE)
+    man["models"][0]["columns"].insert(3, {"name": "Ts", "type": "timestamp", "expression": "ts"})
+    man["models"][1]["columns"].append(
+        {"name": "Price2", "type": "decimal", "isCalculated": True,
+         "expression": 'CAST("Price" AS DECIMAL(18,2))'})
+    for name, (expr, _, _) in _ZONED_CALCS.items():
+        man["models"].append({
+            "name": name, "tableReference": "customers", "primaryKey": "Id",
+            # cached forces past the size bound, never past the zone check
+            "cached": name == "ZHour",
+            "columns": [
+                {"name": "Id", "type": "int", "expression": "id"},
+                {"name": "Ts", "type": "timestamp", "expression": "ts"},
+                {"name": "X", "type": "varchar", "isCalculated": True, "expression": expr},
+            ],
+        })
+    man["models"].append({
+        "name": "Volatile", "tableReference": "customers", "primaryKey": "Id",
+        "columns": [
+            {"name": "Id", "type": "int", "expression": "id"},
+            {"name": "R", "type": "double", "isCalculated": True, "expression": "rand()"},
+            {"name": "Now", "type": "timestamp", "isCalculated": True,
+             "expression": "current_timestamp()"},
+        ],
+    })
+    return man
+
+
+def _write_mat_sources(spark, root, customers) -> str:
+    import datetime
+
+    ts = datetime.datetime(2024, 6, 1, 20, 0, tzinfo=datetime.timezone.utc)
+    spark.createDataFrame(
+        [(i, n, s, ts) for i, n, s in customers],
+        "id INT, name STRING, state STRING, ts TIMESTAMP",
+    ).write.mode("overwrite").parquet(f"{root}/customers.parquet")
+    spark.createDataFrame(
+        [(10, 1, 100.0), (11, 1, 50.0), (12, 2, 70.0)],
+        "oid INT, cust_id INT, price DOUBLE",
+    ).write.mode("overwrite").parquet(f"{root}/orders.parquet")
+    return str(root)
+
+
+_MAT_CUSTOMERS = [(1, "alice", "NY"), (2, "bob", "CA"), (3, "carol", "TX")]
+
+
+class TestMaterializedModels:
+    """A model over small sources is cached once per deploy and requests
+    project from it; a model whose rows depend on the zone or the time
+    of the call stays inline."""
+
+    @pytest.fixture(scope="class")
+    def mat_dir(self, spark, tmp_path_factory):
+        return _write_mat_sources(spark, tmp_path_factory.mktemp("mat"), _MAT_CUSTOMERS)
+
+    @staticmethod
+    def _deploy(spark, path, manifest=None):
+        sources = SourceRegistry(spark).add_directory(path)
+        return SemanticEngine(spark, Manifest.from_dict(manifest or _mat_manifest()), sources).deploy({})
+
+    def test_small_model_reads_memory_and_joins_nothing(self, spark, mat_dir):
+        eng = self._deploy(spark, mat_dir)
+        df = eng.sql("SELECT Id, Total FROM Customers ORDER BY Id")
+        nodes = _plan_nodes(df)
+        assert "InMemoryRelation" in nodes and "Join" not in nodes, nodes
+        assert [tuple(r) for r in df.collect()] == [(1, 150.0), (2, 70.0), (3, None)]
+        # a to-one calc and a zone-free cast materialize too
+        df = eng.sql("SELECT Oid, CustState, Price2 FROM Orders ORDER BY Oid")
+        assert "InMemoryRelation" in _plan_nodes(df)
+        assert [(r.Oid, r.CustState, float(r.Price2)) for r in df.collect()] == [
+            (10, "NY", 100.0), (11, "NY", 50.0), (12, "CA", 70.0)]
+
+    @pytest.mark.parametrize("name", list(_ZONED_CALCS))
+    def test_zone_dependent_calc_answers_per_zone(self, spark, mat_dir, name):
+        eng = self._deploy(spark, mat_dir)
+        _, utc, tokyo = _ZONED_CALCS[name]
+        q = f"SELECT Id, X FROM {name} ORDER BY Id"
+        for tz, want in ((None, utc), ("UTC", utc), ("Asia/Tokyo", tokyo)):
+            df = eng.sql(q, timezone=tz)
+            assert "InMemoryRelation" not in _plan_nodes(df)
+            got = {str(r.X) for r in df.collect()}
+            assert got == {str(want)}, (tz, got)
+
+    def test_volatile_calcs_evaluated_per_call(self, spark, mat_dir):
+        import time
+
+        eng = self._deploy(spark, mat_dir)
+        df = eng.sql("SELECT R, Now FROM Volatile WHERE Id = 1")
+        assert "InMemoryRelation" not in _plan_nodes(df)
+        a = df.collect()[0]
+        time.sleep(0.01)
+        b = eng.sql("SELECT R, Now FROM Volatile WHERE Id = 1").collect()[0]
+        assert a.R != b.R and b.Now > a.Now
+
+    def test_threshold_off_keeps_model_inline(self, spark, mat_dir):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            man = _mat_manifest()
+            man["models"][1]["cached"] = True
+            eng = self._deploy(spark, mat_dir, man)
+        finally:
+            spark.conf.set(key, old)
+        df = eng.sql("SELECT Id, Total FROM Customers ORDER BY Id")
+        nodes = _plan_nodes(df)
+        assert "InMemoryRelation" not in nodes and "Join" in nodes, nodes
+        assert [tuple(r) for r in df.collect()] == [(1, 150.0), (2, 70.0), (3, None)]
+        # the cached flag forces materialization past the size bound
+        assert "InMemoryRelation" in _plan_nodes(eng.sql("SELECT Oid FROM Orders"))
+
+    def test_redeploy_reads_rows_afresh(self, spark, tmp_path):
+        # models and cached cubes alike
+        path = _write_mat_sources(spark, tmp_path, _MAT_CUSTOMERS)
+        man = _mat_manifest()
+        man["cubes"] = [{
+            "name": "MatCube", "baseObject": "Customers", "cached": True,
+            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+            "dimensions": [{"name": "State", "expression": "State", "type": "varchar"}],
+        }]
+        eng = self._deploy(spark, path, man)
+        q = "SELECT Id, Total FROM Customers ORDER BY Id"
+        def pinned():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        assert [r.Id for r in eng.sql(q).collect()] == [1, 2, 3]
+        assert spark.table("MatCube").count() == 3
+        n = pinned()
+        _write_mat_sources(spark, tmp_path, [(1, "alice", "NY"), (7, "gus", "WA")])
+        eng.deploy({})
+        assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
+        assert sorted(r.State for r in spark.table("MatCube").collect()) == ["NY", "WA"]
+        # the previous deploy's frames are no longer pinned
+        assert pinned() == n

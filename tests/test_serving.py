@@ -288,6 +288,21 @@ class TestDryPlanTwin:
         text = service.dry_plan(q, dialect="duckdb")
         assert duckdb.sql(text).fetchall() == rows
 
+    def test_user_cte_shadows_model(self, service, fresh):
+        import duckdb
+
+        q = "WITH customer_m AS (SELECT 99 AS custkey) SELECT custkey FROM customer_m"
+        _, rows = self._twin(service.engine, fresh, q)
+        assert rows == [(99,)]
+        assert duckdb.sql(service.dry_plan(q, dialect="duckdb")).fetchall() == rows
+        # a shadowing CTE may read another model, which still expands
+        q = ('WITH "nation_m"(k, n) AS (SELECT custkey, nation_name FROM customer_m),'
+             " big AS (SELECT * FROM nation_m WHERE k < 3)"
+             " SELECT k, n FROM big ORDER BY k")
+        _, rows = self._twin(service.engine, fresh, q)
+        assert [k for k, _ in rows] == [0, 1, 2]
+        assert duckdb.sql(service.dry_plan(q, dialect="duckdb")).fetchall() == rows
+
     def test_duckdb_dialect_executes_in_duckdb(self, service):
         # the duckdb-rendered dry-plan is directly runnable there
         # (reference transpile parity, rewriter.py:90-104): same rows as
@@ -405,6 +420,27 @@ class TestCache:
         second = svc.query(q, use_cache=True)
         assert second["cached"] is True
         assert sorted(map(tuple, second["data"])) == sorted(map(tuple, first["data"]))
+
+    def test_key_carries_the_deploy(self, spark, tmp_path):
+        # two deploys of different manifests share one cache dir: the
+        # second, where name is upper(name), must answer its own rows
+        import copy
+
+        upper = copy.deepcopy(MANIFEST)
+        for c in upper["models"][2]["columns"]:
+            if c["name"] == "name":
+                c["expression"] = "upper(c_name)"
+        q = "SELECT custkey, name FROM customer_m ORDER BY custkey LIMIT 3"
+        first = SemanticService(deploy(spark, SF_DIR, MANIFEST), cache_dir=str(tmp_path))
+        plain = first.query(q, use_cache=True)
+        svc = SemanticService(deploy(spark, SF_DIR, upper), cache_dir=str(tmp_path))
+        got = svc.query(q, use_cache=True)
+        assert got == svc.query(q)
+        assert [r[1] for r in got["data"]] == [r[1].upper() for r in plain["data"]]
+        assert svc.query(q, use_cache=True)["cached"] is True
+        # a redeploy is a new data snapshot: the same text misses
+        svc.engine.deploy({})
+        assert "cached" not in svc.query(q, use_cache=True)
 
     @pytest.fixture
     def cached(self, service, tmp_path):
@@ -773,6 +809,26 @@ class TestCubeRefresh:
         eng.refresh_cube("refresh_cube_t")
         after = spark.table("refresh_cube_t").agg(F.sum("n")).collect()[0][0]
         assert after < before
+
+    def test_refresh_is_a_new_query_cache_snapshot(self, spark, tmp_path):
+        from tests.conftest import SF_DIR
+        from wren_engine_spark.queries.semantic import MANIFEST, deploy
+
+        manifest = {**MANIFEST, "cubes": [{
+            "name": "refresh_cube_q", "baseObject": "customer_m", "cached": True,
+            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+            "dimensions": [{"name": "segment", "expression": "mktsegment",
+                            "type": "varchar"}],
+        }]}
+        svc = SemanticService(deploy(spark, SF_DIR, manifest), cache_dir=str(tmp_path))
+        q = "SELECT SUM(n) AS n FROM refresh_cube_q"
+        before = svc.query(q, use_cache=True)["data"]
+        spark.table("customer_m").filter(F.col("acctbal") > 0).createOrReplaceTempView(
+            "customer_m"
+        )
+        svc.engine.refresh_cube("refresh_cube_q")
+        after = svc.query(q, use_cache=True)
+        assert "cached" not in after and after["data"][0][0] < before[0][0]
 
     def test_unknown_cube_raises(self, spark):
         from tests.conftest import SF_DIR

@@ -16,8 +16,13 @@ we keep them all).
     FROM leaf of the executed text. ``dry_plan`` returns the same text
     with standalone scans (``parquet.`path```) as leaves instead;
   - each model (every field), view and cube as a temp view, so
-    ``spark.table(model)``, cubes and the ``cached`` hint work. A model
-    CTE whose body equals a cached model's body reads the cache.
+    ``spark.table(model)`` and cubes work;
+  - for each model that qualifies (small, or marked ``cached``, and
+    answering the same in every zone and at every call), its full
+    expansion, cached, as one more engine-private view. The model's
+    CTE in the executed text projects from it, so a request pays no
+    source scan, RLS filter or relationship join for that model (the
+    reference's ``cached`` hint, manifest-macro/src/lib.rs:141-168).
 
 A request registers nothing, writes no session conf and leaves no frame
 behind in the engine: ``sql`` rewrites, then analyzes, in the deployed
@@ -27,14 +32,18 @@ Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
 map-side-combinable groupBy on the foreign key — the shuffle it needs is
 on the same key as the subsequent join, so Catalyst reuses the exchange.
-Nothing in the deploy path touches data: views are lazy metadata; the
-first action triggers distributed execution only.
+Deploy runs no Spark job: views are lazy metadata, and the size check
+reads plan statistics. A materialized model's rows are read once, by
+the first query after ``deploy`` that needs them, and kept until the
+next ``deploy``, which reads them afresh.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import threading
+import uuid
 from collections import OrderedDict
 
 from pyspark.sql import Column as SparkColumn
@@ -63,8 +72,6 @@ def _register_temp_view(spark: SparkSession, df: DataFrame, name: str) -> None:
     try:
         df.createOrReplaceTempView(name)
     except Exception:  # noqa: BLE001 - non-identifier name
-        import hashlib
-
         safe = "__wren_src_" + hashlib.md5(name.encode()).hexdigest()[:12]
         df.createOrReplaceTempView(safe)
         spark.sql(
@@ -131,6 +138,8 @@ class SemanticEngine:
         self._zone_sessions: OrderedDict[str, SparkSession] = OrderedDict()
         # cube name -> its (cached) pre-agg frame, for cube_drill
         self._cube_frames: dict[str, DataFrame] = {}
+        # keys the query cache; set by _new_snapshot
+        self.deploy_id = ""
         check_cycles(manifest)
 
     # ------------------------------------------------------------------ deploy
@@ -138,18 +147,24 @@ class SemanticEngine:
     def deploy(self, properties: dict[str, str] | None = None) -> "SemanticEngine":
         """Register each model's source, then every model, view and cube,
         as temp views, and build the planners for ``sql`` and
-        ``dry_plan``. Access-control and planning errors (a missing RLS
-        property, an unsupported calculated field, a view cycle) raise
-        here."""
+        ``dry_plan``. A model that ``_materializes`` is cached lazily:
+        the first query that reads it computes its full expansion once,
+        and ``sql`` projects from that. A redeploy uncaches the previous
+        deploy's models and cubes, so it refreshes them. Access-control
+        and planning errors (a missing RLS property, an unsupported
+        calculated field, a view cycle) raise here."""
         from wren_engine_spark.functions.compat import register_compat_functions
 
         register_compat_functions(self.spark)
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
+        self._new_snapshot()
         # a zone session is a snapshot of the deployed views
         with self._sql_lock:
             self._zone_sessions.clear()
         models = self.manifest.models
-        # id(self) keeps the names apart from every other live engine's
+        # id(self) keeps the names apart from every other live engine's;
+        # as they stay the same, replacing a source view on redeploy
+        # uncaches every frame that reads it: models and cubes
         leaves = {m.name: f"__wren_model_src_{id(self):x}_{i}" for i, m in enumerate(models)}
         self._planner = CteRewriter(self.manifest, self.properties, leaves)
         self._dry_planner = CteRewriter(
@@ -160,20 +175,58 @@ class SemanticEngine:
         )
         for model in models:
             _register_temp_view(self.spark, self._source_df(model), leaves[model.name])
-        for model in models:
-            df = self.spark.sql(self._planner.model_sql(model))
-            if model.cached:
-                # materialization hint (manifest-macro/src/lib.rs:141-168
-                # `cached`+`refresh_time`); Spark equivalent: keep the
-                # expanded view in executor storage. A production deploy
-                # would write a refresh_time-scheduled Delta table.
+        # any zone other than the deployed one, for _materializes
+        zone = self.spark.conf.get("spark.sql.session.timeZone")
+        probe = self.spark._jsparkSession.cloneSession()
+        probe.conf().set("spark.sql.session.timeZone", "Asia/Tokyo" if zone == "UTC" else "UTC")
+        for i, model in enumerate(models):
+            text = self._planner.model_sql(model)
+            df = self.spark.sql(text)
+            if self._materializes(model, text, df, probe):
                 df = df.cache()
+                view = f"__wren_model_mat_{id(self):x}_{i}"
+                df.createOrReplaceTempView(view)
+                self._planner.materialized[model.name.lower()] = view
             _register_temp_view(self.spark, df, model.name)
         for v in self._planner.views:
             _register_temp_view(self.spark, self.spark.sql(v.text), v.view.name)
         for cube in self.manifest.cubes:
             self._register_cube(cube)
         return self
+
+    def _new_snapshot(self) -> None:
+        """Name the data this engine now serves: the manifest's hash plus
+        a fresh token, so the query cache never answers from an older
+        deploy or cube refresh."""
+        digest = hashlib.sha256(repr(self.manifest).encode()).hexdigest()[:16]
+        self.deploy_id = f"{digest}-{uuid.uuid4().hex[:16]}"
+
+    def _materializes(self, model: Model, text: str, df: DataFrame, probe) -> bool:
+        """Whether deploy caches ``df``, the full expansion ``text`` of
+        ``model``. The model must be marked ``cached`` or be small: the
+        sizes its optimized plan's leaves report sum to at most
+        ``spark.sql.autoBroadcastJoinThreshold`` (reading statistics
+        runs no job; a source of unknown size reports Long.MaxValue).
+        And its rows must not depend on the zone or the time of the
+        call: the analyzed plan is deterministic, holds no current-time
+        node (current_timestamp, current_date, localtimestamp,
+        current_timezone), and has the same result as ``text`` analyzed
+        in ``probe``, a session of another zone (a zone-aware cast or
+        datetime function keeps its zone in the plan)."""
+        qe = df._jdf.queryExecution()
+        if not model.cached:
+            bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+            leaves = qe.optimizedPlan().collectLeaves()
+            size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+            if size > bound:
+                return False
+        plan = qe.analyzed()
+        patterns = self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        return (
+            plan.deterministic()
+            and not plan.containsPattern(patterns.CURRENT_LIKE())
+            and plan.sameResult(probe.sql(text).queryExecution().analyzed())
+        )
 
     def sql(self, sql: str, timezone: str | None = None) -> DataFrame:
         """Run user SQL against the deployed semantic layer: plan it into
@@ -490,6 +543,7 @@ class SemanticEngine:
         if old is not None:
             old.unpersist()
         self._register_cube(cube)
+        self._new_snapshot()
         # zone sessions hold the old cube view
         with self._sql_lock:
             self._zone_sessions.clear()

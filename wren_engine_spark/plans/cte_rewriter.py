@@ -14,9 +14,11 @@ Referenced manifest views follow as CTEs in dependency order
 (expand_view.rs:35-69), and a user query's own WITH list is merged in.
 
 ``SemanticEngine.sql`` executes this text and ``SemanticEngine.dry_plan``
-returns it. The two differ only in the FROM leaf of each model
-(``source_sql``): the engine's private source view for execution, a
-standalone scan (``parquet.`path```, a catalog table) for the dry plan.
+returns it. The two differ only in the FROM leaf of each model: for the
+dry plan a standalone scan (``parquet.`path```, a catalog table) via
+``source_sql``; for execution the engine's private source view, or, for
+a model the engine materialized at deploy (``materialized``), its
+private view of the model's full expansion, from which the CTE projects.
 """
 
 from __future__ import annotations
@@ -59,6 +61,10 @@ _NUMERIC = re.compile(r"^-?\d+(\.\d+)?$")
 _FORBIDDEN_RLS = re.compile(r"\b(select|insert|update|delete|union)\b|;", re.IGNORECASE)
 _COUNT_STAR = re.compile(r"\bcount\s*\(\s*\*\s*\)", re.IGNORECASE)
 _LEADING_WITH = re.compile(r"\s*with\b", re.IGNORECASE)
+_CTE_HEAD = re.compile(
+    rf"\s*(?:recursive\s+)?({_IDENT})\s*(?:\([^()]*\))?\s*as\s*\(", re.IGNORECASE
+)
+_CTE_SEP = re.compile(r"\s*,")
 
 
 def bq(name: str) -> str:
@@ -180,6 +186,23 @@ def _clac_allows(clac: ColumnLevelAccessControl | None, props: dict[str, str]) -
     return True
 
 
+def _user_cte_names(spans: list[tuple[str, str]]) -> set[str]:
+    """Lower-cased names the query's own leading WITH list defines.
+    Literal and comment text is blanked first, so neither a paren nor a
+    name inside it counts."""
+    code = "".join(t if kind == CODE else " " * len(t) for t, kind in spans)
+    m = _LEADING_WITH.match(code)
+    names: set[str] = set()
+    while m is not None and (m := _CTE_HEAD.match(code, m.end())) is not None:
+        names.add(_unq(m.group(1)).lower())
+        depth, pos = 1, m.end()
+        while depth and pos < len(code):
+            depth += {"(": 1, ")": -1}.get(code[pos], 0)
+            pos += 1
+        m = _CTE_SEP.match(code, pos)
+    return names
+
+
 def _has_star_projection(spans: list[tuple[str, str]]) -> bool:
     """True when the query may project a model's full schema (``*`` or
     ``tbl.*``) — calculated-field pruning must then keep every field.
@@ -212,10 +235,16 @@ class CteRewriter:
                  source_sql: dict[str, str] | None = None):
         """``source_sql`` maps model name -> FROM leaf for its physical
         source (default: the raw table_reference, or the parenthesized
-        ref_sql). Raises PlanError on a view dependency cycle."""
+        ref_sql). Raises PlanError on a view dependency cycle.
+
+        ``materialized`` maps a lower-cased model name to a view holding
+        that model's full expansion (``model_sql`` with every field); the
+        model's CTE then projects from it. The engine fills it at deploy,
+        after it has planned each expansion."""
         self.manifest = manifest
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
         self.source_sql = {k.lower(): v for k, v in (source_sql or {}).items()}
+        self.materialized: dict[str, str] = {}
         self._calcs = {m.name.lower(): self._calc_meta(m) for m in manifest.models}
         self.views = self._views_in_dependency_order()
 
@@ -229,23 +258,28 @@ class CteRewriter:
         query or its views (semantic-layer column pruning, parity with
         ModelPlanNode's required-column collection, analyze/plan.rs:
         63-426), closed over calc-to-calc references; a ``*`` keeps every
-        field. A name collision only adds a field (cost, not results)."""
+        field. A name collision only adds a field (cost, not results).
+        A CTE of the query's own WITH list shadows the model or view of
+        its name, which then gets no CTE."""
         spans = self._strip_spans(sql)
+        shadowed = _user_cte_names(spans)
         idents = identifiers_from_spans(spans)
         star = _has_star_projection(spans)
         views: list[_ViewText] = []
         # reverse dependency order: a view is reached before the views
         # it reads, so one pass collects the transitive closure
         for v in reversed(self.views):
-            if v.view.name.lower() in idents:
+            name = v.view.name.lower()
+            if name in idents and name not in shadowed:
                 views.insert(0, v)
                 idents |= v.idents
                 star = star or v.star
         ctes = []
         for model in self.manifest.models:
-            if model.name.lower() not in idents:
+            name = model.name.lower()
+            if name not in idents or name in shadowed:
                 continue
-            meta = self._calcs[model.name.lower()]
+            meta = self._calcs[name]
             calcs = None if star else self._closure(meta, idents)
             ctes.append(f"{bq(model.name)} AS (\n{self.model_sql(model, calcs)}\n)")
         ctes += [f"{bq(v.view.name)} AS (\n  {v.text}\n)" for v in views]
@@ -269,7 +303,8 @@ class CteRewriter:
         """The CTE body of one model (ModelSourceNode + calculated-field
         generation, model_generation.rs:133-285): its visible columns,
         in manifest order, with the calculated fields named in ``calcs``
-        (lower-cased; None = every field) attached."""
+        (lower-cased; None = every field) attached, read from the
+        model's materialized view when it has one."""
         meta = self._calcs[model.name.lower()]
         names = set(meta) if calcs is None else calcs
         visible = [
@@ -280,10 +315,10 @@ class CteRewriter:
             and (not c.is_calculated or c.name.lower() in names)
             and _clac_allows(c.column_level_access_control, self.properties)
         ]
-        return (
-            f"  SELECT {', '.join(visible)}\n"
-            f"  FROM ({self._relation(model, names)}) AS __base"
-        )
+        source = self.materialized.get(model.name.lower())
+        if source is None:
+            source = f"({self._relation(model, names)})"
+        return f"  SELECT {', '.join(visible)}\n  FROM {source} AS __base"
 
     def strip_ns(self, sql: str) -> str:
         """Strip ``catalog.schema.`` prefixes from model references and

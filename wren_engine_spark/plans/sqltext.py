@@ -25,7 +25,7 @@ text-level equivalent (sqlglot is not available in this environment).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 
 _BARE_IDENT = re.compile(r'`((?:[^`]|``)+)`|"((?:[^"]|"")+)"|([A-Za-z_][A-Za-z0-9_]*)')
 
@@ -135,14 +135,3 @@ def identifiers_from_spans(spans: list[tuple[str, str]]) -> set[str]:
                 found.add(m.group(3).lower())
     return found
 
-
-def references_identifier(sql: str, name: str) -> bool:
-    """True when ``name`` appears as an identifier token (not inside a
-    string literal or comment) in ``sql``."""
-    return name.lower() in identifiers(sql)
-
-
-def iter_nonliteral(sql: str) -> Iterable[str]:
-    for text, kind in lex(sql):
-        if kind == CODE:
-            yield text

@@ -111,8 +111,8 @@ _QUERY_CACHE_MAX_ENTRIES = 256
 
 
 class QueryCache:
-    """Opt-in query cache keyed by (sql, limit, timezone, properties) —
-    reference app/query_cache/__init__.py:11-48.
+    """Opt-in query cache keyed by (deploy, sql, limit, timezone,
+    properties) — reference app/query_cache/__init__.py:11-48.
 
     An entry is the ``{columns, data, dtypes}`` envelope ``to_json``
     built for the response, as one JSON file: storing it needs no second
@@ -256,7 +256,9 @@ class SemanticService:
         if dry_run:
             self.engine.dry_run(sql)
             return None
-        key = f"{sql}|{limit}|{timezone}|{sorted(self.engine.properties.items())}"
+        # a deploy is also a data snapshot: its id keys every entry
+        key = (f"{self.engine.deploy_id}|{sql}|{limit}|{timezone}"
+               f"|{sorted(self.engine.properties.items())}")
         if use_cache and self.cache:
             hit = self.cache.get(key)
             if hit is not None:
