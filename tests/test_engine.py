@@ -900,7 +900,8 @@ def _mat_manifest() -> dict:
     for name, (expr, _, _) in _ZONED_CALCS.items():
         man["models"].append({
             "name": name, "tableReference": "customers", "primaryKey": "Id",
-            # cached forces past the size bound, never past the zone check
+            # cached forces past the size bound, never past the zone
+            # check: the model view is cached, requests do not project
             "cached": name == "ZHour",
             "columns": [
                 {"name": "Id", "type": "int", "expression": "id"},
@@ -915,6 +916,14 @@ def _mat_manifest() -> dict:
             {"name": "R", "type": "double", "isCalculated": True, "expression": "rand()"},
             {"name": "Now", "type": "timestamp", "isCalculated": True,
              "expression": "current_timestamp()"},
+        ],
+    })
+    man["models"].append({
+        "name": "Boom", "tableReference": "customers", "primaryKey": "Id",
+        "columns": [
+            {"name": "Id", "type": "int", "expression": "id"},
+            {"name": "Bad", "type": "int", "isCalculated": True,
+             "expression": "CASE WHEN \"Id\" = 2 THEN raise_error('boom') ELSE 1 END"},
         ],
     })
     return man
@@ -969,16 +978,22 @@ class TestMaterializedModels:
         eng = self._deploy(spark, mat_dir)
         _, utc, tokyo = _ZONED_CALCS[name]
         q = f"SELECT Id, X FROM {name} ORDER BY Id"
+        assert name.lower() not in eng._planner.materialized
         for tz, want in ((None, utc), ("UTC", utc), ("Asia/Tokyo", tokyo)):
             df = eng.sql(q, timezone=tz)
-            assert "InMemoryRelation" not in _plan_nodes(df)
+            # a plan of another zone never matches a cached model view
+            if tz == "Asia/Tokyo" or name != "ZHour":
+                assert "InMemoryRelation" not in _plan_nodes(df)
             got = {str(r.X) for r in df.collect()}
             assert got == {str(want)}, (tz, got)
+        if name == "ZHour":
+            assert "InMemoryRelation" in _plan_nodes(spark.table(name))
 
     def test_volatile_calcs_evaluated_per_call(self, spark, mat_dir):
         import time
 
         eng = self._deploy(spark, mat_dir)
+        assert "volatile" not in eng._planner.materialized
         df = eng.sql("SELECT R, Now FROM Volatile WHERE Id = 1")
         assert "InMemoryRelation" not in _plan_nodes(df)
         a = df.collect()[0]
@@ -1012,17 +1027,64 @@ class TestMaterializedModels:
             "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
             "dimensions": [{"name": "State", "expression": "State", "type": "varchar"}],
         }]
+        def pinned():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+        base = pinned()
         eng = self._deploy(spark, path, man)
         q = "SELECT Id, Total FROM Customers ORDER BY Id"
-        def pinned():
-            return spark.sparkContext._jsc.getPersistentRDDs().size()
-
         assert [r.Id for r in eng.sql(q).collect()] == [1, 2, 3]
         assert spark.table("MatCube").count() == 3
-        n = pinned()
+        first = pinned() - base
+        assert first
         _write_mat_sources(spark, tmp_path, [(1, "alice", "NY"), (7, "gus", "WA")])
         eng.deploy({})
         assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
         assert sorted(r.State for r in spark.table("MatCube").collect()) == ["NY", "WA"]
         # the previous deploy's frames are no longer pinned
-        assert pinned() == n
+        assert not first & pinned()
+
+    def test_calc_failing_at_run_time_keeps_model_inline(self, spark, mat_dir):
+        # a request that does not name the failing calc still answers
+        eng = self._deploy(spark, mat_dir)
+        assert "boom" not in eng._planner.materialized
+        df = eng.sql("SELECT Id FROM Boom ORDER BY Id")
+        assert "InMemoryRelation" not in _plan_nodes(df)
+        assert [r.Id for r in df.collect()] == [1, 2, 3]
+        with pytest.raises(Exception, match="boom"):
+            eng.sql("SELECT Id, Bad FROM Boom").collect()
+
+    def test_redeploy_reads_files_rewritten_outside_spark(self, spark, tmp_path):
+        # a writer other than Spark's leaves Spark's cache as it is: the
+        # redeploy itself must drop the previous deploy's frames
+        import datetime
+        import os
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = _write_mat_sources(spark, tmp_path, _MAT_CUSTOMERS)
+        man = _mat_manifest()
+        man["cubes"] = [{
+            "name": "ArrowCube", "baseObject": "Customers", "cached": True,
+            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+            "dimensions": [{"name": "State", "expression": "State", "type": "varchar"}],
+        }]
+        eng = self._deploy(spark, path, man)
+        q = "SELECT Id, Total FROM Customers ORDER BY Id"
+        assert [r.Id for r in eng.sql(q).collect()] == [1, 2, 3]
+        assert spark.table("ArrowCube").count() == 3
+        target = os.path.join(path, "customers.parquet")
+        shutil.rmtree(target)
+        os.makedirs(target)
+        ts = datetime.datetime(2024, 6, 1, 20, 0, tzinfo=datetime.timezone.utc)
+        pq.write_table(pa.table({
+            "id": pa.array([1, 7], pa.int32()),
+            "name": ["alice", "gus"],
+            "state": ["NY", "WA"],
+            "ts": pa.array([ts, ts], pa.timestamp("us", tz="UTC")),
+        }), os.path.join(target, "part-0.parquet"))
+        eng.deploy({})
+        assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
+        assert sorted(r.State for r in spark.table("ArrowCube").collect()) == ["NY", "WA"]

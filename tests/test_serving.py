@@ -303,6 +303,19 @@ class TestDryPlanTwin:
         assert [k for k, _ in rows] == [0, 1, 2]
         assert duckdb.sql(service.dry_plan(q, dialect="duckdb")).fetchall() == rows
 
+    def test_user_cte_shadowing_a_model_a_view_reads_is_rejected(self, service):
+        # the view's CTE would read the deployed model in Spark and fail
+        # in a standalone dry plan: both paths raise the same error
+        from wren_engine_spark.engine import PlanError
+
+        q = ("WITH customer_m AS (SELECT 'X' AS mktsegment)"
+             " SELECT * FROM segment_value")
+        with pytest.raises(PlanError, match="customer_m") as executed:
+            service.engine.sql(q)
+        with pytest.raises(PlanError) as planned:
+            service.dry_plan(q, dialect="duckdb")
+        assert str(planned.value) == str(executed.value)
+
     def test_duckdb_dialect_executes_in_duckdb(self, service):
         # the duckdb-rendered dry-plan is directly runnable there
         # (reference transpile parity, rewriter.py:90-104): same rows as

@@ -23,6 +23,8 @@ we keep them all).
     CTE in the executed text projects from it, so a request pays no
     source scan, RLS filter or relationship join for that model (the
     reference's ``cached`` hint, manifest-macro/src/lib.rs:141-168).
+    A ``cached`` model whose rows depend on the zone only has its model
+    view cached, as a plan of another zone never matches that cache.
 
 A request registers nothing, writes no session conf and leaves no frame
 behind in the engine: ``sql`` rewrites, then analyzes, in the deployed
@@ -32,10 +34,11 @@ Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
 map-side-combinable groupBy on the foreign key — the shuffle it needs is
 on the same key as the subsequent join, so Catalyst reuses the exchange.
-Deploy runs no Spark job: views are lazy metadata, and the size check
-reads plan statistics. A materialized model's rows are read once, by
-the first query after ``deploy`` that needs them, and kept until the
-next ``deploy``, which reads them afresh.
+Deploy runs one Spark job per cached model, which reads its rows;
+all else it registers is lazy metadata, and the size check reads plan
+statistics. The rows are kept until the next ``deploy`` reads them
+afresh. A model whose expansion fails at run time (a calc that raises)
+stays inline, so a request that does not name that calc still answers.
 """
 
 from __future__ import annotations
@@ -138,6 +141,8 @@ class SemanticEngine:
         self._zone_sessions: OrderedDict[str, SparkSession] = OrderedDict()
         # cube name -> its (cached) pre-agg frame, for cube_drill
         self._cube_frames: dict[str, DataFrame] = {}
+        # the model frames the last deploy cached
+        self._model_frames: list[DataFrame] = []
         # keys the query cache; set by _new_snapshot
         self.deploy_id = ""
         check_cycles(manifest)
@@ -147,12 +152,14 @@ class SemanticEngine:
     def deploy(self, properties: dict[str, str] | None = None) -> "SemanticEngine":
         """Register each model's source, then every model, view and cube,
         as temp views, and build the planners for ``sql`` and
-        ``dry_plan``. A model that ``_materializes`` is cached lazily:
-        the first query that reads it computes its full expansion once,
-        and ``sql`` projects from that. A redeploy uncaches the previous
-        deploy's models and cubes, so it refreshes them. Access-control
-        and planning errors (a missing RLS property, an unsupported
-        calculated field, a view cycle) raise here."""
+        ``dry_plan``. Each model ``_caches`` picks has its full expansion
+        computed here, once, and ``sql`` projects from it when its rows
+        do not depend on the zone. Cubes marked ``cached`` are computed
+        by the first query that reads them. A redeploy first drops the
+        previous deploy's cached models and cubes, so it reads the rows
+        afresh. Access-control and planning errors (a missing RLS
+        property, an unsupported calculated field, a view cycle) raise
+        here."""
         from wren_engine_spark.functions.compat import register_compat_functions
 
         register_compat_functions(self.spark)
@@ -161,10 +168,13 @@ class SemanticEngine:
         # a zone session is a snapshot of the deployed views
         with self._sql_lock:
             self._zone_sessions.clear()
+        # replacing a view whose plan is unchanged keeps its cache, so
+        # the previous deploy's frames are dropped here
+        for df in [*self._model_frames, *self._cube_frames.values()]:
+            df.unpersist()
+        self._model_frames = []
         models = self.manifest.models
-        # id(self) keeps the names apart from every other live engine's;
-        # as they stay the same, replacing a source view on redeploy
-        # uncaches every frame that reads it: models and cubes
+        # id(self) keeps the names apart from every other live engine's
         leaves = {m.name: f"__wren_model_src_{id(self):x}_{i}" for i, m in enumerate(models)}
         self._planner = CteRewriter(self.manifest, self.properties, leaves)
         self._dry_planner = CteRewriter(
@@ -175,18 +185,20 @@ class SemanticEngine:
         )
         for model in models:
             _register_temp_view(self.spark, self._source_df(model), leaves[model.name])
-        # any zone other than the deployed one, for _materializes
+        # any zone other than the deployed one, for _zone_free
         zone = self.spark.conf.get("spark.sql.session.timeZone")
         probe = self.spark._jsparkSession.cloneSession()
         probe.conf().set("spark.sql.session.timeZone", "Asia/Tokyo" if zone == "UTC" else "UTC")
         for i, model in enumerate(models):
             text = self._planner.model_sql(model)
             df = self.spark.sql(text)
-            if self._materializes(model, text, df, probe):
-                df = df.cache()
-                view = f"__wren_model_mat_{id(self):x}_{i}"
-                df.createOrReplaceTempView(view)
-                self._planner.materialized[model.name.lower()] = view
+            if self._caches(model, df):
+                zone_free = self._zone_free(text, df, probe)
+                if (zone_free or model.cached) and self._compute(df):
+                    if zone_free:
+                        view = f"__wren_model_mat_{id(self):x}_{i}"
+                        df.createOrReplaceTempView(view)
+                        self._planner.materialized[model.name.lower()] = view
             _register_temp_view(self.spark, df, model.name)
         for v in self._planner.views:
             _register_temp_view(self.spark, self.spark.sql(v.text), v.view.name)
@@ -195,24 +207,21 @@ class SemanticEngine:
         return self
 
     def _new_snapshot(self) -> None:
-        """Name the data this engine now serves: the manifest's hash plus
-        a fresh token, so the query cache never answers from an older
-        deploy or cube refresh."""
-        digest = hashlib.sha256(repr(self.manifest).encode()).hexdigest()[:16]
-        self.deploy_id = f"{digest}-{uuid.uuid4().hex[:16]}"
+        """Name the data this engine now serves with a fresh token, so
+        the query cache never answers from an older deploy or cube
+        refresh."""
+        self.deploy_id = uuid.uuid4().hex
 
-    def _materializes(self, model: Model, text: str, df: DataFrame, probe) -> bool:
-        """Whether deploy caches ``df``, the full expansion ``text`` of
-        ``model``. The model must be marked ``cached`` or be small: the
-        sizes its optimized plan's leaves report sum to at most
+    def _caches(self, model: Model, df: DataFrame) -> bool:
+        """Whether ``df``, the full expansion of ``model``, may be cached.
+        The model must be marked ``cached`` or be small: the sizes its
+        optimized plan's leaves report sum to at most
         ``spark.sql.autoBroadcastJoinThreshold`` (reading statistics
         runs no job; a source of unknown size reports Long.MaxValue).
-        And its rows must not depend on the zone or the time of the
-        call: the analyzed plan is deterministic, holds no current-time
-        node (current_timestamp, current_date, localtimestamp,
-        current_timezone), and has the same result as ``text`` analyzed
-        in ``probe``, a session of another zone (a zone-aware cast or
-        datetime function keeps its zone in the plan)."""
+        And its rows must not depend on the time of the call: the
+        analyzed plan is deterministic and holds no current-time node
+        (current_timestamp, current_date, localtimestamp,
+        current_timezone)."""
         qe = df._jdf.queryExecution()
         if not model.cached:
             bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
@@ -222,11 +231,33 @@ class SemanticEngine:
                 return False
         plan = qe.analyzed()
         patterns = self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
-        return (
-            plan.deterministic()
-            and not plan.containsPattern(patterns.CURRENT_LIKE())
-            and plan.sameResult(probe.sql(text).queryExecution().analyzed())
-        )
+        return plan.deterministic() and not plan.containsPattern(patterns.CURRENT_LIKE())
+
+    @staticmethod
+    def _zone_free(text: str, df: DataFrame, probe) -> bool:
+        """Whether ``df``, analyzed from ``text``, has the same result as
+        ``text`` analyzed in ``probe``, a session of another zone: a
+        zone-aware cast or datetime function keeps its zone in the
+        plan."""
+        analyzed = df._jdf.queryExecution().analyzed()
+        return analyzed.sameResult(probe.sql(text).queryExecution().analyzed())
+
+    def _compute(self, df: DataFrame) -> bool:
+        """Cache ``df`` and compute it now. On a run-time error (a calc
+        that raises, an ANSI cast) drop the cache and return False: the
+        model stays inline, where a request computes only the calcs it
+        names."""
+        # drop a frame of the same plan, another engine's too, so the
+        # rows are read afresh
+        df.unpersist()
+        df.cache()
+        try:
+            df.count()
+        except Exception:  # noqa: BLE001 - any run-time failure
+            df.unpersist()
+            return False
+        self._model_frames.append(df)
+        return True
 
     def sql(self, sql: str, timezone: str | None = None) -> DataFrame:
         """Run user SQL against the deployed semantic layer: plan it into

@@ -247,6 +247,7 @@ class CteRewriter:
         self.materialized: dict[str, str] = {}
         self._calcs = {m.name.lower(): self._calc_meta(m) for m in manifest.models}
         self.views = self._views_in_dependency_order()
+        self._names = set(self._calcs) | {v.view.name.lower() for v in self.views}
 
     # ----------------------------------------------------------- public
 
@@ -260,9 +261,11 @@ class CteRewriter:
         63-426), closed over calc-to-calc references; a ``*`` keeps every
         field. A name collision only adds a field (cost, not results).
         A CTE of the query's own WITH list shadows the model or view of
-        its name, which then gets no CTE."""
+        its name, which then gets no CTE; a manifest view the query
+        reads may not name it (PlanError), as the view would read the
+        deployed model, which a standalone dry plan lacks."""
         spans = self._strip_spans(sql)
-        shadowed = _user_cte_names(spans)
+        shadowed = _user_cte_names(spans) & self._names
         idents = identifiers_from_spans(spans)
         star = _has_star_projection(spans)
         views: list[_ViewText] = []
@@ -271,6 +274,12 @@ class CteRewriter:
         for v in reversed(self.views):
             name = v.view.name.lower()
             if name in idents and name not in shadowed:
+                if v.idents & shadowed:
+                    raise PlanError(
+                        f"view {v.view.name!r} reads "
+                        f"{', '.join(sorted(v.idents & shadowed))}, which the "
+                        "query's own WITH list redefines"
+                    )
                 views.insert(0, v)
                 idents |= v.idents
                 star = star or v.star
