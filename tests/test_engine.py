@@ -1054,9 +1054,11 @@ class TestMaterializedModels:
         with pytest.raises(Exception, match="boom"):
             eng.sql("SELECT Id, Bad FROM Boom").collect()
 
-    def test_redeploy_reads_files_rewritten_outside_spark(self, spark, tmp_path):
-        # a writer other than Spark's leaves Spark's cache as it is: the
-        # redeploy itself must drop the previous deploy's frames
+    @pytest.mark.parametrize("how", ["redeploy", "new_engine", "redeploy_inline"])
+    def test_redeploy_reads_files_rewritten_outside_spark(self, spark, tmp_path, how):
+        # a writer other than Spark's leaves Spark's cache as it is: a
+        # redeploy, a new engine's deploy, or a redeploy that keeps the
+        # model inline must not read the frames an earlier deploy cached
         import datetime
         import os
         import shutil
@@ -1085,6 +1087,17 @@ class TestMaterializedModels:
             "state": ["NY", "WA"],
             "ts": pa.array([ts, ts], pa.timestamp("us", tz="UTC")),
         }), os.path.join(target, "part-0.parquet"))
-        eng.deploy({})
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        if how == "redeploy_inline":
+            spark.conf.set(key, "-1")
+        try:
+            if how == "new_engine":
+                eng = self._deploy(spark, path, man)
+            else:
+                eng.deploy({})
+        finally:
+            spark.conf.set(key, old)
         assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
+        assert [r.Id for r in spark.table("Customers").collect()] == [1, 7]
         assert sorted(r.State for r in spark.table("ArrowCube").collect()) == ["NY", "WA"]

@@ -461,6 +461,9 @@ class SemanticEngine:
         base = self.spark.table(cube.base_object)
         out = base.groupBy(*dims).agg(*meas) if dims else base.agg(*meas)
         if cube.cached:
+            # as in _compute: another engine's frame of the same plan
+            # may hold older rows
+            out.unpersist()
             out = out.cache()
         # the view exposes the declared columns only; it projects the
         # SAME (cached) frame, so no second materialization happens
