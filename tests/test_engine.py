@@ -507,26 +507,6 @@ class TestPerRequestTimezone:
         assert not wrong, wrong[:3]
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
-    def test_refresh_cube_drops_zone_sessions(self, spark):
-        # a zone session made before refresh_cube would read the old,
-        # unpersisted cube frame
-        from pyspark.sql import functions as F
-
-        man = {**BASE, "cubes": [{
-            "name": "StateCube", "baseObject": "Customers", "cached": True,
-            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
-            "dimensions": [{"name": "st", "expression": "State", "type": "varchar"}],
-        }]}
-        eng = _deploy(spark, man)
-        q = "SELECT SUM(n) AS n FROM StateCube"
-        assert eng.sql(q, timezone="Asia/Tokyo").collect()[0].n == 3
-        spark.table("Customers").filter(F.col("Id") > 1).createOrReplaceTempView("Customers")
-        eng.refresh_cube("StateCube")
-        df = eng.sql(q, timezone="Asia/Tokyo")
-        assert "InMemoryRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-        assert df.collect()[0].n == 2
-        eng._cube_frames["StateCube"].unpersist()
-
     def test_redeploy_drops_zone_sessions(self, spark):
         eng = _deploy(spark)
         q = "SELECT Id FROM Customers ORDER BY Id"
@@ -586,6 +566,12 @@ class TestCalcPruning:
             "SELECT Id, Total * 2 AS t2 FROM Customers ORDER BY Id"
         ).collect()
         assert rows[0].t2 == 300.0
+
+    def test_star_over_a_view_prunes_the_models_fields(self, spark):
+        # the '*' reads the view's columns, not the model's
+        eng = _deploy(spark)
+        assert "JOIN" not in eng.dry_plan("SELECT * FROM StateView")
+        assert "JOIN" in eng.dry_plan("SELECT * FROM StateView, Customers")
 
     def test_calc_on_calc_transitive_pruning(self, spark):
         # a query naming only TotalX2 must also attach Total (its
@@ -754,6 +740,35 @@ class TestViewOrdering:
                 {"name": "va", "statement": "SELECT * FROM vb"},
                 {"name": "vb", "statement": "SELECT * FROM va"},
             ]))
+
+
+class TestCubes:
+    """A cube is a generated view: it may read a manifest view, and a
+    manifest view may read it."""
+
+    _STATE_CUBE = {
+        "name": "StateCube", "baseObject": "Customers", "cached": True,
+        "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+        "dimensions": [{"name": "st", "expression": '"State"', "type": "varchar"}],
+    }
+
+    def test_view_over_cube_deploys(self, spark):
+        man = {**BASE, "cubes": [self._STATE_CUBE], "views": [
+            {"name": "BusyStates", "statement": "SELECT st, n FROM StateCube WHERE n >= 1"}]}
+        eng = _deploy(spark, man)
+        q = "SELECT st, n FROM BusyStates ORDER BY st"
+        assert [tuple(r) for r in eng.sql(q).collect()] == [("CA", 1), ("NY", 1), ("TX", 1)]
+        assert spark.table("BusyStates").count() == 3
+
+    def test_cube_over_view_deploys(self, spark):
+        man = {**BASE, "cubes": [{
+            "name": "ViewCube", "baseObject": "StateView",
+            "measures": [{"name": "states", "expression": "count(*)", "type": "bigint"},
+                         {"name": "customers", "expression": "sum(n)", "type": "bigint"}],
+        }]}
+        eng = _deploy(spark, man)
+        assert tuple(eng.sql("SELECT states, customers FROM ViewCube").collect()[0]) == (3, 3)
+        assert tuple(eng.cube_drill("ViewCube").collect()[0]) == (3, 3)
 
 
 class TestNonIdentifierNames:
@@ -989,6 +1004,21 @@ class TestMaterializedModels:
         if name == "ZHour":
             assert "InMemoryRelation" in _plan_nodes(spark.table(name))
 
+    def test_zone_dependent_cube_answers_per_zone(self, spark, mat_dir):
+        # a cube follows the zone rule of models: a dimension that reads
+        # the zone is computed in the request's zone
+        man = _mat_manifest()
+        man["cubes"] = [{
+            "name": "HourCube", "baseObject": "Customers", "cached": True,
+            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
+            "dimensions": [{"name": "H", "expression": 'hour("Ts")', "type": "int"}],
+        }]
+        eng = self._deploy(spark, mat_dir, man)
+        q = "SELECT H, n FROM HourCube"
+        for tz, hour in ((None, 20), ("UTC", 20), ("Asia/Tokyo", 5)):
+            assert [tuple(r) for r in eng.sql(q, timezone=tz).collect()] == [(hour, 3)], tz
+        assert [tuple(r) for r in eng.cube_drill("HourCube").collect()] == [(20, 3)]
+
     def test_volatile_calcs_evaluated_per_call(self, spark, mat_dir):
         import time
 
@@ -1033,14 +1063,18 @@ class TestMaterializedModels:
         base = pinned()
         eng = self._deploy(spark, path, man)
         q = "SELECT Id, Total FROM Customers ORDER BY Id"
+        cube_q = "SELECT State FROM MatCube ORDER BY State"
         assert [r.Id for r in eng.sql(q).collect()] == [1, 2, 3]
         assert spark.table("MatCube").count() == 3
+        # a request reads the cube's rows from memory
+        assert "InMemoryRelation" in _plan_nodes(eng.sql(cube_q))
         first = pinned() - base
         assert first
         _write_mat_sources(spark, tmp_path, [(1, "alice", "NY"), (7, "gus", "WA")])
         eng.deploy({})
         assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
         assert sorted(r.State for r in spark.table("MatCube").collect()) == ["NY", "WA"]
+        assert [r.State for r in eng.sql(cube_q).collect()] == ["NY", "WA"]
         # the previous deploy's frames are no longer pinned
         assert not first & pinned()
 
@@ -1101,3 +1135,5 @@ class TestMaterializedModels:
         assert [tuple(r) for r in eng.sql(q).collect()] == [(1, 150.0), (7, None)]
         assert [r.Id for r in spark.table("Customers").collect()] == [1, 7]
         assert sorted(r.State for r in spark.table("ArrowCube").collect()) == ["NY", "WA"]
+        cube_q = "SELECT State FROM ArrowCube ORDER BY State"
+        assert [r.State for r in eng.sql(cube_q).collect()] == ["NY", "WA"]

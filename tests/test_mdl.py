@@ -12,7 +12,6 @@ from wren_engine_spark.mdl.lineage import (
     check_cycles,
     extract_paths,
     is_aggregate_expression,
-    source_columns,
 )
 from wren_engine_spark.mdl.manifest import Manifest, ManifestError, Model
 from wren_engine_spark.mdl.types import map_type
@@ -163,12 +162,6 @@ class TestLineage:
         assert not is_aggregate_expression('"x"."y" + 1')
         # substring of a name must not trigger (e.g. "summary")
         assert not is_aggregate_expression('"summary_col"')
-
-    def test_source_columns(self):
-        man = Manifest.from_dict(REL_MANIFEST)
-        assert source_columns(man.model("A"), 'id + 1') == {"id"}
-        # path chains excluded
-        assert source_columns(man.model("A"), '"b"."name" || id') == {"id"}
 
     def test_cycle_detection(self):
         cyc = _mini(

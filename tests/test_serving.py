@@ -6,9 +6,9 @@ import json
 import os
 import sys
 import threading
+from decimal import Decimal
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, spark_jobs
 from wren_engine_spark import serving
@@ -140,6 +140,29 @@ def _agent_queries() -> dict[str, str]:
 
 _AGENT_QUERIES = _agent_queries()
 
+
+def _rounded(row: tuple) -> tuple:
+    """A result row with decimals and doubles rounded to 6 places: Spark
+    and DuckDB type an AVG or a SUM differently."""
+    return tuple(round(float(v), 6) if isinstance(v, (Decimal, float)) else v for v in row)
+
+
+# a cube over a parquet-backed model: an AVG measure (hidden sum and
+# count components) next to distributive ones
+_SEG_CUBE = {
+    "name": "seg_cube",
+    "baseObject": "customer_m",
+    "cached": True,
+    "dimensions": [{"name": "segment", "expression": '"mktsegment"', "type": "varchar"}],
+    "measures": [
+        {"name": "n", "expression": "count(*)", "type": "bigint"},
+        {"name": "bal", "expression": 'SUM(CAST("acctbal" AS DECIMAL(38,6)))',
+         "type": "decimal"},
+        {"name": "avg_bal", "expression": "avg(CAST(acctbal AS DECIMAL(38,6)))",
+         "type": "double"},
+    ],
+}
+
 # the guarded models of the drift tests: a CLAC-gated column, a hidden
 # calculated column, RLS on both sides of a relationship, and a to-one and
 # a to-many calculated field across it. The RLS columns keep their source
@@ -217,19 +240,26 @@ class TestDryPlanTwin:
         return eng.deploy({"level": "3", "segment": "BUILDING"})
 
     @staticmethod
-    def _twin(eng, fresh, q):
+    def _twin(eng, fresh, q, duck=False):
         want = eng.sql(q)
         got = fresh.sql(eng.dry_plan(q))
         assert got.columns == want.columns
         rows = sorted(map(tuple, got.collect()), key=repr)
         assert rows == sorted(map(tuple, want.collect()), key=repr)
+        if duck:
+            import duckdb
+
+            rel = duckdb.sql(eng.dry_plan(q, dialect="duckdb"))
+            assert rel.columns == got.columns
+            want_rows = sorted(map(_rounded, rows), key=repr)
+            assert sorted(map(_rounded, rel.fetchall()), key=repr) == want_rows
         return got.columns, rows
 
     @pytest.mark.parametrize("name", list(_AGENT_QUERIES))
     def test_dry_plan_executes_identically(self, service, fresh, name):
         self._twin(service.engine, fresh, _AGENT_QUERIES[name])
 
-    @pytest.mark.parametrize("sem", [f"sem{i}" for i in range(1, 8)])
+    @pytest.mark.parametrize("sem", [f"sem{i}" for i in range(1, 10)])
     def test_sem_query_dry_plan_twin(self, spark, fresh, monkeypatch, sem):
         from wren_engine_spark.engine import SemanticEngine
         from wren_engine_spark.queries import semantic
@@ -246,7 +276,50 @@ class TestDryPlanTwin:
         monkeypatch.undo()
         assert calls
         for eng, q in calls:
-            self._twin(eng, fresh, q)
+            # sem8 and sem9 send cube_drill's text
+            self._twin(eng, fresh, q, duck=sem in ("sem8", "sem9"))
+
+    def test_cube_query_dry_plan_twin(self, spark, fresh):
+        eng = deploy(spark, SF_DIR, {**MANIFEST, "cubes": [_SEG_CUBE]})
+        cols, rows = self._twin(eng, fresh, "SELECT * FROM seg_cube", duck=True)
+        # the hidden AVG components stay hidden
+        assert cols == ["segment", "n", "bal", "avg_bal"]
+        assert len(rows) == 5
+        q = "SELECT SUM(n) AS n, MAX(avg_bal) AS top FROM seg_cube WHERE segment <> 'BUILDING'"
+        self._twin(eng, fresh, q, duck=True)
+
+    def test_view_over_cube_dry_plan_twin(self, spark, fresh):
+        manifest = {**MANIFEST, "cubes": [_SEG_CUBE], "views": [
+            {"name": "big_segments",
+             "statement": 'SELECT "segment", "n" FROM "seg_cube" WHERE "n" > 20'}]}
+        eng = deploy(spark, SF_DIR, manifest)
+        _, rows = self._twin(eng, fresh, "SELECT * FROM big_segments", duck=True)
+        assert rows and all(n > 20 for _, n in rows)
+
+    def test_cube_drill_dry_plan_twin(self, spark, fresh, monkeypatch):
+        from wren_engine_spark.engine import SemanticEngine
+
+        eng = deploy(spark, SF_DIR, {**MANIFEST, "cubes": [
+            {**_SEG_CUBE, "dimensions": [
+                *_SEG_CUBE["dimensions"],
+                {"name": "nation", "expression": "nation_key", "type": "integer"}],
+             "hierarchies": {"geo": ["segment", "nation"]}}]})
+        texts = []
+        real = SemanticEngine.sql
+
+        def spy(engine, sql, *args, **kwargs):
+            texts.append(sql)
+            return real(engine, sql, *args, **kwargs)
+
+        monkeypatch.setattr(SemanticEngine, "sql", spy)
+        drilled = [eng.cube_drill("seg_cube"),
+                   eng.cube_drill("seg_cube", hierarchy="geo", level="segment")]
+        monkeypatch.undo()
+        assert len(texts) == 2
+        for df, q in zip(drilled, texts):
+            cols, rows = self._twin(eng, fresh, q, duck=True)
+            assert df.columns == cols
+        assert len(rows) == 5
 
     def test_view_dry_plan_runs(self, service, fresh):
         q = "SELECT mktsegment, n_customers, total_balance FROM segment_value"
@@ -689,6 +762,13 @@ class TestCubeDrill:
         with pytest.raises(PlanError):
             eng.cube_drill("orders_cube", hierarchy="order", level="nope")
 
+    def test_unknown_cube_raises(self, spark):
+        from wren_engine_spark.engine import PlanError
+
+        eng = self._deploy(spark)
+        with pytest.raises(PlanError, match="unknown cube"):
+            eng.cube_drill("nope")
+
     def _manifest_with_measures(self, measures):
         from wren_engine_spark.queries.semantic import MANIFEST
 
@@ -795,64 +875,6 @@ class TestCubeDrill:
             eng = deploy(spark, SF_DIR, manifest)
             with pytest.raises(PlanError):
                 eng.cube_drill("m_cube_t", hierarchy="h", level="status")
-
-
-class TestCubeRefresh:
-    def test_refresh_picks_up_new_base_state(self, spark):
-        from tests.conftest import SF_DIR
-        from wren_engine_spark.queries.semantic import MANIFEST, deploy
-
-        manifest = {
-            **MANIFEST,
-            "cubes": [{
-                "name": "refresh_cube_t",
-                "baseObject": "customer_m",
-                "cached": True,
-                "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
-                "dimensions": [{"name": "segment", "expression": "mktsegment",
-                                "type": "varchar"}],
-            }],
-        }
-        eng = deploy(spark, SF_DIR, manifest)
-        before = spark.table("refresh_cube_t").agg(F.sum("n")).collect()[0][0]
-        # shrink the base model's view, then refresh the materialization
-        spark.table("customer_m").filter(F.col("acctbal") > 0).createOrReplaceTempView(
-            "customer_m"
-        )
-        eng.refresh_cube("refresh_cube_t")
-        after = spark.table("refresh_cube_t").agg(F.sum("n")).collect()[0][0]
-        assert after < before
-
-    def test_refresh_is_a_new_query_cache_snapshot(self, spark, tmp_path):
-        from tests.conftest import SF_DIR
-        from wren_engine_spark.queries.semantic import MANIFEST, deploy
-
-        manifest = {**MANIFEST, "cubes": [{
-            "name": "refresh_cube_q", "baseObject": "customer_m", "cached": True,
-            "measures": [{"name": "n", "expression": "count(*)", "type": "bigint"}],
-            "dimensions": [{"name": "segment", "expression": "mktsegment",
-                            "type": "varchar"}],
-        }]}
-        svc = SemanticService(deploy(spark, SF_DIR, manifest), cache_dir=str(tmp_path))
-        q = "SELECT SUM(n) AS n FROM refresh_cube_q"
-        before = svc.query(q, use_cache=True)["data"]
-        spark.table("customer_m").filter(F.col("acctbal") > 0).createOrReplaceTempView(
-            "customer_m"
-        )
-        svc.engine.refresh_cube("refresh_cube_q")
-        after = svc.query(q, use_cache=True)
-        assert "cached" not in after and after["data"][0][0] < before[0][0]
-
-    def test_unknown_cube_raises(self, spark):
-        from tests.conftest import SF_DIR
-        from wren_engine_spark.engine import PlanError
-        from wren_engine_spark.queries.semantic import deploy
-
-        eng = deploy(spark, SF_DIR, {"catalog": "t", "schema": "t", "models": [{
-            "name": "m_one", "tableReference": "region",
-            "columns": [{"name": "k", "type": "int", "expression": "r_regionkey"}]}]})
-        with pytest.raises(PlanError):
-            eng.refresh_cube("nope")
 
 
 class TestMetadataExtras:

@@ -3,27 +3,27 @@
 This is the Spark-first rebuild of the reference's planning pipeline
 (SURVEY.md §0, §2.A). As in the reference's CTE rewriter (PAPER.md §0
 steps 3-6; wren/src/wren/mdl/cte_rewriter.py), a query is planned once,
-into SQL text: ``plans/cte_rewriter.py`` makes each model and view the
-query references a CTE, with expression columns, RLS, CLAC, hidden
+into SQL text: ``plans/cte_rewriter.py`` makes each model, view and cube
+the query references a CTE, with expression columns, RLS, CLAC, hidden
 columns and only the referenced calculated fields applied. That text
 then runs through Catalyst — predicate pushdown, column pruning, join
 planning, AQE all apply to the *expanded* plan (the reference had to
 disable most optimizer rules for unparse fidelity, context.rs:229-275;
-we keep them all).
+we keep them all). A cube drill is one more such text.
 
 ``deploy`` registers, once per deploy:
   - each model's physical source as an engine-private temp view, the
     FROM leaf of the executed text. ``dry_plan`` returns the same text
     with standalone scans (``parquet.`path```) as leaves instead;
   - each model (every field), view and cube as a temp view, so
-    ``spark.table(model)`` and cubes work;
-  - for each model that qualifies (small, or marked ``cached``, and
-    answering the same in every zone and at every call), its full
-    expansion, cached, as one more engine-private view. The model's
-    CTE in the executed text projects from it, so a request pays no
-    source scan, RLS filter or relationship join for that model (the
+    ``spark.table(model)`` works;
+  - for each model and cube that qualifies (small, or marked
+    ``cached``, and answering the same in every zone and at every
+    call), its full rows, cached, as one more engine-private view. The
+    CTE in the executed text reads from it, so a request pays no source
+    scan, RLS filter, relationship join or cube aggregation for it (the
     reference's ``cached`` hint, manifest-macro/src/lib.rs:141-168).
-    A ``cached`` model whose rows depend on the zone only has its model
+    A ``cached`` one whose rows depend on the zone only has its temp
     view cached, as a plan of another zone never matches that cache.
 
 A request registers nothing, writes no session conf and leaves no frame
@@ -34,11 +34,11 @@ Scale notes (100 TB design): every to-one dimension join is eligible for
 broadcast (dims are small by construction); to-many pre-aggregation is a
 map-side-combinable groupBy on the foreign key — the shuffle it needs is
 on the same key as the subsequent join, so Catalyst reuses the exchange.
-Deploy runs one Spark job per cached model, which reads its rows;
-all else it registers is lazy metadata, and the size check reads plan
-statistics. The rows are kept until the next ``deploy`` reads them
-afresh. A model whose expansion fails at run time (a calc that raises)
-stays inline, so a request that does not name that calc still answers.
+Deploy runs one Spark job per cached model or cube, which reads its
+rows; all else it registers is lazy metadata, and the size check reads
+plan statistics. The rows are kept until the next ``deploy`` reads them
+afresh. One whose rows fail at run time (a calc that raises) stays
+inline, so a request that does not name that calc still answers.
 """
 
 from __future__ import annotations
@@ -49,9 +49,7 @@ import threading
 import uuid
 from collections import OrderedDict
 
-from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from wren_engine_spark.mdl.lineage import check_cycles
 from wren_engine_spark.mdl.manifest import Manifest, Model, quote_ident
@@ -60,7 +58,8 @@ from wren_engine_spark.plans.cte_rewriter import (
     CteRewriter,
     PlanError,
     _clac_allows,
-    _sq,
+    bq,
+    cube_body,
 )
 from wren_engine_spark.plans.sqltext import identifiers
 from wren_engine_spark.sources.registry import SourceRegistry
@@ -139,11 +138,9 @@ class SemanticEngine:
         # sql() from multiple threads; analysis runs outside it
         self._sql_lock = threading.Lock()
         self._zone_sessions: OrderedDict[str, SparkSession] = OrderedDict()
-        # cube name -> its (cached) pre-agg frame, for cube_drill
-        self._cube_frames: dict[str, DataFrame] = {}
-        # the model frames the last deploy cached
-        self._model_frames: list[DataFrame] = []
-        # keys the query cache; set by _new_snapshot
+        # the model and cube frames the last deploy cached
+        self._frames: list[DataFrame] = []
+        # keys the query cache: a fresh token per deploy
         self.deploy_id = ""
         check_cycles(manifest)
 
@@ -152,27 +149,27 @@ class SemanticEngine:
     def deploy(self, properties: dict[str, str] | None = None) -> "SemanticEngine":
         """Register each model's source, then every model, view and cube,
         as temp views, and build the planners for ``sql`` and
-        ``dry_plan``. Each model ``_caches`` picks has its full expansion
-        computed here, once, and ``sql`` projects from it when its rows
-        do not depend on the zone. Cubes marked ``cached`` are computed
-        by the first query that reads them. A redeploy first drops the
-        previous deploy's cached models and cubes, so it reads the rows
-        afresh. Access-control and planning errors (a missing RLS
-        property, an unsupported calculated field, a view cycle) raise
-        here."""
+        ``dry_plan``. Each model and cube ``_caches`` picks has its full
+        rows computed here, once, and ``sql`` reads them when they do
+        not depend on the zone. A redeploy first drops the previous
+        deploy's cached frames, so it reads the rows afresh: it is the
+        refresh of models and cubes alike. Access-control and planning
+        errors (a missing RLS property, an unsupported calculated field,
+        a view cycle) raise here."""
         from wren_engine_spark.functions.compat import register_compat_functions
 
         register_compat_functions(self.spark)
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
-        self._new_snapshot()
+        # the query cache never answers from an older deploy
+        self.deploy_id = uuid.uuid4().hex
         # a zone session is a snapshot of the deployed views
         with self._sql_lock:
             self._zone_sessions.clear()
         # replacing a view whose plan is unchanged keeps its cache, so
         # the previous deploy's frames are dropped here
-        for df in [*self._model_frames, *self._cube_frames.values()]:
+        for df in self._frames:
             df.unpersist()
-        self._model_frames = []
+        self._frames = []
         models = self.manifest.models
         # id(self) keeps the names apart from every other live engine's
         leaves = {m.name: f"__wren_model_src_{id(self):x}_{i}" for i, m in enumerate(models)}
@@ -189,32 +186,31 @@ class SemanticEngine:
         zone = self.spark.conf.get("spark.sql.session.timeZone")
         probe = self.spark._jsparkSession.cloneSession()
         probe.conf().set("spark.sql.session.timeZone", "Asia/Tokyo" if zone == "UTC" else "UTC")
-        for i, model in enumerate(models):
-            text = self._planner.model_sql(model)
-            df = self.spark.sql(text)
-            if self._caches(model, df):
-                zone_free = self._zone_free(text, df, probe)
-                if (zone_free or model.cached) and self._compute(df):
-                    if zone_free:
-                        view = f"__wren_model_mat_{id(self):x}_{i}"
-                        df.createOrReplaceTempView(view)
-                        self._planner.materialized[model.name.lower()] = view
-            _register_temp_view(self.spark, df, model.name)
-        for v in self._planner.views:
-            _register_temp_view(self.spark, self.spark.sql(v.text), v.view.name)
+        # every text is planned before anything is materialized, so it
+        # reads only the source views, which the probe has too
+        texts = {m.name: (self._planner.model_sql(m), m.cached) for m in models}
         for cube in self.manifest.cubes:
-            self._register_cube(cube)
+            body = cube_body(cube.name)
+            texts[body] = (self._planner.rewrite(f"SELECT * FROM {bq(body)}"), cube.cached)
+        for i, (name, (text, cached)) in enumerate(texts.items()):
+            df = self.spark.sql(text)
+            if self._caches(cached, df):
+                zone_free = self._zone_free(text, df, probe)
+                if (zone_free or cached) and self._compute(df):
+                    if zone_free:
+                        view = f"__wren_mat_{id(self):x}_{i}"
+                        df.createOrReplaceTempView(view)
+                        self._planner.materialized[name.lower()] = view
+            _register_temp_view(self.spark, df, name)
+        # views and public cubes read the names registered before them
+        for v in self._planner.views:
+            if v.view.name not in texts:
+                _register_temp_view(self.spark, self.spark.sql(v.text), v.view.name)
         return self
 
-    def _new_snapshot(self) -> None:
-        """Name the data this engine now serves with a fresh token, so
-        the query cache never answers from an older deploy or cube
-        refresh."""
-        self.deploy_id = uuid.uuid4().hex
-
-    def _caches(self, model: Model, df: DataFrame) -> bool:
-        """Whether ``df``, the full expansion of ``model``, may be cached.
-        The model must be marked ``cached`` or be small: the sizes its
+    def _caches(self, cached: bool, df: DataFrame) -> bool:
+        """Whether ``df``, the full rows of a model or cube, may be
+        cached. It must be marked ``cached`` or be small: the sizes its
         optimized plan's leaves report sum to at most
         ``spark.sql.autoBroadcastJoinThreshold`` (reading statistics
         runs no job; a source of unknown size reports Long.MaxValue).
@@ -223,7 +219,7 @@ class SemanticEngine:
         (current_timestamp, current_date, localtimestamp,
         current_timezone)."""
         qe = df._jdf.queryExecution()
-        if not model.cached:
+        if not cached:
             bound = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
             leaves = qe.optimizedPlan().collectLeaves()
             size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
@@ -245,8 +241,8 @@ class SemanticEngine:
     def _compute(self, df: DataFrame) -> bool:
         """Cache ``df`` and compute it now. On a run-time error (a calc
         that raises, an ANSI cast) drop the cache and return False: the
-        model stays inline, where a request computes only the calcs it
-        names."""
+        model or cube stays inline, where a request computes only the
+        calcs it names."""
         # drop a frame of the same plan, another engine's too, so the
         # rows are read afresh
         df.unpersist()
@@ -256,7 +252,7 @@ class SemanticEngine:
         except Exception:  # noqa: BLE001 - any run-time failure
             df.unpersist()
             return False
-        self._model_frames.append(df)
+        self._frames.append(df)
         return True
 
     def sql(self, sql: str, timezone: str | None = None) -> DataFrame:
@@ -389,86 +385,7 @@ class SemanticEngine:
             return self.spark.sql(self._planner.strip_ns(model.ref_sql))
         return self.sources.resolve(model.table_reference)
 
-    def _expr(self, sql_expr: str) -> SparkColumn:
-        return F.expr(_sq(sql_expr))
-
     # ----------------------------------------------------------------- cubes
-
-    @staticmethod
-    def _single_top_agg(expr: str) -> tuple[str, str] | None:
-        """``(HEAD, inner)`` iff ``expr`` is exactly one top-level
-        aggregate call ``HEAD( inner )`` — the head's closing paren must
-        be the LAST non-space character. A compound measure like
-        ``SUM(a)/COUNT(*)`` returns None: its text head is 'SUM' but
-        re-aggregating it as a plain sum of the pre-agg ratio column
-        would silently answer wrong (the round-5 advisor's case).
-        Single-quoted SQL strings are skipped so a paren inside a
-        literal cannot unbalance the scan."""
-        m = re.match(r"\s*([A-Za-z_][A-Za-z_0-9]*)\s*\(", expr)
-        if not m:
-            return None
-        head = m.group(1).upper()
-        i, depth, start = m.end() - 1, 0, m.end() - 1
-        while i < len(expr):
-            c = expr[i]
-            if c == "'":  # skip string literal ('' = escaped quote)
-                i += 1
-                while i < len(expr):
-                    if expr[i] == "'":
-                        if i + 1 < len(expr) and expr[i + 1] == "'":
-                            i += 2
-                            continue
-                        break
-                    i += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    if expr[i + 1 :].strip():
-                        return None  # trailing operators: compound
-                    return head, expr[start + 1 : i]
-            i += 1
-        return None
-
-    def _register_cube(self, cube) -> None:
-        """Cube -> groupBy(dims).agg(measures) view over its base model
-        (SURVEY §1.1 Cube row); ``cached`` materializes it.
-
-        AVG measures additionally materialize hidden exact components
-        ``__<name>_sum`` / ``__<name>_cnt`` at cube grain — the
-        standard cube answer for the non-distributive AVG — so
-        ``cube_drill`` can derive the coarser-grain average as
-        sum-of-sums / sum-of-counts. The hidden columns live only in
-        the cached drill frame, not in the registered view."""
-        dims = [self._expr(d.expression).alias(d.name) for d in cube.dimensions]
-        dims += [self._expr(t.expression).alias(t.name) for t in cube.time_dimensions]
-        meas = [self._expr(m.expression).alias(m.name) for m in cube.measures]
-        visible = [d.name for d in cube.dimensions]
-        visible += [t.name for t in cube.time_dimensions]
-        visible += [m.name for m in cube.measures]
-        for m in cube.measures:
-            top = self._single_top_agg(m.expression)
-            if top is not None and top[0] == "AVG" and not re.match(
-                r"\s*DISTINCT\b", top[1], re.IGNORECASE
-            ):
-                meas.append(
-                    self._expr(f"SUM({top[1]})").alias(f"__{m.name}_sum")
-                )
-                meas.append(
-                    self._expr(f"COUNT({top[1]})").alias(f"__{m.name}_cnt")
-                )
-        base = self.spark.table(cube.base_object)
-        out = base.groupBy(*dims).agg(*meas) if dims else base.agg(*meas)
-        if cube.cached:
-            # as in _compute: another engine's frame of the same plan
-            # may hold older rows
-            out.unpersist()
-            out = out.cache()
-        # the view exposes the declared columns only; it projects the
-        # SAME (cached) frame, so no second materialization happens
-        _register_temp_view(self.spark, out.select(*visible), cube.name)
-        self._cube_frames[cube.name] = out
 
     def cube_drill(
         self,
@@ -476,108 +393,10 @@ class SemanticEngine:
         hierarchy: str | None = None,
         level: str | None = None,
     ) -> DataFrame:
-        """Answer a coarser-grain query THROUGH a cube: re-aggregate the
-        materialized pre-agg up the named hierarchy to ``level`` (which
-        must be a member of the hierarchy; all levels up to and
-        including it are kept, the finer ones roll up). Reference cube
-        hierarchies: manifest-macro/src/lib.rs:352-385.
-
-        Measures must be a single top-level aggregate call and
-        re-aggregate by head — SUM/COUNT roll up as sums (a DECIMAL
-        sum stays exact under re-aggregation), MIN/MAX as min/max, AVG
-        derives from the hidden exact (sum, count) components
-        materialized at registration (sum-of-sums / sum-of-counts, one
-        final double division); compound expressions and DISTINCT
-        counts are not distributive over the pre-agg and raise
-        PlanError rather than silently answering wrong. At scale this
-        is the point of a cube: the drill scans the cached pre-agg
-        (cube-cardinality rows), not the base fact table.
-        """
-        cube = next((c for c in self.manifest.cubes if c.name == name), None)
-        if cube is None:
-            raise PlanError(f"unknown cube {name!r}")
-        frame = self._cube_frames.get(name)
-        if frame is None:
-            raise PlanError(f"cube {name!r} is not deployed")
-        dims = [d.name for d in cube.dimensions]
-        dims += [t.name for t in cube.time_dimensions]
-        if hierarchy is None and level is not None:
-            raise PlanError(
-                f"level {level!r} given without a hierarchy — a drill "
-                "needs both (omitting hierarchy returns the full grain)"
-            )
-        if hierarchy is not None:
-            hier = cube.hierarchies.get(hierarchy)
-            if hier is None:
-                raise PlanError(
-                    f"cube {name!r} has no hierarchy {hierarchy!r} "
-                    f"(has: {sorted(cube.hierarchies)})"
-                )
-            if level not in hier:
-                raise PlanError(
-                    f"level {level!r} not in hierarchy {hierarchy!r} ({hier})"
-                )
-            keep = hier[: hier.index(level) + 1]
-            keep += [d for d in dims if d not in hier]
-        else:
-            keep = dims
-        aggs = []
-        for m in cube.measures:
-            # the measure must be a SINGLE top-level aggregate call —
-            # a compound like SUM(a)/COUNT(*) has text head 'SUM' but
-            # summing the pre-agg ratio column would silently answer
-            # wrong (the exact failure this guard exists to prevent)
-            top = self._single_top_agg(m.expression)
-            if top is None:
-                raise PlanError(
-                    f"measure {m.name!r} ({m.expression!r}) is not a "
-                    "single top-level aggregate and cannot be "
-                    "re-aggregated over the pre-agg; query the base "
-                    "model instead"
-                )
-            head, inner = top
-            # DISTINCT as the aggregate's qualifier only — a column
-            # NAMED e.g. distinct_users is perfectly re-aggregatable
-            if re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE):
-                raise PlanError(
-                    f"measure {m.name!r} (DISTINCT) is not re-aggregatable "
-                    "over the pre-agg"
-                )
-            if head in ("SUM", "COUNT"):
-                aggs.append(F.sum(m.name).alias(m.name))
-            elif head == "MIN":
-                aggs.append(F.min(m.name).alias(m.name))
-            elif head == "MAX":
-                aggs.append(F.max(m.name).alias(m.name))
-            elif head == "AVG" and f"__{m.name}_sum" in frame.columns:
-                # derived measure: exact component sums roll up, ONE
-                # final double division (deterministic at any grain)
-                aggs.append(
-                    (
-                        F.sum(f"__{m.name}_sum").cast("double")
-                        / F.sum(f"__{m.name}_cnt").cast("double")
-                    ).alias(m.name)
-                )
-            else:
-                raise PlanError(
-                    f"measure {m.name!r} ({head}) is not re-aggregatable "
-                    "over the pre-agg; query the base model instead"
-                )
-        return frame.groupBy(*[F.col(k) for k in keep]).agg(*aggs)
-
-    def refresh_cube(self, name: str) -> None:
-        """Recompute a cube's materialization (the ``refresh_time`` hook
-        — manifest-macro/src/lib.rs:141-168; production would schedule
-        this). Drops the cached frame and re-registers from the current
-        base model state; zone sessions made before are dropped."""
-        cube = next((c for c in self.manifest.cubes if c.name == name), None)
-        if cube is None:
-            raise PlanError(f"unknown cube {name!r}")
-        old = self._cube_frames.get(name)
-        if old is not None:
-            old.unpersist()
-        self._register_cube(cube)
-        self._new_snapshot()
-        # zone sessions hold the old cube view
-        with self._sql_lock:
-            self._zone_sessions.clear()
+        """Answer a coarser-grain query THROUGH a cube: run the text of
+        ``CteRewriter.drill_sql``, which re-aggregates the cube's body up
+        ``hierarchy`` to ``level`` (reference cube hierarchies:
+        manifest-macro/src/lib.rs:352-385). The drill of a cached cube
+        scans its cached body, not the base table, and ``dry_plan`` of
+        the same text stands alone."""
+        return self.sql(self._planner.drill_sql(name, hierarchy, level))

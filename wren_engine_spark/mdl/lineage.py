@@ -148,16 +148,3 @@ def check_cycles(manifest: Manifest) -> None:
             else:
                 color[node] = BLACK
                 stack.pop()
-
-
-def source_columns(model: Model, expr: str) -> set[str]:
-    """Physical columns of ``model`` referenced by a non-relationship
-    expression (parity with mdl/mod.rs:296-324 infer_source_column)."""
-    names = {c.name.lower() for c in model.columns}
-    found: set[str] = set()
-    cleaned = _CHAIN.sub(" ", expr)  # drop qualified chains first
-    for tok in re.findall(r'"[^"]+"|[A-Za-z_][A-Za-z0-9_]*', cleaned):
-        t = tok[1:-1] if tok.startswith('"') else tok
-        if t.lower() in names:
-            found.add(t)
-    return found

@@ -15,18 +15,10 @@ from __future__ import annotations
 
 import base64
 import json
-import re
 from dataclasses import dataclass, field
 from typing import Any
 
 MAX_LAYOUT_VERSION = 2
-
-_CAMEL_RE = re.compile(r"(?<!^)(?=[A-Z])")
-
-
-def _snake(name: str) -> str:
-    return _CAMEL_RE.sub("_", name).lower()
-
 
 def _as_bool(v: Any, default: bool = False) -> bool:
     # backcompat: the reference accepts 0/1 ints for bools

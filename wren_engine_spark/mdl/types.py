@@ -122,8 +122,3 @@ def map_type(name: str) -> T.DataType:
         if len(kv) == 2:
             return T.MapType(map_type(kv[0].strip()), map_type(kv[1].strip()))
     return T.StringType()
-
-
-def spark_ddl(name: str) -> str:
-    """MDL type string -> Spark DDL type string (for CAST expressions)."""
-    return map_type(name).simpleString()

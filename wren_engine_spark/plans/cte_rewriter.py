@@ -13,12 +13,21 @@ changes (model.slt:37-44). Hop targets carry their own RLS filter.
 Referenced manifest views follow as CTEs in dependency order
 (expand_view.rs:35-69), and a user query's own WITH list is merged in.
 
+A cube (manifest-macro/src/lib.rs:352-385) is two generated views in
+that same order: a private full-grain body, ``SELECT <dims>, <measures>
+FROM <baseObject> GROUP BY <dims>`` plus the hidden ``__<m>_sum`` /
+``__<m>_cnt`` components of each AVG measure, and the public cube, which
+projects the declared columns from it. ``drill_sql`` re-aggregates the
+body up a hierarchy with one more text, which
+``SemanticEngine.cube_drill`` answers.
+
 ``SemanticEngine.sql`` executes this text and ``SemanticEngine.dry_plan``
 returns it. The two differ only in the FROM leaf of each model: for the
 dry plan a standalone scan (``parquet.`path```, a catalog table) via
 ``source_sql``; for execution the engine's private source view, or, for
-a model the engine materialized at deploy (``materialized``), its
-private view of the model's full expansion, from which the CTE projects.
+a model or cube body the engine materialized at deploy
+(``materialized``), its private view of the full rows, from which the
+CTE reads.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ from wren_engine_spark.mdl.lineage import RelPath, extract_paths, is_aggregate_e
 from wren_engine_spark.mdl.manifest import (
     Column,
     ColumnLevelAccessControl,
+    Cube,
     Manifest,
     Model,
     Relationship,
@@ -65,6 +75,7 @@ _CTE_HEAD = re.compile(
     rf"\s*(?:recursive\s+)?({_IDENT})\s*(?:\([^()]*\))?\s*as\s*\(", re.IGNORECASE
 )
 _CTE_SEP = re.compile(r"\s*,")
+_DISTINCT = re.compile(r"\s*DISTINCT\b", re.IGNORECASE)
 
 
 def bq(name: str) -> str:
@@ -216,6 +227,70 @@ def _has_star_projection(spans: list[tuple[str, str]]) -> bool:
     return False
 
 
+def _single_top_agg(expr: str) -> tuple[str, str] | None:
+    """``(HEAD, inner)`` iff ``expr`` is exactly one top-level
+    aggregate call ``HEAD( inner )`` — the head's closing paren must
+    be the LAST non-space character. A compound measure like
+    ``SUM(a)/COUNT(*)`` returns None: its text head is 'SUM' but
+    re-aggregating it as a plain sum of the pre-agg ratio column
+    would silently answer wrong. Single-quoted SQL strings are
+    skipped so a paren inside a literal cannot unbalance the scan."""
+    m = re.match(r"\s*([A-Za-z_][A-Za-z_0-9]*)\s*\(", expr)
+    if not m:
+        return None
+    head = m.group(1).upper()
+    i, depth, start = m.end() - 1, 0, m.end() - 1
+    while i < len(expr):
+        c = expr[i]
+        if c == "'":  # skip string literal ('' = escaped quote)
+            i += 1
+            while i < len(expr):
+                if expr[i] == "'":
+                    if i + 1 < len(expr) and expr[i + 1] == "'":
+                        i += 2
+                        continue
+                    break
+                i += 1
+        elif c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                if expr[i + 1 :].strip():
+                    return None  # trailing operators: compound
+                return head, expr[start + 1 : i]
+        i += 1
+    return None
+
+
+def cube_body(name: str) -> str:
+    """The view name of cube ``name``'s private full-grain body."""
+    return f"__wren_cube_{name}"
+
+
+def _cube_views(cube: Cube) -> list[View]:
+    """Cube -> its body and its public view. Each AVG measure adds the
+    hidden exact components ``__<m>_sum`` / ``__<m>_cnt`` to the body —
+    the standard cube answer for the non-distributive AVG — so
+    ``cube_drill`` derives a coarser-grain average as sum-of-sums /
+    sum-of-counts; the public view shows the declared columns only."""
+    dims = [*cube.dimensions, *cube.time_dimensions]
+    items = [f"{f.expression} AS {bq(f.name)}" for f in [*dims, *cube.measures]]
+    for m in cube.measures:
+        top = _single_top_agg(m.expression)
+        if top is not None and top[0] == "AVG" and not _DISTINCT.match(top[1]):
+            items.append(f"SUM({top[1]}) AS {bq(f'__{m.name}_sum')}")
+            items.append(f"COUNT({top[1]}) AS {bq(f'__{m.name}_cnt')}")
+    body = f"SELECT {', '.join(items)} FROM {bq(cube.base_object)}"
+    if dims:
+        body += f" GROUP BY {', '.join(d.expression for d in dims)}"
+    public = ", ".join(bq(f.name) for f in [*dims, *cube.measures])
+    return [
+        View(cube_body(cube.name), body),
+        View(cube.name, f"SELECT {public} FROM {bq(cube_body(cube.name))}"),
+    ]
+
+
 class _Calc(NamedTuple):
     col: Column
     paths: list[RelPath]
@@ -238,9 +313,10 @@ class CteRewriter:
         ref_sql). Raises PlanError on a view dependency cycle.
 
         ``materialized`` maps a lower-cased model name to a view holding
-        that model's full expansion (``model_sql`` with every field); the
-        model's CTE then projects from it. The engine fills it at deploy,
-        after it has planned each expansion."""
+        that model's full expansion (``model_sql`` with every field), or
+        a cube body's name to a view holding its rows; the CTE then reads
+        from it. The engine fills it at deploy, after it has planned each
+        expansion."""
         self.manifest = manifest
         self.properties = {k.lower(): str(v) for k, v in (properties or {}).items()}
         self.source_sql = {k.lower(): v for k, v in (source_sql or {}).items()}
@@ -258,8 +334,10 @@ class CteRewriter:
         Each model CTE attaches only the calculated fields named in the
         query or its views (semantic-layer column pruning, parity with
         ModelPlanNode's required-column collection, analyze/plan.rs:
-        63-426), closed over calc-to-calc references; a ``*`` keeps every
-        field. A name collision only adds a field (cost, not results).
+        63-426), closed over calc-to-calc references; a ``*`` in a text
+        that names a model keeps every field. A name collision only adds
+        a field (cost, not results). A cube body the engine materialized
+        reads its cached rows instead of its text.
         A CTE of the query's own WITH list shadows the model or view of
         its name, which then gets no CTE; a manifest view the query
         reads may not name it (PlanError), as the view would read the
@@ -267,7 +345,8 @@ class CteRewriter:
         spans = self._strip_spans(sql)
         shadowed = _user_cte_names(spans) & self._names
         idents = identifiers_from_spans(spans)
-        star = _has_star_projection(spans)
+        # a '*' can only widen a model the query itself names
+        star = _has_star_projection(spans) and not idents.isdisjoint(self._calcs)
         views: list[_ViewText] = []
         # reverse dependency order: a view is reached before the views
         # it reads, so one pass collects the transitive closure
@@ -279,6 +358,10 @@ class CteRewriter:
                         f"view {v.view.name!r} reads "
                         f"{', '.join(sorted(v.idents & shadowed))}, which the "
                         "query's own WITH list redefines"
+                    )
+                if name in self.materialized:
+                    v = v._replace(
+                        text=f"SELECT * FROM {self.materialized[name]}", idents=set(), star=False
                     )
                 views.insert(0, v)
                 idents |= v.idents
@@ -335,6 +418,92 @@ class CteRewriter:
         56-64 step 3 does the same before unparse). String literals are
         never touched."""
         return "".join(t for t, _ in self._strip_spans(sql))
+
+    def drill_sql(
+        self, name: str, hierarchy: str | None = None, level: str | None = None
+    ) -> str:
+        """The text that re-aggregates cube ``name``'s body up the named
+        hierarchy to ``level`` (which must be a member of the hierarchy;
+        all levels up to and including it are kept, the finer ones roll
+        up; no hierarchy keeps the full grain).
+
+        Measures must be a single top-level aggregate call and
+        re-aggregate by head — SUM/COUNT roll up as sums (a DECIMAL
+        sum stays exact under re-aggregation), MIN/MAX as min/max, AVG
+        derives from the body's hidden exact (sum, count) components
+        (sum-of-sums / sum-of-counts, one final double division);
+        compound expressions and DISTINCT counts are not distributive
+        over the pre-agg and raise PlanError rather than silently
+        answering wrong."""
+        cube = next((c for c in self.manifest.cubes if c.name == name), None)
+        if cube is None:
+            raise PlanError(f"unknown cube {name!r}")
+        dims = [d.name for d in cube.dimensions]
+        dims += [t.name for t in cube.time_dimensions]
+        if hierarchy is None and level is not None:
+            raise PlanError(
+                f"level {level!r} given without a hierarchy — a drill "
+                "needs both (omitting hierarchy returns the full grain)"
+            )
+        if hierarchy is not None:
+            hier = cube.hierarchies.get(hierarchy)
+            if hier is None:
+                raise PlanError(
+                    f"cube {name!r} has no hierarchy {hierarchy!r} "
+                    f"(has: {sorted(cube.hierarchies)})"
+                )
+            if level not in hier:
+                raise PlanError(
+                    f"level {level!r} not in hierarchy {hierarchy!r} ({hier})"
+                )
+            keep = hier[: hier.index(level) + 1]
+            keep += [d for d in dims if d not in hier]
+        else:
+            keep = dims
+        aggs = []
+        for m in cube.measures:
+            # the measure must be a SINGLE top-level aggregate call —
+            # a compound like SUM(a)/COUNT(*) has text head 'SUM' but
+            # summing the pre-agg ratio column would silently answer
+            # wrong (the exact failure this guard exists to prevent)
+            top = _single_top_agg(m.expression)
+            if top is None:
+                raise PlanError(
+                    f"measure {m.name!r} ({m.expression!r}) is not a "
+                    "single top-level aggregate and cannot be "
+                    "re-aggregated over the pre-agg; query the base "
+                    "model instead"
+                )
+            head, inner = top
+            # DISTINCT as the aggregate's qualifier only — a column
+            # NAMED e.g. distinct_users is perfectly re-aggregatable
+            if _DISTINCT.match(inner):
+                raise PlanError(
+                    f"measure {m.name!r} (DISTINCT) is not re-aggregatable "
+                    "over the pre-agg"
+                )
+            col = bq(m.name)
+            if head in ("SUM", "COUNT"):
+                aggs.append(f"SUM({col}) AS {col}")
+            elif head in ("MIN", "MAX"):
+                aggs.append(f"{head}({col}) AS {col}")
+            elif head == "AVG":
+                # derived measure: exact component sums roll up, ONE
+                # final double division (deterministic at any grain)
+                aggs.append(
+                    f"CAST(SUM({bq(f'__{m.name}_sum')}) AS DOUBLE)"
+                    f" / CAST(SUM({bq(f'__{m.name}_cnt')}) AS DOUBLE) AS {col}"
+                )
+            else:
+                raise PlanError(
+                    f"measure {m.name!r} ({head}) is not re-aggregatable "
+                    "over the pre-agg; query the base model instead"
+                )
+        keys = [bq(k) for k in keep]
+        text = f"SELECT {', '.join([*keys, *aggs])} FROM {bq(cube_body(name))}"
+        if keys:
+            text += f" GROUP BY {', '.join(keys)}"
+        return text
 
     # ---------------------------------------------------------- helpers
 
@@ -480,16 +649,19 @@ class CteRewriter:
         )
 
     def _views_in_dependency_order(self) -> list[_ViewText]:
-        """Views ordered so that a view reading another comes after it,
-        whatever the manifest order (the reference expands views lazily,
-        expand_view.rs:35-69; a CTE list and eager temp-view registration
-        both need the order). Cycles raise PlanError."""
+        """Manifest views and each cube's two views, ordered so that a
+        view reading another comes after it, whatever the manifest order
+        (the reference expands views lazily, expand_view.rs:35-69; a CTE
+        list and eager temp-view registration both need the order).
+        Cycles raise PlanError."""
         texts: dict[str, _ViewText] = {}
-        for v in self.manifest.views:
+        cubes = [v for c in self.manifest.cubes for v in _cube_views(c)]
+        for v in [*self.manifest.views, *cubes]:
             spans = self._strip_spans(v.statement)
+            idents = identifiers_from_spans(spans)
             texts[v.name.lower()] = _ViewText(
-                v, "".join(t for t, _ in spans),
-                identifiers_from_spans(spans), _has_star_projection(spans),
+                v, "".join(t for t, _ in spans), idents,
+                _has_star_projection(spans) and not idents.isdisjoint(self._calcs),
             )
         ordered: list[_ViewText] = []
         done: set[str] = set()

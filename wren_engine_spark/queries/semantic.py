@@ -351,11 +351,12 @@ _CUBE_MANIFEST: dict = {
 )
 def sem8(spark: SparkSession, sf: str) -> DataFrame:
     """A STATUS-grain query answered THROUGH the MDL cube object
-    (engine.cube_drill): the (status, priority) pre-agg materializes at
-    deploy (cached), and the drill rolls the 'order' hierarchy up to
-    its 'status' level by re-aggregating cube rows — COUNT as a sum,
-    revenue as an exact DECIMAL sum — without touching the base orders
-    scan (tests/test_plans.py asserts the InMemoryTableScan). The
+    (engine.cube_drill): the (status, priority) pre-agg is computed and
+    cached at deploy, and the drill's SQL text rolls the 'order'
+    hierarchy up to its 'status' level by re-aggregating cube rows —
+    COUNT as a sum, revenue as an exact DECIMAL sum — without touching
+    the base orders scan (tests/test_plans.py asserts the
+    InMemoryTableScan). The
     oracle computes the same answer from the raw table, so the driver
     hash-checks that pre-agg routing is lossless. Reference cube
     hierarchies: manifest-macro/src/lib.rs:352-385."""
@@ -381,9 +382,10 @@ def sem9(spark: SparkSession, sf: str) -> DataFrame:
     """An AVG measure drilled to a coarser grain THROUGH the cube —
     the non-distributive case (round-5 verdict item 8): AVG of the
     (status, priority) pre-agg rows would be wrong (unweighted), so
-    ``_register_cube`` materializes hidden exact (sum, count)
-    components and ``cube_drill`` derives status-grain avg_price as
-    sum-of-sums / sum-of-counts with one final double division. The
+    the cube's private body (planned by ``CteRewriter``) carries hidden
+    exact (sum, count) components and ``cube_drill`` derives
+    status-grain avg_price as sum-of-sums / sum-of-counts with one
+    final double division. The
     oracle recomputes the same from the raw orders table, so the
     driver hash-checks that the derived-measure path is exact, not
     approximately-averaged. Reference cube hierarchies:
