@@ -147,7 +147,7 @@ _SOAK_NODEIDS = {
     "test_llmops8.py::TestX94PqRecall::test_matches_python_intersection",
     "test_property_dedup.py::test_containment_pairs_equals_brute_force",
     "test_llmops9.py::TestPQIndexCompact::test_compact_is_idempotent",
-    "test_index_meta.py::TestJoinFreeEncode::test_append_codes_match_km_assign_chain",
+    "test_index_meta.py::TestJoinFreeEncode::test_append_codes_match_python_argmin",
 }
 
 

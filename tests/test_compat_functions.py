@@ -5,10 +5,7 @@ Reference registry: wren-core/core/src/mdl/function/scalar/mod.rs:20-230.
 
 import pytest
 
-from wren_engine_spark.functions.compat import (
-    compat_function_names,
-    register_compat_functions,
-)
+from wren_engine_spark.functions.compat import register_compat_functions
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -81,8 +78,8 @@ def test_inlined_not_python(spark):
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
 
 
-def test_names_listed():
-    assert len(compat_function_names()) >= 25
+def test_names_listed(spark):
+    assert len(register_compat_functions(spark)) >= 25
 
 
 ARRAY_CASES = [

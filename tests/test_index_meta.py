@@ -11,6 +11,7 @@ items 2/4/5/6 + ADVICE):
   compaction cannot fold a crashed epoch's partial files.
 """
 
+import math
 import os
 
 import pytest
@@ -296,9 +297,9 @@ class TestJoinFreeEncode:
         plan = _plan(similarity._pq_encode(qdf, books, sub, meta.n_subspaces))
         assert "Join" not in plan and "Exchange" not in plan
 
-    def test_append_codes_match_km_assign_chain(self, spark, tmp_path):
-        # the single-projection encode must be bit-identical to the
-        # per-subspace _km_assign it replaced
+    def test_append_codes_match_python_argmin(self, spark, tmp_path):
+        # the single-projection encode must equal an independent
+        # pure-Python integer argmin per subspace, ties to the lowest id
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         base = emb.filter(F.col("vec_id") % 5 != 0)
         delta = emb.filter(F.col("vec_id") % 5 == 0)
@@ -314,13 +315,18 @@ class TestJoinFreeEncode:
             r["__id"]: (r["code_0"], r["code_1"])
             for r in spark.read.parquet(f"{path}/codes").collect()
         }
-        qdf = similarity._pq_quantize(delta, "vec_id", "embedding", meta.quantum)
-        for s in range(meta.n_subspaces):
-            sdf = qdf.select(
-                "__id", F.slice(F.col("qx"), s * sub + 1, sub).alias("qx")
-            )
-            for r in similarity._km_assign(sdf, books[s], meta.k_codes).collect():
-                assert got[r["__id"]][s] == r["cluster"]
+        q = float(meta.quantum)
+        rows = delta.collect()
+        assert rows
+        for r in rows:
+            qx = [math.floor(float(x) * q + 0.5) for x in r.embedding]
+            for s in range(meta.n_subspaces):
+                v = qx[s * sub : (s + 1) * sub]
+                dists = [
+                    sum((a - b) * (a - b) for a, b in zip(v, c)) for c in books[s]
+                ]
+                want = min(range(len(dists)), key=lambda c: (dists[c], c))
+                assert got[r.vec_id][s] == want, (r.vec_id, s)
 
 
 class TestLifecycleLocalFsGuard:

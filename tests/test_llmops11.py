@@ -23,7 +23,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, cross_session_deletes
+from tests.conftest import SF_DIR, clone_session, cross_session_deletes
 from wren_engine_spark.operators import layout, retrieval, similarity
 
 
@@ -573,6 +573,43 @@ class TestCrossSessionDelete:
             for tbl in (t, f"{t}__meta"):
                 layout.drop_managed_table(spark, tbl)
             layout.clear_tombstones(spark, t)
+
+    def test_simhash_probe_sees_other_session_append(self, spark):
+        # a probe that read the bucketed index before a cloned session
+        # (a foreachBatch microbatch) appended to it must see the rows
+        from wren_engine_spark.operators import dedup
+
+        t = "xsess_sh_append"
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        dedup.write_simhash_index(
+            docs.filter(F.col("doc_id") % 10 != 0), "text", "doc_id", t,
+            buckets=4,
+        )
+
+        def hits(sess):
+            delta = sess.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+                F.col("doc_id") % 10 == 0
+            )
+            return {
+                r.corpus_id
+                for r in dedup.simhash_index_probe(
+                    sess, t, delta, "text", "doc_id", max_hamming=3
+                ).collect()
+            }
+
+        try:
+            hits(spark)  # primes this session's view of the index files
+            clone = clone_session(spark)
+            copies = clone.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+                F.col("doc_id") % 10 == 0
+            ).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+            dedup.simhash_index_append(clone, t, copies, "text", "doc_id")
+            got = hits(spark)
+            assert got == hits(clone)
+            assert any(i >= 1_000_000 for i in got), "appended copies unseen"
+        finally:
+            for tbl in (t, f"{t}__meta"):
+                layout.drop_managed_table(spark, tbl)
 
 
 class TestHybridRRF:

@@ -22,7 +22,7 @@ Pins, per the round-5 discipline:
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, cross_session_deletes
+from tests.conftest import SF_DIR, clone_session, cross_session_deletes
 from wren_engine_spark.operators import layout, retrieval
 
 
@@ -45,6 +45,33 @@ def queries(docs):
 def _rows(df):
     return sorted(
         (r.query_id, r.rnk, r.doc_id, r.bm25) for r in df.collect()
+    )
+
+
+def _w5_hits(sess, t):
+    q = sess.createDataFrame([(99, "w5")], "doc_id BIGINT, text STRING")
+    return _rows(retrieval.bm25_index_probe(sess, t, q, "text", "doc_id", k=5))
+
+
+def _four_docs_then_clone_append(spark, t):
+    """Build a 4-doc index, probe it (which primes this session's view
+    of its files), then append 2 docs from a cloned session (what a
+    foreachBatch microbatch runs in)."""
+    retrieval.write_bm25_index(
+        spark.createDataFrame(
+            [(i, f"w{i} common") for i in range(1, 5)],
+            "doc_id BIGINT, text STRING",
+        ),
+        "text", "doc_id", t,
+    )
+    assert _w5_hits(spark, t) == []
+    clone = clone_session(spark)
+    retrieval.bm25_index_append(
+        clone, t,
+        clone.createDataFrame(
+            [(5, "w5 common"), (6, "w6 common")], "doc_id BIGINT, text STRING"
+        ),
+        "text", "doc_id",
     )
 
 
@@ -243,6 +270,42 @@ class TestBm25IndexDelete:
                 layout.drop_managed_table(spark, tbl)
             layout.clear_tombstones(spark, t)
             layout.clear_tombstones(spark, f"{t}__docs")
+
+    def test_probe_sees_other_session_append(self, spark):
+        t, want_t = "bm25_t_xappend", "bm25_t_xappend_want"
+        try:
+            _four_docs_then_clone_append(spark, t)
+            # the scores need the appended postings AND the appended
+            # __docs rows (N, avgdl): equal to a fresh 6-doc build
+            retrieval.write_bm25_index(
+                spark.createDataFrame(
+                    [(i, f"w{i} common") for i in range(1, 7)],
+                    "doc_id BIGINT, text STRING",
+                ),
+                "text", "doc_id", want_t,
+            )
+            got = _w5_hits(spark, t)
+            assert [r[2] for r in got] == [5]
+            assert got == _w5_hits(spark, want_t)
+        finally:
+            for base in (t, want_t):
+                for tbl in (base, f"{base}__docs", f"{base}__meta"):
+                    layout.drop_managed_table(spark, tbl)
+
+    def test_compact_keeps_other_session_append(self, spark):
+        t = "bm25_t_xcompact"
+        try:
+            _four_docs_then_clone_append(spark, t)
+            # compacting from the session that read the index before
+            # the append must rewrite every row, not the 4 it knew
+            retrieval.bm25_index_compact(spark, t)
+            fresh = spark.newSession()
+            assert fresh.table(t).select("doc_id").distinct().count() == 6
+            assert fresh.table(f"{t}__docs").count() == 6
+            assert [r[2] for r in _w5_hits(spark, t)] == [5]
+        finally:
+            for tbl in (t, f"{t}__docs", f"{t}__meta"):
+                layout.drop_managed_table(spark, tbl)
 
 
 class TestBm25IndexCompact:

@@ -555,10 +555,10 @@ class TestX85KmeansQuantized:
 
     def test_plan_assignment_is_join_free(self, spark):
         # the distance argmin must ride literal centroid arrays in-row:
-        # the training stages may shuffle only on the (cluster, dim)
-        # aggregation key, never join the corpus against a centroid
-        # relation
-        from wren_engine_spark.operators.similarity import _km_assign, _km_update
+        # a step of the one Lloyd loop may shuffle only on the
+        # (subspace, cluster, dim) aggregation key, never join the
+        # corpus against a centroid relation
+        from wren_engine_spark.operators.similarity import _lloyd_step
         from wren_engine_spark.queries.io import load_tables
 
         e = load_tables(spark, SF_DIR, "embeddings")["embeddings"]
@@ -570,7 +570,7 @@ class TestX85KmeansQuantized:
             ).alias("qx"),
         )
         cents = [list(r.qx) for r in q.orderBy("__id").limit(4).collect()]
-        upd = _km_update(_km_assign(q, cents, 4))
+        upd = _lloyd_step(q, [cents])
         plan = upd._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan  # assignment is literal-fold, join-free
         shuffles = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]

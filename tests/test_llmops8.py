@@ -754,43 +754,6 @@ class TestPersistedPqIndex:
         }
 
 
-class TestRobustStatsApproxDropIn:
-    def test_same_contract_and_within_one_gap_of_exact(self, spark):
-        from wren_engine_spark.queries.io import load_tables
-
-        e = load_tables(spark, SF_DIR, "events")["events"]
-        exact = {
-            r.event_type: r
-            for r in metrics.robust_stats(e, "event_type", "value").collect()
-        }
-        approx = {
-            r.event_type: r
-            for r in metrics.robust_stats_approx(
-                e, "event_type", "value", accuracy=10_000
-            ).collect()
-        }
-        assert set(exact) == set(approx)
-        import duckdb
-
-        raw = duckdb.sql(
-            f"SELECT event_type, value FROM "
-            f"read_parquet('{SF_DIR}/events.parquet')"
-        ).fetchall()
-        by_k = {}
-        for k, v in raw:
-            by_k.setdefault(k, []).append(math.floor(float(v) * 1e6 + 0.5))
-        for k, ex in exact.items():
-            ap = approx[k]
-            assert ap.n_values == ex.n_values
-            vals = sorted(by_k[k])
-            n = len(vals)
-            # sketch is exact below `accuracy`: approx med2 is twice an
-            # actual element adjacent to the exact median pair
-            gap_med = vals[(n + 2) // 2 - 1] - vals[(n + 1) // 2 - 1]
-            assert abs(ap.med2 - ex.med2) <= max(2 * gap_med, 2)
-            assert ap.mad4 >= 0
-
-
 class TestRingMonotonicity:
     def test_growth_only_moves_docs_to_new_shards(self):
         """The defining property of consistent hashing: growing the

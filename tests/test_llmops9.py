@@ -44,8 +44,7 @@ class TestX14TrainedIVF:
         ivf = {
             (r.query_id, r.rnk): r.neighbor_id
             for r in similarity.ivf_topk(
-                emb, "vec_id", "embedding", queries, dim=64,
-                k=4, nlist=4, nprobe=4, centroids=cents,
+                emb, "vec_id", "embedding", queries, cents, k=4, nprobe=4
             ).collect()
         }
         assert ivf == bf

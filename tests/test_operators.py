@@ -269,8 +269,7 @@ class TestANN:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
         )
         got = similarity.ivf_topk(
-            emb, "vec_id", "embedding", queries, dim=64,
-            k=_X55_K, nlist=_X55_NLIST, nprobe=_X55_NPROBE, centroids=cents,
+            emb, "vec_id", "embedding", queries, cents, k=_X55_K, nprobe=_X55_NPROBE
         )
         exp = _duckdb_oracle("x55_ivf_probe_portable")
         assert _by_rank(got.collect()) == _by_rank(exp) and exp
@@ -369,45 +368,12 @@ class TestNearDupAndIVF:
         # LSH blocks candidates, then scores exactly: never a false positive
         assert lsh <= exact
 
-    def test_ivf_full_probe_equals_brute_force(self, spark):
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-        )
-        bf = {
-            (r.query_id, r.rnk): r.neighbor_id
-            for r in similarity.cosine_topk(
-                emb, "vec_id", "embedding", queries, k=4
-            ).collect()
-        }
-        ivf = {
-            (r.query_id, r.rnk): r.neighbor_id
-            for r in similarity.ivf_topk(
-                emb, "vec_id", "embedding", queries, dim=64,
-                k=4, nlist=4, nprobe=4, iters=2,
-            ).collect()
-        }
-        assert ivf == bf
-
-    def test_kmeans_centroids_shape(self, spark):
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(100)
-        cents = similarity.kmeans_centroids(emb, "embedding", dim=64, nlist=5, iters=2)
-        assert len(cents) == 5
-        assert all(len(c) == 64 for c in cents)
-
 
 class TestMultimodalPlumbing:
     def _payloads(self, spark):
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
         from wren_engine_spark.operators import multimodal
         return multimodal.attach_binary_payload(docs, "text", "doc_id")
-
-    def test_resize_exact_output_size(self, spark):
-        from wren_engine_spark.operators import multimodal
-        out = multimodal.resize_stub(self._payloads(spark), width=16, height=8).collect()
-        assert out
-        assert all(len(r.payload) == 128 for r in out)
-        assert all(r.width == 16 and r.height == 8 for r in out)
 
     def test_frame_sample_fanout_matches_length(self, spark):
         from wren_engine_spark.operators import multimodal
@@ -689,22 +655,6 @@ class TestProfilingAndSampling:
         assert prof["doc_id"].n_distinct == n  # primary key
         assert prof["doc_id"].n_nulls == 0
         assert prof["lang"].n_distinct >= 1
-
-    def test_stratified_sample_proportions(self, spark):
-        from wren_engine_spark.operators import text as text_ops
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        sources = sorted(r.source for r in docs.select("source").distinct().collect())
-        keep, down = sources[0], sources[-1]
-        out = text_ops.stratified_sample(
-            docs, "source", {keep: 1.0, down: 0.2}, seed=7)
-        n_keep_in = docs.filter(F.col("source") == keep).count()
-        n_keep_out = out.filter(F.col("source") == keep).count()
-        n_down_in = docs.filter(F.col("source") == down).count()
-        n_down_out = out.filter(F.col("source") == down).count()
-        assert n_keep_out == n_keep_in          # fraction 1.0 keeps all
-        assert 0 < n_down_out < n_down_in       # downsampled
-        others = set(sources) - {keep, down}
-        assert out.filter(F.col("source").isin(*others)).count() == 0
 
 
 class TestClustersContaminationText:
@@ -1637,111 +1587,6 @@ class TestLshRecallBudget:
                 )
             )
             assert got == want, seed
-
-
-class TestBpe:
-    @staticmethod
-    def _ref_learn(words_freq, n_merges):
-        """Pure-Python reference: same greedy count->merge loop with
-        lexicographic tie-break and one left-to-right pass per merge."""
-        vocab = {tuple(list(w) + ["</w>"]): f for w, f in words_freq.items()}
-        merges = []
-        for _ in range(n_merges):
-            counts = {}
-            for syms, f in vocab.items():
-                for i in range(len(syms) - 1):
-                    counts[(syms[i], syms[i + 1])] = counts.get(
-                        (syms[i], syms[i + 1]), 0
-                    ) + f
-            if not counts:
-                break
-            pair = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            if counts[pair] < 2:
-                break
-            merges.append(pair)
-            a, b = pair
-            new_vocab = {}
-            for syms, f in vocab.items():
-                out, i = [], 0
-                for s in syms:
-                    if out and out[-1] == a and s == b:
-                        out[-1] = a + b
-                    else:
-                        out.append(s)
-                new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + f
-            vocab = new_vocab
-        return merges
-
-    def test_learned_merges_match_reference(self, spark):
-        corpus = [
-            (0, "low low lower lowest"),
-            (1, "new newer newest low"),
-            (2, "wide wider widest new new"),
-        ]
-        df = spark.createDataFrame(corpus, "doc_id LONG, text STRING")
-        from wren_engine_spark.operators import text as t
-
-        got = t.learn_bpe_merges(df, "text", n_merges=8)
-        freqs = {}
-        for _, line in corpus:
-            for w in line.split():
-                freqs[w] = freqs.get(w, 0) + 1
-        want = self._ref_learn(freqs, 8)
-        assert got == want and len(got) == 8
-
-    def test_escape_significant_symbols(self, spark):
-        """Tokens containing backslashes and quotes must survive the
-        merge-apply step (symbols are F.lit columns, not SQL text)."""
-        corpus = [
-            (0, r"a\b a\b a\b it's it's it's"),
-            (1, r"a\b it's a\b it's"),
-        ]
-        df = spark.createDataFrame(corpus, "doc_id LONG, text STRING")
-        from wren_engine_spark.operators import text as t
-
-        got = t.learn_bpe_merges(df, "text", n_merges=6)
-        freqs = {r"a\b": 5, "it's": 5}
-        want = self._ref_learn(freqs, 6)
-        assert got == want
-
-    def test_token_counts_match_reference_encoding(self, spark, docs):
-        from wren_engine_spark.operators import text as t
-
-        sub = docs.limit(40)
-        merges = t.learn_bpe_merges(sub, "text", n_merges=20)
-        out = {r.doc_id: (r.n_words, r.n_bpe_tokens)
-               for r in t.bpe_learned_token_count(sub, merges).collect()}
-        ranks = {m: i for i, m in enumerate(merges)}
-
-        def enc(w):
-            syms = list(w) + ["</w>"]
-            while len(syms) > 1:
-                cand = [
-                    (ranks[(syms[i], syms[i + 1])], i)
-                    for i in range(len(syms) - 1)
-                    if (syms[i], syms[i + 1]) in ranks
-                ]
-                if not cand:
-                    break
-                _, i = min(cand)
-                syms[i : i + 2] = [syms[i] + syms[i + 1]]
-            return len(syms)
-
-        import re
-
-        for r in sub.collect():
-            words = [w for w in re.split(r"[ \t\n\x0B\f\r]+", r.text.strip().lower()) if w]
-            assert out[r.doc_id] == (len(words), sum(enc(w) for w in words))
-
-    def test_merges_reduce_token_count(self, spark, docs):
-        from wren_engine_spark.operators import text as t
-
-        sub = docs.limit(30)
-        merges = t.learn_bpe_merges(sub, "text", n_merges=15)
-        none = {r.doc_id: r.n_bpe_tokens for r in t.bpe_learned_token_count(sub, []).collect()}
-        some = {r.doc_id: r.n_bpe_tokens
-                for r in t.bpe_learned_token_count(sub, merges).collect()}
-        assert sum(some.values()) < sum(none.values())
 
 
 class TestTrainingLayout:

@@ -1,35 +1,42 @@
 """Unit tests for the quote-aware SQL text helpers (no Spark needed)."""
 
 from wren_engine_spark.plans.sqltext import (
+    CODE,
+    LITERAL,
     identifiers,
+    lex,
     rewrite_outside_literals,
-    split_literals,
 )
 
 
+def _literals(sql):
+    return [s for s, kind in lex(sql) if kind == LITERAL]
+
+
 class TestSplitLiterals:
+    """``lex`` splits SQL text into code and string-literal spans."""
+
     def test_plain(self):
-        assert split_literals("SELECT 1") == [("SELECT 1", False)]
+        assert lex("SELECT 1") == [("SELECT 1", CODE)]
 
     def test_single_literal(self):
-        assert split_literals("a 'b' c") == [("a ", False), ("'b'", True), (" c", False)]
+        assert lex("a 'b' c") == [("a ", CODE), ("'b'", LITERAL), (" c", CODE)]
 
     def test_escaped_quote(self):
         # '' is an escaped quote INSIDE one literal
-        segs = split_literals("x = 'it''s' AND y")
-        assert segs == [("x = ", False), ("'it''s'", True), (" AND y", False)]
+        segs = lex("x = 'it''s' AND y")
+        assert segs == [("x = ", CODE), ("'it''s'", LITERAL), (" AND y", CODE)]
 
     def test_adjacent_literals(self):
-        segs = split_literals("'a' 'b'")
-        assert [s for s, lit in segs if lit] == ["'a'", "'b'"]
+        assert _literals("'a' 'b'") == ["'a'", "'b'"]
 
     def test_unterminated_literal(self):
-        segs = split_literals("a 'oops")
-        assert segs == [("a ", False), ("'oops", True)]
+        segs = lex("a 'oops")
+        assert segs == [("a ", CODE), ("'oops", LITERAL)]
 
     def test_roundtrip(self):
         sql = "SELECT 'he said \"hi\"', x FROM t WHERE s = 'don''t'"
-        assert "".join(s for s, _ in split_literals(sql)) == sql
+        assert "".join(s for s, _ in lex(sql)) == sql
 
 
 class TestRewriteOutsideLiterals:
@@ -72,9 +79,7 @@ class TestCommentsAndEscapes:
 
     def test_backslash_escaped_quote(self):
         # Spark's default parser honors \' inside literals
-        segs = split_literals(r"SELECT 'it\'s' AS v, x")
-        lits = [s for s, lit in segs if lit]
-        assert lits == [r"'it\'s'"]
+        assert _literals(r"SELECT 'it\'s' AS v, x") == [r"'it\'s'"]
         assert "x" in identifiers(r"SELECT 'it\'s' AS v, x")
 
     def test_identifier_in_block_comment_excluded(self):
@@ -87,8 +92,7 @@ class TestQuotedIdentifiersOpaque:
         import re
 
         sql = "SELECT \"a'b\" AS x, 'lit' FROM m"
-        segs = split_literals(sql)
-        assert [s for s, lit in segs if lit] == ["'lit'"]
+        assert _literals(sql) == ["'lit'"]
         out = rewrite_outside_literals(
             sql, lambda s: re.sub(r'"([^"]+)"', r"`\1`", s)
         )
@@ -96,8 +100,7 @@ class TestQuotedIdentifiersOpaque:
 
     def test_apostrophe_in_backtick_identifier(self):
         sql = "SELECT `it's` FROM m WHERE v = 'x'"
-        segs = split_literals(sql)
-        assert [s for s, lit in segs if lit] == ["'x'"]
+        assert _literals(sql) == ["'x'"]
         assert "it's" in identifiers(sql)
 
     def test_dashes_in_quoted_identifier_not_a_comment(self):
@@ -111,4 +114,4 @@ class TestQuotedIdentifiersOpaque:
 
     def test_roundtrip_with_quoted_identifiers(self):
         sql = "SELECT \"a'b\", `c'd`, 'e\"f' FROM t -- note's\nWHERE 1=1"
-        assert "".join(s for s, _ in split_literals(sql)) == sql
+        assert "".join(s for s, _ in lex(sql)) == sql

@@ -239,10 +239,6 @@ def register_compat_functions(spark: SparkSession, force: bool = False) -> list[
     return sorted(_SQL_FUNCTIONS)
 
 
-def compat_function_names() -> list[str]:
-    return sorted(_SQL_FUNCTIONS)
-
-
 # appended array family (reference nested fns, scalar/mod.rs:149-186)
 _SQL_FUNCTIONS.update(
     {

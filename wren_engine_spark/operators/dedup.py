@@ -697,24 +697,36 @@ def incremental_dedup(
     )
 
 
-# Portable Bloom probe positions: fold the fingerprint STRING through
-# the base-31 polynomial (as in simhash_portable), then k universal
-# hashes (a_s*h + b_s) mod m with fixed odd multipliers. Every product
-# stays under 2^63 (a_s < 2^32, h < 2^31), so Spark (ANSI) and DuckDB
-# compute identical positions — giving the bloom-screened pipeline an
-# exact SQL oracle (x33), unlike the xxhash64 mode.
+# Bloom probe positions: fold the fingerprint STRING through the
+# base-31 polynomial (as in simhash_portable), then k universal hashes
+# (a_s*h + b_s) mod m with fixed odd multipliers. Every product stays
+# under 2^63 (a_s < 2^32, h < 2^31), so Spark (ANSI) and DuckDB compute
+# identical positions — the bloom-screened pipeline has an exact SQL
+# oracle (x33).
 _BLOOM_A0, _BLOOM_DA = 2654435761, 40503
 _BLOOM_B0 = 97
 
 
-def _portable_pos(fp_col: str, seed_col: str, m_bits: int):
-    h = F.expr(
-        f"aggregate(transform(sequence(1, length({fp_col})), "
-        f"i -> ascii(substring({fp_col}, i, 1))), "
-        f"cast(0 as bigint), (acc, c) -> pmod(acc * 31 + c, 2147483647))"
+def _bloom_probes(df: DataFrame, k: int, m_bits: int) -> DataFrame:
+    """Every column of ``df`` (which carries the fingerprint ``__fp``)
+    once per probe seed 0..k-1, plus that probe's 64-bit ``word`` and
+    the ``__bit`` within it — the one position expression that both
+    the filter build and the probe run."""
+    probes = df.withColumn(
+        "__seed", F.explode(F.expr(f"sequence(0, {k - 1})"))
     )
-    a = F.lit(_BLOOM_A0) + F.lit(_BLOOM_DA) * F.col(seed_col)
-    return F.pmod(a * h + F.lit(_BLOOM_B0) + F.col(seed_col), F.lit(m_bits))
+    h = F.expr(
+        "aggregate(transform(sequence(1, length(__fp)), "
+        "i -> ascii(substring(__fp, i, 1))), "
+        "cast(0 as bigint), (acc, c) -> pmod(acc * 31 + c, 2147483647))"
+    )
+    a = F.lit(_BLOOM_A0) + F.lit(_BLOOM_DA) * F.col("__seed")
+    pos = F.pmod(a * h + F.lit(_BLOOM_B0) + F.col("__seed"), F.lit(m_bits))
+    return probes.select(
+        *df.columns,
+        (pos / 64).cast("long").alias("word"),
+        (pos % 64).cast("int").alias("__bit"),
+    )
 
 
 def bloom_table(
@@ -722,33 +734,21 @@ def bloom_table(
     fp_col: str,
     m_bits: int = 1 << 22,
     k: int = 5,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Build a Bloom filter AS A DISTRIBUTED TABLE: one row per 64-bit
     word of the bit array, ``(word BIGINT, bits BIGINT)``.
 
-    Each fingerprint sets ``k`` positions — ``xxhash64(fp, seed) mod m``
-    in the default mode, or the engine-portable polynomial universal
-    hash (``hash_mode='portable'``, SQL-oracle-checkable) — and
-    positions aggregate into word-level masks with ``bit_or`` (map-side
-    combinable — the per-partition partials are already word masks).
-    Unlike a driver-side sketch (``df.stat.bloomFilter``), this filter
-    never leaves the cluster and is mergeable across ingest runs by
-    unioning tables and re-bit_or'ing. Size: m/64 rows max (a few MB for
-    billions of bits), broadcastable at probe time.
+    Each fingerprint sets ``k`` positions of the engine-portable
+    polynomial universal hash (``_bloom_probes``, SQL-oracle-checkable),
+    and positions aggregate into word-level masks with ``bit_or``
+    (map-side combinable — the per-partition partials are already word
+    masks). Unlike a driver-side sketch (``df.stat.bloomFilter``), this
+    filter never leaves the cluster and is mergeable across ingest runs
+    by unioning tables and re-bit_or'ing. Size: m/64 rows max (a few MB
+    for billions of bits), broadcastable at probe time.
     """
-    probes = df.select(F.col(fp_col).alias("__fp")).select(
-        "__fp", F.explode(F.expr(f"sequence(0, {k - 1})")).alias("__seed")
-    )
-    if hash_mode == "portable":
-        pos = _portable_pos("__fp", "__seed", m_bits)
-    else:
-        pos = F.pmod(F.xxhash64(F.col("__fp"), F.col("__seed")), F.lit(m_bits))
     return (
-        probes.select(
-            (pos / 64).cast("long").alias("word"),
-            (pos % 64).cast("int").alias("__bit"),
-        )
+        _bloom_probes(df.select(F.col(fp_col).alias("__fp")), k, m_bits)
         .groupBy("word")
         .agg(
             F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), __bit))").alias("bits")
@@ -763,7 +763,6 @@ def bloom_incremental_dedup(
     id_col: str,
     m_bits: int = 1 << 22,
     k: int = 5,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Bloom-guarded incremental ingest dedup: returns batch docs that
     are DEFINITELY NEW (not content-identical to any corpus doc).
@@ -781,21 +780,10 @@ def bloom_incremental_dedup(
     (id, content_hash).
     """
     fp = F.md5(F.col(text_col).cast("binary")).alias("__fp")
-    bloom = bloom_table(corpus_df.select(fp), "__fp", m_bits, k, hash_mode)
-    batch = new_df.select(F.col(id_col), fp)
-    probes = batch.select(
-        id_col, "__fp", F.explode(F.expr(f"sequence(0, {k - 1})")).alias("__seed")
+    bloom = bloom_table(corpus_df.select(fp), "__fp", m_bits, k)
+    probed = _bloom_probes(new_df.select(F.col(id_col), fp), k, m_bits).join(
+        F.broadcast(bloom), "word", "left"
     )
-    if hash_mode == "portable":
-        pos = _portable_pos("__fp", "__seed", m_bits)
-    else:
-        pos = F.pmod(F.xxhash64(F.col("__fp"), F.col("__seed")), F.lit(m_bits))
-    probed = probes.select(
-        id_col,
-        "__fp",
-        (pos / 64).cast("long").alias("word"),
-        (pos % 64).cast("int").alias("__bit"),
-    ).join(F.broadcast(bloom), "word", "left")
     hit = F.when(
         F.col("bits").isNotNull()
         & (
@@ -830,8 +818,8 @@ def contamination(
     shingle volume, never test x train pairs. At 100 TB the train
     shingle set is the big side: keep the semi join shuffle-partitioned
     on the shingle (Spark does), or swap the exact semi join for a
-    Bloom/xxhash64 filter broadcast when approximate membership is
-    acceptable.
+    Bloom filter broadcast (``bloom_table``) when approximate
+    membership is acceptable.
     """
     tsh = shingle_arrays(test, text_col, id_col, n, unit).select(
         id_col, F.explode("__sh").alias("shingle")
@@ -1610,12 +1598,13 @@ def simhash_index_probe(
         )
     if bands <= max_hamming:
         raise ValueError("bands must exceed max_hamming for exact recall")
-    idx = spark.table(table)
     # tombstoned ids (simhash_index_delete) anti-join out — broadcast,
     # no extra shuffle; an index with no tombstones pays nothing
     from wren_engine_spark.operators import layout
 
-    idx = layout.without_tombstones(idx, "corpus_id", table)
+    idx = layout.without_tombstones(
+        layout.read_index_table(spark, table), "corpus_id", table
+    )
     q = _banded_signatures(delta, text_col, id_col, bands).select(
         F.col("corpus_id").alias("delta_id"),
         F.col("corpus_simhash").alias("__ds"),

@@ -158,8 +158,10 @@ def table_meta_row(spark, table: str):
     meta_tbl = f"{table}__meta"
 
     def load():
+        from wren_engine_spark.operators import layout
+
         if spark.catalog.tableExists(meta_tbl):
-            return spark.table(meta_tbl).collect()[0]
+            return layout.read_index_table(spark, meta_tbl).collect()[0]
         return None
 
     d = managed_table_dir(spark, meta_tbl)

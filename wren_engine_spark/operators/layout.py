@@ -77,6 +77,17 @@ def _hadoop_delete(spark, uri: str) -> None:
         fs.delete(loc, True)
 
 
+def read_index_table(spark, table: str) -> DataFrame:
+    """The rows of a catalog index table as they are now. A session's
+    relation cache keeps the file list it first read, so rows another
+    session appended since (a foreachBatch clone, a second client)
+    would stay invisible — and a compaction rewriting that stale list
+    would delete them for good. Refreshing first re-lists the files
+    (no Spark job)."""
+    spark.catalog.refreshTable(table)
+    return spark.table(table)
+
+
 def write_small_table(spark, df: DataFrame, table: str) -> str:
     """Persist a tiny (metadata-sized) managed table with the same
     stale-location hygiene as write_bucketed — used for the
@@ -333,7 +344,7 @@ def compact_bucketed(
     # renames left the data at {table}__old — restore it first
     if not spark.catalog.tableExists(table) and spark.catalog.tableExists(old):
         spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
-    df = spark.table(table)
+    df = read_index_table(spark, table)
     files_before = len(df.inputFiles())
     tmp = f"{table}__compacting"
     drop_managed_table(spark, tmp)
@@ -370,10 +381,7 @@ def compact_bucketed(
         spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
         spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
         drop_managed_table(spark, old)
-    # catalog caches the OLD table's file listing under this name —
-    # the swap happened behind the catalog's back, so refresh
-    spark.catalog.refreshTable(table)
-    files_after = len(spark.table(table).inputFiles())
+    files_after = len(read_index_table(spark, table).inputFiles())
     return {
         "files_before": files_before,
         "files_after": files_after,

@@ -422,49 +422,3 @@ def seasonality_profile(
             / F.sum("n_events").over(wk).cast("double")
         ).alias("share_of_key"),
     )
-
-
-def robust_stats_approx(
-    df: DataFrame,
-    key_col: str,
-    val_col: str,
-    quantum: int = 1_000_000,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Production drop-in for ``robust_stats``: same output contract
-    ((key, n_values, med2, mad4) — integer med2/mad4 a downstream
-    Hampel flag consumes unchanged), but the two medians come from
-    ``percentile_approx`` (Greenwald-Khanna) instead of exact rank
-    windows — no per-key fact sort, two map-side-combinable
-    aggregation passes, bounded sketch state per key. Rank error is
-    at most 1/accuracy of the group size; for groups smaller than
-    ``accuracy`` the sketch is exact, so the drop-in is
-    bit-equivalent to ``robust_stats`` there (pytest-pinned on the
-    bench fact). med2/mad4 keep the x-2/x-4 scaling: the approx
-    median element is doubled (it is an actual group element for
-    integer inputs), matching the rank-pair convention when n is odd
-    and differing by at most one inter-element gap when even.
-    """
-    q = df.select(
-        F.col(key_col).alias("__k"),
-        F.floor(F.col(val_col).cast("double") * F.lit(float(quantum)) + F.lit(0.5))
-        .cast("long")
-        .alias("__qv"),
-    )
-    med = q.groupBy("__k").agg(
-        F.count(F.lit(1)).cast("long").alias("n_values"),
-        (F.percentile_approx("__qv", 0.5, accuracy) * 2)
-        .cast("long")
-        .alias("med2"),
-    )
-    d = q.join(F.broadcast(med.select("__k", "med2")), "__k").withColumn(
-        "__dev2", F.abs(F.lit(2) * F.col("__qv") - F.col("med2"))
-    )
-    mad = d.groupBy("__k").agg(
-        (F.percentile_approx("__dev2", 0.5, accuracy) * 2)
-        .cast("long")
-        .alias("mad4")
-    )
-    return med.join(F.broadcast(mad), "__k").select(
-        F.col("__k").alias(key_col), "n_values", "med2", "mad4"
-    )

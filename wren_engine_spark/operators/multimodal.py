@@ -32,37 +32,6 @@ def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFram
     )
 
 
-RESIZE_SCHEMA = "doc_id BIGINT, payload BINARY, width INT, height INT, status STRING"
-
-
-def resize_stub(payloads: DataFrame, width: int = 64, height: int = 48) -> DataFrame:
-    """STUB image resize via mapInPandas: a real implementation calls
-    PIL.Image.resize per batch. The fake keeps width*height bytes of the
-    payload (truncate/tile) so output size is deterministic and the
-    Arrow batch shape matches a real resize (binary out, typed dims)."""
-    target = width * height
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def fake_resize(b: bytes) -> bytes:
-                if len(b) >= target:
-                    return bytes(b[:target])
-                reps = target // max(len(b), 1) + 1
-                return bytes((b * reps)[:target])
-
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"].map(fake_resize),
-                    "width": width,
-                    "height": height,
-                    "status": "stub_resized",
-                }
-            )
-
-    return payloads.select("doc_id", "payload").mapInPandas(_batches, RESIZE_SCHEMA)
-
-
 FRAME_SCHEMA = "doc_id BIGINT, frame_idx BIGINT, frame_bytes BIGINT, status STRING"
 
 

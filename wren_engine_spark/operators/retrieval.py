@@ -583,7 +583,11 @@ def write_bm25_index(
         "tok",
         buckets,
     )
-    posted = spark.table(table).groupBy("doc_id").agg(F.max("dl").alias("dl"))
+    posted = (
+        layout.read_index_table(spark, table)
+        .groupBy("doc_id")
+        .agg(F.max("dl").alias("dl"))
+    )
     residual = (
         df.select(F.col(id_col).alias("doc_id"))
         .join(
@@ -601,13 +605,6 @@ def write_bm25_index(
         "doc_id",
         doc_buckets,
     )
-    # The read-back above primes THIS session's data-source relation
-    # cache with the build-time file listing. Appends issued from a
-    # CLONED session (streaming foreachBatch, t18) invalidate only the
-    # clone's cache, so a later probe in this session would silently
-    # read the build-time snapshot. Drop the entry — exactly the cache
-    # state the pre-read-back build left behind.
-    spark.catalog.refreshTable(table)
     layout.clear_tombstones(spark, table)
     layout.clear_tombstones(spark, f"{table}__docs")
     layout.write_small_table(
@@ -818,9 +815,13 @@ def _bm25_index_state(spark, table: str):
             f"bm25 index '{table}' has no __meta sidecar; "
             "rebuild it with write_bm25_index"
         )
-    postings = layout.without_tombstones(spark.table(table), "doc_id", table)
+    postings = layout.without_tombstones(
+        layout.read_index_table(spark, table), "doc_id", table
+    )
     docs = layout.without_tombstones(
-        spark.table(f"{table}__docs"), "doc_id", f"{table}__docs"
+        layout.read_index_table(spark, f"{table}__docs"),
+        "doc_id",
+        f"{table}__docs",
     )
     totals = docs.agg(
         F.count(F.lit(1)).cast("double").alias("__n"),

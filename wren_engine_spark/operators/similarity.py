@@ -477,44 +477,6 @@ def _exact_blocked_pairs(
     ).filter(F.col("cosine_sim") >= threshold)
 
 
-def kmeans_centroids(
-    df: DataFrame, vec_col: str, dim: int, nlist: int = 16, iters: int = 5
-) -> list[list[float]]:
-    """Lloyd's k-means over an embedding column, pure DataFrame ops.
-
-    Initialization is deterministic (first ``nlist`` vectors in id-less
-    row order after a stable sort on the vector bytes). Each iteration
-    is one narrow assign map (``_assign_lists``) + one groupBy mean — at
-    100 TB that is ``iters`` passes over the corpus with only
-    centroid-sized state on the driver (nlist x dim floats).
-    """
-    first = [
-        r[0]
-        for r in df.select(F.col(vec_col))
-        .orderBy(F.to_json(F.col(vec_col)))
-        .limit(nlist)
-        .collect()
-    ]
-    centroids = [[float(x) for x in v] for v in first]
-    for _ in range(iters):
-        assigned = _assign_lists(df, vec_col, centroids).select(
-            "__list", F.col(vec_col).alias("__v")
-        )
-        # mean per cluster: aggregate each dimension via posexplode
-        means = (
-            assigned.select("__list", F.posexplode("__v").alias("__d", "__x"))
-            .groupBy("__list", "__d")
-            .agg(F.avg("__x").alias("__m"))
-            .groupBy("__list")
-            .agg(F.array_sort(F.collect_list(F.struct("__d", "__m"))).alias("__ms"))
-            .select("__list", F.expr("transform(__ms, s -> s.__m)").alias("centroid"))
-            .collect()
-        )
-        new = {r["__list"]: [float(x) for x in r["centroid"]] for r in means}
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
-    return centroids
-
-
 def _assign_lists(df: DataFrame, vec_col: str, centroids: list[list[float]]):
     """Attach __list = argmin_c L2(vec, centroid_c) through the Arrow
     argmin kernel — one narrow map, no shuffle. The distance folds in
@@ -529,21 +491,24 @@ def ivf_topk(
     id_col: str,
     vec_col: str,
     query_df: DataFrame,
-    dim: int,
+    centroids: list[list[float]],
     k: int = 5,
-    nlist: int = 8,
     nprobe: int = 2,
-    iters: int = 4,
     round_digits: int = 6,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate nearest neighbors.
+    """IVF (inverted-file) approximate nearest neighbors over a given
+    coarse quantizer: the corpus partitions into one inverted list per
+    centroid, and each query scans only its ``nprobe`` nearest lists —
+    the classic IVF-Flat trade: recall vs fraction of corpus scanned
+    (~nprobe/len(centroids)). With nprobe == len(centroids) the result
+    is exactly brute force (tested against cosine_topk).
 
-    Train a k-means coarse quantizer, partition the corpus into
-    ``nlist`` inverted lists, and for each query scan only the
-    ``nprobe`` nearest lists — the classic IVF-Flat trade: recall vs
-    fraction of corpus scanned (~nprobe/nlist). With nprobe == nlist
-    the result is exactly brute force (tested against cosine_topk).
+    The centroids come from the caller: x14 trains them with
+    ``kmeans_quantized`` (bit-exact integer Lloyd), x55 seeds them with
+    the first vectors by id, so the whole assignment->probe->score path
+    is SQL-oracle-checkable. The corpus assignment (every row) runs the
+    Arrow argmin kernel; the query-side probe ranking stays one SQL
+    expression — the query set is tiny by design.
 
     At 100 TB the corpus is hash-partitioned by __list so a probe
     touches only matching partitions; queries are broadcast.
@@ -552,14 +517,6 @@ def ivf_topk(
     """
     from pyspark.sql import Window as W
 
-    if centroids is None:
-        centroids = kmeans_centroids(df, vec_col, dim, nlist, iters)
-    # explicit `centroids` skips training: the seeded-centroid portable
-    # mode (x55) probes with externally-fixed centroids so the whole
-    # assignment->probe->score path is SQL-oracle-checkable. The corpus
-    # assignment (every row) runs the Arrow argmin kernel; the
-    # query-side probe ranking stays one SQL expression — the query set
-    # is tiny by design.
     corpus = _assign_lists(with_norm(df, vec_col, "__vn"), vec_col, centroids).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v"), "__vn", "__list"
     )
@@ -822,8 +779,8 @@ def semantic_dedup(
     choice, our ivf_topk's coarse quantizer), it is data-independent
     and exact-arithmetic, so the entire operator — clustering, pairing,
     keep rule — is reproducible bit-for-bit by a SQL oracle. Swap in
-    ``kmeans_centroids``-based assignment for production corpora where
-    learned clusters balance better.
+    ``kmeans_quantized`` centroids (the one Lloyd trainer, bit-exact)
+    for production corpora where learned clusters balance better.
 
     Scale: one shuffle on cluster_id for the self-join; within-cluster
     work is quadratic in CLUSTER size, bounded by choosing prefix_bits
@@ -1134,12 +1091,13 @@ def ann_index_topk(
             "rebuild it with write_ann_index, or pass allow_legacy=True "
             "to probe a pre-meta index with caller parameters"
         )
-    idx = spark.table(table)
+    from wren_engine_spark.operators import layout
+
+    idx = layout.read_index_table(spark, table)
     if where is not None:
         idx = idx.filter(where)
     # tombstoned ids (ann_index_delete) anti-join out — broadcast, no
     # extra shuffle; an index with no tombstones pays nothing
-    from wren_engine_spark.operators import layout
 
     idx = layout.without_tombstones(idx, id_col, table)
     # materialize the BOUNDED query side's signatures driver-side (the
@@ -1335,110 +1293,29 @@ def kmeans_quantized(
     iters: int = 2,
     quantum: int = 1_000_000,
 ) -> DataFrame:
-    """Lloyd k-means with a bit-exact cross-engine oracle — the
-    deterministic twin of the float Lloyd trainer (kmeans_centroids),
-    and since r7 the trainer behind x14's oracle-checked IVF:
-    every quantity an iteration produces is either an exact integer or
-    a double computed in one fixed operation order, so an unrolled SQL
-    replay reproduces the training bit-for-bit.
-
-    - Vectors quantize to integers once (floor(x*quantum + 0.5), the
-      x45/x80 half-up).
-    - Init: the quantized vectors of the ``k`` smallest ids.
-    - Assign: exact integer squared-L2 argmin, ties to the lowest
-      cluster id — computed IN-ROW against the k x dim literal
-      centroid arrays (no join, no shuffle).
-    - Update: per-(cluster, dim) integer sums (map-side combinable; at
-      most k*dim reduce-side groups at any corpus size), centroid =
-      floor(sum/n) via the identical IEEE double division both
-      engines run; an emptied cluster keeps its previous centroid.
-    - The iteration barrier moves k*dim scalars to the driver — the
-      same bounded-state pattern as x14's convergence scalars.
+    """Lloyd k-means with a bit-exact cross-engine oracle (x85), and
+    the trainer behind x14's oracle-checked IVF: the vectors quantize
+    to integers once (floor(x*quantum + 0.5), the x45/x80 half-up),
+    then the one integer Lloyd loop (``_lloyd``) trains ``k``
+    centroids over whole vectors. Every quantity an iteration produces
+    is an exact integer or a double computed in one fixed operation
+    order, so an unrolled SQL replay reproduces the training
+    bit-for-bit.
 
     Returns (cluster, dim, centroid_q, n_members): the post-``iters``
     centroids (quantized units) and the member counts of the
     assignment that produced them.
     """
-    q = float(quantum)
-    qdf = df.select(
-        F.col(id_col).alias("__id"),
-        F.expr(
-            f"transform({vec_col}, x -> cast(floor(cast(x as double) * {q!r} "
-            f"+ 0.5) as bigint))"
-        ).alias("qx"),
+    (cents,), (counts,) = _lloyd(
+        _pq_quantize(df, id_col, vec_col, quantum), k, iters
     )
-    cents = [list(r.qx) for r in qdf.orderBy("__id").limit(k).collect()]
-    if len(cents) < k:
-        # the init collect already materialized this information — a
-        # loud error here protects every caller (x85, IVF, IVF-PQ)
-        # from the cryptic downstream IndexError for free
-        raise ValueError(
-            f"kmeans_quantized needs at least k={k} vectors to seed "
-            f"the centroids; corpus has {len(cents)}"
-        )
-    dim = len(cents[0])
-    counts: list[int] = [0] * k
-
-    for _ in range(iters):
-        upd = _km_update(_km_assign(qdf, cents, k))
-        got = {(r.cluster, r.dim): (r.val, r.n) for r in upd.collect()}
-        counts = [0] * k
-        for c in range(k):
-            if (c, 0) in got:
-                cents[c] = [got[(c, d)][0] for d in range(dim)]
-                counts[c] = got[(c, 0)][1]
     rows = [
-        (c, d, int(cents[c][d]), int(counts[c]))
-        for c in range(k)
-        for d in range(dim)
+        (c, d, v, counts[c])
+        for c, cent in enumerate(cents)
+        for d, v in enumerate(cent)
     ]
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return df.sparkSession.createDataFrame(
         rows, "cluster INT, dim INT, centroid_q BIGINT, n_members BIGINT"
-    )
-
-
-def _km_assign(qdf: DataFrame, centroids: list[list[int]], k: int) -> DataFrame:
-    """One Lloyd assignment pass: exact integer squared-L2 argmin of
-    each row's ``qx`` against the k LITERAL centroid arrays, ties to
-    the lowest cluster id. Join-free by construction — the centroids
-    ride the plan as literals, so the corpus is never joined or
-    shuffled to be assigned."""
-    lits = [
-        F.array(*[F.lit(int(v)).cast("bigint") for v in c]) for c in centroids
-    ]
-    dists = [
-        F.aggregate(
-            F.zip_with(F.col("qx"), lit_c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        for lit_c in lits
-    ]
-    best = F.struct(dists[0].alias("d"), F.lit(0).cast("int").alias("c"))
-    for i in range(1, k):
-        cand = F.struct(dists[i].alias("d"), F.lit(i).cast("int").alias("c"))
-        best = F.when(cand["d"] < best["d"], cand).otherwise(best)
-    return qdf.select("__id", "qx", best["c"].alias("cluster"))
-
-
-def _km_update(assigned: DataFrame) -> DataFrame:
-    """One Lloyd update pass: per-(cluster, dim) integer sums — map-side
-    combinable, at most k*dim reduce-side groups at any corpus size —
-    and the centroid division as the single IEEE double op both engines
-    run (floor(sum/n))."""
-    return (
-        assigned.select("cluster", F.posexplode("qx").alias("dim", "qv"))
-        .groupBy("cluster", "dim")
-        .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "cluster",
-            "dim",
-            F.floor(F.col("s").cast("double") / F.col("n").cast("double"))
-            .cast("bigint")
-            .alias("val"),
-            "n",
-        )
     )
 
 
@@ -1530,80 +1407,102 @@ def _pq_quantize(df: DataFrame, id_col: str, vec_col: str, quantum: int) -> Data
     )
 
 
-def _train_pq(
-    qdf: DataFrame, n_subspaces: int, k_codes: int, iters: int
-) -> tuple[list[list[list[int]]], DataFrame, int, int]:
-    """Train the per-subspace quantized-Lloyd codebooks and encode the
-    corpus — the SINGLE implementation behind pq_topk and
-    write_pq_index, so the inline and persisted paths cannot drift
-    (their bit-identity is a pytest-pinned contract). Returns
-    (codebooks, codes_df(__id, __code_0..), dim, sub)."""
-    first = qdf.orderBy("__id").limit(k_codes).collect()
-    if len(first) < k_codes:
+def _lloyd_step(qdf: DataFrame, cents: list[list[list[int]]]) -> DataFrame:
+    """One Lloyd pass over the (__id, qx) integer vectors: each vector
+    explodes into its ``len(cents)`` subspace slices (the vectors are
+    read once, total exploded bytes == one full pass), each slice is
+    assigned in-row by ``_pq_argmin`` against its subspace's literal
+    centroids (join-free), and one (__s, cluster, dim) aggregation of
+    integer sums — map-side combinable, at most n_subspaces*k*dim
+    reduce groups at any corpus size — yields the new centroid
+    val = floor(sum/n) (the one IEEE double division both engines run)
+    and the member count n. Returns (__s, cluster, dim, val, n)."""
+    sub = len(cents[0][0])
+    parts = qdf.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).cast("int").alias("s"),
+                        F.slice(F.col("qx"), s * sub + 1, sub).alias("qx"),
+                    )
+                    for s in range(len(cents))
+                ]
+            )
+        ).alias("p")
+    ).select(F.col("p.s").alias("__s"), F.col("p.qx").alias("qx"))
+    cl = _pq_argmin(F.col("qx"), cents[0])
+    for s in range(1, len(cents)):
+        cl = F.when(
+            F.col("__s") == s, _pq_argmin(F.col("qx"), cents[s])
+        ).otherwise(cl)
+    return (
+        parts.select("__s", cl.alias("cluster"), "qx")
+        .select("__s", "cluster", F.posexplode("qx").alias("dim", "qv"))
+        .groupBy("__s", "cluster", "dim")
+        .agg(F.sum("qv").alias("sm"), F.count(F.lit(1)).alias("n"))
+        .select(
+            "__s",
+            "cluster",
+            "dim",
+            F.floor(F.col("sm").cast("double") / F.col("n").cast("double"))
+            .cast("bigint")
+            .alias("val"),
+            "n",
+        )
+    )
+
+
+def _lloyd(
+    qdf: DataFrame, k: int, iters: int, n_subspaces: int = 1, k_name: str = "k"
+) -> tuple[list[list[list[int]]], list[list[int]]]:
+    """The one integer Lloyd k-means, behind ``kmeans_quantized`` (x85,
+    x14), the PQ codebooks and the IVF-PQ coarse quantizer. ``qdf``
+    holds quantized (__id, qx) vectors (``_pq_quantize``); each splits
+    into ``n_subspaces`` equal slices and every subspace trains its own
+    ``k`` centroids in the same corpus pass (``_lloyd_step``).
+
+    Init: the slices of the ``k`` smallest ids. An emptied cluster
+    keeps its centroid. Each iteration moves n_subspaces*k*dim scalars
+    through ONE collect — bounded driver state at any corpus size.
+    Returns (cents[s][c], counts[s][c]): the trained centroids and the
+    member counts of the last assignment (all 0 when ``iters`` is 0)."""
+    first = qdf.orderBy("__id").limit(k).collect()
+    if len(first) < k:
+        # the init collect already materialized this information — a
+        # loud error here protects every caller from the cryptic
+        # downstream IndexError for free
         raise ValueError(
-            f"PQ needs at least k_codes={k_codes} vectors to seed the "
-            f"codebooks; corpus has {len(first)}"
+            f"Lloyd k-means needs at least {k_name}={k} vectors to seed "
+            f"the centroids; corpus has {len(first)}"
         )
     dim = len(first[0].qx)
     if dim % n_subspaces != 0:
         raise ValueError(f"dim {dim} not divisible into {n_subspaces} subspaces")
     sub = dim // n_subspaces
-    cents: list[list[list[int]]] = [
+    cents = [
         [list(r.qx)[s * sub : (s + 1) * sub] for r in first]
         for s in range(n_subspaces)
     ]
-    # All subspaces train in ONE corpus pass per Lloyd iteration: each
-    # row explodes into its n_subspaces (subspace, subvector) pieces —
-    # the embedding column is read once, total exploded bytes == one
-    # full pass — the per-subspace integer argmin rides a CASE on the
-    # subspace tag (the exact `_km_assign`/`_pq_argmin` kernel, all
-    # centroids literal, join-free), and one (subspace, cluster, dim)
-    # aggregation + ONE collect per iteration moves the
-    # n_subspaces*k*dim update scalars through the Lloyd barrier
-    # (previously one corpus pass + one driver barrier PER SUBSPACE
-    # per iteration).
-    if iters > 0:
-        sdf_all = qdf.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).cast("int").alias("s"),
-                            F.slice(F.col("qx"), s * sub + 1, sub).alias("qx"),
-                        )
-                        for s in range(n_subspaces)
-                    ]
-                )
-            ).alias("p")
-        ).select(F.col("p.s").alias("__s"), F.col("p.qx").alias("qx"))
-        for _ in range(iters):
-            cl = _pq_argmin(F.col("qx"), cents[0])
-            for s in range(1, n_subspaces):
-                cl = F.when(
-                    F.col("__s") == s, _pq_argmin(F.col("qx"), cents[s])
-                ).otherwise(cl)
-            upd = (
-                sdf_all.select("__s", cl.alias("cluster"), "qx")
-                .select("__s", "cluster", F.posexplode("qx").alias("dim", "qv"))
-                .groupBy("__s", "cluster", "dim")
-                .agg(F.sum("qv").alias("sm"), F.count(F.lit(1)).alias("n"))
-                .select(
-                    "__s",
-                    "cluster",
-                    "dim",
-                    F.floor(
-                        F.col("sm").cast("double") / F.col("n").cast("double")
-                    )
-                    .cast("bigint")
-                    .alias("val"),
-                )
-            )
-            got = {(r["__s"], r.cluster, r.dim): r.val for r in upd.collect()}
-            for s in range(n_subspaces):
-                for c in range(k_codes):
-                    if (s, c, 0) in got:
-                        cents[s][c] = [got[(s, c, d)] for d in range(sub)]
-    codebooks = [[[int(v) for v in c] for c in cs] for cs in cents]
+    counts = [[0] * k for _ in range(n_subspaces)]
+    for _ in range(iters):
+        counts = [[0] * k for _ in range(n_subspaces)]
+        for r in _lloyd_step(qdf, cents).collect():
+            cents[r["__s"]][r.cluster][r.dim] = r.val
+            counts[r["__s"]][r.cluster] = r.n
+    return cents, counts
+
+
+def _train_pq(
+    qdf: DataFrame, n_subspaces: int, k_codes: int, iters: int
+) -> tuple[list[list[list[int]]], DataFrame, int, int]:
+    """Train the per-subspace codebooks (``_lloyd``) and encode the
+    corpus — the SINGLE implementation behind pq_topk and
+    write_pq_index, so the inline and persisted paths cannot drift
+    (their bit-identity is a pytest-pinned contract). Returns
+    (codebooks, codes_df(__id, __code_0..), dim, sub)."""
+    codebooks, _counts = _lloyd(qdf, k_codes, iters, n_subspaces, "k_codes")
+    sub = len(codebooks[0][0])
     # encode with the frozen codebooks in ONE projection (`_pq_encode`
     # — every subspace's argmin side by side, join-free and
     # shuffle-free; append ≡ rebuild-encode is already the
@@ -1615,7 +1514,7 @@ def _train_pq(
         "__id",
         *[F.col(f"code_{s}").alias(f"__code_{s}") for s in range(n_subspaces)],
     )
-    return codebooks, codes, dim, sub
+    return codebooks, codes, sub * n_subspaces, sub
 
 
 def _adc_tables(query_df: DataFrame, codebooks, sub: int, quantum: int):
@@ -1883,10 +1782,10 @@ def pq_index_topk(
 
 def _pq_argmin(vec, centroids: list[list[int]]):
     """Integer squared-L2 argmin of the array column ``vec`` against
-    literal centroid arrays, ties to the lowest cluster id — the
-    ``_km_assign`` kernel as a bare Column, so ONE projection can
-    encode every subspace of a vector at once (``_km_assign`` stays
-    the training-loop entry, which assigns whole rows)."""
+    literal centroid arrays, ties to the lowest cluster id: the one
+    integer assignment kernel — the Lloyd step, the encodes and the
+    IVF-PQ cell assignment all call it, and as a bare Column ONE
+    projection can encode every subspace of a vector at once."""
     dists = [
         F.aggregate(
             F.zip_with(
@@ -1933,7 +1832,7 @@ def pq_index_append(
     """Append a batch of new vectors to a persisted PQ index WITHOUT
     retraining: encode the batch with the index's FROZEN codebooks —
     the in-row integer argmin against literal centroid arrays
-    (``_km_assign``, join-free and shuffle-free by construction) —
+    (``_pq_argmin``, join-free and shuffle-free by construction) —
     and append the resulting codes to ``{path}/codes``. Codebooks and
     meta are never touched: appended rows probe through the identical
     ADC tables as build-time rows, so append ≡ rebuild-encode under
@@ -2244,15 +2143,15 @@ def ivfpq_topk(
     Bit-exact cross-engine by construction, because every stage stays
     in the quantized-integer domain:
 
-    - coarse training is the quantized-Lloyd iteration
-      (``kmeans_quantized`` — x85's bit-exact machinery);
+    - coarse training is the one integer Lloyd loop (``_lloyd`` —
+      x85's bit-exact machinery);
     - corpus assignment is the in-row integer argmin against literal
-      centroids (``_km_assign`` — join-free, shuffle-free);
+      centroids (``_pq_argmin`` — join-free, shuffle-free);
     - the residual is EXACT integer subtraction qx - centroid_q[list]
       (no float re-quantization anywhere), one narrow projection with
       the centroid matrix riding the plan as an array literal;
     - PQ codebooks train on the residuals with the same quantized
-      Lloyd per subspace (``_train_pq``), and the corpus encodes in
+      Lloyd loop per subspace (``_train_pq``), and the corpus encodes in
       ONE join-free projection (``_pq_argmin`` per subspace);
     - probing ranks candidates by summed integer ADC table lookups,
       where each (query, probed list) pair gets its own table built
@@ -2309,20 +2208,15 @@ def _ivfpq_train(
 ):
     """The SINGLE IVF-PQ training implementation behind ivfpq_topk and
     write_ivfpq_index (the ``_train_pq`` cannot-drift discipline):
-    1) coarse quantizer via the bit-exact quantized Lloyd (k*dim
-    driver scalars), 2) assign + exact-integer residual in one narrow
-    pass, 3) residual PQ codebooks per subspace. Returns
-    (coarse, books, sub, rdf) where rdf is the (__id, __list,
+    quantize once, then 1) the coarse quantizer via the one integer
+    Lloyd loop (k*dim driver scalars), 2) assign + exact-integer
+    residual in one narrow pass, 3) residual PQ codebooks per subspace.
+    Returns (coarse, books, sub, rdf) where rdf is the (__id, __list,
     qx=residual) frame the encode consumes. A corpus smaller than
-    nlist fails loudly inside kmeans_quantized's own seed collect —
-    no extra Spark job here."""
-    km = kmeans_quantized(
-        df, id_col, vec_col, k=nlist, iters=coarse_iters, quantum=quantum
-    )
-    got = {(r.cluster, r.dim): int(r.centroid_q) for r in km.collect()}
-    dim = 1 + max(d for _, d in got)
-    coarse = [[got[(c, d)] for d in range(dim)] for c in range(nlist)]
+    nlist fails loudly inside the loop's own seed collect — no extra
+    Spark job here."""
     qdf = _pq_quantize(df, id_col, vec_col, quantum)
+    (coarse,), _counts = _lloyd(qdf, nlist, coarse_iters)
     rdf = _ivfpq_residuals(qdf, coarse)
     books, _codes, _dimr, sub = _train_pq(rdf, n_subspaces, k_codes, pq_iters)
     return coarse, books, sub, rdf
@@ -2330,19 +2224,21 @@ def _ivfpq_train(
 
 def _ivfpq_residuals(qdf: DataFrame, coarse: list[list[int]]) -> DataFrame:
     """Coarse-assign + exact-integer residual in one narrow pass:
-    in-row argmin against the literal centroids (``_km_assign``), then
+    in-row argmin against the literal centroids (``_pq_argmin``), then
     ``qx - centroid_q[cell]`` with the centroid matrix riding the plan
     as an array-of-arrays literal — no join, no shuffle. Returns
     (__id, __list, qx=residual)."""
     cent_arr = F.array(
         *[F.array(*[F.lit(int(v)).cast("bigint") for v in c]) for c in coarse]
     )
-    return _km_assign(qdf, coarse, len(coarse)).select(
+    return qdf.select(
+        "__id", _pq_argmin(F.col("qx"), coarse).alias("__list"), "qx"
+    ).select(
         "__id",
-        F.col("cluster").alias("__list"),
+        "__list",
         F.zip_with(
             F.col("qx"),
-            F.element_at(cent_arr, F.col("cluster") + 1),
+            F.element_at(cent_arr, F.col("__list") + 1),
             lambda a, b: a - b,
         ).alias("qx"),
     )

@@ -289,17 +289,6 @@ def pack_sequences(
     )
 
 
-def stratified_sample(
-    df: DataFrame, stratum_col: str, fractions: dict[str, float], seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (``sampleBy``): the standard
-    corpus re-balancing step (e.g. downsample over-represented sources).
-    Seeded and executor-deterministic for a fixed partition layout;
-    statistical properties are asserted in tests rather than exact
-    row sets."""
-    return df.sampleBy(stratum_col, fractions, seed)
-
-
 # Knuth multiplicative constant; the pre-modulus keeps the product well
 # inside int64 so ANSI-mode Spark and DuckDB both evaluate it exactly
 _DET_SAMPLE_MULT = 2654435761
@@ -916,145 +905,6 @@ def curation_provenance(
             )
         ).alias("kept"),
         reason.alias("reject_reason"),
-    )
-
-
-def learn_bpe_merges(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 50,
-) -> list[tuple[str, str]]:
-    """Learn a byte-pair-encoding merge table from the corpus (Sennrich
-    et al. 2016): ``n_merges`` rounds of count-all-adjacent-symbol-pairs
-    -> merge the most frequent. The real algorithm, distributed: each
-    round is one explode + one map-side-combinable groupBy over symbol
-    pairs; driver state is the merge table only (like kmeans_centroids'
-    centroid pulls — the reference pattern for iterative training).
-    Ties break lexicographically so learning is deterministic.
-
-    Returns the ordered merge list [(left, right), ...].
-    """
-    words = (
-        df.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), WS_RE)
-            ).alias("w")
-        )
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # symbol sequence per distinct word: chars + terminal marker
-    words = words.select(
-        F.concat(
-            F.split(F.col("w"), ""), F.array(F.lit("</w>"))
-        ).alias("syms"),
-        "freq",
-        # LAZY checkpoint: the first merge round's top-pair collect
-        # materializes (and persists) the word table in the same job,
-        # halving the driver actions per BPE merge vs eager+collect
-    ).localCheckpoint(eager=False)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs = (
-            words.filter(F.size("syms") >= 2).select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(element_at(syms, i) AS a, element_at(syms, i + 1) AS b))"
-                    )
-                ).alias("p"),
-                "freq",
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not pairs or pairs[0]["n"] < 2:
-            break
-        a, b = pairs[0]["a"], pairs[0]["b"]
-        merges.append((a, b))
-        merged = a + b
-        # apply the merge to every word's symbol sequence (single
-        # left-to-right pass, same semantics as the sequential
-        # algorithm). Symbols enter as F.lit() columns, never as SQL
-        # text — a corpus token containing quotes or backslashes
-        # (escape-significant in Spark SQL literals) would corrupt an
-        # interpolated expression
-        words = words.select(
-            F.aggregate(
-                "syms",
-                F.array(F.lit(None).cast("string")),
-                lambda acc, s: F.when(
-                    (F.element_at(acc, -1) == F.lit(a)) & (s == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - F.lit(1)),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(s))),
-                lambda acc: F.slice(acc, F.lit(2), F.size(acc) - F.lit(1)),
-            ).alias("syms"),
-            "freq",
-            # lazy: materialized by the next round's collect (one job
-            # per merge instead of two); a final unconsumed round's
-            # checkpoint is simply never computed
-        ).localCheckpoint(eager=False)
-    return merges
-
-
-def bpe_learned_token_count(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a LEARNED BPE merge table to count real BPE tokens per
-    document (the exact tokenizer-application semantics, vs x19's
-    regex approximation): each word starts as characters + '</w>' and
-    merges apply in priority order until none fires. Arrow-batched
-    mapInPandas with a per-batch LRU over distinct words — the standard
-    trick that makes tokenization throughput follow DISTINCT words, not
-    corpus tokens. Returns (id, n_words, n_bpe_tokens)."""
-    ranks = {tuple(m): i for i, m in enumerate(merges)}
-    import re as _re
-
-    ws_re = _re.compile(WS_RE)
-
-    def encode_word(w, cache):
-        got = cache.get(w)
-        if got is not None:
-            return got
-        syms = list(w) + ["</w>"]
-        while len(syms) > 1:
-            best, bi = None, None
-            for i in range(len(syms) - 1):
-                r = ranks.get((syms[i], syms[i + 1]))
-                if r is not None and (best is None or r < best):
-                    best, bi = r, i
-            if best is None:
-                break
-            syms[bi : bi + 2] = [syms[bi] + syms[bi + 1]]
-        cache[w] = len(syms)
-        return len(syms)
-
-    def batches(it):
-        import pandas as pd
-
-        cache: dict = {}
-        for pdf in it:
-            nw, nt = [], []
-            for t in pdf[text_col]:
-                words = [w for w in ws_re.split((t or "").strip().lower()) if w]
-                nw.append(len(words))
-                nt.append(sum(encode_word(w, cache) for w in words))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_words": nw, "n_bpe_tokens": nt}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        batches, f"{id_col} BIGINT, n_words BIGINT, n_bpe_tokens BIGINT"
     )
 
 

@@ -94,14 +94,6 @@ def lex(sql: str) -> list[tuple[str, str]]:
     return out
 
 
-def split_literals(sql: str) -> list[tuple[str, bool]]:
-    """Back-compat view of :func:`lex`: ``(text, is_literal)`` segments.
-    Comments are returned as non-literal segments (rewrites inside them
-    are harmless), but an apostrophe inside a comment no longer opens a
-    phantom literal."""
-    return [(text, kind == LITERAL) for text, kind in lex(sql)]
-
-
 def rewrite_outside_literals(sql: str, fn: Callable[[str], str]) -> str:
     """Apply ``fn`` to every code segment; literal and comment segments
     pass through untouched."""

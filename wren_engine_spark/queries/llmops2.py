@@ -63,18 +63,16 @@ def x33(spark: SparkSession, sf: str) -> DataFrame:
     filter table — no false negatives (every exact duplicate is
     caught); tests bound the over-drop rate.
 
-    Round-3: uses the PORTABLE probe hash (polynomial fold of the md5
-    hex fingerprint + k universal hashes — exact int64 arithmetic), so
-    the oracle simulates the ENTIRE bloom — corpus bit positions, k
-    probes, all-hit verdict — and the driver hash-checks the screened
-    output exactly, false-positive drops included. The xxhash64 mode
-    remains for production throughput
-    (operators/dedup.bloom_incremental_dedup)."""
+    The probe hash is portable (polynomial fold of the md5 hex
+    fingerprint + k universal hashes — exact int64 arithmetic), so the
+    oracle simulates the ENTIRE bloom — corpus bit positions, k probes,
+    all-hit verdict — and the driver hash-checks the screened output
+    exactly, false-positive drops included."""
     d = load_tables(spark, sf, "documents")["documents"]
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
     return dedup.bloom_incremental_dedup(
-        batch, corpus, "text", "doc_id", hash_mode="portable"
+        batch, corpus, "text", "doc_id"
     ).orderBy("doc_id")
 
 

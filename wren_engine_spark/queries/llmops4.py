@@ -650,11 +650,11 @@ def x55(spark: SparkSession, sf: str) -> DataFrame:
     by id) — the bit-exact portable twin of x14's trained-kmeans IVF:
     identical assignment (argmin L2, lowest-index ties), probe
     selection (nprobe nearest lists), inverted-list join and
-    exact-cosine top-k code path (similarity.ivf_topk with an explicit
-    centroid set), but with centroids any engine can re-derive without
-    training. x14 composes this same probe path with the bit-exact
-    quantized-integer Lloyd trainer (x85), making trained IVF
-    oracle-checked end-to-end too."""
+    exact-cosine top-k code path (similarity.ivf_topk), but with
+    centroids any engine can re-derive without training. x14 composes
+    this same probe path with the one integer Lloyd trainer (x85's
+    kmeans_quantized), making trained IVF oracle-checked end-to-end
+    too."""
     e = load_tables(spark, sf, "embeddings")["embeddings"]
     cents = [
         [float(x) for x in r.embedding]
@@ -666,8 +666,7 @@ def x55(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     return similarity.ivf_topk(
-        e, "vec_id", "embedding", queries, dim=64,
-        k=_X55_K, nlist=_X55_NLIST, nprobe=_X55_NPROBE, centroids=cents,
+        e, "vec_id", "embedding", queries, cents, k=_X55_K, nprobe=_X55_NPROBE
     )
 
 

@@ -330,13 +330,14 @@ def t13(spark: SparkSession, sf: str) -> DataFrame:
     q = sig.select("delta_id", "__ds", F.explode(band_arr).alias("b")).select(
         "delta_id", "__ds", F.col("b.band").alias("band"), F.col("b.val").alias("val")
     )
-    idx = spark.table(table)
     # honor the delete contract every batch probe honors: tombstoned
     # corpus docs (dedup.simhash_index_delete) anti-join out of the
     # static index side before the stream-static join
     from wren_engine_spark.operators import layout
 
-    idx = layout.without_tombstones(idx, "corpus_id", table)
+    idx = layout.without_tombstones(
+        layout.read_index_table(spark, table), "corpus_id", table
+    )
     hits = (
         q.join(idx, ["band", "val"])
         .filter(F.col("corpus_id") != F.col("delta_id"))

@@ -438,8 +438,8 @@ def m7(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # x85: quantized-integer Lloyd k-means — iterative training with a
-# bit-exact unrolled-SQL oracle (the determinism x14's float Lloyd
-# can't have)
+# bit-exact unrolled-SQL oracle (the determinism a float Lloyd can't
+# have)
 # ---------------------------------------------------------------------------
 
 _KM_ITER = """
@@ -513,7 +513,9 @@ c{i} AS (
     """,
 )
 def x85(spark: SparkSession, sf: str) -> DataFrame:
-    """Quantized-integer Lloyd k-means (k=4, 2 iterations): vectors
+    """Quantized-integer Lloyd k-means (k=4, 2 iterations) — the one
+    integer Lloyd loop that also trains the PQ and IVF-PQ quantizers,
+    run over whole vectors: vectors
     quantize once (x45 half-up), assignment is an exact integer
     squared-L2 argmin computed IN-ROW against literal centroid arrays
     (no join/shuffle), updates are map-side-combinable integer sums
@@ -632,10 +634,10 @@ _X14_QUANTUM = 1_000_000
 )
 def x14(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-Flat ANN with a TRAINED coarse quantizer, oracle-checked
-    end-to-end (r7; rows-only through r6 while training rode the
-    nondeterministic float Lloyd). Training is the bit-exact
-    quantized-integer Lloyd iteration (x85 /
-    similarity.kmeans_quantized): quantize once with the x45 half-up,
+    end-to-end (r7; rows-only through r6 while training rode a
+    nondeterministic float Lloyd, since deleted). Training is the one
+    bit-exact integer Lloyd loop (x85 / similarity.kmeans_quantized):
+    quantize once with the x45 half-up,
     in-row integer argmin assignment against literal centroids (no
     join/shuffle), map-side integer sums with <= k*dim reduce groups,
     centroid = floor(sum/n) as the one IEEE double op both engines
@@ -664,8 +666,7 @@ def x14(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     return similarity.ivf_topk(
-        e, "vec_id", "embedding", queries, dim=dim,
-        k=_X14_K, nlist=_X14_NLIST, nprobe=_X14_NPROBE, centroids=cents,
+        e, "vec_id", "embedding", queries, cents, k=_X14_K, nprobe=_X14_NPROBE
     )
 
 
